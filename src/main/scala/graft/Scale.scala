@@ -73,7 +73,7 @@ object Scale {
         .write.mode("overwrite").parquet(s"$out/$name.parquet")
       System.err.println(s"[scale] synthesized $name")
     }
-    def raw(name: String): DataFrame = s.read.parquet(s"$base/$name.parquet")
+    def raw(name: String): DataFrame = Tables.parquet(s, s"$base/$name.parquet")
     // stride = max(key) + 1, read from the base itself
     def strideOf(df: DataFrame, key: String): Long =
       df.agg(max(col(key))).head.getLong(0) + 1L

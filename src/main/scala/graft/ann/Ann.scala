@@ -614,8 +614,6 @@ object Ann {
   /** codebooks(m)(j)(d), a32's geometry (a33 shares them). */
   private[graft] val pqCodebookStrs: Seq[Seq[Seq[String]]] = a32Cfg.cbs
 
-  private val pqNormSqStrs: Seq[Seq[String]] = a32Cfg.nsq
-
   private def pqCbSparkOf(cfg: PqCfg, m: Int): String =
     cfg.cbs(m).map(_.map(_ + "D").mkString("array(", ",", ")"))
       .mkString("array(", ",", ")")
@@ -623,7 +621,6 @@ object Ann {
     cfg.nsq(m).map(_ + "D").mkString("array(", ",", ")")
 
   private def pqCbSpark(m: Int): String = pqCbSparkOf(a32Cfg, m)
-  private def pqNormSqSpark(m: Int): String = pqNormSqSparkOf(a32Cfg, m)
 
   /** a32: product-quantized ANN (PQ/ADC — Jégou, Douze & Schmid,
     * "Product Quantization for Nearest Neighbor Search", TPAMI 2011;
@@ -816,9 +813,7 @@ object Ann {
     // whole corpus encode ran in one task. REPARTITION_BY_NUM with the
     // session's own shuffle-partition knob is never AQE-coalesced and
     // scales with the cluster, not a local constant.
-    val nPart =
-      try s.conf.get("spark.sql.shuffle.partitions").toInt
-      catch { case _: Throwable => 200 }
+    val nPart = graft.Par.shufflePartitions(s)
     val base = Tables.embeddings(s, dir).select("vec_id", "embedding")
       .repartition(nPart, col("vec_id"))
       .withColumn("dl", centroidDistsExpr("embedding"))
@@ -1140,7 +1135,7 @@ object Ann {
     * the artifact means" has one definition. */
   private[graft] def probePersistedIvf(s: SparkSession, idxDir: String,
       queries: DataFrame, tombstones: Option[DataFrame] = None): DataFrame =
-    probeIvfIndex(s.read.parquet(idxDir), queries, tombstones)
+    probeIvfIndex(Tables.parquet(s, idxDir), queries, tombstones)
 
   /** The probe body over an already-opened index frame — extracted so
     * a53's manifest-scoped reads (an explicit file list under a
@@ -1256,8 +1251,8 @@ object Ann {
       .write.mode("overwrite").partitionBy("cell").parquet(idxDir)
     corpus.filter(expr(a38DeletedPred)).select("vec_id")
       .write.mode("overwrite").parquet(tombDir)
-    val tombs = s.read.parquet(tombDir)
-    s.read.parquet(idxDir)
+    val tombs = Tables.parquet(s, tombDir)
+    Tables.parquet(s, idxDir)
       .join(broadcast(tombs), Seq("vec_id"), "left_anti")
       .select("vec_id", "embedding", "norm", "cell")
       .write.mode("overwrite").partitionBy("cell").parquet(gen2Dir)
@@ -1325,7 +1320,7 @@ object Ann {
     // cold cells: file-level carry — not one byte rewritten
     a50MergeLayouts(Seq(gen1), hybrid, d => !hotDirs.contains(d))
     // hot cells: rewrite live rows only
-    s.read.parquet(gen1)
+    Tables.parquet(s, gen1)
       .filter(col("cell").isin(hot.map(Int.box): _*) &&
         not(expr(a38DeletedPred)))
       .write.mode("append").partitionBy("cell").parquet(hybrid)
@@ -1448,7 +1443,7 @@ object Ann {
     * tail. */
   private[graft] def a53ProbeAsOf(s: SparkSession, root: String, k: Int,
       queries: DataFrame): DataFrame = {
-    val man = s.read.parquet(s"$root/manifest_$k").collect()
+    val man = Tables.parquet(s, s"$root/manifest_$k").collect()
     val data = man.filter(_.getString(0) == "data").map(_.getString(1)).toIndexedSeq
     val dels = man.filter(_.getString(0) == "delete").map(_.getString(1)).toIndexedSeq
     val idx = s.read.option("basePath", s"$root/data").parquet(data: _*)
@@ -1532,7 +1527,7 @@ object Ann {
   private[graft] def q94RemoveOrphans(s: SparkSession, root: String,
       head: Int = 3): Seq[String] = {
     val referenced = (1 to head).flatMap(k =>
-      s.read.parquet(s"$root/manifest_$k")
+      Tables.parquet(s, s"$root/manifest_$k")
         .filter(col("kind") === "data")
         .select("path").collect().map(_.getString(0))).toSet
     val orphans = graft.sources.Export.listParquet(s"$root/data")
@@ -2078,9 +2073,7 @@ object Ann {
     // against BROADCAST centroids, so the per-vector work inherits
     // THIS frame's partitioning; the gate corpus is one parquet
     // split and all of it ran in one task.
-    val nPart =
-      try s.conf.get("spark.sql.shuffle.partitions").toInt
-      catch { case _: Throwable => 200 }
+    val nPart = graft.Par.shufflePartitions(s)
     val corpus = withNorm(Tables.embeddings(s, dir).select("vec_id", "embedding"))
       .repartition(nPart, col("vec_id"))
     val mx = corpus.filter(histPred).agg(max(col("norm")).as("mnorm"))
@@ -2307,12 +2300,12 @@ object Ann {
       // not retrain (r15; exact integers, so the round-trip is lossless)
       val cDir = graft.sources.Export.scratch("a43_cents", dir)
       c.write.mode("overwrite").parquet(cDir)
-      (d, s.read.parquet(cDir))
+      (d, Tables.parquet(s, cDir))
     }
     val queries = a42ProbeQueries(s, dir, c1)
     val probed = queries.select(explode(col("probe_cells")).as("c"))
       .distinct().collect().map(_.getInt(0)).sorted
-    val pruned = s.read.parquet(idxDir)
+    val pruned = Tables.parquet(s, idxDir)
       .filter(col("cell").isin(probed.map(Int.box): _*))
     val scored = pruned.join(broadcast(queries),
         array_contains(col("probe_cells"), col("cell")) &&
@@ -2881,16 +2874,14 @@ object Ann {
     * stream. Every arithmetic step is the audited dual-dialect
     * cosine/argmin, byte-exact. */
   def a48HardNegatives(s: SparkSession, dir: String): DataFrame = {
-    // explicit-count repartition (r15, the Dedup.shufflePartitions
+    // explicit-count repartition (r15, the Par.shufflePartitions
     // rationale): the cell join below explodes |cell|² scored pairs
     // with its anchor side broadcast, so the explosion inherits THIS
     // side's partitioning — the gate corpus is one parquet split, and
     // the whole scoring ran in one task (profiled: a 7.6 s 1-task
     // stage). A by-num repartition on vec_id spreads it evenly and is
     // never AQE-coalesced.
-    val nPart =
-      try s.conf.get("spark.sql.shuffle.partitions").toInt
-      catch { case _: Throwable => 200 }
+    val nPart = graft.Par.shufflePartitions(s)
     val corpus = withNorm(Tables.embeddings(s, dir)
         .select("vec_id", "embedding", "label"))
       .repartition(nPart, col("vec_id"))

@@ -133,23 +133,6 @@ object Dedup {
     * cluster instead of one task per hot band. */
   private[graft] val bandSalt = 16
 
-  /** The session's configured shuffle parallelism — used to pin the
-    * partition COUNT of the band-bucket repartitions. A by-column
-    * repartition is an AQE-coalescible shuffle, and the band stream
-    * is tiny in BYTES (~150 B/row) while its join output is the
-    * candidate-pair explosion — measured at sf0.1: AQE coalesced the
-    * 0.7 MB band shuffle to ONE partition and the whole 12M-pair
-    * explosion plus the fused broadcast-attach verify ran in ONE task
-    * (the salt alone changed nothing — the skew fix was downstream of
-    * the coalesce). An explicit-number repartition plans as
-    * REPARTITION_BY_NUM, which AQE never coalesces, so the explosion
-    * keeps the configured parallelism at every scale; the value is
-    * the cluster's own shuffle-partitions setting, not a local
-    * constant. */
-  private def shufflePartitions(df: DataFrame): Int =
-    try df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    catch { case _: Throwable => 200 }
-
   /** The verify threshold is applied to ROUND(jaccard, 4), so the set
     * of kept pairs is exactly { true J ≥ 0.69995 } (HALF_UP rounds
     * everything at or above the lower edge up to ≥ 0.7000). Any sound
@@ -229,7 +212,7 @@ object Dedup {
     // without the salt the whole hot bucket (and the verify compute
     // fused after it) lands in ONE task per band
     val a = bands.withColumn("bucket", pmod(col("doc_id"), lit(bandSalt)))
-      .repartition(shufflePartitions(bands),
+      .repartition(graft.Par.shufflePartitions(bands.sparkSession),
         col("band_id"), col("band_hash"), col("bucket"))
     val b = bands.withColumn("bucket",
       explode(sequence(lit(0), lit(bandSalt - 1)).cast("array<long>")))
@@ -358,7 +341,7 @@ object Dedup {
     // SALTED like [[bandCandidatePairs]] (see [[bandSalt]]) — the
     // md5-affine stream buckets the same mega-cluster
     val a = stream.withColumn("bucket", pmod(col("doc_id"), lit(bandSalt)))
-      .repartition(shufflePartitions(stream),
+      .repartition(graft.Par.shufflePartitions(stream.sparkSession),
         col("band_id"), col("band_hash"), col("bucket"))
     val b = stream.withColumn("bucket",
       explode(sequence(lit(0), lit(bandSalt - 1)).cast("array<long>")))
@@ -497,7 +480,7 @@ object Dedup {
     // mega-cluster's docs share their simhash, so its chunk buckets
     // carry the same single-key skew as the minhash bands
     val a = chunks.withColumn("bucket", pmod(col("doc_id"), lit(bandSalt)))
-      .repartition(shufflePartitions(chunks),
+      .repartition(graft.Par.shufflePartitions(chunks.sparkSession),
         col("chunk_id"), col("chunk_val"), col("bucket")).as("a")
     val b = chunks.withColumn("bucket",
       explode(sequence(lit(0), lit(bandSalt - 1)).cast("array<long>"))).as("b")
@@ -542,7 +525,7 @@ object Dedup {
       .persist() // both self-join sides (r15) — one vote-sum pass
     // SALTED like d24's chunk join (see [[bandSalt]])
     val a = chunks.withColumn("bucket", pmod(col("doc_id"), lit(bandSalt)))
-      .repartition(shufflePartitions(chunks),
+      .repartition(graft.Par.shufflePartitions(chunks.sparkSession),
         col("chunk_id"), col("chunk_val"), col("bucket"))
     val b = chunks.withColumn("bucket",
       explode(sequence(lit(0), lit(bandSalt - 1)).cast("array<long>")))
@@ -636,7 +619,7 @@ object Dedup {
     // fused broadcast-attach Jaccard verify ran in one task. The
     // declared quadratic declares the WORK, not its serialization;
     // spreading it changes no pair (d51Truth precedent, 2.7×).
-    val nPart = shufflePartitions(ids)
+    val nPart = graft.Par.shufflePartitions(ids.sparkSession)
     val a = ids.withColumn("bucket", pmod(col("doc_id"), lit(16)))
       .repartition(nPart, col("lang"), col("bucket"))
     val b = ids.withColumn("bucket", explode(sequence(lit(0), lit(15)).cast("array<long>")))
@@ -765,7 +748,8 @@ object Dedup {
     // exchange and the vector stream is tiny in bytes, so it
     // collapsed back to one partition — the explicit count is never
     // coalesced and is the session's own parallelism knob.
-    val a = e.repartition(shufflePartitions(e), col("vec_id")).as("a")
+    val a = e.repartition(graft.Par.shufflePartitions(e.sparkSession), col("vec_id"))
+      .as("a")
     val b = e.as("b")
     a.join(b, col("a.vec_id") < col("b.vec_id"))
       .select(
@@ -823,11 +807,11 @@ object Dedup {
   private def hyperplaneCandidatePairs(chunks0: DataFrame): DataFrame = {
     // persisted: both self-join sides consume the chunk stream (r15);
     // probe side repartitioned on the band key WITH an explicit count
-    // (REPARTITION_BY_NUM — see [[shufflePartitions]]: the by-column
-    // form is AQE-coalescible and the tiny band shuffle collapsed the
-    // whole explosion into one task)
+    // (REPARTITION_BY_NUM — see [[graft.Par.shufflePartitions]]: the
+    // by-column form is AQE-coalescible and the tiny band shuffle
+    // collapsed the whole explosion into one task)
     val chunks = chunks0.persist()
-    val probe = chunks.repartition(shufflePartitions(chunks),
+    val probe = chunks.repartition(graft.Par.shufflePartitions(chunks.sparkSession),
       col("band_id"), col("band_val"))
     probe.as("a").join(chunks.as("b"),
         col("a.band_id") === col("b.band_id") &&
@@ -909,11 +893,11 @@ object Dedup {
         .write.mode("overwrite").parquet(p)
       p
     }
-    val index = s.read.parquet(idxDir)
+    val index = Tables.parquet(s, idxDir)
     val batchChunks = chunks.filter(col("vec_id") % 4 === 0)
     val vsIndex = index.as("a")
       .join(batchChunks
-        .repartition(shufflePartitions(batchChunks),
+        .repartition(graft.Par.shufflePartitions(batchChunks.sparkSession),
           col("band_id"), col("band_val")).as("b"),
         col("a.band_id") === col("b.band_id") &&
           col("a.band_val") === col("b.band_val") &&
@@ -979,7 +963,7 @@ object Dedup {
           .write.mode("overwrite").parquet(p)
         p
       }
-      val labels = s.read.parquet(idxDir)
+      val labels = Tables.parquet(s, idxDir)
       // old connectivity as star edges; new connectivity from d38,
       // fed the SAME persisted banding
       val starEdges = labels.filter(col("id") =!= col("component"))
@@ -1130,7 +1114,7 @@ object Dedup {
     // hash work, persist the band stream so each consumer reads the
     // one materialization. Rows unchanged.
     val docsP = shingledDocs(s, dir)
-      .repartition(shufflePartitions(Tables.documents(s, dir)), col("doc_id"))
+      .repartition(graft.Par.shufflePartitions(s), col("doc_id"))
     val bands = minhashBands(docsP).persist()
     // size buckets on a SLIM (band_id, band_hash) projection — the
     // hot bucket this guards against must never be buffered with
@@ -1143,7 +1127,7 @@ object Dedup {
     // OVER-CAP bucket), so a broadcast hint here is size-safe at any
     // corpus scale — unlike the per-doc attach tables in verifyPairs
     val kept = bands.join(broadcast(hotKeys), Seq("band_id", "band_hash"), "left_anti")
-    val probe = kept.repartition(shufflePartitions(kept),
+    val probe = kept.repartition(graft.Par.shufflePartitions(kept.sparkSession),
       col("band_id"), col("band_hash"))
     probe.as("a").join(kept.as("b"),
         col("a.band_id") === col("b.band_id") &&
@@ -1662,10 +1646,10 @@ object Dedup {
     // the join without further exchanges. Rows unchanged.
     val grams = Tables.documents(s, dir)
       .select(col("doc_id"), col("text"))
-      .repartition(shufflePartitions(Tables.documents(s, dir)), col("doc_id"))
+      .repartition(graft.Par.shufflePartitions(s), col("doc_id"))
       .select(col("doc_id"), split(col("text"), " ").as("toks"))
       .select(col("doc_id"), explode(gramKeys(col("toks"), n)).as("gram"))
-      .repartition(shufflePartitions(Tables.documents(s, dir)), col("gram"))
+      .repartition(graft.Par.shufflePartitions(s), col("gram"))
     // grams seen in ≥ 2 DISTINCT docs: min(doc) ≠ max(doc) — exact,
     // and partial-aggregable where count(distinct) is not. A gram
     // repeated only within one doc is t35's business, not d30's.
@@ -1736,9 +1720,7 @@ object Dedup {
     // 1-split scan's single task — repartition the docs by count
     // (scale-adaptive knob, never AQE-coalesced) and persist the gram
     // stream so each pass runs once, 32-way. Rows unchanged.
-    val nPart =
-      try s.conf.get("spark.sql.shuffle.partitions").toInt
-      catch { case _: Throwable => 200 }
+    val nPart = graft.Par.shufflePartitions(s)
     val toksDf = Tables.documents(s, dir)
       .repartition(nPart, col("doc_id"))
       .select(col("doc_id"), split(col("text"), " ").as("toks"))
@@ -2059,7 +2041,7 @@ object Dedup {
         graft.text.TextOps.fingerprint(col("text")).as("fingerprint"))
       .groupBy("fingerprint").agg(min("doc_id").as("index_doc_id"))
       .write.mode("overwrite").parquet(idxDir)
-    (s.read.parquet(idxDir),
+    (Tables.parquet(s, idxDir),
       planted.filter(col("doc_id") % d35BatchMod === 0))
   }
 
@@ -2327,7 +2309,7 @@ object Dedup {
         .write.mode("overwrite").parquet(p)
       p
     }
-    s.read.parquet(idxDir)
+    Tables.parquet(s, idxDir)
   }
 
   /** Band equi-probe of a persisted index: (historical doc_a,
@@ -2342,7 +2324,7 @@ object Dedup {
     // rides on the small stream. Each (a, b) pair still emerges from
     // exactly one bucket — a's.
     val a = index.withColumn("bucket", pmod(col("doc_id"), lit(bandSalt)))
-      .repartition(shufflePartitions(index),
+      .repartition(graft.Par.shufflePartitions(index.sparkSession),
         col("band_id"), col("band_hash"), col("bucket"))
     val b = probeStream.withColumn("bucket",
       explode(sequence(lit(0), lit(bandSalt - 1)).cast("array<long>")))
@@ -2416,7 +2398,7 @@ object Dedup {
     val idxDir = graft.sources.Export.scratch("d41_index", dir)
     md5BandStream(docs.filter(col("doc_id") % 53 === 0))
       .write.mode("overwrite").parquet(idxDir)
-    val index = s.read.parquet(idxDir)
+    val index = Tables.parquet(s, idxDir)
     val trainStream = md5BandStream(docs.filter(col("doc_id") % 53 =!= 0))
     val cands = trainStream.as("a").join(broadcast(index.as("b")),
         col("a.band_id") === col("b.band_id") &&
@@ -2554,9 +2536,7 @@ object Dedup {
     // Row-identical: partitioning and caching change where work runs,
     // never which pairs emerge (DedupSpec's planted constructions and
     // the d44/d45/d48 oracles re-run green).
-    val nPart =
-      try docs.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-      catch { case _: Throwable => 200 }
+    val nPart = graft.Par.shufflePartitions(docs.sparkSession)
     val docsP = docs.repartition(nPart, col("doc_id"))
     val fps0 = d44Fingerprints(docsP).persist()
     // [[d44MaxBucket]]: size buckets on the slim gram projection,
@@ -3231,7 +3211,7 @@ object Dedup {
     // Pair set unchanged: partitioning never changes which pairs the
     // cross join emits.
     val allPairs = ids.select(col("doc_id").as("doc_a"))
-      .repartition(shufflePartitions(ids), col("doc_a"))
+      .repartition(graft.Par.shufflePartitions(ids.sparkSession), col("doc_a"))
       .crossJoin(ids.select(col("doc_id").as("doc_b")))
       .filter(col("doc_a") < col("doc_b"))
     verifyPairs(allPairs, docs0).select("doc_a", "doc_b")
@@ -3748,14 +3728,14 @@ object Dedup {
       .select(col("doc_id"),
         graft.text.TextOps.fingerprint(col("text")).as("fingerprint"))
       .write.mode("overwrite").parquet(postDir)
-    val postings = s.read.parquet(postDir)
+    val postings = Tables.parquet(s, postDir)
     val forget = postings.filter(expr(d47ForgetPred)).select("doc_id")
     val idx2Dir = graft.sources.Export.scratch("d47_index2", dir)
     postings.join(broadcast(forget), Seq("doc_id"), "left_anti")
       .groupBy("fingerprint").agg(min("doc_id").as("index_doc_id"))
       .write.mode("overwrite").parquet(idx2Dir)
     d35Classify(planted.filter(col("doc_id") % d35BatchMod === 0),
-      s.read.parquet(idx2Dir))
+      Tables.parquet(s, idx2Dir))
       .select("doc_id", "fingerprint", "status")
       .orderBy("doc_id")
   }

@@ -151,9 +151,7 @@ object Relational {
     // explicit-count repartition before the JSON parses (r15, the q12
     // rationale): two parses per row — plus the range sampling pass —
     // otherwise run in the 1-split scan's single task. Rows unchanged.
-    val nPart =
-      (try s.conf.get("spark.sql.shuffle.partitions").toInt
-       catch { case _: Throwable => 200 })
+    val nPart = graft.Par.shufflePartitions(s)
     Tables.events(s, dir)
       .select(col("event_id"), col("props"))
       .repartition(nPart, col("event_id"))
@@ -314,9 +312,7 @@ object Relational {
     // session's own shuffle-partitions knob; the added exchange
     // carries five narrow columns, strictly smaller than the range
     // exchange the orderBy already pays. Rows unchanged.
-    val nPart =
-      (try s.conf.get("spark.sql.shuffle.partitions").toInt
-       catch { case _: Throwable => 200 })
+    val nPart = graft.Par.shufflePartitions(s)
     Tables.lineitem(s, dir)
       .select("l_orderkey", "l_linenumber", "l_extendedprice",
         "l_discount", "l_tax")
@@ -745,9 +741,7 @@ object Relational {
     // q12 rationale): to_json + from_json + posexplode per row — plus
     // the range sampling pass — otherwise run in the 1-split scan's
     // single task. Rows unchanged.
-    val nPart =
-      (try s.conf.get("spark.sql.shuffle.partitions").toInt
-       catch { case _: Throwable => 200 })
+    val nPart = graft.Par.shufflePartitions(s)
     Tables.events(s, dir)
       .select("event_id", "user_id", "event_type", "value")
       .repartition(nPart, col("event_id"))
@@ -879,9 +873,7 @@ object Relational {
     // sampling pass otherwise both run in the 1-split scan's single
     // task. Narrow 5-column exchange, REPARTITION_BY_NUM, sized by
     // the session's shuffle-partitions knob. Rows unchanged.
-    val nPart =
-      (try s.conf.get("spark.sql.shuffle.partitions").toInt
-       catch { case _: Throwable => 200 })
+    val nPart = graft.Par.shufflePartitions(s)
     Tables.lineitem(s, dir)
       .select("l_orderkey", "l_linenumber", "l_extendedprice",
         "l_discount", "l_tax")
@@ -989,9 +981,7 @@ object Relational {
     // (r15, the q12 rationale): per-row to_json/from_json serde and
     // the 3× key explode — plus the range sampling pass — otherwise
     // run in the 1-split scan's single task. Rows unchanged.
-    val nPart =
-      (try s.conf.get("spark.sql.shuffle.partitions").toInt
-       catch { case _: Throwable => 200 })
+    val nPart = graft.Par.shufflePartitions(s)
     Tables.events(s, dir)
       .select("event_id", "event_type", "user_id", "ts")
       .repartition(nPart, col("event_id"))
@@ -1233,13 +1223,12 @@ object Relational {
       // skip rate) is unchanged; only the write parallelism moves.
       base.withColumn("zbucket", expr(s"shiftright(zval, $k)"))
         .repartition(
-          (try s.conf.get("spark.sql.shuffle.partitions").toInt
-           catch { case _: Throwable => 200 }), col("zbucket"))
+          graft.Par.shufflePartitions(s), col("zbucket"))
         .sortWithinPartitions("zval")
         .write.mode("overwrite").partitionBy("zbucket").parquet(o)
       o
     }
-    s.read.parquet(out)
+    Tables.parquet(s, out)
       .filter(col("o_custkey").between(100, 200) &&
         to_date(col("o_orderdate")).between(lit("1997-01-01"), lit("1997-12-31")))
       .groupBy("o_orderpriority")
@@ -1302,10 +1291,10 @@ object Relational {
     Streaming.applyChangesSnapshot(ev)
       .filter(col("event_type") =!= "error")
       .write.mode("overwrite").parquet(s"$scratch/v2")
-    val v1 = s.read.parquet(s"$scratch/v1").select(
+    val v1 = Tables.parquet(s, s"$scratch/v1").select(
       col("user_id"), col("event_id").as("old_event_id"),
       col("event_type").as("old_type"), round(col("value"), 4).as("old_value"))
-    val v2 = s.read.parquet(s"$scratch/v2").select(
+    val v2 = Tables.parquet(s, s"$scratch/v2").select(
       col("user_id"), col("event_id").as("new_event_id"),
       col("event_type").as("new_type"), round(col("value"), 4).as("new_value"))
     v1.join(v2, Seq("user_id"), "full_outer")
@@ -1408,8 +1397,8 @@ object Relational {
     * versioned table. k = 0 reads the base alone (already
     * latest-per-key; the re-apply is a no-op on it). */
   private[graft] def q77AsOf(s: SparkSession, chain: String, k: Int): DataFrame = {
-    val parts = s.read.parquet(s"$chain/v0") +:
-      (1 to k).map(i => s.read.parquet(s"$chain/changes_$i"))
+    val parts = Tables.parquet(s, s"$chain/v0") +:
+      (1 to k).map(i => Tables.parquet(s, s"$chain/changes_$i"))
     graft.streaming.Streaming.applyChangesSnapshot(parts.reduce(_.unionByName(_)))
   }
 
@@ -1459,8 +1448,8 @@ object Relational {
       horizon: Int, k: Int): DataFrame = {
     require(k >= horizon,
       s"version $k is below the retention horizon $horizon")
-    val parts = s.read.parquet(s"$chain/ckpt") +:
-      (horizon + 1 to k).map(i => s.read.parquet(s"$chain/changes_$i"))
+    val parts = Tables.parquet(s, s"$chain/ckpt") +:
+      (horizon + 1 to k).map(i => Tables.parquet(s, s"$chain/changes_$i"))
     graft.streaming.Streaming.applyChangesSnapshot(parts.reduce(_.unionByName(_)))
   }
 
@@ -1570,7 +1559,7 @@ object Relational {
       val c = q77WriteChain(s, dir, "q81_chain")
       val log = q81RestoreLog(s, c, q81Target)
       log.write.mode("overwrite").parquet(s"$c/changes_4")
-      val replayed = s.read.parquet(s"$c/changes_4")
+      val replayed = Tables.parquet(s, s"$c/changes_4")
       require(!replayed.isEmpty, "q81: the restore must genuinely bite")
       c
     }
@@ -1643,10 +1632,10 @@ object Relational {
   private[graft] def q92Replay(s: SparkSession, chain: String,
       from: Int, k: Int, keys: Option[DataFrame] = None): DataFrame = {
     val base =
-      if (from == 0) s.read.parquet(s"$chain/v0")
-      else s.read.parquet(s"$chain/ckpt_$from")
+      if (from == 0) Tables.parquet(s, s"$chain/v0")
+      else Tables.parquet(s, s"$chain/ckpt_$from")
     val parts = base +: (from + 1 to k).map(i =>
-      s.read.parquet(s"$chain/changes_$i"))
+      Tables.parquet(s, s"$chain/changes_$i"))
     val all = parts.reduce(_.unionByName(_))
     val scoped = keys.fold(all)(ks => all.join(ks, Seq("user_id"), "left_semi"))
     graft.streaming.Streaming.applyChangesSnapshot(scoped)
@@ -1739,7 +1728,7 @@ object Relational {
     * the two served snapshots, which is what the oracle does). */
   private[graft] def q93Feed(s: SparkSession, chain: String,
       k1: Int, k2: Int): DataFrame = {
-    val win = (k1 + 1 to k2).map(i => s.read.parquet(s"$chain/changes_$i"))
+    val win = (k1 + 1 to k2).map(i => Tables.parquet(s, s"$chain/changes_$i"))
       .reduce(_.unionByName(_))
     val net = graft.streaming.Streaming.applyChangesSnapshot(win)
     // the Δ restriction is applied INSIDE the replay, below its
@@ -1873,7 +1862,7 @@ object Relational {
       snapshotV: Int, headV: Int, keys: DataFrame): Long =
     if (headV <= snapshotV) 0L
     else (snapshotV + 1 to headV)
-      .map(i => s.read.parquet(s"$chain/changes_$i"))
+      .map(i => Tables.parquet(s, s"$chain/changes_$i"))
       .reduce(_.unionByName(_)).select("user_id").distinct()
       .join(keys, Seq("user_id")).count()
 
@@ -2066,7 +2055,7 @@ object Relational {
   /** The audit: q40's gating conjunction as one conditional-sum scan
     * of the staged artifact. Returns (rows, violations). */
   private[graft] def q96Audit(s: SparkSession, staged: String): (Long, Long) = {
-    val a = s.read.parquet(staged).agg(count(lit(1)),
+    val a = Tables.parquet(s, staged).agg(count(lit(1)),
       sum(when(expr(q96GateConj), 0L).otherwise(1L))).head
     (a.getLong(0), a.getLong(1))
   }
@@ -2092,7 +2081,7 @@ object Relational {
     val stage = graft.sources.Export.scratch("q96_stage", dir)
     graft.sources.Export.deleteTree(table)
     base.write.mode("overwrite").parquet(s"$table/commit_0")
-    val baseN = s.read.parquet(s"$table/commit_0").count()
+    val baseN = Tables.parquet(s, s"$table/commit_0").count()
     var version = 0
     var published = baseN
     var attemptId = 0
@@ -2208,9 +2197,9 @@ object Relational {
   private[graft] def q103WriteArtifacts(s: SparkSession, root: String,
       k: Int, delta: DataFrame): Unit = {
     delta.write.mode("overwrite").parquet(s"$root/fact/commit_$k")
-    val part = q103Partials(s.read.parquet(s"$root/fact/commit_$k"))
+    val part = q103Partials(Tables.parquet(s, s"$root/fact/commit_$k"))
     val mv = if (k == 1) part
-      else q103MvMerge(s.read.parquet(s"$root/mv/v_${k - 1}"), part)
+      else q103MvMerge(Tables.parquet(s, s"$root/mv/v_${k - 1}"), part)
     mv.write.mode("overwrite").parquet(s"$root/mv/v_$k")
   }
 
@@ -2251,7 +2240,7 @@ object Relational {
   private[graft] def q103FactAt(s: SparkSession, root: String, k: Int): DataFrame =
     s.read.parquet((1 to k).map(i => s"$root/fact/commit_$i"): _*)
   private[graft] def q103MvAt(s: SparkSession, root: String, k: Int): DataFrame =
-    s.read.parquet(s"$root/mv/v_$k")
+    Tables.parquet(s, s"$root/mv/v_$k")
 
   /** q103: MULTI-TABLE ATOMIC PUBLISH — the missing joint between
     * q96 (WAP: audit-then-adopt for ONE table) and q38/q88 (MV
@@ -2588,7 +2577,7 @@ object Relational {
     val orders = q38Facts(s, dir)
     q38Partials(orders.filter(col("od") < lit(q38Cutoff)))
       .write.mode("overwrite").parquet(mvDir)
-    val state = s.read.parquet(mvDir)
+    val state = Tables.parquet(s, mvDir)
     val delta = q38Partials(orders.filter(col("od") >= lit(q38Cutoff)))
     q38Present(q38Merge(state, delta)).orderBy("o_custkey")
   }
@@ -2677,8 +2666,8 @@ object Relational {
     val aDir = graft.sources.Export.scratch("q88_astate", dir)
     q88Leg(aOld, bOld).write.mode("overwrite").parquet(mvDir)
     aOld.write.mode("overwrite").parquet(aDir)
-    val state = s.read.parquet(mvDir)
-    val aState = s.read.parquet(aDir)
+    val state = Tables.parquet(s, mvDir)
+    val aState = Tables.parquet(s, aDir)
     val delta = q88MvMerge(Seq(
       q88Leg(aNew, bOld), q88Leg(aState, bNew), q88Leg(aNew, bNew)))
     q88MvMerge(Seq(state, delta)).orderBy("segment", "o_year")
@@ -2975,9 +2964,7 @@ object Relational {
     // a countDistinct leg, keyed by (gid, keys, l_orderkey) — ran in
     // the 1-split scan's single task. Narrow 5-column exchange; rows
     // unchanged.
-    val nPart =
-      (try s.conf.get("spark.sql.shuffle.partitions").toInt
-       catch { case _: Throwable => 200 })
+    val nPart = graft.Par.shufflePartitions(s)
     Tables.lineitem(s, dir)
       .select("l_returnflag", "l_linestatus", "l_orderkey",
         "l_extendedprice", "l_quantity")
@@ -6126,9 +6113,7 @@ object Relational {
     // 3.3 s of a 4.3 s entry — the q12/t35 class. The exchange moves
     // raw event rows once and both legs ReuseExchange it; re-measured
     // 3.60 → 1.66 s (matched-window A/B, OPTIMIZATION_r16.md).
-    val nPart =
-      try s.conf.get("spark.sql.shuffle.partitions").toInt
-      catch { case _: Throwable => 200 }
+    val nPart = graft.Par.shufflePartitions(s)
     val st = q52Stacked(Tables.events(s, dir)
       .repartition(nPart, col("event_id")))
     val ndv = st.groupBy("col_name").agg(

@@ -103,7 +103,7 @@ object Export {
     // would silently export NOTHING — the opposite of first-export
     // semantics. An epoch-floor sentinel makes the empty-target case
     // export everything.
-    val wm = s.read.parquet(tgt).agg(
+    val wm = Tables.parquet(s, tgt).agg(
       coalesce(max(col("o_orderdate")), lit("1000-01-01").cast("timestamp")).as("wm"))
     orders.join(broadcast(wm), col("o_orderdate") > col("wm"))
       .select(
@@ -161,20 +161,7 @@ object Export {
     // bucket alone). The session's shuffle-partition setting is the
     // right magnitude: it's the cluster-sized parallelism the user
     // already tuned, and empty partitions write nothing.
-    // parse-with-fallback: some deployments set the conf to a
-    // non-numeric value (e.g. an "auto" shuffle mode) and a bare
-    // .toInt would turn the export into a crash path
-    val n = scala.util.Try(
-      df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt)
-      .getOrElse {
-        // visible fallback (VERDICT r5): a mis-set conf silently
-        // becoming 200 write tasks is exactly the kind of drift an
-        // operator should be able to find in the logs
-        System.err.println(
-          "[export] spark.sql.shuffle.partitions is non-numeric; " +
-            "falling back to 200 write tasks")
-        200
-      }.max(writeTasksPerBucket)
+    val n = graft.Par.shufflePartitions(df.sparkSession).max(writeTasksPerBucket)
     val keyed =
       if (writeTasksPerBucket <= 1) df.repartition(n, col(partitionCol))
       else df.repartition(n, col(partitionCol),
@@ -273,7 +260,7 @@ object Export {
     // q33/q42 criterion): the partitioned export is carried state;
     // bench passes 2+ time the partition-pruned rollup alone
     val out = graft.BuildCache.build(s"q74:$dir") { q74Write(s, dir) }
-    q74YearRollup(s.read.parquet(out))
+    q74YearRollup(Tables.parquet(s, out))
   }
 
   /** Write the year-partitioned layout once; shared by the query
@@ -380,7 +367,7 @@ object Export {
   private[graft] def q75CompactLayout(s: SparkSession, frag: String,
       out: String, partitionCol: String): Q75Run = {
     val fragFiles = countParquetFiles(frag)
-    val back = s.read.parquet(frag)
+    val back = Tables.parquet(s, frag)
     val rows = back.count()
     val avgRow = math.max(1L, dataBytes(frag) / math.max(1L, rows))
     val cap = math.max(1L, q75TargetBytes / avgRow)
@@ -408,7 +395,7 @@ object Export {
     // (r16, the q33/q42 criterion; the in-build requires still prove
     // the layout changed shape on every construction)
     val out = graft.BuildCache.build(s"q75:$dir") { q75Compact(s, dir).outDir }
-    q75YearRollup(s.read.parquet(out))
+    q75YearRollup(Tables.parquet(s, out))
   }
 
   private[graft] def q75YearRollup(back: DataFrame): DataFrame =
@@ -496,7 +483,7 @@ object Export {
     * read path: it never counts the full manifest. */
   private[graft] def q76KeptFiles(s: SparkSession, side: String,
       lo: Long, hi: Long): DataFrame =
-    s.read.parquet(side)
+    Tables.parquet(s, side)
       .filter(q76KeepPred(lo, hi))
       .select("file")
 
@@ -514,14 +501,14 @@ object Export {
     * filesTotal). */
   private[graft] def q76ProbeFiles(s: SparkSession, layout: String,
       side: String, lo: Long, hi: Long): (DataFrame, Int, Int) = {
-    val r = s.read.parquet(side).agg(
+    val r = Tables.parquet(s, side).agg(
       count(lit(1)).as("total"),
       sort_array(collect_list(when(q76KeepPred(lo, hi), col("file"))))
         .as("keep")).head
     val total = r.getLong(0).toInt
     val keep = r.getSeq[String](1)
     val base =
-      if (keep.isEmpty) s.read.parquet(layout).filter(lit(false))
+      if (keep.isEmpty) Tables.parquet(s, layout).filter(lit(false))
       else s.read.parquet(keep: _*)
     (base.filter(col("o_orderkey").between(lo, hi)), keep.length, total)
   }
@@ -617,7 +604,7 @@ object Export {
       .coalesce(1).write.mode("overwrite").parquet(side)
     // the incremental maintenance step: old manifest ∪ new-file stats
     val side2 = layout + "_sidecar_v2"
-    s.read.parquet(side).unionByName(q76SidecarRows(s, appended))
+    Tables.parquet(s, side).unionByName(q76SidecarRows(s, appended))
       .coalesce(1).write.mode("overwrite").parquet(side2)
     val (rows, kept, total) = q76ProbeFiles(s, layout, side2, q76Lo, q76Hi)
     require(kept < total,
@@ -749,7 +736,7 @@ object Export {
       .select(posexplode(q82Positions(lit(hash))).as(Seq("pid", "pos")))
       .select(col("pid"), shiftright(col("pos"), 6).as("word"),
         expr("shiftleft(1L, cast(pos % 64 as int))").as("mask"))
-    val kept = s.read.parquet(side)
+    val kept = Tables.parquet(s, side)
       .join(broadcast(pos), Seq("word"))
       .filter(col("bits").bitwiseAND(col("mask")) =!= lit(0L))
       .groupBy("file").agg(countDistinct("pid").as("hits"))
@@ -757,7 +744,7 @@ object Export {
       .select("file").collect().map(_.getString(0)).toIndexedSeq
     val total = listParquet(layout).length
     val base =
-      if (kept.isEmpty) s.read.parquet(layout).filter(lit(false))
+      if (kept.isEmpty) Tables.parquet(s, layout).filter(lit(false))
       else s.read.parquet(kept: _*)
     (base.filter(col("o_hash") === lit(hash)), kept.length, total)
   }
@@ -828,13 +815,6 @@ object Export {
       |  (SELECT md5(CAST(min(o_orderkey) AS VARCHAR)) FROM orders)
       |ORDER BY o_orderkey""".stripMargin
 
-  /** q83's physical schema: data files carry stable PHYSICAL column
-    * ids (Delta column mapping's `delta.columnMapping.physicalName`,
-    * parquet field-id in Iceberg); every logical name lives ONLY in
-    * the mapping manifest. */
-  private[graft] val q83Physical =
-    Seq("c1" -> "long", "c2" -> "long", "c3" -> "double", "c4" -> "timestamp")
-
   /** The v1 logical mapping, and the v2 mapping after the user runs
     * RENAME COLUMN o_totalprice TO o_revenue. */
   private[graft] val q83MapV1 = Seq(
@@ -871,9 +851,9 @@ object Export {
     * Catalyst. */
   private[graft] def q83MappedRead(s: SparkSession, layout: String,
       manifest: String): DataFrame = {
-    val m = s.read.parquet(manifest).collect()
+    val m = Tables.parquet(s, manifest).collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
-    val phys = s.read.parquet(layout)
+    val phys = Tables.parquet(s, layout)
     phys.select(phys.columns.sorted.map(c => col(c).as(m(c))).toIndexedSeq: _*)
   }
 
@@ -946,11 +926,11 @@ object Export {
       lo: String, hi: String): DataFrame = {
     val residual = col("o_orderdate").between(
       lit(lo).cast("timestamp"), lit(hi).cast("timestamp"))
-    val oldGen = s.read.parquet(s"$root/specY")
+    val oldGen = Tables.parquet(s, s"$root/specY")
       .filter(col("o_year").between(lo.substring(0, 4).toInt,
         hi.substring(0, 4).toInt))
       .filter(residual)
-    val newGen = s.read.parquet(s"$root/specM")
+    val newGen = Tables.parquet(s, s"$root/specM")
       .filter(col("o_ym").between(lo.substring(0, 7), hi.substring(0, 7)))
       .filter(residual)
     oldGen.drop("o_year").unionByName(newGen.drop("o_ym"))
@@ -1008,7 +988,7 @@ object Export {
   }
 
   private[graft] def q87ReadManifest(s: SparkSession, path: String): Seq[String] =
-    s.read.parquet(path).collect().map(_.getString(0)).toIndexedSeq.sorted
+    Tables.parquet(s, path).collect().map(_.getString(0)).toIndexedSeq.sorted
 
   /** Build the clone fixture: a source table, a ZERO-COPY clone of it
     * (manifest v1 = exactly the source's files), then a post-clone
@@ -1128,7 +1108,7 @@ object Export {
     * immutable. */
   private[graft] def q95CommitDelete(s: SparkSession, layout: String,
       dvDir: String, commit: Int, pred: Column): Unit =
-    s.read.parquet(layout)
+    Tables.parquet(s, layout)
       .select(q95FileId.as("file"),
         col("_metadata.row_index").as("pos"), col("o_orderkey"))
       .filter(pred)
@@ -1144,7 +1124,7 @@ object Export {
     * format this column lives in the stats manifest (q76/q79's
     * sidecar shape); one column-pruned pass stands in here. */
   private[graft] def q95FileRows(s: SparkSession, layout: String): DataFrame =
-    s.read.parquet(layout)
+    Tables.parquet(s, layout)
       .groupBy(q95FileId.as("file"))
       .agg(count(lit(1)).as("rows"))
 
@@ -1171,7 +1151,7 @@ object Export {
     val clean = (paths.keySet -- dirty).toSeq.sorted
     val cleanDf =
       if (clean.isEmpty)
-        s.read.parquet(layout).filter(lit(false))
+        Tables.parquet(s, layout).filter(lit(false))
           .select(q95Cols.map(col): _*)
       else s.read.parquet(clean.map(paths): _*).select(q95Cols.map(col): _*)
     val dirtyDf =
@@ -1348,7 +1328,7 @@ object Export {
     * so span overlap over days IS span overlap over dates). The
     * q76SidecarRows shape, widened to the two skip dimensions. */
   private[graft] def q102Stats(s: SparkSession, layout: String): DataFrame =
-    s.read.parquet(layout)
+    Tables.parquet(s, layout)
       .select(q95FileId.as("file"), col("o_custkey"),
         datediff(to_date(col("o_orderdate")), to_date(lit("1995-01-01")))
           .cast("long").as("days"))
@@ -1446,7 +1426,7 @@ object Export {
     val layouts = Seq("linear_cust" -> lc, "linear_date" -> ld, "zorder" -> lz)
     val cells = for {
       (lname, lpath) <- layouts
-      stats = s.read.parquet(s"${lpath}_stats")
+      stats = Tables.parquet(s, s"${lpath}_stats")
         .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
           r.getLong(3), r.getLong(4)))
       paths = q95PathOf(lpath)
@@ -1546,7 +1526,7 @@ object Export {
     * bucketed by key so an index probe is a bucket-local join. */
   private[graft] def q101BuildIndex(s: SparkSession, layout: String,
       idx: String): Unit =
-    s.read.parquet(layout)
+    Tables.parquet(s, layout)
       .select(col("o_orderkey").as("key"), q95FileId.as("file"))
       .write.mode("overwrite").parquet(idx)
 
@@ -1587,7 +1567,7 @@ object Export {
     val probes = Tables.orders(s, dir)
       .filter(col("o_orderkey") % m === 0)
       .select(col("o_orderkey").as("key"))
-    val kept = s.read.parquet(idx)
+    val kept = Tables.parquet(s, idx)
       .join(broadcast(probes), Seq("key"))
       .select("file").distinct()
       .collect().map(_.getString(0)).sorted.toIndexedSeq
@@ -1701,12 +1681,12 @@ object Export {
         "q100: dynamic overwrite must leave untouched partitions' files " +
           s"byte-stable (${(before.keySet diff after.keySet).take(3)} gone, " +
           s"${(after.keySet diff before.keySet).take(3)} new)")
-      val voided = s.read.parquet(t).filter(col("o_year").isin(a, b) &&
+      val voided = Tables.parquet(s, t).filter(col("o_year").isin(a, b) &&
         col("o_orderkey") % q100VoidRes === 0).count()
       require(voided == 0, s"q100: $voided voided orders survived")
       t
     }
-    val table = s.read.parquet(tbl)
+    val table = Tables.parquet(s, tbl)
     table.groupBy("o_year")
       .agg(count(lit(1)).as("orders"),
         sum(expr("cast(round(o_totalprice * 100, 0) as bigint)")).as("cents"))
@@ -1805,7 +1785,7 @@ object Export {
         .coalesce(1).write.mode("overwrite").parquet(m)
       m
     }
-    val stats = s.read.parquet(manifest)
+    val stats = Tables.parquet(s, manifest)
     val dict = cat.flatMap { case (name, df, _) =>
       df.schema.fields.zipWithIndex.map { case (f, i) =>
         (name, f.name, i + 1, q104Canon(f.dataType)) }

@@ -313,7 +313,7 @@ object Streaming {
         // read failure (corrupt footer, permissions, transient IO)
         // propagates instead of silently resetting the totals
         val existing =
-          if (fs.exists(dst)) s.read.parquet(targetDir)
+          if (fs.exists(dst)) Tables.parquet(s, targetDir)
           else s.createDataFrame(
             new java.util.ArrayList[org.apache.spark.sql.Row](), agg.schema)
         val merged = existing
@@ -426,9 +426,7 @@ object Streaming {
     // one task. The shared decontaminateStream transform is untouched
     // (a real ingest is already partitioned by its source); rows are
     // unchanged and the entry orders its own output.
-    val nPart =
-      try s.conf.get("spark.sql.shuffle.partitions").toInt
-      catch { case _: Throwable => 200 }
+    val nPart = graft.Par.shufflePartitions(s)
     decontaminateStream(
         docs.filter(col("doc_id") % 53 =!= 0).repartition(nPart, col("doc_id")),
         broadcast(eval), n)
@@ -582,7 +580,7 @@ object Streaming {
     val changes = ev.filter(col("ts") > lit(s42Cutoff))
       .select("user_id", "event_id", "ts", "event_type", "value")
     applyServing(
-      applyChangesSnapshot(s.read.parquet(targetDir).unionByName(changes)))
+      applyChangesSnapshot(Tables.parquet(s, targetDir).unionByName(changes)))
   }
 
   /** The serving view over an apply-changes snapshot: tombstones
@@ -749,7 +747,7 @@ object Streaming {
     val orders = Relational.q38Facts(s, dir)
     Relational.q38Partials(orders.filter(col("od") < lit(Relational.q38Cutoff)))
       .write.mode("overwrite").parquet(mvDir)
-    var state = s.read.parquet(mvDir)
+    var state = Tables.parquet(s, mvDir)
     for (slice <- Seq(
         col("od") >= lit(Relational.q38Cutoff) && col("od") < lit(s45Mid),
         col("od") >= lit(s45Mid))) {
@@ -807,7 +805,7 @@ object Streaming {
     val docs = TextOps.t56Project(graft.Tables.documents(s, dir))
     TextOps.t56Partials(docs.filter(pmod(col("doc_id"), lit(3)) === 0))
       .write.mode("overwrite").parquet(cardDir)
-    var state = s.read.parquet(cardDir)
+    var state = Tables.parquet(s, cardDir)
     for (r <- Seq(1, 2))
       state = TextOps.t56MergeP(state,
         TextOps.t56Partials(docs.filter(pmod(col("doc_id"), lit(3)) === r)))
@@ -842,7 +840,7 @@ object Streaming {
     val ev = graft.Tables.events(s, dir)
     Relational.q40Partials(ev.filter(pmod(col("event_id"), lit(3)) === 0))
       .write.mode("overwrite").parquet(stateDir)
-    var state = s.read.parquet(stateDir)
+    var state = Tables.parquet(s, stateDir)
     for (r <- Seq(1, 2))
       state = state.union(
         Relational.q40Partials(ev.filter(pmod(col("event_id"), lit(3)) === r)))
@@ -912,8 +910,8 @@ object Streaming {
     }
     val batchRaw = Tables.embeddings(s, dir)
       .select("vec_id", "embedding").filter(col("vec_id") % 4 === 0)
-    semanticAdmitBatch(batchRaw, mnorm, s.read.parquet(c1Dir),
-      s.read.parquet(idxDir))
+    semanticAdmitBatch(batchRaw, mnorm, Tables.parquet(s, c1Dir),
+      Tables.parquet(s, idxDir))
       .orderBy("vec_id")
   }
 
@@ -990,7 +988,7 @@ object Streaming {
     * read-backs. The writes are INDEPENDENT actions — each next-state
     * plan reads only the PREVIOUS generation's artifacts plus the
     * batch slice, never a sibling of its own generation — so they are
-    * submitted concurrently from a small thread pool (guide §2.6,
+    * submitted concurrently through [[graft.Par.run]] (guide §2.6,
     * overlap independent jobs): one generation's wall cost becomes
     * max(state writes) instead of sum(state writes), and a subtree
     * two next-states share (e.g. s73's advanced-totals frame, feeding
@@ -998,26 +996,14 @@ object Streaming {
     * Row-for-row identical to the sequential form: the artifact paths,
     * the per-state plans, and the read-backs are unchanged — only the
     * submission order of the write actions differs. Any write failure
-    * rethrows (Await propagates the first), preserving the fail-stop. */
+    * rethrows, preserving the fail-stop. Each read-back carries the
+    * schema of the frame just written: the files are always new, so
+    * inferring it would cost one Spark job per state per generation. */
   private def writeGeneration(s: SparkSession,
       named: Seq[(String, DataFrame)]): Seq[DataFrame] = {
-    if (named.size <= 1)
-      named.foreach { case (path, df) =>
-        df.write.mode("overwrite").parquet(path) }
-    else {
-      import scala.concurrent.{Await, Future, ExecutionContext}
-      import scala.concurrent.duration.Duration
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(named.size, 8))
-      implicit val ec: ExecutionContext =
-        ExecutionContext.fromExecutorService(pool)
-      try Await.result(
-        Future.sequence(named.map { case (path, df) =>
-          Future { df.write.mode("overwrite").parquet(path) }
-        }), Duration.Inf)
-      finally pool.shutdown()
-    }
-    named.map { case (path, _) => s.read.parquet(path) }
+    graft.Par.run(named.map { case (path, df) =>
+      () => df.write.mode("overwrite").parquet(path) }, maxInFlight = 8)
+    named.map { case (path, df) => s.read.schema(df.schema).parquet(path) }
   }
 
   /** The standard three event-time micro-batch slices over an event
@@ -1650,7 +1636,7 @@ object Streaming {
       .filter(col("ts") < lit(R.q59Cut)).select(col("ts"), col("value"))
     // the trained artifact: frozen edges + the reference ledger
     R.q59Edges(ref).write.mode("overwrite").parquet(s"$stateDir/edges")
-    val edges = s.read.parquet(s"$stateDir/edges")
+    val edges = Tables.parquet(s, s"$stateDir/edges")
     R.q59Bins(ref, edges).withColumnRenamed("n", "ref_n")
       .write.mode("overwrite").parquet(s"$stateDir/ref")
     val fin = foldGenerations(s, stateDir,
@@ -1658,7 +1644,7 @@ object Streaming {
       eventSlices(ev)) { (st, b, _) =>
       Seq(psiFoldBatch(st(0), b, edges))
     }
-    R.q59Present(s.read.parquet(s"$stateDir/ref"),
+    R.q59Present(Tables.parquet(s, s"$stateDir/ref"),
       fin(0).withColumnRenamed("n", "cur_n"))
   }
 
@@ -2219,7 +2205,7 @@ object Streaming {
     * file-count growth curve (spec-pinned monotone) dictates. */
   def s68StreamCompaction(s: SparkSession, dir: String): DataFrame = {
     val run = s68Build(s, dir)._2
-    s.read.parquet(run.outDir)
+    Tables.parquet(s, run.outDir)
       .groupBy(col("day"))
       .agg(count(lit(1)).as("events"),
         sum(expr("cast(round(value * 100, 0) as bigint)")).as("value_cents"))
@@ -2311,7 +2297,7 @@ object Streaming {
       // read-build-overwrite race never arises)
       val fresh2 = E.q82SidecarRows(s, fresh)
       val next = s"${out}_sidecar_v$i"
-      (if (i == 0) fresh2 else s.read.parquet(side).unionByName(fresh2))
+      (if (i == 0) fresh2 else Tables.parquet(s, side).unionByName(fresh2))
         .coalesce(1).write.mode("overwrite").parquet(next)
       side = next
       files.size
@@ -2625,8 +2611,8 @@ object Streaming {
     * state a stream maintains instead of a written chain. */
   private[graft] def s74AsOf(s: SparkSession, stateDir: String, k: Int): DataFrame =
     applyChangesSnapshot(
-      s.read.parquet(s"$stateDir/s74snap0").unionByName(
-        s.read.parquet(s"$stateDir/s74ledg$s74Head")
+      Tables.parquet(s, s"$stateDir/s74snap0").unionByName(
+        Tables.parquet(s, s"$stateDir/s74ledg$s74Head")
           .filter(col("version") <= k).drop("version")))
 
   /** s74: LIVE AS OF serving — the streaming face of the q77 chain
@@ -2675,11 +2661,11 @@ object Streaming {
   private[graft] def s75Feed(s: SparkSession, stateDir: String,
       k1: Int, k2: Int): DataFrame = {
     val net = applyChangesSnapshot(
-      s.read.parquet(s"$stateDir/s74ledg$s74Head")
+      Tables.parquet(s, s"$stateDir/s74ledg$s74Head")
         .filter(col("version") > k1 && col("version") <= k2)
         .drop("version"))
     graft.operators.Relational.cdfFromNet(net,
-      s.read.parquet(s"$stateDir/s74snap$k1"))
+      Tables.parquet(s, s"$stateDir/s74snap$k1"))
   }
 
   /** s75: LIVE change data feed — q93's streaming face, closing the
@@ -2737,12 +2723,12 @@ object Streaming {
         // stage the batch as a real artifact; audit EXACTLY that
         val staged = s"$stateDir/staged_${i + 1}"
         batch.write.mode("overwrite").parquet(staged)
-        val a = s.read.parquet(staged).agg(count(lit(1)),
+        val a = Tables.parquet(s, staged).agg(count(lit(1)),
           sum(when(expr(R.q96GateConj), 0L).otherwise(1L))).head
         val (n, viol) = (a.getLong(0), a.getLong(1))
         // prior version off the persisted ledger (≤ i rows — bounded)
         val prevV = ledg.agg(coalesce(max("version_after"), lit(0))).head.getInt(0)
-        val tab2 = if (viol == 0L) tab.unionByName(s.read.parquet(staged)) else tab
+        val tab2 = if (viol == 0L) tab.unionByName(Tables.parquet(s, staged)) else tab
         val published = tab2.count()
         val row = Seq((i + 1, writers(i), n, viol,
           if (viol == 0L) "published" else "rejected",
@@ -2781,12 +2767,12 @@ object Streaming {
     val head = graft.operators.Relational
       .q96Batches(s, dir)._2.size
     val stateDir = graft.BuildCache.build(s"s76:$dir")(s76Build(s, dir))
-    val out = s.read.parquet(s"$stateDir/s76ledg$head").orderBy("attempt")
+    val out = Tables.parquet(s, s"$stateDir/s76ledg$head").orderBy("attempt")
     val rows = out.collect()
     require(rows.count(_.getString(4) == "rejected") == 1 &&
       rows.exists(_.getLong(3) > 0L),
       "s76: the planted audit failure must genuinely reject")
-    val tableN = s.read.parquet(s"$stateDir/s76tab$head").count()
+    val tableN = Tables.parquet(s, s"$stateDir/s76tab$head").count()
     require(tableN == rows.last.getLong(6),
       s"s76: table holds $tableN rows, ledger says ${rows.last.getLong(6)}")
     out
@@ -2815,7 +2801,7 @@ object Streaming {
     val cmds = Seq((d1lo, d1hi), (d2lo, d2hi))
       .map(c => Seq(c).toDF("lo", "hi"))
     val stateDir = E.scratch("s77_dv", dir)
-    val dv0 = s.read.parquet(layout)
+    val dv0 = Tables.parquet(s, layout)
       .select(E.q95FileId.as("file"),
         col("_metadata.row_index").as("pos"))
       .filter(lit(false))
@@ -2823,7 +2809,7 @@ object Streaming {
       case (states, cmd, _) =>
         val Seq(dv) = states: @unchecked
         val span = cmd.head() // the 1-row delete command — bounded
-        val fresh = s.read.parquet(layout)
+        val fresh = Tables.parquet(s, layout)
           .select(E.q95FileId.as("file"),
             col("_metadata.row_index").as("pos"), col("o_orderkey"))
           .filter(col("o_orderkey").between(span.getLong(0), span.getLong(1)))
@@ -2889,7 +2875,7 @@ object Streaming {
     // time-sliced commits with no within-commit clustering would put
     // every key range in every file and no lookup could prune
     E.q76ClusterWrite(slices.head, layout, "overwrite")
-    val idx0 = s.read.parquet(layout)
+    val idx0 = Tables.parquet(s, layout)
       .select(col("o_orderkey").as("key"), E.q95FileId.as("file"))
     val stateDir = E.scratch("s78_idx", dir)
     foldGenerations(s, stateDir, Seq("idx" -> idx0), slices.tail) {
@@ -2934,7 +2920,7 @@ object Streaming {
     val probes = Tables.orders(s, dir)
       .filter(col("o_orderkey") % m === 0)
       .select(col("o_orderkey").as("key"))
-    val kept = s.read.parquet(s"$stateDir/idx$n")
+    val kept = Tables.parquet(s, s"$stateDir/idx$n")
       .join(broadcast(probes), Seq("key"))
       .select("file").distinct()
       .collect().map(_.getString(0)).sorted.toIndexedSeq
@@ -3010,7 +2996,7 @@ object Streaming {
     // head generation = the slice count, never a literal (the s76
     // review-finding stance)
     val head = eventSlices(Tables.events(s, dir)).size
-    val st = s.read.parquet(s"$stateDir/s79st$head")
+    val st = Tables.parquet(s, s"$stateDir/s79st$head")
     val fact = st.groupBy("pseudo")
       .agg(sum("n").as("n_events"), count(lit(1)).as("n_types"),
         sum("cents").as("value_cents"))

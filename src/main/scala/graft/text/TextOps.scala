@@ -319,9 +319,7 @@ object TextOps {
     // exchange the groupBy below already pays, and the count is the
     // session's own shuffle-partitions knob (never AQE-coalesced,
     // cluster-sized at every scale).
-    val nPart =
-      try s.conf.get("spark.sql.shuffle.partitions").toInt
-      catch { case _: Throwable => 200 }
+    val nPart = graft.Par.shufflePartitions(s)
     val kg = Tables.documents(s, dir)
       .repartition(nPart, col("doc_id")).select(
       col("doc_id"), size(toks).as("n_tokens"),
@@ -510,9 +508,7 @@ object TextOps {
     // rationale verbatim (1-split scan ran the tokenize + bigram
     // explode + tf partial-agg in one task; the added (doc_id, text)
     // exchange is bounded by the gram exchange the tf groupBy pays).
-    val nPart =
-      try s.conf.get("spark.sql.shuffle.partitions").toInt
-      catch { case _: Throwable => 200 }
+    val nPart = graft.Par.shufflePartitions(s)
     val base = Tables.documents(s, dir)
       .repartition(nPart, col("doc_id")).select(
       col("doc_id"), size(toks).minus(1).cast("long").as("n_grams"),
@@ -762,9 +758,7 @@ object TextOps {
     // 1-split scan's single task; the fingerprint window below
     // already exchanges the gated rows, so the added exchange is
     // bounded by an existing one.
-    val nPart =
-      try s.conf.get("spark.sql.shuffle.partitions").toInt
-      catch { case _: Throwable => 200 }
+    val nPart = graft.Par.shufflePartitions(s)
     val gated = Tables.documents(s, dir)
       .repartition(nPart, col("doc_id"))
       .select(col("doc_id"), col("lang"),
@@ -1284,9 +1278,7 @@ object TextOps {
     // and per-chunk md5 — plus the range sort's sampling pass —
     // otherwise all run in the 1-split scan's single task. Rows
     // unchanged.
-    val nPart =
-      (try s.conf.get("spark.sql.shuffle.partitions").toInt
-       catch { case _: Throwable => 200 })
+    val nPart = graft.Par.shufflePartitions(s)
     Tables.documents(s, dir)
       .select(col("doc_id"), col("text"))
       .repartition(nPart, col("doc_id"))
@@ -1457,9 +1449,7 @@ object TextOps {
     // t35 rationale): one md5 per token AND per bigram — the whole
     // classifier — otherwise runs in the 1-split scan's single task.
     // Rows unchanged.
-    val nPart =
-      (try s.conf.get("spark.sql.shuffle.partitions").toInt
-       catch { case _: Throwable => 200 })
+    val nPart = graft.Par.shufflePartitions(s)
     Tables.documents(s, dir)
       .select(col("doc_id"), col("lang"), col("text"))
       .repartition(nPart, col("doc_id"))
@@ -1618,9 +1608,7 @@ object TextOps {
     // declared SEQUENTIAL driver loop (K argmax rounds, VERDICT #8);
     // this spreads each round's per-row work, it does not reorder or
     // batch the merges. Rows unchanged.
-    val nPart =
-      (try s.conf.get("spark.sql.shuffle.partitions").toInt
-       catch { case _: Throwable => 200 })
+    val nPart = graft.Par.shufflePartitions(s)
     var toks = Tables.documents(s, dir)
       .select(col("doc_id"), col("text"))
       .repartition(nPart, col("doc_id"))

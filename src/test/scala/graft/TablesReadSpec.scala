@@ -1,0 +1,129 @@
+package graft
+
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{AnalysisException, DataFrame}
+import org.apache.spark.sql.functions.{col, lit}
+
+/** [[Tables.parquet]], the one parquet read path: the schema it hands
+  * Spark is the one Spark would infer, it is inferred once per
+  * unchanged path, and a rewritten or missing path behaves as a plain
+  * read does. */
+class TablesReadSpec extends SparkSpec {
+
+  private def inferred(path: String) = spark.read.parquet(path).schema
+
+  /** Spark jobs `body` submits from this thread. Each job carries its
+    * thread's job group, and a marker job submitted after `body`
+    * reaches the listener after every job `body` submitted. */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val groups = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("tables-read-body", "TablesReadSpec body")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup("tables-read-marker", "TablesReadSpec marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!groups.contains("tables-read-marker") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(groups.contains("tables-read-marker"), "marker job never reached the listener")
+      groups.asScala.count(_ == "tables-read-body")
+    } finally sc.removeSparkListener(listener)
+  }
+
+  private def scratchDir(tag: String): String =
+    java.nio.file.Files.createTempDirectory(s"graft_tablesread_$tag").toString
+
+  test("every Tables loader reads the schema Spark infers for its file") {
+    val loaders: Seq[(String, DataFrame)] = Seq(
+      "region" -> Tables.region(spark, sfDir),
+      "nation" -> Tables.nation(spark, sfDir),
+      "customer" -> Tables.customer(spark, sfDir),
+      "supplier" -> Tables.supplier(spark, sfDir),
+      "part" -> Tables.part(spark, sfDir),
+      "orders" -> Tables.orders(spark, sfDir),
+      "lineitem" -> Tables.lineitem(spark, sfDir),
+      "documents" -> Tables.documents(spark, sfDir),
+      "embeddings" -> Tables.embeddings(spark, sfDir))
+    for ((name, df) <- loaders) {
+      val p = s"$sfDir/$name.parquet"
+      assert(df.schema == inferred(p), name)
+      // a second load serves the memoized schema: still the same one
+      assert(Tables.parquet(spark, p).schema == inferred(p), name)
+    }
+    // events adapts `ts` after the read; the read itself must match
+    // the plain read under the same session settings
+    val ev = Tables.events(spark, sfDir)
+    val evPath = s"$sfDir/events.parquet"
+    assert(Tables.parquet(spark, evPath).schema == inferred(evPath))
+    assert(ev.schema("ts").dataType.typeName == "timestamp")
+  }
+
+  test("s64 and s74 generation artifacts read back with the schema Spark infers") {
+    val S = graft.streaming.Streaming
+    S.s64StreamWeightedSample(spark, sfDir).collect()
+    val s64Dir = graft.sources.Export.scratch("s64_wsample", sfDir)
+    val s74Dir = S.s74Build(spark, sfDir, "tablesread_s74")
+    val paths = (0 to 3).map(i => s"$s64Dir/g$i") ++
+      (0 to S.s74Head).flatMap(k => Seq(s"$s74Dir/s74snap$k", s"$s74Dir/s74ledg$k"))
+    for (p <- paths)
+      assert(Tables.parquet(spark, p).schema == inferred(p), p)
+    // the fold's own read-backs carry the written frame's schema
+    val foldDir = scratchDir("fold")
+    try {
+      val init = Seq("snap" -> spark.read.parquet(s"$s74Dir/s74snap0"),
+        "ledg" -> spark.read.parquet(s"$s74Dir/s74ledg0"))
+      val batch = Tables.events(spark, sfDir).filter(col("event_id") % 7 === 0)
+        .select("user_id", "event_id", "ts", "event_type", "value")
+      val out = S.foldGenerations(spark, foldDir, init, Seq(batch)) { (st, b, i) =>
+        Seq(st(0).filter(col("user_id") % 2 === 0),
+          st(1).unionByName(b.withColumn("version", lit(i + 1))))
+      }
+      for ((df, p) <- out.zip(Seq("snap1", "ledg1")))
+        assert(df.schema == inferred(s"$foldDir/$p"), p)
+    } finally graft.sources.Export.deleteTree(foldDir)
+  }
+
+  test("a second load of an unchanged path submits no Spark job") {
+    val dir = scratchDir("memo")
+    try {
+      val p = s"$dir/t.parquet"
+      spark.range(10).withColumn("v", col("id") * 2).write.parquet(p)
+      assert(jobsOf(Tables.parquet(spark, p).schema) >= 1,
+        "the first load infers the schema with a job")
+      assert(jobsOf(Tables.parquet(spark, p).schema) == 0)
+      assert(Tables.parquet(spark, p).count() == 10)
+    } finally graft.sources.Export.deleteTree(dir)
+  }
+
+  test("overwriting a path with a different schema reads the new schema") {
+    val dir = scratchDir("rewrite")
+    try {
+      val p = s"$dir/t.parquet"
+      spark.range(5).withColumn("a", lit(1)).write.parquet(p)
+      val before = Tables.parquet(spark, p).schema
+      assert(before.fieldNames.toSeq == Seq("id", "a"))
+      spark.range(3).withColumn("b", lit("x")).withColumn("c", lit(2.5))
+        .write.mode("overwrite").parquet(p)
+      val after = Tables.parquet(spark, p)
+      assert(after.schema == inferred(p))
+      assert(after.schema.fieldNames.toSeq == Seq("id", "b", "c"))
+      assert(after.collect().map(_.getString(1)).toSeq == Seq("x", "x", "x"))
+    } finally graft.sources.Export.deleteTree(dir)
+  }
+
+  test("a missing path still fails with Spark's AnalysisException") {
+    val dir = scratchDir("missing")
+    try intercept[AnalysisException](Tables.parquet(spark, s"$dir/absent.parquet"))
+    finally graft.sources.Export.deleteTree(dir)
+  }
+}
