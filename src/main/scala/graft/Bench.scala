@@ -1,4 +1,7 @@
 package graft
+
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every SparkEntry query against
@@ -277,7 +280,7 @@ object Bench {
       SparkEntry.queries("q01_agg_filter")(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
       (System.nanoTime() - t0) / 1e9
-    } catch { case e: Throwable =>
+    } catch { case NonFatal(e) =>
       System.err.println(s"[bench] sentinel failed: ${e.getMessage}")
       -1.0
     }
@@ -295,7 +298,7 @@ object Bench {
       Tables.events(spark, sfDir).repartition(8, col("user_id"))
         .write.mode("overwrite").parquet(out)
       (System.nanoTime() - t0) / 1e9
-    } catch { case e: Throwable =>
+    } catch { case NonFatal(e) =>
       System.err.println(s"[bench] io sentinel failed: ${e.getMessage}")
       -1.0
     }
@@ -349,7 +352,7 @@ object Bench {
         SparkEntry.queries(name)(spark, sfDir)
           .write.format("noop").mode("overwrite").save()
         (System.nanoTime() - t0) / 1e9
-      } catch { case e: Throwable =>
+      } catch { case NonFatal(e) =>
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
         -1.0
       }
@@ -509,7 +512,7 @@ object Bench {
             None
         }
       }
-    } catch { case e: Throwable =>
+    } catch { case NonFatal(e) =>
       System.err.println(s"[bench] spawn $family failed: ${e.getMessage}")
       None
     }
@@ -625,7 +628,7 @@ object Bench {
   private def writeBenchOut(json: String): Unit =
     try java.nio.file.Files.write(
       java.nio.file.Paths.get("bench_out.json"), (json + "\n").getBytes("UTF-8"))
-    catch { case e: Throwable =>
+    catch { case NonFatal(e) =>
       System.err.println(s"[bench] bench_out.json write failed: ${e.getMessage}")
     }
 }

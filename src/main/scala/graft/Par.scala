@@ -1,5 +1,10 @@
 package graft
 
+import java.util.UUID
+import java.util.concurrent.{CancellationException, ExecutionException,
+  ExecutorCompletionService, Executors, TimeUnit}
+import java.util.concurrent.atomic.AtomicBoolean
+
 import org.apache.spark.sql.SparkSession
 
 /** Driver-side parallelism decisions, made in one place. */
@@ -35,22 +40,46 @@ private[graft] object Par {
     * them, and overlapping them lets a small job back-fill the executor
     * tail of a large one instead of waiting for it.
     *
-    * Results come back in input order. Any thunk failure rethrows
-    * (Await propagates the first), preserving fail-stop semantics. The
-    * pool is bounded (default 4 in flight — enough to fill a stage
-    * tail, not so many that jobs fight for task slots) and torn down
-    * before returning, so no thread leaks across invocations. */
-  def run[T](thunks: Seq[() => T], maxInFlight: Int = 4): Seq[T] =
+    * Results come back in input order. The first thunk failure stops
+    * the rest before it is rethrown: thunks not yet started are
+    * skipped, and every Spark job the running ones submitted is
+    * cancelled through one job tag per call, so no sibling job keeps
+    * computing for a result nobody will read. A tag, not a job group:
+    * the pool threads inherit the caller's group (the label a trace
+    * attributes their jobs by), and setting a group would replace it.
+    * The pool is bounded (default 4 in flight — enough to fill a stage
+    * tail, not so many that jobs fight for task slots) and shut down
+    * before this returns; every thunk has ended by then, after a
+    * failure too, so no thread leaks across invocations. */
+  def run[T](s: SparkSession, thunks: Seq[() => T], maxInFlight: Int = 4): Seq[T] =
     if (thunks.size <= 1) thunks.map(_())
     else {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(thunks.size, maxInFlight))
-      implicit val ec: ExecutionContext =
-        ExecutionContext.fromExecutorService(pool)
-      try Await.result(
-        Future.sequence(thunks.map(t => Future(t()))), Duration.Inf)
-      finally pool.shutdown()
+      val sc = s.sparkContext
+      val tag = s"graft-par-${UUID.randomUUID()}"
+      val failed = new AtomicBoolean(false)
+      val pool = Executors.newFixedThreadPool(math.min(thunks.size, maxInFlight))
+      val done = new ExecutorCompletionService[(Int, T)](pool)
+      thunks.zipWithIndex.foreach { case (t, i) =>
+        done.submit { () =>
+          if (failed.get) throw new CancellationException("a sibling thunk failed")
+          sc.addJobTag(tag)
+          (i, t())
+        }
+      }
+      try {
+        val out = new Array[Any](thunks.size)
+        thunks.foreach { _ =>
+          val (i, v) =
+            try done.take().get() catch { case e: ExecutionException => throw e.getCause }
+          out(i) = v
+        }
+        out.toSeq.asInstanceOf[Seq[T]]
+      } catch { case e: Throwable =>
+        failed.set(true)
+        pool.shutdown()
+        do sc.cancelJobsWithTag(tag)
+        while (!pool.awaitTermination(100, TimeUnit.MILLISECONDS))
+        throw e
+      } finally pool.shutdown()
     }
 }

@@ -20,7 +20,9 @@ import org.apache.spark.sql.types.StructType
   * a schema, each read costs one Spark job that infers the schema
   * from the files' footers before the query's own plan exists, and
   * short interactive queries over the same few tables pay it on every
-  * call.
+  * call. The same path installs [[SmallSort]] on the session, so every
+  * entry's presentation sort over a small input runs in one partition
+  * instead of behind a range-sampling job.
   */
 object Tables {
   /** Session settings that change what parquet schema inference
@@ -61,7 +63,8 @@ object Tables {
     * JVM: while the path's fingerprint is unchanged the read carries
     * the memoized schema, which submits no Spark job. A missing path
     * is read plainly, so it fails with Spark's own AnalysisException. */
-  def parquet(s: SparkSession, path: String): DataFrame =
+  def parquet(s: SparkSession, path: String): DataFrame = {
+    SmallSort.install(s)
     fingerprint(s, path) match {
       case None => s.read.parquet(path)
       case Some(fp) =>
@@ -73,6 +76,7 @@ object Tables {
           df
         }
     }
+  }
 
   private def load(s: SparkSession, dir: String, name: String): DataFrame =
     parquet(s, s"$dir/$name.parquet")

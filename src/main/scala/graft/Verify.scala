@@ -1,4 +1,7 @@
 package graft
+
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Schema invariants the driver's hash imposes on every
@@ -60,7 +63,7 @@ object Verify {
             s"DECIMAL in driver-visible output schema: ${decCols.mkString(",")} " +
               "— cast to string/double/long (driver hashes decimals asymmetrically)")
         df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
-      } catch { case e: Throwable =>
+      } catch { case NonFatal(e) =>
         failed += name
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }

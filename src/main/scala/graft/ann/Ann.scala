@@ -1807,7 +1807,7 @@ object Ann {
     // sequential (matched materializes the encode, distortion reads
     // it warm). Par.run preserves a55Cfgs order, so the rows, the
     // monotone-distortion require, and the output are unchanged.
-    val rows = graft.Par.run(a55Cfgs.map { cfg => () =>
+    val rows = graft.Par.run(s, a55Cfgs.map { cfg => () =>
       // ONE encode per grid point (r15, guide §5): the heavy per-row
       // encode used to run twice — once under the scoring pipeline,
       // once under the distortion rollup. Both consumers now read one

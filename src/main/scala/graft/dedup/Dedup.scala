@@ -3278,7 +3278,7 @@ object Dedup {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val truth = d51Truth(docs0, ids)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.Par.run(Seq(() => sigs.count(), () => truth.count()))
+    graft.Par.run(s, Seq(() => sigs.count(), () => truth.count()))
     // ONE banded enumeration serves the whole sweep (r16, guide §1.2
     // "don't compute things you throw away" / §2.4): the sweep's
     // candidate sets are NESTED — a pair matching an aligned r-row

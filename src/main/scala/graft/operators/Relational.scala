@@ -148,9 +148,11 @@ object Relational {
     * Reference: pervasive from_json / `args:method_name` JSON-path
     * extraction (Silver Lake Mainnet.sql:139-146, 256-263). */
   def q06JsonExtract(s: SparkSession, dir: String): DataFrame = {
-    // explicit-count repartition before the JSON parses (r15, the q12
-    // rationale): two parses per row — plus the range sampling pass —
-    // otherwise run in the 1-split scan's single task. Rows unchanged.
+    // explicit-count repartition before the JSON parses (the q12
+    // rationale): two parses per row otherwise run in the 1-split
+    // scan's single task, and once more under the range sort's
+    // sampling job when the input is too large for SmallSort. Rows
+    // unchanged.
     val nPart = graft.Par.shufflePartitions(s)
     Tables.events(s, dir)
       .select(col("event_id"), col("props"))
@@ -304,13 +306,13 @@ object Relational {
     * double-entry rows with exactly this idiom
     * (Silver Lake Mainnet - FT and NFT events.py:63-69). */
   def q12DoubleEntry(s: SparkSession, dir: String): DataFrame = {
-    // explicit-count repartition before the inline explode (r15, the
-    // t35 rationale): the gate corpus is one parquet split, so the
-    // 2×|lineitem| generate + decimal rounding — AND the range sort's
-    // sampling pass over the same subtree — otherwise run in ONE
-    // task. REPARTITION_BY_NUM (never AQE-coalesced), sized by the
-    // session's own shuffle-partitions knob; the added exchange
-    // carries five narrow columns, strictly smaller than the range
+    // explicit-count repartition before the inline explode (the t35
+    // rationale): the gate corpus is one parquet split, so the
+    // 2×|lineitem| generate + decimal rounding otherwise run in ONE
+    // task (and, above SmallSort's size limit, again under the range
+    // sort's sampling job). REPARTITION_BY_NUM (never AQE-coalesced),
+    // sized by the session's own shuffle-partitions knob; the added
+    // exchange carries five narrow columns, strictly smaller than the
     // exchange the orderBy already pays. Rows unchanged.
     val nPart = graft.Par.shufflePartitions(s)
     Tables.lineitem(s, dir)
@@ -737,10 +739,9 @@ object Relational {
       col("user_id"), col("event_type"), col("value"),
       array(col("user_id") % 10, col("user_id") % 7).as("shards")))
     val schema = "user_id BIGINT, event_type STRING, value DOUBLE, shards ARRAY<BIGINT>"
-    // explicit-count repartition before the serde roundtrip (r15, the
-    // q12 rationale): to_json + from_json + posexplode per row — plus
-    // the range sampling pass — otherwise run in the 1-split scan's
-    // single task. Rows unchanged.
+    // explicit-count repartition before the serde roundtrip (the q12
+    // rationale): to_json + from_json + posexplode per row otherwise
+    // run in the 1-split scan's single task. Rows unchanged.
     val nPart = graft.Par.shufflePartitions(s)
     Tables.events(s, dir)
       .select("event_id", "user_id", "event_type", "value")
@@ -868,11 +869,11 @@ object Relational {
     * stack — the reference's stack() usage generalized.
     * Reference: BQ Writer Views & Data Dictionary.py stack call. */
   def q26Unpivot(s: SparkSession, dir: String): DataFrame = {
-    // explicit-count repartition before the stack explode (r15, the
-    // q12 rationale): the 3×|lineitem| generate and the range sort's
-    // sampling pass otherwise both run in the 1-split scan's single
-    // task. Narrow 5-column exchange, REPARTITION_BY_NUM, sized by
-    // the session's shuffle-partitions knob. Rows unchanged.
+    // explicit-count repartition before the stack explode (the q12
+    // rationale): the 3×|lineitem| generate otherwise runs in the
+    // 1-split scan's single task. Narrow 5-column exchange,
+    // REPARTITION_BY_NUM, sized by the session's shuffle-partitions
+    // knob. Rows unchanged.
     val nPart = graft.Par.shufflePartitions(s)
     Tables.lineitem(s, dir)
       .select("l_orderkey", "l_linenumber", "l_extendedprice",
@@ -978,9 +979,9 @@ object Relational {
       array(col("event_type"), col("user_id").cast("string"),
         to_date(col("ts")).cast("string"))))
     // explicit-count repartition before the JSON roundtrip + explode
-    // (r15, the q12 rationale): per-row to_json/from_json serde and
-    // the 3× key explode — plus the range sampling pass — otherwise
-    // run in the 1-split scan's single task. Rows unchanged.
+    // (the q12 rationale): per-row to_json/from_json serde and the 3×
+    // key explode otherwise run in the 1-split scan's single task.
+    // Rows unchanged.
     val nPart = graft.Par.shufflePartitions(s)
     Tables.events(s, dir)
       .select("event_id", "event_type", "user_id", "ts")

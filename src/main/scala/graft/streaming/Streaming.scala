@@ -1001,7 +1001,7 @@ object Streaming {
     * inferring it would cost one Spark job per state per generation. */
   private def writeGeneration(s: SparkSession,
       named: Seq[(String, DataFrame)]): Seq[DataFrame] = {
-    graft.Par.run(named.map { case (path, df) =>
+    graft.Par.run(s, named.map { case (path, df) =>
       () => df.write.mode("overwrite").parquet(path) }, maxInFlight = 8)
     named.map { case (path, df) => s.read.schema(df.schema).parquet(path) }
   }

@@ -1273,11 +1273,10 @@ object TextOps {
     * ready for d22-style hash-groupBy dedup. */
   def t47CdcChunk(s: SparkSession, dir: String): DataFrame = {
     val w = 4; val div = 16
-    // explicit-count repartition before the chunking chain (r15, the
-    // t35 rationale): window keys, boundary transforms, posexplode
-    // and per-chunk md5 — plus the range sort's sampling pass —
-    // otherwise all run in the 1-split scan's single task. Rows
-    // unchanged.
+    // explicit-count repartition before the chunking chain (the t35
+    // rationale): window keys, boundary transforms, posexplode and
+    // per-chunk md5 otherwise all run in the 1-split scan's single
+    // task. Rows unchanged.
     val nPart = graft.Par.shufflePartitions(s)
     Tables.documents(s, dir)
       .select(col("doc_id"), col("text"))

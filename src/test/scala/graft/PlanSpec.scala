@@ -50,7 +50,8 @@ class PlanSpec extends SparkSpec {
     // both partition on user_id with the same ordering — Catalyst
     // must plan one hashpartitioning exchange and pipeline the two
     // window operators over it; the only other exchange allowed is
-    // the final presentation rangepartitioning sort.
+    // the final presentation sort's (one partition for a small input,
+    // range-partitioned for a large one).
     val (plan, _) = planOf("q32_scd2")
     assert(plan.linesIterator.count(_.contains("Exchange")) <= 2,
       s"SCD2 must reuse one user_id shuffle across both window passes:\n$plan")
@@ -304,11 +305,13 @@ class PlanSpec extends SparkSpec {
       s"label equi-key must hash-join against the broadcast queries:\n$plan")
     assert(plan.contains("Scan parquet"), "expected a parquet corpus scan")
     // every Exchange must be: a broadcast (queries/stats/candidates),
-    // the final presentation range sort, or a hashpartitioning ON
-    // query_id — the post-partial-agg top-C stream, which the
-    // bounded-buffer aggregator caps at <=C rows per (query, map
-    // task) BEFORE it crosses the wire. Nothing may shuffle the
-    // scored corpus stream itself (that key would be vec_id/label).
+    // the final presentation sort's (SinglePartition below the
+    // broadcast threshold, rangepartitioning above), or a
+    // hashpartitioning ON query_id — the post-partial-agg top-C
+    // stream, which the bounded-buffer aggregator caps at <=C rows
+    // per (query, map task) BEFORE it crosses the wire. Nothing may
+    // shuffle the scored corpus stream itself (that key would be
+    // vec_id/label).
     plan.split("\n").filter(_.contains("Exchange")).foreach { l =>
       assert(l.contains("Broadcast") || l.contains("rangepartitioning") ||
         l.contains("SinglePartition") ||

@@ -1,5 +1,10 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -8,6 +13,31 @@ import org.scalatest.BeforeAndAfterAll
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   val sfDir = "/root/testdata/sf0.001"
+
+  /** Spark jobs `body` submits from this thread and the threads it
+    * starts. Each job carries its thread's job group, and a marker job
+    * submitted after `body` reaches the listener after every job
+    * `body` submitted. */
+  protected def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val groups = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("spec-body", "counted body")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup("spec-marker", "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!groups.contains("spec-marker") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(groups.contains("spec-marker"), "marker job never reached the listener")
+      groups.asScala.count(_ == "spec-body")
+    } finally sc.removeSparkListener(listener)
+  }
 }
 
 object SparkSpec {

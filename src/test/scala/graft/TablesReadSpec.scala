@@ -1,10 +1,5 @@
 package graft
 
-import java.util.concurrent.ConcurrentLinkedQueue
-
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.functions.{col, lit}
 
@@ -15,30 +10,6 @@ import org.apache.spark.sql.functions.{col, lit}
 class TablesReadSpec extends SparkSpec {
 
   private def inferred(path: String) = spark.read.parquet(path).schema
-
-  /** Spark jobs `body` submits from this thread. Each job carries its
-    * thread's job group, and a marker job submitted after `body`
-    * reaches the listener after every job `body` submitted. */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val groups = new ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup("tables-read-body", "TablesReadSpec body")
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup("tables-read-marker", "TablesReadSpec marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!groups.contains("tables-read-marker") && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      assert(groups.contains("tables-read-marker"), "marker job never reached the listener")
-      groups.asScala.count(_ == "tables-read-body")
-    } finally sc.removeSparkListener(listener)
-  }
 
   private def scratchDir(tag: String): String =
     java.nio.file.Files.createTempDirectory(s"graft_tablesread_$tag").toString
