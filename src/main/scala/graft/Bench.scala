@@ -5,201 +5,80 @@ import scala.util.control.NonFatal
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every SparkEntry query against
-  * SPARK_GRAFT_SF_DIR and prints one JSON line of per-query wall
+  * [[Session.sfDir]] and prints one JSON line of per-query wall
   * times. Results are materialized through the noop sink so the
   * whole plan executes (a bare count() would let Catalyst prune
   * projections and skip the work being measured).
   *
-  * ISOLATION (VERDICT r2 #2, amended r13 #1): a single shared JVM
-  * makes per-query times unattributable — JIT/GC state left behind
-  * by the heavy dedup family perturbed q29 by 2.5× between rounds
-  * (6.4 s in-bench vs 2.4 s isolated, judge-verified). Rounds 3-13
-  * answered with one FRESH JVM per heavy query, but by r13 that was
-  * ~95 JVMs and the driver slot timed out (BENCH_r13 rc=124): the
-  * isolation overhead (JVM + session start + sentinel per process)
-  * exceeded the measurement itself. The r13 verdict's prescription,
-  * applied here: heavy ("solo") entries now share one JVM per group
-  * of 4, with a single-run q01 drift sentinel timed immediately
-  * before each grouped entry (recorded as sentinel_mid_sec) so every
-  * entry still self-identifies a polluted window, and all passes are
-  * 3 (the 5-pass cheap-entry policy bought jitter-taming the min/max
-  * bands already expose, at ~250 s of slot). Light queries group by
-  * prefix as before. The parent reuses this same main with
-  * `--part q1,q2,...` (`--mid` adds the per-entry sentinel) as the
-  * child protocol. If a child cannot be spawned (classpath oddity),
-  * the parent falls back to timing that family in-process — numbers
-  * still appear, marked by isolation="mixed". */
+  * Isolation: in one shared JVM, JIT/GC state left behind by heavy
+  * entries makes later times unattributable (q29 read 6.4 s after the
+  * dedup family and 2.4 s alone). One JVM per heavy entry costs more
+  * start-up than the measurement itself, so heavy ("solo") entries
+  * share one JVM per group of 4, with a q01 drift sentinel timed
+  * immediately before each member after the first (`sentinel_mid_sec`)
+  * so every entry still stamps a polluted window. Light entries share
+  * one JVM per name prefix. The parent runs each group in a child
+  * JVM of this same main (`--part q1,q2,...`, `--mid` for the
+  * per-entry sentinel); if a child cannot be spawned it times that
+  * group in-process and marks the record `isolation: "mixed"`. */
 object Bench {
 
-  /** Queries that need ATTRIBUTION (formerly: a dedicated JVM):
-    * everything whose clean-window median exceeded ~2 s — the JIT/GC
-    * perturbers AND the numbers that must be attributable
-    * round-over-round. Since r14 these run 4-to-a-JVM with a
-    * per-entry mid sentinel instead of one JVM each (see header). */
+  /** Entries that need a window of their own: those whose sf0.1
+    * median exceeds ~2 s, and those that write persisted artifacts or
+    * fold parquet generations. Either kind leaves JIT, GC or disk
+    * state that would perturb the light entries sharing a prefix
+    * family's JVM, and their own numbers must be attributable from
+    * one record to the next. */
   private[graft] val solo = Set(
+    "a29_ann_ivf", "a29b_ann_ivf_oracle", "a33_ann_ivfpq",
+    "a42_ann_ivf_mips", "a43_persisted_mips", "a44_cell_stats",
+    "a45_cell_split", "a46_cell_merge", "a47_nprobe_curve",
+    "a48_hard_negatives", "a49_knn_join", "a51_range_search",
+    "a52_cell_compaction", "a53_index_time_travel",
+    "a54_retrain_decision", "a55_pq_tradeoff",
     "d23_dedup_minhash", "d23b_minhash_oracle", "d24_dedup_simhash",
     "d24b_simhash_oracle", "d25_ngram_jaccard", "d25b_ngram_banded",
-    "d25c_ngram_banded_oracle",
-    "d26_embed_neardup", "d27_dedup_components", "d27b_components_oracle",
-    "d28_embed_neardup_lsh", "q12_double_entry", "q26_unpivot",
-    "q29_json_keys", "q31_export_roundtrip", "q33_bucketed_join",
-    "a29_ann_ivf", "a29b_ann_ivf_oracle",
-    "d31_passage_scrub", "d32_embed_dedup",
-    "a33_ann_ivfpq", "q34_zorder",
-    // r9: every query whose clean sf0.1 median crossed ~2 s joins
-    // the attribution set (t35/t38/t40/s39 sat in family groups; m35
-    // is pair-volume-heavy on the planted-dup corpus)
-    "t35_repetition", "t38_keyphrase", "t40_pipeline",
-    "s39_stream_decontaminate", "m35_media_neardup",
-    // d23b-scale pair volume (1.96M verified pairs at sf0.1)
-    "d37_incremental_neardup",
-    // r10: the new incremental/closure entries run multi-stage
-    // persisted-state jobs (index build + probe, CC to fixpoint) —
-    // attributable from their first appearance
-    "d38_incremental_embed_neardup", "d39_incremental_components",
-    "m36_media_dedup_closure",
-    // r11: the r10 text-family sentinel hit 5.69 because t51/t52's
-    // persist-heavy training loops sat INSIDE the shared text
-    // window — every multi-pass/persisted-artifact entry ≥ ~2 s gets
-    // attribution so the family windows stay sentinel-clean
-    "t51_bpe_merges", "t52_bpe_apply", "t57_bpe_batched",
-    "d44_substring_dedup", "d45_substring_scrub", "d46_semantic_dedup",
-    "a42_ann_ivf_mips", "a43_persisted_mips",
-    "s48_stream_semantic_admit", "s49_stream_heavy_hitters",
-    // r11 second window: d47/s50 fold persisted artifact generations,
-    // d48 rides the d44-class winnowing join, d51 runs the declared-
-    // quadratic truth leg — all attributable from first appearance
-    "d47_index_forget", "d48_containment_dedup", "d51_neardup_eval",
-    "s50_stream_funnel", "s51_stream_scd2", "a44_cell_stats",
-    "a45_cell_split", "s53_stream_hll", "s54_stream_transitions",
-    // r11 third window (review finding: these landed after the list
-    // above without isolation): a46/a47 ride the persisted a42
-    // build, q52/s55 fold profile generations, t58 rides t39's
-    // scored stream; the s56-s59 folds, q53's CC fixpoint, and
-    // a48's persisted cell self-join are attributable from first
-    // appearance
-    "a46_cell_merge", "a47_nprobe_curve", "q52_profile",
-    "s55_stream_profile", "t58_ccnet_buckets",
-    "q53_communities", "a48_hard_negatives",
-    "s56_stream_attribution", "s57_stream_anomaly",
-    "s58_stream_psi", "s59_stream_benford",
-    // r12: new generation folds + the q68 exact leg's per-group full
-    // sorts — attributable from first appearance
-    "q68_quantile_sketch", "s60_stream_quantiles", "s61_stream_xmr",
-    "a49_knn_join", "d52_corpus_overlap", "q52b_hll_ndv",
-    "s63_stream_sessions", "s64_stream_weighted_sample",
-    "s62_stream_forecast", "q74_pruned_export",
-    // r13: measured ≥ ~2 s at sf0.1 on first appearance — the
-    // banding sweep rides d51's truth leg, a51 rides a49's scored
-    // build, the layout/time-travel entries write persisted
-    // artifacts, and every s65–s73 fold chains parquet generations
-    // (the r11 family-window lesson applied preemptively)
-    "d53_banding_curve", "d54_overlap_matrix", "a51_range_search",
-    "a52_cell_compaction", "q75_compaction", "q78_retention",
-    "q79_incremental_stats", "q81_restore", "q82_bloom_skipping",
-    "q84_partition_evolution", "q85_khop",
-    "s65_exactly_once", "s66_stream_rfm", "s67_stream_overlap",
-    "s68_stream_compaction", "s69_stream_schema_evolution",
-    "s70_stream_skipping", "s71_stream_late_data",
-    "s72_stream_join_mv", "s73_stream_fifo",
-    // r14: q92 writes a 6-version chain + 2 checkpoints at
-    // construction (deeper than q78/q81, both already solo-class);
-    // s74 folds snapshot + ledger generations (the s65-s73 class);
-    // a53 builds a 3-commit versioned index and probes two versions
-    "q92_checkpointed_travel", "s74_stream_asof",
-    "a53_index_time_travel",
-    // q93 writes the q92-class chain + checkpoints at construction;
-    // q94 builds the a53 layout + runs the GC cycle at construction;
-    // s75 runs the s74 fold at construction
-    "q93_change_feed", "q94_orphan_gc", "s75_stream_cdf",
-    // q95 runs the full MOR lifecycle (base write + two delete
-    // commits + purge rewrite) and q96 stages/audits/publishes three
-    // batches at construction — persisted-artifact writers,
-    // attributable from first appearance
-    "q95_deletion_vectors", "q96_wap",
-    // their streaming twins fold the same persisted artifacts per
-    // trigger (s76 stages+audits three batches, s77 writes the
-    // clustered layout + two vector generations)
-    "s76_stream_wap", "s77_stream_mor",
-    // a54 runs TWO deterministic index builds + a health scan per
-    // regime; q100 writes a partitioned table twice at construction;
-    // q101 writes the clustered layout + its index table
-    "a54_retrain_decision", "q100_replace_where", "q101_record_index",
-    // s78 folds clustered append commits + index generations; q102
-    // writes THREE clustered layouts + sidecars at construction;
-    // a55 runs the a27 truth leg + three PQ pipelines
-    "s78_stream_record_index", "q102_layout_matrix", "a55_pq_tradeoff",
-    // s79 folds profile-MV generations at construction
-    "s79_stream_pseudonymize",
-    // r15: q103 writes three fact commits + three MV snapshots +
-    // manifests at construction (the q96 class); q104 runs a
-    // count+max pass over every served table for its stats manifest
-    // — both attributable from first appearance (review-pass finding)
-    "q103_atomic_publish", "q104_data_dictionary",
-    // r15 optimization round: q42 joins q31's split class (below), so
-    // it needs the same per-entry attribution
-    "q42_jsonl_roundtrip",
-    // r16: s44 joins the split class (probes the d37 band index), so
-    // it needs the same per-entry attribution
-    "s44_stream_neardup_admit",
-    // r16: q76/q87 join the split class (layout/lifecycle family), so
-    // they need the same per-entry attribution
-    "q76_data_skipping", "q87_shallow_clone")
-
-  /** The ARTIFACT-WRITER class (VERDICT r14 #1): entries whose query
-    * body constructs a persisted artifact (version chain, index
-    * layout, folded state dir) before the registered read face.
-    * These run with [[BuildCache]] memoization in bench JVMs: the
-    * first pass constructs (its construction wall time reported as
-    * `build_sec`) and every later pass times the SERVED READ alone
-    * (`queries`/`queries_lo`/`queries_hi` are probe numbers for this
-    * class). Membership is pinned by BenchPlanSpec against the
-    * BuildCache.build call sites. */
-  private[graft] val artifactWriters = Set(
-    "q31_export_roundtrip", "q78_retention",
-    "q92_checkpointed_travel", "q93_change_feed",
+    "d25c_ngram_banded_oracle", "d26_embed_neardup",
+    "d27_dedup_components", "d27b_components_oracle",
+    "d28_embed_neardup_lsh", "d31_passage_scrub", "d32_embed_dedup",
+    "d37_incremental_neardup", "d38_incremental_embed_neardup",
+    "d39_incremental_components", "d44_substring_dedup",
+    "d45_substring_scrub", "d46_semantic_dedup", "d47_index_forget",
+    "d48_containment_dedup", "d51_neardup_eval", "d52_corpus_overlap",
+    "d53_banding_curve", "d54_overlap_matrix",
+    "m35_media_neardup", "m36_media_dedup_closure",
     "q100_replace_where", "q101_record_index", "q102_layout_matrix",
-    "a43_persisted_mips", "a53_index_time_travel",
+    "q103_atomic_publish", "q104_data_dictionary", "q12_double_entry",
+    "q26_unpivot", "q29_json_keys", "q31_export_roundtrip",
+    "q33_bucketed_join", "q34_zorder", "q42_jsonl_roundtrip",
+    "q52_profile", "q52b_hll_ndv", "q53_communities",
+    "q68_quantile_sketch", "q74_pruned_export", "q75_compaction",
+    "q76_data_skipping", "q78_retention", "q79_incremental_stats",
+    "q81_restore", "q82_bloom_skipping", "q84_partition_evolution",
+    "q85_khop", "q87_shallow_clone", "q92_checkpointed_travel",
+    "q93_change_feed", "q94_orphan_gc", "q95_deletion_vectors",
+    "q96_wap",
+    "s39_stream_decontaminate", "s44_stream_neardup_admit",
+    "s48_stream_semantic_admit", "s49_stream_heavy_hitters",
+    "s50_stream_funnel", "s51_stream_scd2", "s53_stream_hll",
+    "s54_stream_transitions", "s55_stream_profile",
+    "s56_stream_attribution", "s57_stream_anomaly", "s58_stream_psi",
+    "s59_stream_benford", "s60_stream_quantiles", "s61_stream_xmr",
+    "s62_stream_forecast", "s63_stream_sessions",
+    "s64_stream_weighted_sample", "s65_exactly_once", "s66_stream_rfm",
+    "s67_stream_overlap", "s68_stream_compaction",
+    "s69_stream_schema_evolution", "s70_stream_skipping",
+    "s71_stream_late_data", "s72_stream_join_mv", "s73_stream_fifo",
     "s74_stream_asof", "s75_stream_cdf", "s76_stream_wap",
     "s77_stream_mor", "s78_stream_record_index",
     "s79_stream_pseudonymize",
-    "q103_atomic_publish", "q104_data_dictionary",
-    // r15 optimization round, same criterion applied to two entries
-    // the r14 list missed: q42 is q31's JSONL twin (identical
-    // write-then-read-back shape), and s48 builds its persisted
-    // quantizer + index + metadata artifacts before the admission
-    // face (the s74-s79 stance)
-    "q42_jsonl_roundtrip", "s48_stream_semantic_admit",
-    // r16: the incremental dedup legs carry persisted state by
-    // design — d37/s44 probe the band index, d38 the hyperplane
-    // index, d39 the history label index; the carried artifact is
-    // the build, the daily update is the read face being graded
-    "d37_incremental_neardup", "s44_stream_neardup_admit",
-    "d38_incremental_embed_neardup", "d39_incremental_components",
-    // r16, same criterion applied to the storage-LAYOUT family: each
-    // writes a layout a warehouse carries (bucketed tables, z-order,
-    // year partitions, compacted files, clustered files + stats/bloom
-    // sidecars, evolved partition schemes) whose whole point is being
-    // written once and amortized over every later read — the
-    // registered read face (join/rollup/probe over the layout) is
-    // what 100 TB serving grades
-    "q33_bucketed_join", "q34_zorder", "q74_pruned_export",
-    "q75_compaction", "q76_data_skipping", "q82_bloom_skipping",
-    "q84_partition_evolution",
-    // r16, same criterion, lifecycle writers with a distinct served
-    // read: q81 restores a version chain (q92's sibling) and serves
-    // the AS OF read; q87's clone manifests serve a manifest-resolved
-    // read; q95's delete commits + purge serve the merge-on-read
-    "q81_restore", "q87_shallow_clone", "q95_deletion_vectors")
+    "t35_repetition", "t38_keyphrase", "t40_pipeline", "t51_bpe_merges",
+    "t52_bpe_apply", "t57_bpe_batched", "t58_ccnet_buckets")
 
-  /** Entries per solo-group JVM. The r14 measurement arc, both
-    * directions measured: 97 JVMs (r13) overran the slot; 4-per-JVM
-    * landed 47:55 with shared-entry medians 1.12× r13's solo-JVM
-    * record; 8-per-JVM cut the wall to 44:12 but pushed the group-
-    * neighbor JIT/GC inflation to 1.26× — too much perturbation to
-    * buy 4 minutes. 4 is the measured sweet spot: the adaptive
-    * third-pass skip recovers the wall instead, and the per-entry
-    * mid sentinel stamps any window the sharing does pollute. */
+  /** Entries per solo-group JVM. One JVM per entry overran the bench
+    * slot; 8 per JVM inflated neighbours' times by 1.26× through shared
+    * JIT/GC state, against 1.12× at 4. The per-entry mid sentinel
+    * stamps any window the sharing does pollute. */
   private val groupSize = 4
 
   private def prefixFamily(name: String): String =
@@ -228,32 +107,20 @@ object Bench {
     groups ++ fams
   }
 
-  private def newSession(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
   /** One measured query: median plus the min/max band. The band is
-    * the honest error bar — this container is a shared host whose
-    * throughput drifts minute-to-minute (measured: the SAME query in
-    * the SAME warm JVM spans 10.6–13.8 s back-to-back), so a bare
-    * median invites misreading environmental noise as a regression.
-    * Compare rounds against the overlap of the bands. */
+    * the error bar: on a shared host the same query in the same warm
+    * JVM has spanned 10.6–13.8 s back-to-back, so a bare median
+    * invites reading host noise as a regression. Compare records by
+    * the overlap of the bands. `buildSec` is the construction time of
+    * the artifact the entry's first pass built, or -1 if it built
+    * none. */
   case class Timing(name: String, med: Double, lo: Double, hi: Double,
       buildSec: Double = -1.0)
 
   /** A family's timings bracketed by the drift sentinel: the fixed
     * micro-query (q01) timed immediately before and after the family.
-    * Round 4 proved min/max bands alone can't flag a contended
-    * window — the driver recorded 54.8 s as a MEDIAN for a 1.2 s
-    * query. A sentinel that should always take ~the same time makes
+    * Min/max bands alone cannot flag a contended window (a 1.2 s
+    * query once recorded a 54.8 s median). A sentinel that should always take ~the same time makes
     * each family's numbers self-identify as clean (ratio ≈ 1, small
     * absolute sentinel) or polluted (inflated sentinel on either
     * side). `mids` (solo groups only) adds one single-run q01 time
@@ -261,7 +128,7 @@ object Bench {
     * member — the per-entry drift stamp that lets heavy entries
     * share a JVM without losing attribution.
     *
-    * The `*Io` twins are the r14-verdict #4 IO leg: q01 is a CPU
+    * The `*Io` twins are the IO leg: q01 is a CPU
     * micro-query, so a disk-contended window inflates it far less
     * than it inflates the shuffle/write-bound entries it guards
     * (m35's 20.8× window carried a 5.0× cpu stamp). Each cpu
@@ -288,8 +155,8 @@ object Bench {
 
   /** The IO drift probe: one fixed-size shuffle + parquet write to
     * scratch (events keyed by user_id, 8 partitions — ~1 s class at
-    * sf0.1, constant across rounds so its inflation measures the
-    * HOST's disk, not the code). */
+    * sf0.1, fixed so its inflation measures the host's disk, not the
+    * code). */
   private def ioOnce(spark: SparkSession, sfDir: String): Double = {
     import org.apache.spark.sql.functions.col
     val t0 = System.nanoTime()
@@ -305,47 +172,44 @@ object Bench {
   }
 
   /** Median-of-3 q01 wall time — the drift sentinel. Cheap (~1 s at
-    * sf0.1) and fixed across rounds, so its inflation measures the
-    * HOST, not the code. */
+    * sf0.1) and fixed, so its inflation measures the host, not the
+    * code. */
   private def sentinelTime(spark: SparkSession, sfDir: String): Double = {
     val runs = (1 to 3).map(_ => q01Once(spark, sfDir))
     if (runs.exists(_ < 0)) -1.0 else runs.sorted.apply(1)
   }
 
-  /** Timed passes per query, ADAPTIVE (the last of the r13-verdict
-    * slot trims): 2 passes suffice when they AGREE — sub-second
-    * first pass (jitter-dominated; noise only adds, so min-of-2 is
-    * the best point estimate — the verdict's own prescription) or
-    * r1/r2 within 10% of each other (min ≈ median by construction,
-    * so the skipped third pass could only have moved the number
-    * inside the band) — and the full median-of-3 runs exactly when
-    * it is needed: the first two passes DISAGREE, which is also
-    * precisely the case where pass 1 carried codegen-compile cost
-    * and a 2-sample statistic would be wrong. In a clean window
-    * most entries stop at 2, cutting the pass wall by ~a third; in
-    * a noisy window entries self-select into 3 passes. With `mid`
-    * set (solo groups), each query after the first is preceded by
-    * one q01 run whose time is recorded against that query — its
-    * drift stamp. */
-  private def timeQueries(spark: SparkSession, sfDir: String,
+  /** Timed passes per query, adaptive: 2 passes suffice when they
+    * agree — a sub-second first pass (jitter-dominated; noise only
+    * adds, so min-of-2 is the best point estimate) or r1/r2 within 10%
+    * of each other (the skipped third pass could only have moved the
+    * number inside the band) — and the full median-of-3 runs when the
+    * first two disagree, which is also when pass 1 carried
+    * codegen-compile cost. With `mid` set (solo groups), each query
+    * after the first is preceded by one q01 run whose time is recorded
+    * against that query — its drift stamp.
+    *
+    * Build/probe split: with [[BuildCache]] enabled, an entry whose
+    * first pass grows `BuildCache.builtKeys` has just constructed a
+    * persisted artifact that every later invocation in this JVM
+    * reuses. That pass is reported as `buildSec` (the construction
+    * time alone) and the timed passes follow it, so they time the
+    * served read. Any other entry's first pass is its first timed
+    * pass. */
+  private[graft] def timeQueries(spark: SparkSession, sfDir: String,
       names: Seq[String], mid: Boolean)
       : (Seq[Timing], Seq[(String, Double)], Seq[(String, Double)]) = {
-    // no separate warmup pass: the only caller is timeFamily, whose
-    // leading sentinel has just run q01 three times in this JVM
+    // no separate warmup pass: timeFamily's leading sentinel has just
+    // run q01 three times in this JVM
     def timeOnce(name: String): Double = {
-      // CACHE-COLD PASSES (r15 optimization round): several operators
-      // persist() shared subtrees for IN-INVOCATION reuse (a42's
-      // centroids, d23's band stream, d44's fingerprint stream).
-      // Spark's CacheManager matches cached plans by canonical form
-      // across queries in a session, so without this clear a pass
-      // 2+ — or a same-JVM neighbor entry sharing the subtree — would
-      // serve the persisted data from pass 1's materialization instead
-      // of computing it from the parquet inputs, which is exactly the
-      // cross-run caching the bench must not measure. Every timed pass
-      // therefore starts cache-cold: in-invocation reuse (the thing
-      // the persists are for) still works within the pass, and nothing
-      // survives between passes. BuildCache artifacts are PATHS on
-      // disk, not cached frames — the build/probe split is unaffected.
+      // Every pass starts cache-cold. Operators persist() shared
+      // subtrees for reuse within one invocation (a42's centroids,
+      // d23's band stream), and Spark's CacheManager matches cached
+      // plans by canonical form across queries in a session, so a
+      // later pass or a same-JVM neighbour would otherwise read pass
+      // 1's cached data instead of computing from the parquet inputs.
+      // BuildCache artifacts are paths on disk, not cached frames, so
+      // the build/probe split is unaffected.
       spark.catalog.clearCache()
       val t0 = System.nanoTime()
       try {
@@ -370,26 +234,18 @@ object Bench {
         System.err.println(
           f"[bench] mid-sentinel before $name%-26s cpu $s%6.2f s  io $io%6.2f s")
       }
-      // BUILD/PROBE SPLIT (VERDICT r14 #1): an artifact writer's
-      // first pass constructs the persisted artifact (BuildCache,
-      // enabled in bench JVMs, memoizes it and meters the
-      // construction wall time); every later pass reuses it, so the
-      // adaptive passes below time the registered READ FACE alone.
-      val isWriter = artifactWriters(name)
+      val built0 = BuildCache.builtKeys.size
+      val b0 = BuildCache.totalBuildSec
+      val first = timeOnce(name)
       val buildSec =
-        if (!isWriter) -1.0
+        if (first < 0 || BuildCache.builtKeys.size == built0) -1.0
         else {
-          val b0 = BuildCache.totalBuildSec
-          val first = timeOnce(name)
-          if (first < 0) Double.NaN // first pass failed → entry fails
-          else {
-            val b = BuildCache.totalBuildSec - b0
-            System.err.println(f"[bench] $name%-26s build $b%8.2f s " +
-              f"(first pass $first%.2f s incl. probe)")
-            math.rint(b * 1000) / 1000
-          }
+          val b = BuildCache.totalBuildSec - b0
+          System.err.println(f"[bench] $name%-26s build $b%8.2f s " +
+            f"(first pass $first%.2f s incl. probe)")
+          math.rint(b * 1000) / 1000
         }
-      val r1 = if (buildSec.isNaN) -1.0 else timeOnce(name)
+      val r1 = if (buildSec >= 0) timeOnce(name) else first
       val runs =
         if (r1 < 0) Seq(r1)
         else {
@@ -407,7 +263,7 @@ object Bench {
         if (runs.exists(_ < 0)) (-1.0, -1.0) else (runs.min, runs.max)
       System.err.println(
         f"[bench] $name%-26s $med%8.2f s (runs: ${runs.map(r => f"$r%.2f").mkString(", ")})")
-      Timing(name, med, lo, hi, if (buildSec.isNaN) -1.0 else buildSec)
+      Timing(name, med, lo, hi, buildSec)
     }
     (ts, mids.result(), midsIo.result())
   }
@@ -475,9 +331,9 @@ object Bench {
         None
       } else {
         val re = """"([a-z0-9_]+)":(-?[0-9.]+(?:[eE]-?[0-9]+)?)""".r
-        // guarded extraction (ADVICE r3): a missing tag or brace must
-        // trigger the documented in-process fallback, not a silent
-        // substring of the wrong object
+        // guarded extraction: a missing tag or brace must trigger the
+        // in-process fallback, not a silent substring of the wrong
+        // object
         def section(tag: String): Option[Map[String, Double]] = {
           val from = line.get.indexOf("\"" + tag + "\"")
           if (from < 0) None
@@ -519,14 +375,13 @@ object Bench {
   }
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // bench JVMs (parent fallback AND children) memoize artifact
-    // construction so the pass structure can split build from probe;
-    // Verify/specs never call enable() and keep full-lifecycle runs
+    val sfDir = Session.sfDir
+    // bench JVMs (parent fallback and children) memoize artifact
+    // construction so the pass structure can split build from probe
     BuildCache.enable()
     if (args.length >= 2 && args(0) == "--part") {
       // child: time the named queries in THIS JVM, report a partial
-      val spark = newSession()
+      val spark = Session.local()
       val ft = timeFamily(spark, sfDir, args(1).split(",").toSeq,
         args.contains("--mid"))
       val rs = ft.timings
@@ -542,26 +397,21 @@ object Bench {
       System.err.println(s"[bench] === family $family (${part.size} queries, fresh JVM${if (mid) ", mid-sentinels" else ""}) ===")
       acc += family -> runChild(family, part, mid).getOrElse {
         mixed = true
-        val spark = newSession()
+        val spark = Session.local()
         try timeFamily(spark, sfDir, part, mid) finally spark.stop()
       }
-      // CRASH-SAFE PARTIAL RECORD (r14): r13's official bench was
-      // rc=124 with NOTHING recoverable because both the stdout line
-      // and bench_out.json materialize only at the very end. Rewrite
-      // bench_out.json after every family (a marked partial until
-      // the run completes — the final write below replaces it), so
-      // a killed run still leaves every measured family on disk for
-      // the post-timeout commit instead of leaving the round with no
-      // perf record at all.
+      // Rewrite bench_out.json after every family, marked partial until
+      // the final write below replaces it, so a run killed by a
+      // timeout still leaves every measured family on disk.
       if (i + 1 < plan.size)
         writeBenchOut(buildJson(acc.result(), mixed, sfDir,
           partial = Some((i + 1, plan.size))))
     }
     val famResults = acc.result()
     val json = buildJson(famResults, mixed, sfDir, partial = None)
-    // medians LAST (VERDICT r3 #4): the driver captures a tail window
-    // of this line, so the primary numbers must sit at the end to
-    // survive truncation; the noise bands are the expendable head.
+    // medians last: a reader that keeps only the tail of this line
+    // still gets the primary numbers; the noise bands are the
+    // expendable head.
     // The same line is also written to bench_out.json so a full copy
     // exists regardless of any capture window.
     println(json)
@@ -578,15 +428,15 @@ object Bench {
     val results = famResults.flatMap(_._2.timings)
     val total = results.map(_.med).filter(_ >= 0).sum
     val iso = if (mixed) "mixed" else "jvm-per-group"
-    // DRIFT SENTINEL (VERDICT r4 #3): each family's numbers are
+    // Drift sentinel: each family's numbers are
     // bracketed by a fixed micro-query (q01) timed in the same JVM.
     // The two sides live at DIFFERENT JVM ages (before = JIT-cold
     // right after session start, after = fully warm), so each side is
     // normalized against its own best across the run — all "befores"
     // share a lifecycle, all "afters" share a lifecycle — and
     // sentinel_ratio is the worse of the two per-side ratios. A
-    // family measured in a contended window stamps itself (the r4
-    // failures this detects were 10-45× on a 1.2 s query); a
+    // family measured in a contended window stamps itself (windows
+    // of 10-45× on a 1.2 s query have been seen); a
     // uniformly slow run shows in the absolute before/after seconds.
     // Ratios ≳ 3 mean: do not trust round-over-round deltas for that
     // family. sentinel_mid_sec adds the per-entry stamp inside solo
@@ -615,9 +465,9 @@ object Bench {
     }
     val sentRatio = ratioOf(sentBefore, sentAfter)
     val sentIoRatio = ratioOf(sentBeforeIo, sentAfterIo)
-    // the build/probe split (r14 #1): artifact writers report their
-    // construction wall time separately; their queries/lo/hi numbers
-    // are the SERVED READ alone
+    // entries that built an artifact report its construction time
+    // separately; their queries/lo/hi numbers are the served read
+    // alone
     val builds = results.filter(_.buildSec >= 0).map(t => t.name -> t.buildSec)
     val buildTotal = math.rint(builds.map(_._2).filter(_ >= 0).sum * 1000) / 1000
     val partialField = partial.fold("")(p =>

@@ -1,29 +1,20 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan dumper for the optimization rounds: writes
   * `.explain("formatted")` of named registered queries to
   * `<outDir>/<name>_<tag>.txt`. Usage:
   *
   *   sbt "runMain graft.Plans <outDir> <tag> q1,q2,..."
   *
-  * Reads SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS like Bench. Explain
+  * Runs on [[Session.local]] over [[Session.sfDir]]. Explain
   * only — no action is executed, so this is cheap enough to run for
   * every touched query before and after a change. */
 object Plans {
   def main(args: Array[String]): Unit = {
     require(args.length == 3, "usage: Plans <outDir> <tag> <names,csv>")
     val Array(outDir, tag, csv) = args
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val sfDir = Session.sfDir
+    val spark = Session.local()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     csv.split(",").map(_.trim).filter(_.nonEmpty).foreach { name =>
       // pseudo-entry for the shared CC machinery: the registered graph

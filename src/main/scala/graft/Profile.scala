@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 import scala.collection.mutable
 
 /** Per-job/per-stage attribution for ONE registered query — the
@@ -13,7 +12,7 @@ import scala.collection.mutable
   *
   *   sbt "runMain graft.Profile <name> [<name2> ...]"
   *
-  * Reads SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS like Bench. The
+  * Runs on [[Session.local]] over [[Session.sfDir]]. The
   * instrument never runs in the bench or verify paths. */
 object Profile {
   private case class StageAgg(var name: String = "", var taskTimeMs: Long = 0,
@@ -22,15 +21,8 @@ object Profile {
 
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: Profile <queryName> [more...]")
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val sfDir = Session.sfDir
+    val spark = Session.local()
 
     val jobs = mutable.LinkedHashMap[Int, (Long, Long, String)]() // id -> (start, end, desc)
     val stages = mutable.LinkedHashMap[Int, StageAgg]()

@@ -130,17 +130,10 @@ object Scale {
     df.write.format("noop").mode("overwrite").save()
 
   def main(args: Array[String]): Unit = {
-    val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val base = Session.sfDir
     val sf1 = sys.env.getOrElse("SPARK_GRAFT_SF1_DIR",
       s"${sys.props("java.io.tmpdir")}/graft_scale_sf1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     synthesize(spark, base, sf1)
     // build/probe split active here exactly as in Bench: wrapped
     // entries (q92/q102/a43) construct once per (dir) and the timed

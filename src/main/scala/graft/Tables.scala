@@ -4,7 +4,7 @@ import java.io.FileNotFoundException
 import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
 /** Typed loaders for the driver-generated parquet tables, and the one
@@ -25,11 +25,12 @@ import org.apache.spark.sql.types.StructType
   * instead of behind a range-sampling job.
   */
 object Tables {
+  private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
+
   /** Session settings that change what parquet schema inference
-    * returns for the same files; `nanosAsLong` is the one [[events]]
-    * sets. */
+    * returns for the same files. */
   private val inferenceConfs = Seq(
-    "spark.sql.legacy.parquet.nanosAsLong",
+    NanosAsLong,
     "spark.sql.parquet.binaryAsString",
     "spark.sql.parquet.int96AsTimestamp",
     "spark.sql.parquet.inferTimestampNTZ.enabled",
@@ -71,12 +72,28 @@ object Tables {
         val hit = schemas.get(path)
         if (hit != null && hit._1 == fp) s.read.schema(hit._2).parquet(path)
         else {
-          val df = s.read.parquet(path)
-          schemas.put(path, (fp, df.schema))
-          df
+          val schema = infer(s, path)
+          schemas.put(path, (fp, schema))
+          s.read.schema(schema).parquet(path)
         }
     }
   }
+
+  /** The schema `s` infers for `path`. Inference rejects a
+    * TIMESTAMP(NANOS) column unless `nanosAsLong` is set, so such a
+    * file is inferred again on a child session carrying `s`'s
+    * inference settings plus that flag, which types the column as a
+    * long. A read that carries that schema needs no flag, so `s`'s own
+    * conf is left as it was. */
+  private def infer(s: SparkSession, path: String): StructType =
+    try s.read.parquet(path).schema
+    catch {
+      case e: AnalysisException if e.getCondition == "PARQUET_TYPE_ILLEGAL" =>
+        val scoped = s.newSession()
+        inferenceConfs.foreach(k => s.conf.getOption(k).foreach(scoped.conf.set(k, _)))
+        scoped.conf.set(NanosAsLong, "true")
+        scoped.read.parquet(path).schema
+    }
 
   private def load(s: SparkSession, dir: String, name: String): DataFrame =
     parquet(s, s"$dir/$name.parquet")
@@ -89,16 +106,15 @@ object Tables {
   def orders(s: SparkSession, dir: String): DataFrame     = load(s, dir, "orders")
   def lineitem(s: SparkSession, dir: String): DataFrame   = load(s, dir, "lineitem")
   /** events.parquet has shipped `ts` in two physical layouts across
-    * driver testdata generations: TIMESTAMP(NANOS) (which Spark's
-    * vectorized reader rejects — read nanos as long, truncate to a
-    * microsecond timestamp, matching DuckDB's ns→us truncation) and
-    * plain TIMESTAMP micros (read natively). Adapt by the loaded
-    * dtype so either generation works; either way the column lands
-    * as a session-zone (UTC) microsecond timestamp. */
+    * test-data generations: TIMESTAMP(NANOS), which Spark reads only as
+    * a long (nanoseconds, truncated here to a microsecond timestamp,
+    * matching DuckDB's ns→us truncation), and plain TIMESTAMP micros
+    * (read natively). Adapt by the loaded dtype so either generation
+    * works; either way the column lands as a session-zone (UTC)
+    * microsecond timestamp. */
   def events(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
     import org.apache.spark.sql.types.LongType
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = load(s, dir, "events")
     raw.schema("ts").dataType match {
       case LongType => raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))

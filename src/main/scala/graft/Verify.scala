@@ -2,7 +2,6 @@ package graft
 
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Schema invariants the driver's hash imposes on every
   * driver-visible output — shared by Verify's runtime gate and
@@ -34,14 +33,7 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     new java.io.File(outDir).mkdirs()
     val failed = scala.collection.mutable.ListBuffer.empty[String]
     val selected = SparkEntry.queries

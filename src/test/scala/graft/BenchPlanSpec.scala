@@ -1,8 +1,6 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-
-/** Bench measurement-plan drift guards (no SparkSession needed).
+/** Bench measurement-plan drift guards, and the build/probe split.
   *
   * The solo set is a list of NAMES maintained by hand across rounds;
   * `familyPlan` partitions the registry against it. Two silent drift
@@ -11,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * back into its prefix family and loses the attribution the set
   * exists for; and a plan bug could measure an entry twice or not at
   * all and the one-line JSON would not say so. */
-class BenchPlanSpec extends AnyFunSuite {
+class BenchPlanSpec extends SparkSpec {
 
   test("every solo name is a registered query (no stale attribution entries)") {
     val stale = Bench.solo -- SparkEntry.queries.keySet
@@ -38,41 +36,22 @@ class BenchPlanSpec extends AnyFunSuite {
     }
   }
 
-  test("artifact-writer class: registered, solo, and matching the BuildCache call sites") {
-    // every artifact writer is a registered query AND attribution-class
-    val stale = Bench.artifactWriters -- SparkEntry.queries.keySet
-    assert(stale.isEmpty, s"artifact writers not in the registry: $stale")
-    val unattributed = Bench.artifactWriters -- Bench.solo
-    assert(unattributed.isEmpty,
-      s"artifact writers outside the solo set: $unattributed")
-    // the class is exactly the set of entries whose bodies route
-    // construction through BuildCache.build — pinned against the
-    // SOURCE so a new wrapped entry cannot be silently unreported
-    // (key prefixes in the call sites are the entry-key q/a/s stems)
-    val stems = Seq(
-      "src/main/scala/graft/operators/Relational.scala",
-      "src/main/scala/graft/sources/Export.scala",
-      "src/main/scala/graft/ann/Ann.scala",
-      "src/main/scala/graft/streaming/Streaming.scala",
-      "src/main/scala/graft/dedup/Dedup.scala").flatMap { f =>
-      val text = scala.io.Source.fromFile(f, "UTF-8").mkString
-      """BuildCache\.build\(s?"([a-z0-9_]+)[:$]""".r
-        .findAllMatchIn(text).map(_.group(1)).toSeq
-    }.toSet
-    val classStems = Bench.artifactWriters.map { n =>
-      // entry key → call-site stem: q31_export_roundtrip wraps per
-      // format (s"q31_$format:..."), so its literal prefix is
-      // "q31_"; s44 probes the SHARED d37 band-index artifact (one
-      // call site serves both entries); every other site uses the
-      // bare stem
-      val stem = n.split("_").head
-      if (stem == "q31") "q31_"
-      else if (stem == "s44") "d37"
-      else stem
-    }
-    assert(stems == classStems,
-      s"BuildCache call sites ${stems.toSeq.sorted} != declared class " +
-        s"stems ${classStems.toSeq.sorted}")
+  test("an entry's first pass is its build pass exactly when it builds an artifact") {
+    try {
+      BuildCache.reset()
+      BuildCache.enable()
+      val (first, _, _) = Bench.timeQueries(spark, sfDir,
+        Seq("q92_checkpointed_travel", "q01_agg_filter"), mid = false)
+      val byName = first.map(t => t.name -> t).toMap
+      assert(byName("q92_checkpointed_travel").buildSec >= 0,
+        "q92's first pass built its chain but reported no build")
+      assert(byName("q01_agg_filter").buildSec == -1.0)
+      // the chain is built once per JVM: a later call only reads it
+      val (again, _, _) = Bench.timeQueries(spark, sfDir,
+        Seq("q92_checkpointed_travel"), mid = false)
+      assert(again.head.buildSec == -1.0)
+      assert((first ++ again).forall(_.med >= 0), s"a pass failed: $first $again")
+    } finally BuildCache.reset()
   }
 
   /** The law that makes the split SEMANTICS-PRESERVING: with
@@ -83,17 +62,15 @@ class BenchPlanSpec extends AnyFunSuite {
     * already checks round-over-round. */
   test("memoized probe == full lifecycle (q92 chain-writer, s79 stream fold)") {
     // uses the SHARED test session (stopping a private getOrCreate
-    // session here would kill Spark for every later suite — the
-    // r15 274-failure lesson) and restores the disabled default
-    val spark = SparkSpec.session
-    val sfDir = "/root/testdata/sf0.001"
+    // session here would kill Spark for every later suite) and
+    // restores the disabled default
     try {
       BuildCache.reset()
       BuildCache.enable()
-      // q33 joins the representatives (r16): its cached value is a
-      // pair of RESOLVED bucketed-table Datasets whose catalog names
-      // are dropped inside the build — the law proves the memoized
-      // probe still reads the bucket files and returns lifecycle rows
+      // q33's cached value is a pair of RESOLVED bucketed-table
+      // Datasets whose catalog names are dropped inside the build —
+      // the law proves the memoized probe still reads the bucket
+      // files and returns lifecycle rows
       Seq("q92_checkpointed_travel", "s79_stream_pseudonymize",
           "q33_bucketed_join").foreach { q =>
         val keys0 = BuildCache.builtKeys

@@ -1,7 +1,14 @@
 package graft
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.hadoop.util.HadoopOutputFile
+import org.apache.parquet.schema.MessageTypeParser
 import org.apache.spark.sql.{AnalysisException, DataFrame}
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.functions.{col, lit, unix_micros}
+import org.apache.spark.sql.types.TimestampType
 
 /** [[Tables.parquet]], the one parquet read path: the schema it hands
   * Spark is the one Spark would infer, it is inferred once per
@@ -10,6 +17,8 @@ import org.apache.spark.sql.functions.{col, lit}
 class TablesReadSpec extends SparkSpec {
 
   private def inferred(path: String) = spark.read.parquet(path).schema
+
+  private val nanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
 
   private def scratchDir(tag: String): String =
     java.nio.file.Files.createTempDirectory(s"graft_tablesread_$tag").toString
@@ -96,5 +105,43 @@ class TablesReadSpec extends SparkSpec {
     val dir = scratchDir("missing")
     try intercept[AnalysisException](Tables.parquet(spark, s"$dir/absent.parquet"))
     finally graft.sources.Export.deleteTree(dir)
+  }
+
+  test("loading events leaves the caller's nanosAsLong setting as it was") {
+    val s = spark.newSession()
+    val before = s.conf.getOption(nanosAsLong)
+    Tables.events(s, sfDir).collect()
+    assert(s.conf.getOption(nanosAsLong) == before)
+  }
+
+  test("an events load does not make other tables infer their schema again") {
+    val s = spark.newSession()
+    Tables.orders(s, sfDir).schema
+    Tables.events(s, sfDir).schema
+    assert(jobsOf(Tables.orders(s, sfDir).schema) == 0)
+  }
+
+  test("a TIMESTAMP(NANOS) events file loads with ts truncated to microseconds") {
+    val dir = scratchDir("nanos")
+    try {
+      val schema = MessageTypeParser.parseMessageType(
+        "message events { required int64 event_id; " +
+          "required int64 ts (TIMESTAMP(NANOS,true)); }")
+      val conf = new Configuration()
+      val out = HadoopOutputFile.fromPath(new Path(s"$dir/events.parquet"), conf)
+      val writer = ExampleParquetWriter.builder(out).withType(schema).withConf(conf).build()
+      val rows = new SimpleGroupFactory(schema)
+      try Seq(1L -> 1700000000123456789L, 2L -> 1700000000999999999L).foreach {
+        case (id, ns) => writer.write(rows.newGroup().append("event_id", id).append("ts", ns))
+      } finally writer.close()
+      val s = spark.newSession()
+      val before = s.conf.getOption(nanosAsLong)
+      val ev = Tables.events(s, dir)
+      assert(ev.schema("ts").dataType == TimestampType)
+      val micros = ev.orderBy("event_id").select(unix_micros(col("ts")))
+        .collect().map(_.getLong(0)).toSeq
+      assert(micros == Seq(1700000000123456L, 1700000000999999L))
+      assert(s.conf.getOption(nanosAsLong) == before)
+    } finally graft.sources.Export.deleteTree(dir)
   }
 }
