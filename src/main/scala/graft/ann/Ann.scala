@@ -187,11 +187,15 @@ object Ann {
     * clustered by cell (at 100 TB: partitioned parquet by cell id,
     * so a query reads nprobe/nlist of the data), centroids are tiny
     * driver-side state, and candidate scoring reuses the exact
-    * cosine path. Deterministic given fixed seed + input layout;
-    * recall vs a27 is pinned by AnnSpec. */
+    * cosine path. The quantizer is trained on every call (Spark's
+    * k-means with seed 42, fitted on the driver); the model depends
+    * only on vec_id values, not on partitioning. Recall vs a27 is
+    * pinned by AnnSpec. */
   def a29AnnIvf(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.ml.clustering.KMeans
     import org.apache.spark.ml.functions.array_to_vector
+    import org.apache.spark.ml.linalg.{Vector => MLVector}
+    import org.apache.spark.mllib.clustering.GraftKMeans
+    import org.apache.spark.mllib.linalg.Vectors
     val nlist = 16
     val nprobe = 4
     val corpus = withNorm(Tables.embeddings(s, dir).select("vec_id", "embedding"))
@@ -202,16 +206,24 @@ object Ann {
     // be an iterative ML pass over everything. The hash-order top-k
     // (TakeOrderedAndProject: per-partition top-k, no full sort) is a
     // uniform pseudorandom pick that depends only on vec_id values —
-    // NOT on partition layout or parallelism, unlike sample()+limit —
-    // and hard-bounds the fit's input at any scale (65k × 64 floats
-    // ≈ 17 MB).
+    // NOT on partition layout or parallelism, unlike sample()+limit.
     val trainSample = corpus.orderBy(xxhash64(col("vec_id"))).limit(65536)
-    val model = new KMeans()
-      .setK(nlist).setSeed(42L).setMaxIter(10).setFeaturesCol("features")
-      .fit(trainSample)
-    val assigned = model.transform(corpus)
-      .select(col("vec_id"), col("embedding"), col("norm"),
-        col("prediction").as("cell"))
+    // The fit runs on the driver over the collected sample (one job).
+    // Spark's ML fit of this sample submits ~19 jobs, each ONE task
+    // over the sample's single partition in this same hash order;
+    // GraftKMeans does that arithmetic with Spark's own k-means code
+    // in the same order with the same seeds, so the model is the same
+    // bit for bit (GraftKMeansSpec) without a job per step. The limit
+    // bounds what the driver holds: 65,536 × dim doubles, 32 MiB at
+    // dim 64.
+    val points = trainSample.select("features").collect()
+      .map(r => Vectors.fromML(r.getAs[MLVector](0)))
+    val model = GraftKMeans.fit(points, k = nlist, maxIter = 10,
+      initSteps = 2, seed = 42L, tol = 1e-4)
+    // the call ml.KMeansModel.transform makes for each row
+    val cellOf = udf((v: MLVector) => model.predict(Vectors.fromML(v)))
+    val assigned = corpus.select(col("vec_id"), col("embedding"), col("norm"),
+      cellOf(col("features")).as("cell"))
     // route each query to its nprobe nearest centroids (centroids are
     // driver-side model state — nlist × dim doubles, not data)
     val centroids = model.clusterCenters.map(_.toArray)
@@ -222,7 +234,7 @@ object Ann {
         (d, i)
       }.sortBy(_._1).take(nprobe).map(_._2).toSeq
     import s.implicits._
-    val queryRows = assigned.filter(col("vec_id") < NQ)
+    val queryRows = corpus.filter(col("vec_id") < NQ)
       .select(col("vec_id"), col("embedding"), col("norm"))
       .as[(Long, Array[Float], Double)].collect().sortBy(_._1)
     val queriesDf = queryRows.map { case (id, emb, norm) =>
@@ -1797,35 +1809,37 @@ object Ann {
     import s.implicits._
     val exact = a27AnnBrute(s, dir).select("query_id", "neighbor_id")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val possible = exact.count()
-    // The three grid points OVERLAP (r15 fourth pass, guide §2.6, via
-    // [[graft.Par]]): given the warm exact truth, each point is an
-    // independent job chain over its OWN persisted encode frame (no
-    // shared cold cache to race), so the m=2/4/8 encode scans
-    // back-fill each other's stage tails instead of running strictly
-    // one after another. Within a point the two consumers stay
-    // sequential (matched materializes the encode, distortion reads
-    // it warm). Par.run preserves a55Cfgs order, so the rows, the
-    // monotone-distortion require, and the output are unchanged.
-    val rows = graft.Par.run(s, a55Cfgs.map { cfg => () =>
-      // ONE encode per grid point (r15, guide §5): the heavy per-row
-      // encode used to run twice — once under the scoring pipeline,
-      // once under the distortion rollup. Both consumers now read one
-      // persisted materialization; arithmetic is unchanged (the
-      // distortion integerization moved verbatim into pqEncoded).
-      val encAll = pqEncoded(s, dir, cfg)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val approx = rankedTopK(s, pqScoredFrom(s, dir, encAll, cfg))
-        .select("query_id", "neighbor_id")
-      val matched = exact
-        .join(approx, Seq("query_id", "neighbor_id"), "left_semi").count()
-      val row = (cfg.m, 4 * cfg.m, 2048 / (4 * cfg.m),
-        pqDistortionFrom(encAll), matched, possible,
-        matched * 10000L / possible)
-      encAll.unpersist()
-      row
-    })
-    exact.unpersist()
+    // every frame this entry persists is released in a finally, so a
+    // failed or cancelled job leaves no cached frame behind
+    val (possible, rows) = try {
+      val possible = exact.count()
+      // The three grid points OVERLAP (guide §2.6, via [[graft.Par]]):
+      // given the warm exact truth, each point is an independent job
+      // chain over its OWN persisted encode frame (no shared cold cache
+      // to race), so the m=2/4/8 encode scans back-fill each other's
+      // stage tails instead of running strictly one after another.
+      // Within a point the two consumers stay sequential (matched
+      // materializes the encode, distortion reads it warm). Par.run
+      // preserves a55Cfgs order, so the rows, the monotone-distortion
+      // require, and the output do not depend on the overlap.
+      (possible, graft.Par.run(s, a55Cfgs.map { cfg => () =>
+        // ONE encode per grid point (guide §5): the scoring pipeline
+        // and the distortion rollup both read this one persisted
+        // materialization instead of each re-running the heavy
+        // per-row encode.
+        val encAll = pqEncoded(s, dir, cfg)
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        try {
+          val approx = rankedTopK(s, pqScoredFrom(s, dir, encAll, cfg))
+            .select("query_id", "neighbor_id")
+          val matched = exact
+            .join(approx, Seq("query_id", "neighbor_id"), "left_semi").count()
+          (cfg.m, 4 * cfg.m, 2048 / (4 * cfg.m),
+            pqDistortionFrom(encAll), matched, possible,
+            matched * 10000L / possible)
+        } finally encAll.unpersist()
+      }))
+    } finally exact.unpersist()
     require(possible > 0 && rows.sliding(2).forall {
       case Seq(a, b) => a._4 > b._4 },
       s"a55: distortion must strictly decrease with subspace count: $rows")

@@ -127,6 +127,45 @@ class AnnSpec extends SparkSpec {
     assert(recall >= 0.5, s"recall@5=$recall")
   }
 
+  test("a29 constructs its frame with at most 2 Spark jobs") {
+    Tables.embeddings(spark, sfDir) // the schema memo is warm, as in a bench pass
+    val jobs = jobsOf { Ann.a29AnnIvf(spark, sfDir) }
+    assert(jobs <= 2, s"a29 construction submitted $jobs jobs")
+  }
+
+  test("a29 equals, row for row, its pipeline with ml.clustering.KMeans fit + transform") {
+    import org.apache.spark.ml.clustering.KMeans
+    import org.apache.spark.ml.functions.array_to_vector
+    import org.apache.spark.sql.expressions.Window
+    import graft.functions.VectorExprs
+    val corpus = VectorExprs.withNorm(Tables.embeddings(spark, sfDir).select("vec_id", "embedding"))
+      .withColumn("features", array_to_vector(col("embedding")))
+    val model = new KMeans().setK(16).setSeed(42L).setMaxIter(10).setFeaturesCol("features")
+      .fit(corpus.orderBy(xxhash64(col("vec_id"))).limit(65536))
+    val assigned = model.transform(corpus)
+      .select(col("vec_id"), col("embedding"), col("norm"), col("prediction").as("cell"))
+    val centroids = model.clusterCenters.map(_.toArray)
+    def nearestCells(v: Array[Double]): Seq[Int] =
+      centroids.zipWithIndex.map { case (c, i) =>
+        (c.indices.map(j => (v(j) - c(j)) * (v(j) - c(j))).foldLeft(0.0)(_ + _), i)
+      }.sortBy(_._1).take(4).map(_._2).toSeq
+    val queries = assigned.filter(col("vec_id") < 8)
+      .select("vec_id", "embedding", "norm").as[(Long, Array[Float], Double)].collect()
+      .map { case (id, e, n) => (id, e, n, nearestCells(e.map(_.toDouble))) }
+      .toSeq.toDF("query_id", "q_embedding", "q_norm", "probe_cells")
+    val w = Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("neighbor_id"))
+    val expected = assigned.join(broadcast(queries),
+        array_contains(col("probe_cells"), col("cell")) && col("vec_id") =!= col("query_id"))
+      .select(col("query_id"), col("vec_id").as("neighbor_id"),
+        round(VectorExprs.cosine(col("q_embedding"), col("embedding"), col("q_norm"), col("norm")), 4)
+          .as("cosine"))
+      .withColumn("rank", row_number().over(w)).filter(col("rank") <= 5)
+      .select("query_id", "rank", "neighbor_id", "cosine").orderBy("query_id", "rank")
+      .collect().toSeq
+    assert(expected.nonEmpty)
+    assert(Ann.a29AnnIvf(spark, sfDir).collect().toSeq == expected)
+  }
+
   test("a29b literal-centroid ivf: well-formed ranks, exact cosines vs brute on overlap") {
     val brute = Ann.a27AnnBrute(spark, sfDir)
       .select("query_id", "neighbor_id", "cosine")

@@ -2,10 +2,15 @@ package graft
 
 import java.util.concurrent.atomic.AtomicBoolean
 
+import org.apache.spark.SparkException
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import graft.ann.Ann
+
 /** [[Par.run]] under failure: the first thunk failure cancels the
   * jobs its siblings are running and is rethrown, leaving no running
   * job and no changed session conf behind; without a failure the
-  * thunks' jobs keep the caller's job group. */
+  * thunks' jobs keep the caller's job group. A caller that persists
+  * frames around Par.run (a55) releases them on that failure too. */
 class ParSpec extends SparkSpec {
 
   test("a failing thunk cancels its sibling's running job, then rethrows") {
@@ -44,5 +49,37 @@ class ParSpec extends SparkSpec {
     }
     assert(out == Seq(3L, 1L, 2L))
     assert(jobs >= 3, s"only $jobs of the thunks' jobs carried the caller's group")
+  }
+
+  test("a55 leaves no cached frame, running job or conf change when a Par.run job is cancelled") {
+    val sc = spark.sparkContext
+    spark.catalog.clearCache()
+    val confBefore = spark.conf.getAll
+    val group = s"a55-fault-${System.nanoTime()}"
+    val cancelled = new AtomicBoolean(false)
+    // the first job a55's Par.run thunks submit cancels the caller's
+    // job group, and every later job in it (small jobs could finish
+    // before a plain cancel reaches them)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val tags = Option(e.properties.getProperty("spark.job.tags")).getOrElse("")
+        if (e.properties.getProperty("spark.jobGroup.id") == group &&
+            tags.contains("graft-par-") && cancelled.compareAndSet(false, true))
+          sc.cancelJobGroupAndFutureJobs(group)
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "a55 fault injection")
+      try intercept[SparkException](Ann.a55PqTradeoff(spark, sfDir))
+      finally sc.clearJobGroup()
+    } finally sc.removeSparkListener(listener)
+    assert(cancelled.get, "no job of a55's Par.run started")
+    val deadline = System.nanoTime() + 10L * 1000000000L
+    while (sc.statusTracker.getActiveJobIds.nonEmpty && System.nanoTime() < deadline)
+      Thread.sleep(10)
+    assert(sc.statusTracker.getActiveJobIds.isEmpty)
+    assert(sc.getPersistentRDDs.isEmpty, s"cached frames left: ${sc.getPersistentRDDs}")
+    assert(spark.conf.getAll == confBefore)
   }
 }
