@@ -36,11 +36,9 @@ object Dedup {
     *   (where a full-corpus broadcast would blow the driver and the
     *   broadcast ceiling long before the pair stream is the problem)
     *   the same code degrades to a shuffle join keyed on doc_id.
-    *   Default for ALL pipelines (round 5 — reverting round 4's
-    *   Shuffle default on the shingle pipelines): idle-host A/B
-    *   re-measurement showed Auto beats forced Shuffle 2-3.5× at
-    *   sf0.1 (SURVEY §5); the round-4 numbers claiming the opposite
-    *   were taken in a drifting window and did not reproduce.
+    *   Default for ALL pipelines, the shingle pipelines included:
+    *   idle-host A/B measurement shows Auto beats forced Shuffle
+    *   2-3.5× at sf0.1 (SURVEY §5).
     * - [[Attach.Broadcast]]: hard broadcast() hint — only safe when
     *   the corpus is known to fit the broadcast limit.
     * - [[Attach.Shuffle]]: force a sort-merge shuffle join via the
@@ -115,7 +113,7 @@ object Dedup {
             |  element_at(mh, 4*b+3), element_at(mh, 4*b+4)))""".stripMargin))
           .as(Seq("band_id", "band_hash")))
 
-  /** Salt width for the band-bucket self-joins (r15, guide §2.5).
+  /** Salt width for the band-bucket self-joins (guide §2.5).
     * The gate corpus plants a near-dup MEGA-CLUSTER: one band bucket
     * holds ~2.3-2.7k of the 5k docs in EVERY band, so the top-32
     * buckets carry ~100% of the ~12M-pair candidate volume (measured
@@ -123,7 +121,7 @@ object Dedup {
     * attach joins broadcast at this scale, candidate emission AND the
     * merge-walk Jaccard all ran inside ~4 tasks while 28 cores idled.
     * AQE's skew-join cannot split a single enormous KEY, so the fix is
-    * the same salt d25's lang-blocked join has carried since r8: side
+    * the same salt d25's lang-blocked join carries: side
     * a takes bucket = pmod(doc_id, 16), side b is replicated to all 16
     * buckets, and the same pairs emerge exactly once each (the pair
     * (x, y), x < y, emerges only at bucket pmod(x, 16)) across 16× the
@@ -154,7 +152,7 @@ object Dedup {
     * like d27 use the raw edge stream. */
   private[graft] def verifyPairs(pairs: DataFrame, docs: DataFrame,
       attach: Attach = Attach.Auto): DataFrame = {
-    // persisted (r15): four attach sides below derive from this one
+    // persisted: four attach sides below derive from this one
     // frame — without the persist each side re-ran the corpus scan +
     // shingle + hash chain (4 redundant passes per action; at 100 TB,
     // 4 redundant corpus scans). Hashing preserves array length, so
@@ -162,7 +160,7 @@ object Dedup {
     // of re-deriving size(sh) separately.
     val hashed = docs.select(col("doc_id"), hashedShingles(col("sh")).as("shz"))
       .persist()
-    // NO repartition or eager count on this frame (r16, measured):
+    // NO repartition or eager count on this frame (measured):
     // the corpus is one split at gate SFs so each cold materialization
     // is a single ~1.5 s task (profiled on s44), but the racing attach
     // builds overlap each other and the candidate stage on idle cores;
@@ -203,8 +201,8 @@ object Dedup {
     * construction, no distinct-pairs shuffle (valid here because no
     * band rows are ever dropped). */
   private def bandCandidatePairs(docs: DataFrame): DataFrame = {
-    // persisted (r15): both self-join sides consume the band stream —
-    // without the persist each side re-ran scan + shingle + 16-hash
+    // persisted: both self-join sides consume the band stream —
+    // without the persist each side re-runs scan + shingle + 16-hash
     // signature computation (2 full passes per action)
     val bands = minhashBands(docs).persist()
     // SALTED self-join (see [[bandSalt]]): the repartition spreads the
@@ -231,7 +229,7 @@ object Dedup {
   private[graft] def d23CandidatePairs(s: SparkSession, dir: String): DataFrame =
     bandCandidatePairs(shingledDocs(s, dir))
 
-  /** CANDIDATE-DENSITY fail-stop (VERDICT r14 #3): LSH banding's
+  /** CANDIDATE-DENSITY fail-stop: LSH banding's
     * scale contract is candidates ≈ linear in the corpus — bucket
     * sizes bounded, pair volume ∝ docs. A density above `maxPerDoc`
     * means the banding degenerated (a mega-bucket, a hash collapse)
@@ -256,12 +254,10 @@ object Dedup {
   }
 
   def d23DedupMinhash(s: SparkSession, dir: String): DataFrame =
-    // Auto default (round 5, reverting round 4's Shuffle): the r4 A/B
-    // that justified forcing sort-merge attaches did not reproduce —
-    // on an idle host Auto measures 10.2 s vs Shuffle 36.1 s medians
-    // at sf0.1 (judge re-run), and the full bench under the Shuffle
-    // default regressed d23 2-10× (SURVEY §5 records the reversal
-    // with raw runs). Four forced sort-merge attaches re-sort the
+    // Auto default, not Shuffle: on an idle host Auto measures
+    // 10.2 s vs Shuffle 36.1 s medians at sf0.1, and the full bench
+    // under a Shuffle default ran d23 2-10× slower (SURVEY §5 has
+    // the raw runs). Four forced sort-merge attaches re-sort the
     // multi-million-row pair stream four times; AQE's broadcast pick
     // is right at every testable scale, and at true corpus scale Auto
     // degrades to the shuffle join exactly when stats warrant it.
@@ -333,8 +329,8 @@ object Dedup {
     * [[md5BandCandidatePairs]] at the production 4×4, d53 at every
     * swept operating point. */
   private[graft] def md5CandidatesFor(sigs: DataFrame, rows: Int): DataFrame = {
-    // persisted (r15): both self-join sides consume the stream — for
-    // d23b/d25c the unpersisted form re-ran the md5-affine signature
+    // persisted: both self-join sides consume the stream — for
+    // d23b/d25c an unpersisted form re-runs the md5-affine signature
     // aggregation (one md5 per token) once PER SIDE; d53's sweep
     // already persists `sigs`, and this cache stacks on top of it
     val stream = md5BandStreamFor(sigs, rows).persist()
@@ -475,7 +471,7 @@ object Dedup {
       .select(
         col("doc_id"), col("simhash"), col("chunk_arr"),
         posexplode(col("chunk_arr")).as(Seq("chunk_id", "chunk_val")))
-      .persist() // both self-join sides (r15) — one signature pass
+      .persist() // both self-join sides — one signature pass
     // SALTED like [[bandCandidatePairs]] (see [[bandSalt]]): the
     // mega-cluster's docs share their simhash, so its chunk buckets
     // carry the same single-key skew as the minhash bands
@@ -522,7 +518,7 @@ object Dedup {
       .withColumn("chunk_arr", expr("transform(sequence(0,5), c -> (sig >> (10*c)) & 1023)"))
       .select(col("doc_id"), col("sig"), col("chunk_arr"),
         posexplode(col("chunk_arr")).as(Seq("chunk_id", "chunk_val")))
-      .persist() // both self-join sides (r15) — one vote-sum pass
+      .persist() // both self-join sides — one vote-sum pass
     // SALTED like d24's chunk join (see [[bandSalt]])
     val a = chunks.withColumn("bucket", pmod(col("doc_id"), lit(bandSalt)))
       .repartition(graft.Par.shufflePartitions(chunks.sparkSession),
@@ -612,11 +608,11 @@ object Dedup {
     val ids = docs.select("doc_id", "lang")
     // pmod: a sign-following % would put negative ids in buckets the
     // replicated side never covers, silently dropping their pairs.
-    // REPARTITION_BY_NUM pin (r15 third pass — Finding 1 applied to
-    // the declared-quadratic leg too): the id streams are a few KB,
-    // so AQE coalesced the (lang, bucket) join's exchanges to ONE
-    // partition and the whole O(n²)-per-lang pair explosion plus the
-    // fused broadcast-attach Jaccard verify ran in one task. The
+    // REPARTITION_BY_NUM pin, on the declared-quadratic leg too: the
+    // id streams are a few KB, so AQE would coalesce the (lang,
+    // bucket) join's exchanges to ONE partition and run the whole
+    // O(n²)-per-lang pair explosion plus the fused broadcast-attach
+    // Jaccard verify in one task. The
     // declared quadratic declares the WORK, not its serialization;
     // spreading it changes no pair (d51Truth precedent, 2.7×).
     val nPart = graft.Par.shufflePartitions(ids.sparkSession)
@@ -629,7 +625,7 @@ object Dedup {
           col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
     val hashed = docs.select(col("doc_id"), hashedShingles(col("sh")).as("shz"))
-      .persist() // two attach sides (r15) — one shingle+hash pass
+      .persist() // two attach sides — one shingle+hash pass
     // no join hint — Catalyst/AQE pick broadcast vs shuffle from
     // stats, the Attach.Auto behavior (see attachSide)
     pairs
@@ -640,7 +636,7 @@ object Dedup {
   }
 
   def d25NgramJaccard(s: SparkSession, dir: String): DataFrame =
-    // no presentation sort (dropped round 4, with d26/d28's): the
+    // no presentation sort (nor in d26/d28): the
     // driver compare sorts rows itself and every spec is set-based,
     // so the repartition(1) funnel bought nothing but a single-task
     // stage on the full pair output
@@ -665,8 +661,8 @@ object Dedup {
     * verification scale, a shuffle join keyed on doc_id at corpus
     * scale — same plan shape, bigger exchange. */
   def d25NgramJaccardBanded(s: SparkSession, dir: String): DataFrame =
-    // Auto default (round 5 revert — see d23DedupMinhash's note):
-    // the forced sort-merge attach regressed this entry 3× at sf0.1.
+    // Auto default (see d23DedupMinhash's note): a forced
+    // sort-merge attach makes this entry 3× slower at sf0.1.
     d25NgramJaccardBandedAttach(s, dir, Attach.Auto)
 
   private[graft] def d25NgramJaccardBandedAttach(s: SparkSession, dir: String,
@@ -690,7 +686,7 @@ object Dedup {
       attach: Attach): DataFrame = {
     val bigrams = base.select(col("doc_id"), bigramShingles.as("sh"))
     // persisted + sizes derived from the hashed frame — the
-    // verifyPairs r15 rationale verbatim (4 attach sides, 1 pass)
+    // verifyPairs rationale verbatim (4 attach sides, 1 pass)
     val hashed = bigrams.select(col("doc_id"), hashedShingles(col("sh")).as("shz"))
       .persist()
     val sizes = hashed.select(col("doc_id"), size(col("shz")).as("n"))
@@ -743,10 +739,10 @@ object Dedup {
   def d26EmbedNeardup(s: SparkSession, dir: String): DataFrame = {
     val e = withNorm(Tables.embeddings(s, dir).select("vec_id", "embedding"))
     // probe side repartitioned: the nested-loop pair explosion must
-    // parallelize beyond the input's split count. BY_NUM (r15 third
-    // pass, Finding 1): the by-column form is an AQE-coalescible
-    // exchange and the vector stream is tiny in bytes, so it
-    // collapsed back to one partition — the explicit count is never
+    // parallelize beyond the input's split count. BY_NUM: the
+    // by-column form is an AQE-coalescible exchange and the vector
+    // stream is tiny in bytes, so it would collapse back to one
+    // partition — the explicit count is never
     // coalesced and is the session's own parallelism knob.
     val a = e.repartition(graft.Par.shufflePartitions(e.sparkSession), col("vec_id"))
       .as("a")
@@ -805,7 +801,7 @@ object Dedup {
     * (band_id, band_val) equi-join, vec_a < vec_b, first-equal-band
     * uniqueness. Shared by d28 (full corpus) and d38 (within-batch). */
   private def hyperplaneCandidatePairs(chunks0: DataFrame): DataFrame = {
-    // persisted: both self-join sides consume the chunk stream (r15);
+    // persisted: both self-join sides consume the chunk stream;
     // probe side repartitioned on the band key WITH an explicit count
     // (REPARTITION_BY_NUM — see [[graft.Par.shufflePartitions]]: the
     // by-column form is AQE-coalescible and the tiny band shuffle
@@ -885,7 +881,7 @@ object Dedup {
     * per consumer. */
   private def d38PairsFrom(s: SparkSession, dir: String,
       e: DataFrame, chunks: DataFrame): DataFrame = {
-    // build/probe split (r16, the d37 stance): the banded history
+    // build/probe split (the d37 stance): the banded history
     // index is the carried artifact; bench passes 2+ probe it
     val idxDir = graft.BuildCache.build(s"d38:$dir") {
       val p = graft.sources.Export.scratch("d38_index", dir)
@@ -951,7 +947,7 @@ object Dedup {
         e, Attach.Auto)
       val histVerts = Tables.embeddings(s, dir)
         .filter(col("vec_id") % 4 =!= 0).select(col("vec_id").as("id"))
-      // build/probe split (r16, the d37/s48 criterion): the history
+      // build/probe split (the d37/s48 criterion): the history
       // label index IS the persisted state a daily run carries —
       // bench passes 2+ time the incremental UPDATE alone (star
       // edges + the day's pairs through CC), which is the operator's
@@ -1106,10 +1102,10 @@ object Dedup {
     * mega-cluster, not just check the verified output. */
   private[graft] def cappedCandidatePairs(s: SparkSession, dir: String,
       maxBucket: Int): DataFrame = {
-    // the bandCandidatePairs treatment applied here too (r15 second
-    // pass): the signature computation (scan + shingle + 16-hash) has
-    // THREE consumers below — the bucket-size rollup and both join
-    // sides — and inherited the 1-split scan's single task, so it ran
+    // the bandCandidatePairs treatment applied here too: the
+    // signature computation (scan + shingle + 16-hash) has THREE
+    // consumers below — the bucket-size rollup and both join sides —
+    // and would inherit the 1-split scan's single task, running
     // three times serially. Repartition by count before the per-doc
     // hash work, persist the band stream so each consumer reads the
     // one materialization. Rows unchanged.
@@ -1170,9 +1166,9 @@ object Dedup {
   // output canonical with no self-loops.
   //
   // m is computed as a WINDOW aggregate over the u-partitioned
-  // neighbor stream rather than groupBy(u) + join back on u (r16,
-  // guide §2.4 "two operations keyed the same way can share one
-  // exchange"): the groupBy+join form exchanged nbr TWICE per round
+  // neighbor stream rather than groupBy(u) + join back on u (guide
+  // §2.4 "two operations keyed the same way can share one
+  // exchange"): the groupBy+join form exchanges nbr TWICE per round
   // (once partially-aggregated for m, once raw for the join) plus
   // m's own exchange/broadcast — at sf0.1 each round carried two
   // extra broadcast-materialization jobs, at 100 TB m is |V|-sized
@@ -1187,7 +1183,7 @@ object Dedup {
         least(min(col("v")).over(Window.partitionBy("u")), col("u")))
       .filter(col("v") > col("u"))
       .select(col("v").as("hi"), col("m").as("lo"))
-    // no trailing distinct (r15, guide §2.4): the output feeds
+    // no trailing distinct (guide §2.4): the output feeds
     // ccSmallStar, whose min-window is duplicate-insensitive and whose
     // result runs through ccCanon's distinct — the ROUND's output is
     // row-identical, and dropping it removes one full exchange of the
@@ -1203,7 +1199,7 @@ object Dedup {
   // groupBy + join + union's two-plus). The (hi, m) self-hook row is
   // emitted per EDGE here instead of once per hi group — post-ccCanon
   // the distinct collapses them, so the round's output SET is
-  // unchanged (the pre-r15 form's trailing distinct is ccCanon's).
+  // unchanged (ccCanon's distinct does the deduplicating).
   private def ccSmallStar(e: DataFrame): DataFrame = {
     val withM = e.withColumn("m",
       min(col("lo")).over(Window.partitionBy("hi")))
@@ -1243,9 +1239,9 @@ object Dedup {
         cached.unpersist()
         ck
       } else df.localCheckpoint(true)
-    // Convergence is tested in two tiers (r15 — the per-round exact
-    // set comparison was ~2 broadcast-hash anti-joins per round, run
-    // ~10× per invocation, 9 of which could only ever answer "not
+    // Convergence is tested in two tiers (a per-round exact set
+    // comparison costs ~2 broadcast-hash anti-joins per round, run
+    // ~10× per invocation, 9 of which can only ever answer "not
     // yet"): a cheap (count, bit_xor of the row hash) digest over the
     // just-checkpointed edge set decides the common case — digests of
     // EQUAL sets are equal, so digest inequality PROVES next ≠ e and
@@ -1268,8 +1264,8 @@ object Dedup {
     var iter = 0
     val maxIter = 100
     while (!converged && iter < maxIter) {
-      // Fusing TWO rounds per plan cut was MEASURED AND REJECTED
-      // (r15 fourth pass): ccRound's output is consumed by multiple
+      // Fusing TWO rounds per plan cut was MEASURED AND REJECTED:
+      // ccRound's output is consumed by multiple
       // subtrees of the next round (ccLargeStar's nbr feeds both the
       // min-aggregate and the join; ccSmallStar likewise), so an
       // UNCUT first round re-executes once per reference and the
@@ -1401,7 +1397,7 @@ object Dedup {
   }
 
   /** Gram size for the d29 queries entry: 4 — chosen so the
-    * cross-engine gate is NON-VACUOUS (ADVICE r4). At n = 8 the
+    * cross-engine gate is NON-VACUOUS. At n = 8 the
     * synthetic corpus shares zero n-grams across the eval split at
     * every SF (near-dups here are token-perturbed densely enough to
     * break every 8-token window), so CORRECTNESS compared 0 == 0
@@ -1635,7 +1631,7 @@ object Dedup {
     * The final per-doc rollup carries two longs per doc. */
   def d30RepeatedNgrams(s: SparkSession, dir: String): DataFrame = {
     val n = d30GramSize
-    // two pinned repartitions around the gram explode (r15, the q12
+    // two pinned repartitions around the gram explode (the q12
     // rationale plus exchange reuse): (doc_id) BY_NUM under the
     // tokenize spreads the 1-split scan's per-window md5 work across
     // the session's parallelism, and (gram) BY_NUM above the explode
@@ -1714,7 +1710,7 @@ object Dedup {
     * deployment lever if scan cost dominates the gram shuffle. */
   def d31PassageScrub(s: SparkSession, dir: String): DataFrame = {
     val n = d30GramSize
-    // the d44Runs second-pass treatment (r15): the md5-per-gram hash
+    // the d44Runs treatment: the md5-per-gram hash
     // stream is consumed twice (min≠max rollup + covered-position
     // semi join) and the token stream twice more, all inheriting the
     // 1-split scan's single task — repartition the docs by count
@@ -2080,7 +2076,7 @@ object Dedup {
   // the planted-content CASE and the batch split are INTERPOLATED from
   // the same constants the Spark query uses (d35Cid, d35BatchMod) —
   // one definition, so an edit cannot desynchronize query and oracle
-  // (ADVICE r9; the d36Sql centroid stance). The CTE prefix is shared
+  // (the d36Sql centroid stance). The CTE prefix is shared
   // with s43's oracle (Streaming.s43Sql), which probes the same index.
   /** `idxWhere` additionally restricts which HISTORY docs back the
     * index — TRUE for d35/s43/d40; d47 interpolates its forget
@@ -2223,7 +2219,7 @@ object Dedup {
     * Scale shape: routing is a scan-stage projection (16 literal
     * centroids, zero joins). The per-cell rank is NOT one window over
     * cell (that funnels the whole corpus through 16 reducers with a
-    * full per-cell sort — the r9 perf_weak) but the shared
+    * full per-cell sort) but the shared
     * [[graft.functions.Ranks.bucketedRank]] two-level rank: draw is
     * md5-uniform over [0, 2^28), so 32 fixed width-2^23 draw ranges
     * are balanced at any corpus size and topic skew; rank locally
@@ -2298,7 +2294,7 @@ object Dedup {
     * streaming admission, so the ingest-time probe and the batch
     * incremental run hit the identical artifact. */
   private[graft] def d37BandIndex(s: SparkSession, dir: String): DataFrame = {
-    // build/probe split (r16, the s48 criterion applied to the band
+    // build/probe split (the s48 criterion applied to the band
     // index): the persisted history index is the artifact a daily
     // run carries — in bench JVMs its construction is memoized so
     // passes 2+ time the PROBE face (d37's and s44's registered
@@ -2516,26 +2512,26 @@ object Dedup {
       attach: Attach = Attach.Auto,
       maxBucket: Int = d44MaxBucket): DataFrame = {
     val km1 = d44K - 1
-    // r15 second pass — the d23-family treatment applied here too
-    // (the first pass left d44/d45/d48 alone on the SKEW rationale,
-    // which still holds — buckets are capped — but missed that the
-    // winnowing stream has THREE consumers and ran single-task):
+    // The d23-family treatment applied here too (buckets are capped,
+    // so skew is not the problem, but the winnowing stream has THREE
+    // consumers and would run single-task):
     //  1. explicit-count repartition of the docs (a42Base rationale):
     //     fingerprint selection is O(n·w²) per-row work that inherits
     //     the scan's partitioning, and the gate corpus is one parquet
-    //     split — all selection ran in one task, once per consumer;
+    //     split — all selection would run in one task, once per
+    //     consumer;
     //  2. persist the fingerprint stream (guide §5: three consumers —
-    //     the hot-gram rollup and both self-join sides — each
-    //     re-executed the full winnowing pass);
+    //     the hot-gram rollup and both self-join sides — would each
+    //     re-execute the full winnowing pass);
     //  3. pin the self-join's exchange with REPARTITION_BY_NUM on the
-    //     gram key (Finding 1: a by-column repartition is
-    //     AQE-coalescible and the slim fingerprint stream is < 1 MB
-    //     at sf0.1, so the verify/extension stage — the pair-volume
-    //     work — collapsed to one partition). Both join sides carry
+    //     gram key (a by-column repartition is AQE-coalescible and
+    //     the slim fingerprint stream is < 1 MB at sf0.1, so the
+    //     verify/extension stage — the pair-volume work — would
+    //     collapse to one partition). Both join sides carry
     //     the same pinned partitioning, so the join adds no exchange.
     // Row-identical: partitioning and caching change where work runs,
     // never which pairs emerge (DedupSpec's planted constructions and
-    // the d44/d45/d48 oracles re-run green).
+    // the d44/d45/d48 oracles pin this).
     val nPart = graft.Par.shufflePartitions(docs.sparkSession)
     val docsP = docs.repartition(nPart, col("doc_id"))
     val fps0 = d44Fingerprints(docsP).persist()
@@ -2776,13 +2772,13 @@ object Dedup {
     * within-cell pairing, verify, keep-min — byte-exactly. */
   def d46SemanticDedup(s: SparkSession, dir: String): DataFrame = {
     val e = withNorm(Tables.embeddings(s, dir).select("vec_id", "embedding"))
-    // persisted (r15): both sides of the cell self-join consume this
+    // persisted: both sides of the cell self-join consume this
     // frame — without the persist the corpus × centroid assignment
-    // (and the Lloyd training under it) executed once PER SIDE
+    // (and the Lloyd training under it) executes once PER SIDE
     val ex = graft.ann.Ann.a42AssignTop(s, dir, 2)
       .select(col("vec_id"), explode(col("cells")).as("cell"))
       .persist()
-    // NO eager count here (r16, measured): warming ex (and the
+    // NO eager count here (measured): warming ex (and the
     // training under it) serially cost 1.72 → 2.2–2.7 s — the self-
     // join's racing recomputes were back-filling idle cores (the
     // s73/d52 lesson), so the lazy persist stands
@@ -2860,8 +2856,8 @@ object Dedup {
     val docs = Tables.documents(s, dir)
     val pairs = d44Runs(docs).filter(col("run_len") >= d44MinRun)
       .select("doc_a", "doc_b").distinct()
-    // NO repartition below the gram projection (r16, re-measured and
-    // re-rejected): a warm-cache profile showed a 3.9 s single-task
+    // NO repartition below the gram projection (measured and
+    // rejected): a warm-cache profile showed a 3.9 s single-task
     // broadcast build on the critical path, but the cache-cold A/B
     // read 4.72 → 4.78 s with the pin (and the twin winnowing
     // entries drifted the same direction) — the serial stage the
@@ -3150,9 +3146,9 @@ object Dedup {
       keep: Int, mod: Int): DataFrame = {
     val docs0 = shingledDocs(s, dir)
     val ids = d51SampledIds(docs0, keep, mod)
-    // cands persisted (r15): d51Metrics consumes the stream twice
+    // cands persisted: d51Metrics consumes the stream twice
     // (candidate count + captured join) — one enumeration, not two.
-    // truth persisted too (r15 third pass): d51Metrics also consumes
+    // truth persisted too: d51Metrics also consumes
     // THE TRUTH twice (truth count + captured join), and truth is the
     // declared-quadratic exact enumeration — the eval's declared
     // price is ONE enumeration, not two (d53CurveWith already
@@ -3170,7 +3166,7 @@ object Dedup {
     // every subquery reads the one materialization. In-invocation
     // only: construction re-runs from parquet on every pass.
     // Overlapping these two warm-ups via [[graft.Par]] was MEASURED
-    // AND REJECTED (r15 fourth pass): 4.89 → 6.46 s median at sf0.1.
+    // AND REJECTED: 4.89 → 6.46 s median at sf0.1.
     // Both legs saturate the cores on their own (the quadratic verify
     // / the banded explosion), so overlap buys no idle capacity, and
     // the truth leg's verifyPairs carries an internal lazy persist
@@ -3199,7 +3195,7 @@ object Dedup {
     * enumerated only over sampled-doc pairs (quadratic in the doc
     * sample rate — the eval's declared cost). */
   private[graft] def d51Truth(docs0: DataFrame, ids: DataFrame): DataFrame = {
-    // Finding-1 class (r15 third pass): the cross join is a
+    // The cross join is a
     // BroadcastNestedLoopJoin whose output inherits the LEFT side's
     // partitioning — the id list is one parquet split locally, so the
     // quadratic pair explosion AND the fused broadcast-attach verify
@@ -3269,8 +3265,8 @@ object Dedup {
       keep: Int, mod: Int): DataFrame = {
     val docs0 = shingledDocs(s, dir)
     val ids = d51SampledIds(docs0, keep, mod)
-    // sigs and truth are materialized EAGERLY and OVERLAPPED (r15:
-    // racing broadcast consumers of a COLD persisted frame recompute
+    // sigs and truth are materialized EAGERLY and OVERLAPPED (racing
+    // broadcast consumers of a COLD persisted frame recompute
     // it once per consumer; guide §2.6 for the overlap — the two are
     // independent subtrees). Construction still recomputes from
     // parquet on every invocation — in-invocation reuse only.
@@ -3279,14 +3275,14 @@ object Dedup {
     val truth = d51Truth(docs0, ids)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     graft.Par.run(s, Seq(() => sigs.count(), () => truth.count()))
-    // ONE banded enumeration serves the whole sweep (r16, guide §1.2
+    // ONE banded enumeration serves the whole sweep (guide §1.2
     // "don't compute things you throw away" / §2.4): the sweep's
     // candidate sets are NESTED — a pair matching an aligned r-row
     // band matches both its half-bands — so every swept set is a
-    // subset of the finest point's (rows = min(d53RowsSweep)). The
-    // r15 form ran FOUR salted band self-joins (16+8+4+2 = 30 band
-    // probes of the same signature stream) plus four persists and
-    // four captured-joins against truth; this form runs the finest
+    // subset of the finest point's (rows = min(d53RowsSweep)). One
+    // salted band self-join per point would be FOUR (16+8+4+2 = 30
+    // band probes of the same signature stream) plus four persists
+    // and four captured-joins against truth; this form runs the finest
     // enumeration once, broadcast-attaches both signatures (|docs|
     // rows of 16 longs), and derives each point's membership from
     // per-block VALUE equality — the same min-value matching the
@@ -3627,7 +3623,7 @@ object Dedup {
     * pass and no join back to the corpus. */
   def d55CanonicalDedup(s: SparkSession, dir: String): DataFrame = {
     val T = graft.text.TextOps
-    // octet_length, not length (ADVICE r14): length() counts
+    // octet_length, not length: length() counts
     // CHARACTERS in both engines, which silently weakened the
     // minimal-BYTES claim to char-minimality for non-ASCII text;
     // octet_length is UTF-8 byte count in Spark and DuckDB alike,

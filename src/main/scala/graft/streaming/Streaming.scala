@@ -997,8 +997,8 @@ object Streaming {
     * the per-state plans, and the read-backs are unchanged — only the
     * submission order of the write actions differs. Any write failure
     * rethrows, preserving the fail-stop. Each read-back carries the
-    * schema of the frame just written: the files are always new, so
-    * inferring it would cost one Spark job per state per generation. */
+    * schema of the frame just written: that schema is already in hand,
+    * so no footer needs to be read. */
   private def writeGeneration(s: SparkSession,
       named: Seq[(String, DataFrame)]): Seq[DataFrame] = {
     graft.Par.run(s, named.map { case (path, df) =>

@@ -128,7 +128,6 @@ class AnnSpec extends SparkSpec {
   }
 
   test("a29 constructs its frame with at most 2 Spark jobs") {
-    Tables.embeddings(spark, sfDir) // the schema memo is warm, as in a bench pass
     val jobs = jobsOf { Ann.a29AnnIvf(spark, sfDir) }
     assert(jobs <= 2, s"a29 construction submitted $jobs jobs")
   }

@@ -34,7 +34,6 @@ class SortPlanSpec extends SparkSpec {
   }
 
   test("with the threshold disabled q02 range-partitions again: one more job, same rows") {
-    entry("q02_project_enrich").count() // schema memo warm, outside the counts
     def collected(df: DataFrame): (String, Int, Seq[Row]) = {
       var rows: Seq[Row] = Nil
       val jobs = jobsOf { rows = df.collect().toSeq }

@@ -7,13 +7,13 @@ import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.hadoop.util.HadoopOutputFile
 import org.apache.parquet.schema.MessageTypeParser
 import org.apache.spark.sql.{AnalysisException, DataFrame}
-import org.apache.spark.sql.functions.{col, lit, unix_micros}
-import org.apache.spark.sql.types.TimestampType
+import org.apache.spark.sql.functions.{col, expr, lit, unix_micros}
+import org.apache.spark.sql.types.{LongType, StructField, StructType, TimestampType}
 
 /** [[Tables.parquet]], the one parquet read path: the schema it hands
-  * Spark is the one Spark would infer, it is inferred once per
-  * unchanged path, and a rewritten or missing path behaves as a plain
-  * read does. */
+  * Spark is the one Spark would infer under the same settings, no load
+  * submits a Spark job, and a rewritten, missing or empty path behaves
+  * as a plain read does. */
 class TablesReadSpec extends SparkSpec {
 
   private def inferred(path: String) = spark.read.parquet(path).schema
@@ -37,8 +37,6 @@ class TablesReadSpec extends SparkSpec {
     for ((name, df) <- loaders) {
       val p = s"$sfDir/$name.parquet"
       assert(df.schema == inferred(p), name)
-      // a second load serves the memoized schema: still the same one
-      assert(Tables.parquet(spark, p).schema == inferred(p), name)
     }
     // events adapts `ts` after the read; the read itself must match
     // the plain read under the same session settings
@@ -73,15 +71,57 @@ class TablesReadSpec extends SparkSpec {
     } finally graft.sources.Export.deleteTree(foldDir)
   }
 
-  test("a second load of an unchanged path submits no Spark job") {
-    val dir = scratchDir("memo")
+  test("a load submits no Spark job, the first one included") {
+    val dir = scratchDir("jobs")
     try {
       val p = s"$dir/t.parquet"
       spark.range(10).withColumn("v", col("id") * 2).write.parquet(p)
-      assert(jobsOf(Tables.parquet(spark, p).schema) >= 1,
-        "the first load infers the schema with a job")
+      assert(jobsOf(Tables.parquet(spark, p).schema) == 0)
       assert(jobsOf(Tables.parquet(spark, p).schema) == 0)
       assert(Tables.parquet(spark, p).count() == 10)
+    } finally graft.sources.Export.deleteTree(dir)
+  }
+
+  test("a hive-partitioned layout reads the schema and rows of a plain read") {
+    val dir = scratchDir("partitioned")
+    try {
+      val p = s"$dir/t.parquet"
+      spark.range(12).withColumn("v", col("id") * 3)
+        .withColumn("day", expr("date_add(date'2024-01-01', cast(id % 3 as int))"))
+        .write.partitionBy("day").parquet(p)
+      val run = graft.streaming.Streaming.s68Build(spark, sfDir)._2
+      for (path <- Seq(p, run.fragDir, run.outDir)) {
+        val df = Tables.parquet(spark, path)
+        assert(df.schema == inferred(path), path)
+        assert(df.schema.fieldNames.last == "day", path)
+        assert(df.collect().toSeq.map(_.toString).sorted ==
+          spark.read.parquet(path).collect().toSeq.map(_.toString).sorted, path)
+      }
+    } finally graft.sources.Export.deleteTree(dir)
+  }
+
+  test("session parquet settings type the schema as a plain read does") {
+    val dir = scratchDir("settings")
+    try {
+      val schema = MessageTypeParser.parseMessageType(
+        "message t { required int64 id; required binary raw; }")
+      val conf = new Configuration()
+      val p = s"$dir/t.parquet"
+      val out = HadoopOutputFile.fromPath(new Path(s"$p/part-0.parquet"), conf)
+      val writer = ExampleParquetWriter.builder(out).withType(schema).withConf(conf).build()
+      try writer.write(new SimpleGroupFactory(schema).newGroup()
+        .append("id", 1L).append("raw", "abc"))
+      finally writer.close()
+      spark.range(3).withColumn("extra", lit(1.5)).write.mode("append").parquet(p)
+      val s = spark.newSession()
+      for (binaryAsString <- Seq("false", "true"); merge <- Seq("false", "true")) {
+        s.conf.set("spark.sql.parquet.binaryAsString", binaryAsString)
+        s.conf.set("spark.sql.parquet.mergeSchema", merge)
+        val got = Tables.parquet(s, p).schema
+        assert(got == s.read.parquet(p).schema, s"binaryAsString=$binaryAsString mergeSchema=$merge")
+        assert(got.fieldNames.contains("extra") == (merge == "true"))
+      }
+      assert(Tables.parquet(s, p).schema("raw").dataType.typeName == "string")
     } finally graft.sources.Export.deleteTree(dir)
   }
 
@@ -103,8 +143,14 @@ class TablesReadSpec extends SparkSpec {
 
   test("a missing path still fails with Spark's AnalysisException") {
     val dir = scratchDir("missing")
-    try intercept[AnalysisException](Tables.parquet(spark, s"$dir/absent.parquet"))
-    finally graft.sources.Export.deleteTree(dir)
+    try {
+      val empty = new java.io.File(s"$dir/empty.parquet")
+      val onlySuccess = new java.io.File(s"$dir/success.parquet")
+      assert(empty.mkdir() && onlySuccess.mkdir())
+      assert(new java.io.File(onlySuccess, "_SUCCESS").createNewFile())
+      for (p <- Seq(s"$dir/absent.parquet", empty.getPath, onlySuccess.getPath))
+        intercept[AnalysisException](Tables.parquet(spark, p))
+    } finally graft.sources.Export.deleteTree(dir)
   }
 
   test("loading events leaves the caller's nanosAsLong setting as it was") {
@@ -136,6 +182,8 @@ class TablesReadSpec extends SparkSpec {
       } finally writer.close()
       val s = spark.newSession()
       val before = s.conf.getOption(nanosAsLong)
+      assert(Tables.parquet(s, s"$dir/events.parquet").schema ==
+        StructType(Seq(StructField("event_id", LongType), StructField("ts", LongType))))
       val ev = Tables.events(s, dir)
       assert(ev.schema("ts").dataType == TimestampType)
       val micros = ev.orderBy("event_id").select(unix_micros(col("ts")))
