@@ -24,15 +24,13 @@ object Profile {
     val sfDir = Session.sfDir
     val spark = Session.local()
 
-    val jobs = mutable.LinkedHashMap[Int, (Long, Long, String)]() // id -> (start, end, desc)
+    val jobs = mutable.LinkedHashMap[Int, (Long, Long, String)]() // id -> (start, end, call site)
     val stages = mutable.LinkedHashMap[Int, StageAgg]()
     val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val desc = Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse("")
-        jobs(e.jobId) = (e.time, -1L, desc)
-      }
+      // a job's result stage is created after its parents and is named
+      // after the job's call site, e.g. `parquet at Export.scala:458`
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs(e.jobId) = (e.time, -1L, e.stageInfos.maxByOption(_.stageId).fold("")(_.name))
       override def onJobEnd(e: SparkListenerJobEnd): Unit =
         jobs.get(e.jobId).foreach { case (s, _, d) => jobs(e.jobId) = (s, e.time, d) }
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
@@ -67,9 +65,8 @@ object Profile {
         val jobTotal = jobs.values.collect { case (s, e, _) if e > 0 => e - s }.sum
         println(f"  sum(job walls) ${jobTotal / 1e3}%.2f s (gap to pass wall = driver/planning time)")
         jobs.toSeq.sortBy { case (_, (s, e, _)) => s - e }.foreach {
-          case (id, (s, e, d)) =>
-            if (e > 0 && e - s >= 50)
-              println(f"  job $id%4d ${(e - s) / 1e3}%8.2f s  ${d.take(80)}")
+          case (id, (s, e, site)) =>
+            if (e > 0) println(f"  job $id%4d ${(e - s) / 1e3}%8.2f s  ${site.take(80)}")
         }
         println("  top stages by task time:")
         stages.toSeq.sortBy(-_._2.taskTimeMs).take(12).foreach { case (id, a) =>

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Scale-ladder instrument (VERDICT r14 #3): execution evidence ABOVE
+/** Scale-ladder instrument: execution evidence ABOVE
   * the sf0.1 gate corpus. Synthesizes ~sf1 as a deterministic 10×
   * key-remapped replication of sf0.1 (written once to scratch), runs
   * the heavy families at BOTH SFs, and fail-stops any superlinear
@@ -52,7 +52,7 @@ object Scale {
   /** Write the replicated table set to `out`. Idempotent via a
     * marker file that RECORDS (base, copies) — a scratch dir
     * synthesized from a different base is re-synthesized, not
-    * silently reused (review-pass finding). Strides are computed
+    * silently reused. Strides are computed
     * from the base's own max keys, never hardcoded, so the ladder
     * can point at any corpus (including chaining from a synthesized
     * one) without key collisions. Only the tables the heavy families

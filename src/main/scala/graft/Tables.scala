@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.GraftParquetSchema
 
 /** Typed loaders for the driver-generated parquet tables, and the one
-  * read path for every single-path parquet input the engine reads.
+  * read path for every parquet input the engine reads without a
+  * schema of its own.
   *
   * At 100 TB these would be date/key-partitioned lakehouse tables
   * (the reference partitions everything by `block_date`, see
@@ -22,16 +23,32 @@ import org.apache.spark.sql.execution.datasources.parquet.GraftParquetSchema
   * of behind a range-sampling job.
   */
 object Tables {
-  /** `s.read.parquet(path)` without its schema-inference job: the read
-    * carries the schema [[GraftParquetSchema]] reads from the files'
-    * footers on the driver. A missing path, or one holding no parquet
-    * file, is read plainly, so it fails with Spark's own
-    * AnalysisException. */
-  def parquet(s: SparkSession, path: String): DataFrame = {
+  /** `s.read.options(options).parquet(paths: _*)` without its
+    * schema-inference job: the read carries the schema
+    * [[GraftParquetSchema]] reads from the files' footers on the
+    * driver. Paths holding no parquet file, or missing, are read
+    * plainly, so they fail with Spark's own AnalysisException. */
+  def parquet(s: SparkSession, paths: Seq[String],
+      options: Map[String, String] = Map.empty): DataFrame =
+    read(s, paths, paths, options)
+
+  def parquet(s: SparkSession, path: String): DataFrame = parquet(s, Seq(path))
+
+  /** The given files of one flat layout, read with the layout's schema:
+    * an empty list reads as no rows with the layout's columns (and its
+    * `_metadata`), so a subset pruned to nothing needs no branch. A
+    * layout holding no parquet file fails as [[parquet]] does. */
+  def parquet(s: SparkSession, layout: String, files: Seq[String]): DataFrame =
+    read(s, Seq(layout), files, Map.empty)
+
+  /** Reads `paths` with the schema of the files under `schemaFrom`. */
+  private def read(s: SparkSession, schemaFrom: Seq[String], paths: Seq[String],
+      options: Map[String, String]): DataFrame = {
     SmallSort.install(s)
-    GraftParquetSchema.infer(s, path) match {
-      case Some(schema) => s.read.schema(schema).parquet(path)
-      case None => s.read.parquet(path)
+    val reader = s.read.options(options)
+    GraftParquetSchema.infer(s, schemaFrom, options) match {
+      case Some(schema) => reader.schema(schema).parquet(paths: _*)
+      case None => reader.parquet(schemaFrom: _*)
     }
   }
 

@@ -10,7 +10,7 @@ object SchemaGuards {
   import org.apache.spark.sql.types._
   /** True if the type contains a DecimalType ANYWHERE — top level or
     * nested in arrays/maps/structs: the driver canonicalizes decimals
-    * asymmetrically on its two hash paths (VERDICT r9), and a nested
+    * asymmetrically on its two hash paths, and a nested
     * decimal reaches the parquet dump exactly like a top-level one. */
   def containsDecimal(dt: DataType): Boolean = dt match {
     case _: DecimalType     => true
@@ -44,7 +44,7 @@ object Verify {
         // DECIMAL output columns can never hash-match in the driver's
         // gate: its two sides canonicalize decimals through different
         // host types (DuckDB result → float64, Spark parquet → object
-        // Decimal — VERDICT r9). Exact decimal arithmetic stays legal
+        // Decimal). Exact decimal arithmetic stays legal
         // INTERNALLY; the driver-visible schema must emit it as
         // string/double/long (q13/q33/q34 stance). Fail loudly here so
         // the class cannot be reintroduced — nested decimals included

@@ -1006,9 +1006,8 @@ object Ann {
     * dot product is spent), keeps the quantized top-C per query via
     * the bounded-buffer aggregator, and only those N×C candidates
     * get full-precision rescoring. a34 stays as the exact semantics
-    * pin; this entry is what the VERDICT r8 perf note asked for —
-    * the production filtered-search plan where the expensive scan is
-    * label-pruned AND compressed-domain. Corpus never shuffled;
+    * pin; this entry is the production filtered-search plan, where
+    * the expensive scan is label-pruned AND compressed-domain. Corpus never shuffled;
     * queries, candidate list, and quantization stats all broadcast.
     *
     * Fully deterministic (global SQ8 floor arithmetic + sequential
@@ -1291,7 +1290,7 @@ object Ann {
     val totalD = stats.map(_.getLong(2)).sum
     // BigInt cross-multiplication: d·N vs D·n overflows Long around
     // 10¹⁰ rows × 10⁹ tombstones — exactly the scale the trigger
-    // claims exactness for (review-pass finding)
+    // claims exactness for
     val hot = stats.filter(r =>
         BigInt(r.getLong(2)) * totalN > BigInt(totalD) * r.getLong(1))
       .map(_.getInt(0)).sorted.toIndexedSeq
@@ -1458,14 +1457,13 @@ object Ann {
     val man = Tables.parquet(s, s"$root/manifest_$k").collect()
     val data = man.filter(_.getString(0) == "data").map(_.getString(1)).toIndexedSeq
     val dels = man.filter(_.getString(0) == "delete").map(_.getString(1)).toIndexedSeq
-    val idx = s.read.option("basePath", s"$root/data").parquet(data: _*)
-    val tombs =
-      if (dels.isEmpty) None else Some(s.read.parquet(dels: _*))
+    val idx = Tables.parquet(s, data, Map("basePath" -> s"$root/data"))
+    val tombs = if (dels.isEmpty) None else Some(Tables.parquet(s, dels))
     probeIvfIndex(idx, queries, tombs)
   }
 
   /** a53: INDEX TIME TRAVEL — the ANN lifecycle tied to the change-
-    * chain discipline (r13 verdict #7): q77/q92 version a TABLE; a
+    * chain discipline: q77/q92 version a TABLE; a
     * production vector index is also a versioned artifact (a50
     * already treats it as files), and "what did this query return
     * before yesterday's ingest/delete?" is a real debugging and
@@ -1634,7 +1632,7 @@ object Ann {
     * so it is EXPECTED to win — but that is an empirical property,
     * not a theorem, so a stale-index win publishes
     * recommend_retrain=false (keep the stale index) rather than
-    * aborting the health scan (ADVICE r14).
+    * aborting the health scan.
     *
     * Scale (100 TB): both builds are the a42 shape (bounded-sample
     * training in production, integer sums map-side combined); the
@@ -1658,8 +1656,8 @@ object Ann {
     require(rows.length == 2 &&
       byRegime("stale").getLong(2) == byRegime("retrained").getLong(2),
       "a54: both regimes must route the full corpus")
-    // "retrained never loses" is an EMPIRICAL property, not a theorem
-    // (ADVICE r14): one Lloyd step from md5-ordered seeds over the
+    // "retrained never loses" is an EMPIRICAL property, not a theorem:
+    // one Lloyd step from md5-ordered seeds over the
     // current corpus is not guaranteed to beat the history-trained
     // build at every SF, so an unconditional require could abort the
     // operator on untested data. The refusal-to-publish semantics
@@ -2081,7 +2079,7 @@ object Ann {
     * vectors land in the same geometry. Default: train on all. */
   private[graft] def a42Base(s: SparkSession, dir: String,
       histPred: Column = lit(true)): DataFrame = {
-    // explicit-count repartition (r15, the a48 rationale): every
+    // explicit-count repartition (the a48 rationale): every
     // consumer of the quantized base — the Lloyd step's assignment,
     // the index assignment, the probe scoring — is a crossJoin
     // against BROADCAST centroids, so the per-vector work inherits
@@ -2125,11 +2123,11 @@ object Ann {
     // twice (index assignment + query routing), and without the
     // persist each broadcast re-executed the training from scratch —
     // measured as the dominant per-pass cost of a42/a43/a49/a51/s48
-    // (r15, guide §5 "caching is worth it when a DataFrame is reused
-    // AND recomputing it is more expensive"). 96 rows of long-arrays:
+    // (caching pays when a frame is reused AND recomputing it costs
+    // more than holding it). 96 rows of long-arrays:
     // the cache cost is nothing, the recompute was a corpus pass.
     val c1 = a42RefineFrom(base, histPred).persist()
-    // eager materialization (r16, the q51/d53 lesson): every consumer
+    // eager materialization (the q51/d53 lesson): every consumer
     // broadcasts c1 at least twice (index assignment + query routing),
     // and those broadcast exchanges materialize CONCURRENTLY when the
     // action starts — racing the 96-row cache COLD re-ran the whole
@@ -2311,7 +2309,7 @@ object Ann {
       // stores beside its lists): without this the probe's query
       // routing re-executed the whole Lloyd training from c's lineage
       // on every pass — the read face must route through the artifact,
-      // not retrain (r15; exact integers, so the round-trip is lossless)
+      // not retrain (exact integers, so the round-trip is lossless)
       val cDir = graft.sources.Export.scratch("a43_cents", dir)
       c.write.mode("overwrite").parquet(cDir)
       (d, Tables.parquet(s, cDir))
@@ -2432,8 +2430,7 @@ object Ann {
     * times (counts, seed ranking, re-routing) and the ledger four —
     * the a42 build must run once, not once per consumer (in
     * production this frame IS the a43 parquet artifact read back).
-    * Extracted from the a45/a46 twins (the r11 deferred review
-    * finding). */
+    * One definition serves the a45/a46 twins. */
   private[graft] def a4xAssignedLedger(base: DataFrame, c1: DataFrame)
       : (DataFrame, DataFrame) = {
     val aq = base.select(col("vec_id"), col("qv"))
@@ -2443,7 +2440,7 @@ object Ann {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val ledger = a4xLedgerFrom(aq, c1)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // eager materialization (r16, the d51/d53/q51 lesson applied to
+    // eager materialization (the d51/d53/q51 lesson applied to
     // the rebalancers): a45/a46's final plans carry several BROADCAST
     // subqueries over these frames (seeds, totals, the hot/cold top-K
     // windows), and broadcast exchanges materialize CONCURRENTLY when
@@ -2514,7 +2511,7 @@ object Ann {
           .select(col("vec_id"), col("cells").getItem(0).cast("int").as("cell")),
         c1)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // eager materialization (r16, the a4xAssignedLedger rationale):
+    // eager materialization (the a4xAssignedLedger rationale):
     // the broadcast totals subquery and the output scan race the cold
     // ledger cache, each re-running training + assignment
     ledger.count()
@@ -2888,7 +2885,7 @@ object Ann {
     * stream. Every arithmetic step is the audited dual-dialect
     * cosine/argmin, byte-exact. */
   def a48HardNegatives(s: SparkSession, dir: String): DataFrame = {
-    // explicit-count repartition (r15, the Par.shufflePartitions
+    // explicit-count repartition (the Par.shufflePartitions
     // rationale): the cell join below explodes |cell|² scored pairs
     // with its anchor side broadcast, so the explosion inherits THIS
     // side's partitioning — the gate corpus is one parquet split, and
@@ -3009,7 +3006,7 @@ object Ann {
     val (base, c1) = a42Refine(s, dir)
     val e = VectorExprs.withNorm(
       graft.Tables.embeddings(s, dir).select("vec_id", "embedding"))
-    // ONE corpus assignment pass for both join sides (r15): the rnk-1
+    // ONE corpus assignment pass for both join sides: the rnk-1
     // index cell is element 0 of the top-[[a49Probes]] assignment by
     // construction (same distance struct, same tie rule), so the
     // top-m pass is computed once, persisted (corpus × 5 ints), and
@@ -3017,7 +3014,7 @@ object Ann {
     // their own corpus × centroid assignment, and each re-executed
     // the training lineage on top (see a42Refine's persist).
     val top = a42AssignTopFrom(base, c1, a49Probes).persist()
-    // eager materialization (r16): both join sides derive from `top`
+    // eager materialization: both join sides derive from `top`
     // and their exchanges materialize concurrently when the action
     // starts — racing the cold cache re-ran the corpus assignment
     // (and the training lineage under it) once per side; a51's

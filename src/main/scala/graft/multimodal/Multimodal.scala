@@ -201,8 +201,8 @@ object Multimodal {
     decodeFeatures(mediaTable(s, dir)).toDF()
       .withColumn("feat", to_json(col("feat")))
 
-  /** m33b: m33's decoded-metadata rollup oracle-checked (r13 verdict
-    * #5 — the m34b/m35b split applied to the DECODE itself): the
+  /** m33b: m33's decoded-metadata rollup oracle-checked (the
+    * m34b/m35b split applied to the DECODE itself): the
     * codec walk is JVM work no SQL engine replays, but every media
     * payload here is generated from doc_id by closed-form rules
     * ([[syntheticBmp]]/[[syntheticWav]]/[[syntheticY4m]]), so what a
@@ -519,7 +519,7 @@ object Multimodal {
     * gradient bits set) is a LEGAL dHash — e.g. a horizontal
     * brightness ramp strictly increasing at every grid position —
     * and a sentinel would silently drop such images from near-dup
-    * detection (ADVICE r9). */
+    * detection. */
   private[graft] def m35Hashes(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     mediaTableNearImages(s, dir)
@@ -735,7 +735,7 @@ object Multimodal {
     // three stages race as independent children of the final action,
     // so even a lazy persist recomputes cold — the d51/d53 lesson).
     // Persist + eager count = ONE decode pass per invocation,
-    // recomputed from parquet every pass; rows unchanged. (r15)
+    // recomputed from parquet every pass; rows unchanged.
     val fh = m37FrameHashes(s, dir)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     fh.count()
@@ -1162,7 +1162,7 @@ object Multimodal {
       .select("doc_id", "frame_idx", "fhash")
 
   /** m40b: m40's cut rule oracle-checked — the last relational stage
-    * in the m-family without an oracle twin (r13 verdict #5): m40
+    * in the m-family without an oracle twin: m40
     * stays rows-only because its hashes come from a JVM container
     * walk, but the lag-window distance + threshold is relational, so
     * m40b routes a dialect-replayable literal hash stream with

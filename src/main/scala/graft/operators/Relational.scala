@@ -1090,18 +1090,18 @@ object Relational {
     // scratch path + per-JVM-token table names: two concurrent
     // sessions (bench + test suite on one host) must not race on one
     // catalog entry with mode=overwrite — the q30/q31 Export stance,
-    // now applied to the catalog too (ADVICE r8). scratch() also
+    // now applied to the catalog too. scratch() also
     // registers the dir for cleanup-on-exit, so bucket files no
     // longer accumulate in /tmp across runs.
-    // bucket-table construction behind the build/probe split (r16,
-    // the q42/s48/d37 criterion): the bucketed layout is state a
+    // bucket-table construction behind the build/probe split (the
+    // q42/s48/d37 criterion): the bucketed layout is state a
     // warehouse CARRIES — written once, amortized over every
     // downstream join — so bench passes 2+ time the shuffle-free
     // join face alone; Verify/specs/library callers still write on
     // every invocation (BuildCache is a no-op for them)
     // the cached value is the pair of RESOLVED table Datasets, not
     // the catalog names: the body drops the catalog entries below
-    // (hygiene, ADVICE r9), and a resolved plan holds the bucketed
+    // (hygiene), and a resolved plan holds the bucketed
     // file relations (bucket spec included) independent of the
     // catalog, so a memoized probe replans the same shuffle-free join
     val (o, l) = graft.BuildCache.build(s"q33:$dir") {
@@ -1124,7 +1124,7 @@ object Relational {
       // the Datasets above are ANALYZED eagerly, so their plans hold
       // the resolved bucketed file relations — dropping the catalog
       // entries now leaves no dangling names in the session catalog
-      // (ADVICE r9) while execution still reads the bucket files
+      // while execution still reads the bucket files
       // (EXTERNAL tables: DROP removes metadata only; Export.scratch
       // reclaims the files at JVM exit).
       s.sql(s"DROP TABLE IF EXISTS $ot")
@@ -1147,7 +1147,7 @@ object Relational {
         // the exact (38,6) sum is then emitted as STRING: the
         // driver's two hash paths canonicalize decimals through
         // different host types (DuckDB result → float64, Spark
-        // parquet → object Decimal — VERDICT r9), so a decimal-typed
+        // parquet → object Decimal), so a decimal-typed
         // OUTPUT column can never hash-match; strings map identically
         // on both paths (the q13 event_index precedent). The
         // arithmetic stays exact decimal internally.
@@ -1199,7 +1199,7 @@ object Relational {
     * z_min/z_max in the output pin the Morton math itself
     * cross-engine, not just the filtered aggregate. */
   def q34Zorder(s: SparkSession, dir: String): DataFrame = {
-    // z-layout construction behind the build/probe split (r16, the
+    // z-layout construction behind the build/probe split (the
     // q33/q42 criterion): the z-ordered layout is carried warehouse
     // state; bench passes 2+ time the skipping read face alone
     val out = graft.BuildCache.build(s"q34:$dir") {
@@ -1211,12 +1211,12 @@ object Relational {
         .withColumn("zval", zInterleave("zx", "zy"))
         .drop("zx", "zy")
       // coalesce: max over an EMPTY orders table is NULL — getLong
-      // would NPE (ADVICE r8); 0 makes k=0, a single bucket, still sound
+      // would NPE; 0 makes k=0, a single bucket, still sound
       val zmax = base.agg(coalesce(max("zval"), lit(0L))).head.getLong(0)
       // shift so ~32 z-aligned cells cover the populated z-range
       val k = math.max(64 - java.lang.Long.numberOfLeadingZeros(zmax) - 5, 0)
       val o = graft.sources.Export.scratch("q34_zorder", dir)
-      // BY_NUM pin (r15, Finding 1): the by-column form is an
+      // BY_NUM pin: the by-column form is an
       // AQE-coalescible exchange and orders' bytes are small at gate
       // SFs, so the z-sort + write ran in ONE task. Same-key rows land
       // in one task under either form, so each zbucket directory still
@@ -1236,8 +1236,8 @@ object Relational {
       .agg(
         count(lit(1)).as("n_orders"),
         // exact decimal sum, emitted as STRING — the q33 stance:
-        // decimal output columns hash asymmetrically in the driver
-        // (VERDICT r9), so the exact (38,6) value crosses as VARCHAR
+        // decimal output columns hash asymmetrically in the driver,
+        // so the exact (38,6) value crosses as VARCHAR
         sum(col("o_totalprice").cast("decimal(20,6)"))
           .cast("decimal(38,6)").cast("string").as("revenue"),
         min("zval").as("z_min"),
@@ -1554,7 +1554,7 @@ object Relational {
     * appends O(diff) rows; nothing is rewritten. */
   def q81Restore(s: SparkSession, dir: String): DataFrame = {
     // chain + restore-commit construction behind the build/probe
-    // split (r16; q92's sibling — the version chain is carried
+    // split (q92's sibling — the version chain is carried
     // state, the post-restore AS OF read is the served face)
     val chain = graft.BuildCache.build(s"q81:$dir") {
       val c = q77WriteChain(s, dir, "q81_chain")
@@ -1628,8 +1628,8 @@ object Relational {
     * latest-per-key window (safe — the window partitions by user_id,
     * so restricting keys commutes with it): q93's Δ-restricted
     * pre-image read, which must happen BELOW the window or the feed
-    * pays an O(table) shuffle for a tiny change window (review-pass
-    * finding — Spark cannot push a join below a window). */
+    * pays an O(table) shuffle for a tiny change window (Spark cannot
+    * push a join below a window). */
   private[graft] def q92Replay(s: SparkSession, chain: String,
       from: Int, k: Int, keys: Option[DataFrame] = None): DataFrame = {
     val base =
@@ -1661,7 +1661,7 @@ object Relational {
     q92Replay(s, chain, (k / q92Interval) * q92Interval, k)
 
   /** q92: change-log CHECKPOINTING — the missing piece of the
-    * q77/q78/q81 time-travel family (flagged in the r13 verdict):
+    * q77/q78/q81 time-travel family:
     * q77's AS OF k replays every delta from genesis, so a year-old
     * table pays its whole history on every read; Delta's answer is a
     * checkpoint snapshot every K commits (checkpoint.parquet), and a
@@ -1734,7 +1734,7 @@ object Relational {
     val net = graft.streaming.Streaming.applyChangesSnapshot(win)
     // the Δ restriction is applied INSIDE the replay, below its
     // latest-per-key window — the pre-image genuinely costs O(Δ keys)
-    // of shuffle, not O(table) (review-pass finding)
+    // of shuffle, not O(table)
     cdfFromNet(net, q92Replay(s, chain,
       (k1 / q92Interval) * q92Interval, k1,
       Some(net.select("user_id").distinct())))
@@ -1810,7 +1810,7 @@ object Relational {
     * version cutoffs — q35's two-snapshot diff classification as ONE
     * SQL body shared by q93 (written chain) and s75 (live ledger),
     * the ivfRecomputeSql pattern: the classification rule cannot
-    * drift between the two feeds' oracles (review-pass finding). */
+    * drift between the two feeds' oracles. */
   private[graft] def cdfSql(cut1: String, cut2: String): String =
     s"""WITH ranked AS (
        | SELECT *, row_number() OVER (PARTITION BY user_id
@@ -2104,8 +2104,8 @@ object Relational {
     }
     require(rows.count(_._5 == "rejected") == 1 && rows.exists(_._4 > 0L),
       "q96: the planted audit failure must genuinely reject")
-    val tableN = s.read.option("recursiveFileLookup", "true")
-      .parquet(table).count()
+    val tableN = Tables.parquet(s, Seq(table), Map("recursiveFileLookup" -> "true"))
+      .count()
     require(tableN == published,
       s"q96: table holds $tableN rows, ledger says $published")
     rows.toSeq.toDF("attempt", "writer", "staged_rows", "violations",
@@ -2239,7 +2239,7 @@ object Relational {
     * invisible by construction: its files are not in any commit the
     * manifest names). */
   private[graft] def q103FactAt(s: SparkSession, root: String, k: Int): DataFrame =
-    s.read.parquet((1 to k).map(i => s"$root/fact/commit_$i"): _*)
+    Tables.parquet(s, (1 to k).map(i => s"$root/fact/commit_$i"))
   private[graft] def q103MvAt(s: SparkSession, root: String, k: Int): DataFrame =
     Tables.parquet(s, s"$root/mv/v_$k")
 
@@ -2960,7 +2960,7 @@ object Relational {
     * returnflag rolled away; InvariantSpec pins the partition laws
     * (each marginal == the sum of its leaves; no gid-3 row exists). */
   def q97GroupingSets(s: SparkSession, dir: String): DataFrame = {
-    // pinned repartition before the Expand (r15, the q12 rationale):
+    // pinned repartition before the Expand (the q12 rationale):
     // the 3× grouping-sets expansion and its partial aggregate — with
     // a countDistinct leg, keyed by (gid, keys, l_orderkey) — ran in
     // the 1-split scan's single task. Narrow 5-column exchange; rows
@@ -3009,7 +3009,7 @@ object Relational {
     * the key itself — GDPR Art. 4(5) pseudonymization). A literal
     * here so the oracle can replay; production holds it in a KMS.
     *
-    * TEST-ONLY CONSTRUCTION (ADVICE r14): salted md5 over a short
+    * TEST-ONLY CONSTRUCTION: salted md5 over a short
     * literal plus a dense integer key domain is enumerable in
     * seconds — its unlinkability holds only against direct string
     * matching, which is exactly what the harness needs (a
@@ -4113,8 +4113,8 @@ object Relational {
     * top-50 is TakeOrderedAndProject, never a global sort. */
   def q51PageRank(s: SparkSession, dir: String): DataFrame = {
     val pairs = q46PairsFrom(q46Items(s, dir))
-    // both edge directions emit from ONE pass over the pair stream
-    // (r16, guide §1.2): the union-of-two-selects form duplicated the
+    // both edge directions emit from ONE pass over the pair stream:
+    // the union-of-two-selects form duplicated the
     // whole q46 basket self-join subtree — the profile showed twin
     // explode and twin pair-agg stages, each pair of twins one union
     // side — because a Union's sides are independent subtrees Spark
@@ -4134,7 +4134,7 @@ object Relational {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val ew = edges.join(wsum.select(col("src"), col("wtot")), Seq("src"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // eager materialization (r15, the d51/d53 lesson): the final plan
+    // eager materialization (the d51/d53 lesson): the final plan
     // carries FOUR broadcast(nn) subqueries (init + 3 iterations),
     // each reading wsum — broadcast exchanges materialize
     // concurrently when the action starts, and racing consumers of
@@ -4234,7 +4234,7 @@ object Relational {
   def q53Communities(s: SparkSession, dir: String): DataFrame = {
     val pairs = q46PairsFrom(q46Items(s, dir))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // NO eager count here (r16, measured): the cold cache's racing
+    // NO eager count here (measured): the cold cache's racing
     // consumers DO re-run the q46 miner once per consumer (profiled:
     // twin 13-15 s-taskTime mining stages), but those recomputes
     // overlap on idle cores while a serializing count() measured
@@ -5739,7 +5739,7 @@ object Relational {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // undirected adjacency: each a<b edge both ways, distinct by
     // construction (a<b means (u,v) and (v,u) never collide). Both
-    // directions emit from ONE pass over the pair stream (r16, the
+    // directions emit from ONE pass over the pair stream (the
     // q51/q53 explode form) — the union-of-selects shape put TWO
     // independent subtrees over the cold persisted miner per
     // consumer, and adj has four consumers below.
@@ -6107,13 +6107,12 @@ object Relational {
     * expand exchange q52 already declares as the gate-only
     * instrument. */
   def q52bHllNdv(s: SparkSession, dir: String): DataFrame = {
-    // pinned repartition below the stack (r16, re-measured): r15's
-    // fourth pass rejected this (2.36 → 2.50 s in its window), but
-    // the current profile shows the 1-split scan's single task
-    // carrying the 6× stack explode + per-row md5 rho chain for
-    // 3.3 s of a 4.3 s entry — the q12/t35 class. The exchange moves
-    // raw event rows once and both legs ReuseExchange it; re-measured
-    // 3.60 → 1.66 s (matched-window A/B, OPTIMIZATION_r16.md).
+    // pinned repartition below the stack: without it the 1-split
+    // scan's single task carries the 6× stack explode + per-row md5
+    // rho chain (3.3 s of a 4.3 s entry in a profile) — the q12/t35
+    // class. The exchange moves raw event rows once and both legs
+    // ReuseExchange it; measured 3.60 → 1.66 s in a matched-window
+    // A/B (OPTIMIZATION_r16.md).
     val nPart = graft.Par.shufflePartitions(s)
     val st = q52Stacked(Tables.events(s, dir)
       .repartition(nPart, col("event_id")))

@@ -145,11 +145,11 @@ object Export {
       partitionCol: String, writeTasksPerBucket: Int = 1,
       maxRecordsPerFile: Long = 0L,
       options: Map[String, String] = Map.empty): Unit = {
-    // EXPLICIT partition count in BOTH modes (round 5): a count-less
+    // EXPLICIT partition count in BOTH modes: a count-less
     // repartition(cols…) is an AQE-coalescible hint, and coalescing
-    // is wrong for this writer twice over. Salted mode (the round-4
-    // no-op fix): the small (bucket, salt) shuffle was folded back
-    // into few tasks and the salt never materialized as separate
+    // is wrong for this writer twice over. Salted mode: without it
+    // the small (bucket, salt) shuffle was folded back into few
+    // tasks and the salt never materialized as separate
     // writer tasks — a user-fixed count is exempt from AQE
     // coalescing. Default mode: AQE coalesces the pre-write shuffle
     // to a handful of target-size tasks, and each task then creates
@@ -225,8 +225,8 @@ object Export {
     val src = Tables.events(s, dir).select(
       col("event_id"), col("user_id"), col("event_type"), col("value"),
       col("ts"), date_format(col("ts"), "yyyy-MM-dd-HH").as("hour_bucket"))
-    // construction behind the bench's build/probe split (r15 —
-    // q31's twin joins q31's class; the read-back IS the served face)
+    // construction behind the bench's build/probe split (q31's
+    // twin joins q31's class; the read-back IS the served face)
     val out = graft.BuildCache.build(s"q42:$dir") {
       val o = scratch("q42_json", dir)
       exportConvert(src, o, "json", "hour_bucket",
@@ -256,7 +256,7 @@ object Export {
     * read-back plan (files outside 1997 are never opened — the scan
     * proves the layout, not just the answer). */
   def q74PrunedExport(s: SparkSession, dir: String): DataFrame = {
-    // layout construction behind the build/probe split (r16, the
+    // layout construction behind the build/probe split (the
     // q33/q42 criterion): the partitioned export is carried state;
     // bench passes 2+ time the partition-pruned rollup alone
     val out = graft.BuildCache.build(s"q74:$dir") { q74Write(s, dir) }
@@ -392,7 +392,7 @@ object Export {
     * actually changed shape. */
   def q75Compaction(s: SparkSession, dir: String): DataFrame = {
     // fragment+compaction construction behind the build/probe split
-    // (r16, the q33/q42 criterion; the in-build requires still prove
+    // (the q33/q42 criterion; the in-build requires still prove
     // the layout changed shape on every construction)
     val out = graft.BuildCache.build(s"q75:$dir") { q75Compact(s, dir).outDir }
     q75YearRollup(Tables.parquet(s, out))
@@ -455,7 +455,7 @@ object Export {
     * whole layout dir) — the manifest builder q76's one-shot sidecar
     * and q79's incremental maintenance share. */
   private[graft] def q76SidecarRows(s: SparkSession, paths: Seq[String]): DataFrame =
-    s.read.parquet(paths: _*)
+    Tables.parquet(s, paths)
       .select(col("_metadata.file_path").as("file"), col("o_orderkey"))
       .groupBy("file")
       .agg(min("o_orderkey").as("min_key"), max("o_orderkey").as("max_key"))
@@ -478,8 +478,8 @@ object Export {
     * pushes into the sidecar's parquet scan (scan-stage,
     * ExportSpec-pinned) and evaluates distributed — at a million
     * files the prune runs where the manifest lives instead of
-    * shipping every stats row to the driver (VERDICT r13 #4; q82's
-    * bloom probe already took this stance). This is the production
+    * shipping every stats row to the driver (q82's bloom probe
+    * takes the same stance). This is the production
     * read path: it never counts the full manifest. */
   private[graft] def q76KeptFiles(s: SparkSession, side: String,
       lo: Long, hi: Long): DataFrame =
@@ -491,7 +491,7 @@ object Export {
     * filesTotal instrument come from ONE aggregate job over ONE
     * sidecar scan (two separate reads could observe different
     * manifest states across a concurrent rewrite, and the second
-    * full pass is pure instrument cost — review-pass finding); the
+    * full pass is pure instrument cost); the
     * driver receives O(matches) names + one count. The predicate is
     * [[q76KeepPred]], the same decision [[q76KeptFiles]]' pushed
     * scale path plans. Kept files are re-filtered exactly — pruning
@@ -507,10 +507,8 @@ object Export {
         .as("keep")).head
     val total = r.getLong(0).toInt
     val keep = r.getSeq[String](1)
-    val base =
-      if (keep.isEmpty) Tables.parquet(s, layout).filter(lit(false))
-      else s.read.parquet(keep: _*)
-    (base.filter(col("o_orderkey").between(lo, hi)), keep.length, total)
+    (Tables.parquet(s, layout, keep).filter(col("o_orderkey").between(lo, hi)),
+      keep.length, total)
   }
 
   /** q76: file-level data skipping — q74's pruning instrument one
@@ -524,7 +522,7 @@ object Export {
     * and pins the scan's numFiles metric to the kept count. */
   def q76DataSkipping(s: SparkSession, dir: String): DataFrame = {
     // clustered layout + stats sidecar behind the build/probe split
-    // (r16, the q33/q42 criterion): bench passes 2+ time the
+    // (the q33/q42 criterion): bench passes 2+ time the
     // sidecar-pruned range probe alone
     val (layout, side) = graft.BuildCache.build(s"q76:$dir") {
       val l = q76Write(s, dir)
@@ -652,7 +650,7 @@ object Export {
     * (a reader must not care whether evolution happened in a batch
     * backfill or mid-stream). */
   private[graft] def q80EvolvedRead(s: SparkSession, layout: String): DataFrame =
-    s.read.option("mergeSchema", "true").parquet(layout)
+    Tables.parquet(s, Seq(layout), Map("mergeSchema" -> "true"))
       .groupBy(coalesce(col("o_channel"), lit("legacy")).as("channel"))
       .agg(count(lit(1)).as("orders"),
         sum(expr("cast(round(o_totalprice * 100, 0) as bigint)")).as("cents"))
@@ -712,7 +710,7 @@ object Export {
     * groupBy(file, word) bit_or — no driver loop; the artifact is
     * O(set bits), the Delta bloom-index sidecar shape. */
   private[graft] def q82SidecarRows(s: SparkSession, paths: Seq[String]): DataFrame =
-    s.read.parquet(paths: _*)
+    Tables.parquet(s, paths)
       .select(col("_metadata.file_path").as("file"),
         explode(q82Positions(col("o_hash"))).as("pos"))
       .select(col("file"), shiftright(col("pos"), 6).as("word"),
@@ -743,10 +741,8 @@ object Export {
       .filter(col("hits") === lit(q82Probes))
       .select("file").collect().map(_.getString(0)).toIndexedSeq
     val total = listParquet(layout).length
-    val base =
-      if (kept.isEmpty) Tables.parquet(s, layout).filter(lit(false))
-      else s.read.parquet(kept: _*)
-    (base.filter(col("o_hash") === lit(hash)), kept.length, total)
+    (Tables.parquet(s, layout, kept).filter(col("o_hash") === lit(hash)),
+      kept.length, total)
   }
 
   /** The probed key's hash: md5 of the corpus's MINIMUM o_orderkey —
@@ -781,7 +777,7 @@ object Export {
     * needs. */
   def q82BloomSkipping(s: SparkSession, dir: String): DataFrame = {
     // clustered layout + bloom sidecar behind the build/probe split
-    // (r16, the q33/q42 criterion): bench passes 2+ time the
+    // (the q33/q42 criterion): bench passes 2+ time the
     // bloom-pruned point lookup alone
     val (layout, side) = graft.BuildCache.build(s"q82:$dir") {
       val l = q82Write(s, dir)
@@ -953,8 +949,8 @@ object Export {
     * the graceful-degradation story a 100 TB table needs while its
     * history ages out. */
   def q84PartitionEvolution(s: SparkSession, dir: String): DataFrame = {
-    // evolved two-scheme layout behind the build/probe split (r16,
-    // the q33/q42 criterion): bench passes 2+ time the cross-scheme
+    // evolved two-scheme layout behind the build/probe split (the
+    // q33/q42 criterion): bench passes 2+ time the cross-scheme
     // range read alone
     val root = graft.BuildCache.build(s"q84:$dir") { q84Write(s, dir) }
     q84RangeRead(s, root, q84Lo, q84Hi)
@@ -1018,7 +1014,7 @@ object Export {
 
   /** Read a table through its clone manifest. */
   private[graft] def q87ManifestRead(s: SparkSession, manifest: String): DataFrame =
-    s.read.parquet(q87ReadManifest(s, manifest): _*)
+    Tables.parquet(s, q87ReadManifest(s, manifest))
 
   /** q87: shallow CLONE — the zero-copy table copy (Delta SHALLOW
     * CLONE; Iceberg snapshot ref): cloning a 100 TB table writes ONE
@@ -1036,7 +1032,7 @@ object Export {
     * append is O(new rows). */
   def q87ShallowClone(s: SparkSession, dir: String): DataFrame = {
     // clone + divergence construction behind the build/probe split
-    // (r16, the q33/q42 criterion): the manifests and the diverged
+    // (the q33/q42 criterion): the manifests and the diverged
     // clone are carried state; the manifest-resolved read is the face
     val m2 = graft.BuildCache.build(s"q87:$dir") { q87Build(s, dir)._4 }
     q87ManifestRead(s, m2)
@@ -1117,7 +1113,7 @@ object Export {
 
   /** The live deletion vector: the union of every delete commit. */
   private[graft] def q95Dv(s: SparkSession, dvDir: String): DataFrame =
-    s.read.option("recursiveFileLookup", "true").parquet(dvDir)
+    Tables.parquet(s, Seq(dvDir), Map("recursiveFileLookup" -> "true"))
       .select("file", "pos")
 
   /** Per-file row counts off the scan's own metadata — in a real
@@ -1149,18 +1145,13 @@ object Export {
     val dirty = dv.select("file").distinct()
       .collect().map(_.getString(0)).sorted.toIndexedSeq
     val clean = (paths.keySet -- dirty).toSeq.sorted
-    val cleanDf =
-      if (clean.isEmpty)
-        Tables.parquet(s, layout).filter(lit(false))
-          .select(q95Cols.map(col): _*)
-      else s.read.parquet(clean.map(paths): _*).select(q95Cols.map(col): _*)
-    val dirtyDf =
-      if (dirty.isEmpty) cleanDf.filter(lit(false))
-      else s.read.parquet(dirty.map(paths): _*)
-        .select(q95FileId.as("file") +:
-          col("_metadata.row_index").as("pos") +: q95Cols.map(col): _*)
-        .join(broadcast(dv), Seq("file", "pos"), "left_anti")
-        .select(q95Cols.map(col): _*)
+    val cleanDf = Tables.parquet(s, layout, clean.map(paths))
+      .select(q95Cols.map(col): _*)
+    val dirtyDf = Tables.parquet(s, layout, dirty.map(paths))
+      .select(q95FileId.as("file") +:
+        col("_metadata.row_index").as("pos") +: q95Cols.map(col): _*)
+      .join(broadcast(dv), Seq("file", "pos"), "left_anti")
+      .select(q95Cols.map(col): _*)
     (cleanDf.unionByName(dirtyDf), dirty.length, paths.size)
   }
 
@@ -1203,7 +1194,7 @@ object Export {
     }
     if (rewrite.nonEmpty) {
       val tmp = out + "_rwtmp"
-      s.read.parquet(rewrite.map(paths): _*)
+      Tables.parquet(s, layout, rewrite.map(paths))
         .select(q95FileId.as("file") +:
           col("_metadata.row_index").as("pos") +: q95Cols.map(col): _*)
         .join(broadcast(dv), Seq("file", "pos"), "left_anti")
@@ -1259,7 +1250,7 @@ object Export {
     * merge-on-read defers that to one density-targeted pass. */
   def q95DeletionVectors(s: SparkSession, dir: String): DataFrame = {
     // the delete-commit + purge lifecycle behind the build/probe
-    // split (r16, the q33/q42 criterion): delete commits and the
+    // split (the q33/q42 criterion): delete commits and the
     // density-targeted purge are table MAINTENANCE a lakehouse
     // carries; the merge-on-read over the purged layout is the
     // served face bench passes 2+ time. All in-build requires still
@@ -1407,9 +1398,9 @@ object Export {
       .sortWithinPartitions("zval")
       .drop("zx", "zy", "zval")
       .write.mode("overwrite").parquet(lz)
-    // the sidecars are CONSTRUCTION too (review-pass finding: left
-    // outside the build block, every probe pass re-scanned all three
-    // layouts to rebuild them, defeating the build/probe split —
+    // the sidecars are CONSTRUCTION too (outside the build block,
+    // every probe pass would re-scan all three layouts to rebuild
+    // them, defeating the build/probe split —
     // exactly the persisted-manifest stance q76/q79 already take)
     Seq(lc, ld, lz).foreach { l =>
       q102Stats(s, l).coalesce(1).write.mode("overwrite").parquet(s"${l}_stats")
@@ -1441,9 +1432,7 @@ object Export {
           case _ => maxc >= c1 && minc <= c2 && maxd >= day1 && mind <= day2
         })
       }.map(_._1).sorted
-      val served =
-        if (kept.isEmpty) 0L
-        else s.read.parquet(kept.map(paths): _*).filter(rowPred(pname)).count()
+      val served = Tables.parquet(s, lpath, kept.map(paths)).filter(rowPred(pname)).count()
       (lname, pname, kept.length, stats.length, served)
     }
     val byCell = cells.map(c => (c._1, c._2) -> c).toMap
@@ -1503,7 +1492,7 @@ object Export {
     val r = Tables.orders(s, dir)
       .agg(min("o_orderkey"), max("o_orderkey")).head
     val span = r.getLong(1) - r.getLong(0)
-    // Degenerate-span guard (ADVICE r14): span < 3 would give m = 1,
+    // Degenerate-span guard: span < 3 would give m = 1,
     // making EVERY row a probe, keeping every file, and tripping the
     // q101/q78 pruning require with a misleading message. A probe
     // that touches most of the key domain measures nothing about the
@@ -1575,7 +1564,7 @@ object Export {
     val total = paths.size
     require(kept.nonEmpty && kept.length < total,
       s"q101: index must prune (${kept.length} of $total files kept)")
-    val scanned = s.read.parquet(kept.map(paths): _*)
+    val scanned = Tables.parquet(s, layout, kept.map(paths))
     val rows = scanned
       .join(broadcast(probes), col("o_orderkey") === col("key"), "left_semi")
     // zero-false-positive instrument, measured on the KEPT files'

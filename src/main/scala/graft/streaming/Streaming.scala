@@ -889,7 +889,7 @@ object Streaming {
   def s48StreamSemanticAdmit(s: SparkSession, dir: String): DataFrame = {
     import graft.ann.Ann
     // the history artifact (quantizer training + index write) behind
-    // the bench's build/probe split (r15 — the s74-s79 stance: the
+    // the bench's build/probe split (the s74-s79 stance: the
     // index outlives every batch; the ADMISSION is the served face)
     val (idxDir, c1Dir, mnorm) = graft.BuildCache.build(s"s48:$dir") {
       val hist = col("vec_id") % 4 =!= 0
@@ -965,8 +965,7 @@ object Streaming {
     * generation's frames. Scale: each generation writes only
     * state-sized artifacts; the loop is driver-side metadata only —
     * per-batch work is whatever `fold` plans, history never
-    * reshuffles. Extracted from the eleven s49–s59 drivers (the r11
-    * deferred review finding). */
+    * reshuffles. One fold loop serves the eleven s49–s59 drivers. */
   private[graft] def foldGenerations(s: SparkSession, stateDir: String,
       init: Seq[(String, DataFrame)], batches: Seq[DataFrame])(
       fold: (Seq[DataFrame], DataFrame, Int) => Seq[DataFrame]): Seq[DataFrame] = {
@@ -1928,8 +1927,8 @@ object Streaming {
     * interleaved) rather than time slices. The oracle IS t60's
     * batch SQL. Scale: state is k rows forever; per batch one
     * TakeOrdered bottom-k over (k ∪ batch-clocks) — per-partition
-    * partials, no global sort (the r12-advice fix: the fold now
-    * plans exactly like t60Present). */
+    * partials, no global sort (the fold plans exactly like
+    * t60Present). */
   def s64StreamWeightedSample(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
     val T = graft.text.TextOps
@@ -2468,7 +2467,7 @@ object Streaming {
     val batches = orderSlices(ord)
     // the dim stream's arity is DERIVED from the fact stream's, so a
     // change to orderSlices can never index out of the customer
-    // slices (review-pass finding)
+    // slices
     val custSlices = s72CustSlices(cust, batches.length)
     val aInit = R.q88APartials(ord.filter(lit(false)))
     val bInit = cust.filter(lit(false))
@@ -2615,8 +2614,8 @@ object Streaming {
         Tables.parquet(s, s"$stateDir/s74ledg$s74Head")
           .filter(col("version") <= k).drop("version")))
 
-  /** s74: LIVE AS OF serving — the streaming face of the q77 chain
-    * (r13 verdict #6), completing the table-format stream family
+  /** s74: LIVE AS OF serving — the streaming face of the q77 chain,
+    * completing the table-format stream family
     * (s68 compaction, s69 schema evolution, s70 skipping, s71
     * watermarks, s65 exactly-once — and now versioned reads): a
     * stream that maintains the CURRENT snapshot per trigger must
@@ -2693,7 +2692,7 @@ object Streaming {
 
   /** DuckDB oracle for s75: the shared [[graft.operators.Relational
     * .cdfSql]] body at the window's version cutoffs (one SQL
-    * definition for both feed forms — review-pass finding). Lazy per
+    * definition for both feed forms). Lazy per
     * the s45Sql stance. */
   lazy val s75Sql: String = {
     val cuts = graft.operators.Relational.q77Cutoffs
@@ -2884,7 +2883,7 @@ object Streaming {
         val before = E.listParquet(layout).toSet
         E.q76ClusterWrite(batch, layout, "append")
         val fresh = (E.listParquet(layout).toSet -- before).toSeq.sorted
-        val newRows = s.read.parquet(fresh: _*)
+        val newRows = Tables.parquet(s, layout, fresh)
           .select(col("o_orderkey").as("key"), E.q95FileId.as("file"))
         Seq(idx.unionByName(newRows))
     }
@@ -2927,7 +2926,7 @@ object Streaming {
     val paths = E.q95PathOf(layout)
     require(kept.nonEmpty && kept.length < paths.size,
       s"s78: live index must prune (${kept.length} of ${paths.size} files kept)")
-    val scanned = s.read.parquet(kept.map(paths): _*)
+    val scanned = Tables.parquet(s, layout, kept.map(paths))
     val hit = scanned.filter(col("o_orderkey") % m === 0)
       .select(E.q95FileId).distinct().count()
     require(hit == kept.length,

@@ -216,7 +216,7 @@ object TextOps {
         percentile_approx(col("n_chars"), lit(0.5), lit(1000)).as("approx_median_chars"),
         count(lit(1)).as("docs_count"))
 
-  /** t33b: the DuckDB-expressible half of t33 (VERDICT r4 #5) —
+  /** t33b: the DuckDB-expressible half of t33 —
     * exact per-language corpus stats (distinct sources, exact
     * interpolated median, total chars, doc count), upgrading the
     * groupBy pipeline from rows-only to oracle-checked; the sketch
@@ -309,7 +309,7 @@ object TextOps {
   def t35Repetition(s: SparkSession, dir: String): DataFrame = {
     val toks = tokens(col("text"))
     val grams = bigrams(toks)
-    // explicit-count repartition before the explode (r15, the a33/
+    // explicit-count repartition before the explode (the a33/
     // a42Base rationale): the scan stage carries the tokenize +
     // 2×|tokens| explode + the MAP-SIDE partial of the (doc,k,g)
     // count — heavy per-row work that inherits the scan's splits, and
@@ -752,7 +752,7 @@ object TextOps {
     * sample is a pure filter. */
   def t40Pipeline(s: SparkSession, dir: String): DataFrame = {
     val toks = tokens(col("text"))
-    // explicit-count repartition (r15, the t35 rationale): the gate
+    // explicit-count repartition (the t35 rationale): the gate
     // projection is heavy per-row work (tokenize + quality score +
     // scrub regexes + downstream fingerprint md5) that ran in the
     // 1-split scan's single task; the fingerprint window below
@@ -1341,8 +1341,8 @@ object TextOps {
     * 28-bit hash draw (the sampleDraw stance — t48 derives the
     * RATES t36 hard-codes). Everything is exact integer arithmetic:
     * thresholds are floor-divisions of DECIMAL(38,0) products —
-    * 2²⁸·ppm·(total/2) passes 2⁶³ at only ~1.7·10⁵ docs (ADVICE r8
-    * corrected the earlier ~10⁹ claim), so the numerator runs in
+    * 2²⁸·ppm·(total/2) passes 2⁶³ at only ~1.7·10⁵ docs, so the
+    * numerator runs in
     * decimal on the Spark side and HUGEINT on the DuckDB side
     * (where sum(BIGINT) already promotes); identical left-assoc
     * order, so the gate pins rate derivation AND selection
@@ -1444,7 +1444,7 @@ object TextOps {
          |    cast(cast(conv(substring(md5(t), 1, 7), 16, 10) as bigint)
          |      % $t49D as int) + 1)),
          | 0.0d, (a, v) -> a + v)""".stripMargin
-    // explicit-count repartition before the feature hashing (r15, the
+    // explicit-count repartition before the feature hashing (the
     // t35 rationale): one md5 per token AND per bigram — the whole
     // classifier — otherwise runs in the 1-split scan's single task.
     // Rows unchanged.
@@ -1599,12 +1599,12 @@ object TextOps {
     * caller that will scan the applied stream. */
   private def t51Train(s: SparkSession, dir: String, keepLast: Boolean)
       : (Seq[(Int, String, String, Long)], DataFrame) = {
-    // explicit-count repartition ONCE before round 0 (r15, the t35
-    // rationale): the gate corpus is one parquet split and each
+    // explicit-count repartition ONCE before the first merge round
+    // (the t35 rationale): the gate corpus is one parquet split and each
     // round's persist PRESERVES its parent's partitioning, so every
     // round's merge-apply + pair-count map side otherwise ran in ONE
     // task for the whole K-round loop. The training stays the
-    // declared SEQUENTIAL driver loop (K argmax rounds, VERDICT #8);
+    // declared SEQUENTIAL driver loop (K argmax rounds);
     // this spreads each round's per-row work, it does not reorder or
     // batch the merges. Rows unchanged.
     val nPart = graft.Par.shufflePartitions(s)
@@ -2244,8 +2244,7 @@ object TextOps {
     * path floor(x·10¹⁵) with all-DOUBLE literals (the q52b/t59
     * lessons; ≤ 41.6/1·10¹⁵ < 2⁶³ so no overflow at w ≥ 1).
     *
-    * SINGLE-PLATFORM GATE ASSUMPTION (documented per the r12
-    * advice): at e15 precision the double grid near y ≈ 10¹³ is
+    * SINGLE-PLATFORM GATE ASSUMPTION: at e15 precision the double grid near y ≈ 10¹³ is
     * coarser than the integer boundaries themselves (ulp(10¹³) ≈
     * 2·10⁻³), so a measurable fraction of clocks land EXACTLY on an
     * integer — IntegerizationMarginSpec counts them — and a
@@ -2334,8 +2333,8 @@ object TextOps {
     * in integer basis points — n_ab·N·10⁴ div (n_a·n_b), the exp of
     * PMI. Ranking by lift IS ranking by PMI (ln is monotone), and
     * the integer form replays byte-exactly cross-engine where an ln
-    * would reintroduce exactly the floor-boundary wobble the r12
-    * advice flagged on t59/t60 (IntegerizationMarginSpec documents
+    * would reintroduce exactly the floor-boundary wobble of
+    * t59/t60 (IntegerizationMarginSpec documents
     * that hazard; t61 simply refuses to enter it). lift_bp > 10⁴ is
     * positive association, < 10⁴ negative.
     *
@@ -2498,7 +2497,7 @@ object TextOps {
     * gate). Terms present in every document are guarded out (their
     * χ² denominator is zero and their keyness is undefined), and two
     * data-derived fail-stops hold the exactness claim honest at
-    * scale (ADVICE r13): an empty parity half (na or nb = 0) makes
+    * scale: an empty parity half (na or nb = 0) makes
     * every χ² denominator zero — Spark's decimal div would yield
     * null where DuckDB errors, so we refuse identically in both
     * engines instead (the a52/q89 degenerate-split convention); and

@@ -14,26 +14,30 @@ import org.apache.spark.util.HadoopFSUtils
   * readers are private to it. */
 object GraftParquetSchema {
 
-  /** The schema `s.read.parquet(path)` infers, except that a
-    * TIMESTAMP(NANOS) column is typed as a long whatever the session's
-    * `nanosAsLong` says: a read that carries that schema needs no flag,
-    * so no caller has to set one. Files are picked as inference picks
-    * them: `_common_metadata`, else `_metadata`, else the first data
-    * file by path, or every file when the session merges schemas. A
-    * partitioned layout yields its data columns only; Spark appends
-    * the partition columns to a given schema as it does to an inferred
-    * one. None when the path is missing or holds no parquet file. */
-  def infer(s: SparkSession, path: String): Option[StructType] = {
+  /** The schema a plain parquet read of `paths` with the reader
+    * `options` infers, except that a TIMESTAMP(NANOS) column is typed
+    * as a long whatever the session's `nanosAsLong` says: a read that
+    * carries that schema needs no flag, so no caller has to set one.
+    * Each path, a directory or a file, is listed; files are picked
+    * from the union as inference picks them: `_common_metadata`, else
+    * `_metadata`, else the first data file by path, or every file when
+    * the read merges schemas (the `mergeSchema` option, else the
+    * session's setting). A partitioned layout yields its data columns
+    * only; Spark appends the partition columns to a given schema as it
+    * does to an inferred one. None when no path holds a parquet file. */
+  def infer(s: SparkSession, paths: Seq[String],
+      options: Map[String, String]): Option[StructType] = {
     val conf = SessionStateHelper.getSqlConf(s)
     val hadoopConf = SessionStateHelper.getHadoopConf(s)
     // Spark's own listing: it skips `_`/`.` names other than the summaries
-    val leaves = HadoopFSUtils.listFiles(new Path(path), hadoopConf, (_: Path) => true)
+    val leaves = paths
+      .flatMap(p => HadoopFSUtils.listFiles(new Path(p), hadoopConf, (_: Path) => true))
       .flatMap(_._2).sortBy(_.getPath.toString)
     def named(name: String): Seq[FileStatus] = leaves.filter(_.getPath.getName == name)
     val summaries = Set(PARQUET_METADATA_FILE, PARQUET_COMMON_METADATA_FILE)
     val data = leaves.filterNot(f => summaries(f.getPath.getName))
     val files =
-      if (conf.isParquetSchemaMergingEnabled)
+      if (new ParquetOptions(options, conf).mergeSchema)
         (if (conf.isParquetSchemaRespectSummaries) Nil else data) ++
           named(PARQUET_METADATA_FILE) ++ named(PARQUET_COMMON_METADATA_FILE)
       else (named(PARQUET_COMMON_METADATA_FILE) ++ named(PARQUET_METADATA_FILE) ++ data).take(1)

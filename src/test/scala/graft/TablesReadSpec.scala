@@ -82,6 +82,90 @@ class TablesReadSpec extends SparkSpec {
     } finally graft.sources.Export.deleteTree(dir)
   }
 
+  private def rowsOf(df: DataFrame): Seq[String] = df.collect().toSeq.map(_.toString).sorted
+
+  private def sameRead(got: DataFrame, plain: DataFrame, clue: String): Unit = {
+    assert(got.schema == plain.schema, clue)
+    assert(rowsOf(got) == rowsOf(plain), clue)
+  }
+
+  /** Fixtures for the multi-path and option reads: q76/q82/q80's
+    * layouts, a q95 deletion vector of two commit dirs and two q103
+    * fact commits. */
+  private lazy val fixtures = {
+    val E = graft.sources.Export
+    val R = graft.operators.Relational
+    val l95 = E.scratch("tablesread_q95", sfDir)
+    E.q76ClusterWrite(Tables.orders(spark, sfDir), l95, "overwrite")
+    val dv = l95 + "_dv"
+    E.deleteTree(dv)
+    E.q95CommitDelete(spark, l95, dv, 1, col("o_orderkey") % 5 === 0)
+    E.q95CommitDelete(spark, l95, dv, 2, col("o_orderkey") % 7 === 0)
+    val q103 = E.scratch("tablesread_q103", sfDir)
+    E.deleteTree(q103)
+    (1 to 2).foreach(k => R.q103Commit(spark, q103, k, R.q103Delta(spark, sfDir, k)))
+    (E.q76Write(spark, sfDir), E.q82Write(spark, sfDir), E.q80Write(spark, sfDir)._1,
+      l95, dv, q103)
+  }
+
+  test("building a multi-path or option read submits no Spark job") {
+    val E = graft.sources.Export
+    val (l76, l82, l80, l95, dv, q103) = fixtures
+    val builds: Seq[(String, () => DataFrame)] = Seq(
+      "q76SidecarRows" -> (() => E.q76SidecarRows(spark, E.listParquet(l76))),
+      "q82SidecarRows" -> (() => E.q82SidecarRows(spark, Seq(l82))),
+      "q80EvolvedRead" -> (() => E.q80EvolvedRead(spark, l80)),
+      "q95Dv" -> (() => E.q95Dv(spark, dv)),
+      "q103FactAt" -> (() => graft.operators.Relational.q103FactAt(spark, q103, 2)),
+      "multi-path" -> (() => Tables.parquet(spark, Seq(l76, l95))),
+      "layout subset" -> (() => Tables.parquet(spark, l95, E.listParquet(l95).take(2))))
+    for ((name, build) <- builds)
+      assert(jobsOf(build().schema) == 0, name)
+  }
+
+  test("multi-path, option and subset reads match a plain read") {
+    val E = graft.sources.Export
+    val (_, _, l80, l95, dv, q103) = fixtures
+    // a file list across two directories, as a clone manifest names it
+    val (_, _, _, m2) = E.q87Build(spark, sfDir)
+    val cloneFiles = E.q87ReadManifest(spark, m2)
+    assert(cloneFiles.map(f => f.substring(0, f.lastIndexOf('/'))).distinct.size == 2)
+    sameRead(Tables.parquet(spark, cloneFiles), spark.read.parquet(cloneFiles: _*), "q87 files")
+    // a list of commit dirs
+    val commits = (1 to 2).map(k => s"$q103/fact/commit_$k")
+    sameRead(Tables.parquet(spark, commits), spark.read.parquet(commits: _*), "q103 commits")
+    // mergeSchema over an evolved layout: the option wins over the session
+    val merged = Tables.parquet(spark, Seq(l80), Map("mergeSchema" -> "true"))
+    assert(merged.schema.fieldNames.contains("o_channel"))
+    sameRead(merged, spark.read.option("mergeSchema", "true").parquet(l80), "q80 merge")
+    // a directory of commit dirs needs recursiveFileLookup
+    val rec = Map("recursiveFileLookup" -> "true")
+    sameRead(Tables.parquet(spark, Seq(dv), rec), spark.read.options(rec).parquet(dv), "q95 vector")
+    // a subset of one flat layout, empty or not
+    val files = E.listParquet(l95)
+    sameRead(Tables.parquet(spark, l95, files.take(2)), spark.read.parquet(files.take(2): _*),
+      "q95 subset")
+    val none = Tables.parquet(spark, l95, Seq.empty)
+    assert(none.schema == spark.read.parquet(l95).schema)
+    assert(none.select(col("_metadata.file_path"), col("_metadata.row_index")).count() == 0)
+  }
+
+  test("a partitioned file subset read under basePath keeps the partition column") {
+    val dir = scratchDir("basepath")
+    try {
+      val p = s"$dir/data"
+      spark.range(40).withColumn("v", col("id") * 2).withColumn("cell", col("id") % 4)
+        .write.partitionBy("cell").parquet(p)
+      val subset = graft.sources.Export.listParquet(p).filter(_.contains("cell=1/")) ++
+        graft.sources.Export.listParquet(p).filter(_.contains("cell=3/"))
+      val base = Map("basePath" -> p)
+      val got = Tables.parquet(spark, subset, base)
+      assert(got.schema.fieldNames.toSeq == Seq("id", "v", "cell"))
+      sameRead(got, spark.read.options(base).parquet(subset: _*), "cell subset")
+      assert(got.select("cell").distinct().collect().map(_.getInt(0)).sorted.toSeq == Seq(1, 3))
+    } finally graft.sources.Export.deleteTree(dir)
+  }
+
   test("a hive-partitioned layout reads the schema and rows of a plain read") {
     val dir = scratchDir("partitioned")
     try {
@@ -148,8 +232,13 @@ class TablesReadSpec extends SparkSpec {
       val onlySuccess = new java.io.File(s"$dir/success.parquet")
       assert(empty.mkdir() && onlySuccess.mkdir())
       assert(new java.io.File(onlySuccess, "_SUCCESS").createNewFile())
-      for (p <- Seq(s"$dir/absent.parquet", empty.getPath, onlySuccess.getPath))
+      val present = s"$dir/t.parquet"
+      spark.range(3).write.parquet(present)
+      for (p <- Seq(s"$dir/absent.parquet", empty.getPath, onlySuccess.getPath)) {
         intercept[AnalysisException](Tables.parquet(spark, p))
+        intercept[AnalysisException](Tables.parquet(spark, p, Seq.empty))
+      }
+      intercept[AnalysisException](Tables.parquet(spark, Seq(present, s"$dir/absent.parquet")))
     } finally graft.sources.Export.deleteTree(dir)
   }
 
