@@ -415,7 +415,25 @@ object Bench {
     // The same line is also written to bench_out.json so a full copy
     // exists regardless of any capture window.
     println(json)
+    println(summaryJson(famResults, mixed))
     writeBenchOut(json)
+  }
+
+  private def totalSec(results: Seq[Timing]): Double =
+    results.map(_.med).filter(_ >= 0).sum
+
+  private def isolation(mixed: Boolean): String =
+    if (mixed) "mixed" else "jvm-per-group"
+
+  /** The short record printed after the full line: a reader that keeps
+    * only the last 2000 characters of the output (the full line is
+    * longer than that, and sbt prints its `[success]` line after it)
+    * still gets one whole JSON object. `failed` counts the entries
+    * whose timing is -1 (the query threw). */
+  private[graft] def summaryJson(famResults: Seq[(String, FamilyTiming)],
+      mixed: Boolean): String = {
+    val results = famResults.flatMap(_._2.timings)
+    s"""{"metric":"total","value":${totalSec(results)},"unit":"sec","entries":${results.size},"failed":${results.count(_.med < 0)},"isolation":"${isolation(mixed)}"}"""
   }
 
   /** Assemble the result JSON. With `partial = Some((done, of))` the
@@ -426,8 +444,8 @@ object Bench {
   private def buildJson(famResults: Seq[(String, FamilyTiming)],
       mixed: Boolean, sfDir: String, partial: Option[(Int, Int)]): String = {
     val results = famResults.flatMap(_._2.timings)
-    val total = results.map(_.med).filter(_ >= 0).sum
-    val iso = if (mixed) "mixed" else "jvm-per-group"
+    val total = totalSec(results)
+    val iso = isolation(mixed)
     // Drift sentinel: each family's numbers are
     // bracketed by a fixed micro-query (q01) timed in the same JVM.
     // The two sides live at DIFFERENT JVM ages (before = JIT-cold

@@ -5,23 +5,31 @@ import java.util.concurrent.{CancellationException, ExecutionException,
   ExecutorCompletionService, Executors, TimeUnit}
 import java.util.concurrent.atomic.AtomicBoolean
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** Driver-side parallelism decisions, made in one place. */
 private[graft] object Par {
 
-  /** The session's `spark.sql.shuffle.partitions`: the partition COUNT
-    * the explicit repartitions pin. A by-column repartition is an
-    * AQE-coalescible shuffle, and a stream that is tiny in BYTES but
-    * explodes downstream (band buckets, self-join candidates) gets
-    * coalesced to one partition — measured at sf0.1, the whole
-    * 12M-pair minhash explosion ran in ONE task. An explicit-number
-    * repartition plans as REPARTITION_BY_NUM, which AQE never
-    * coalesces, and the value is the cluster's own setting, not a
-    * local constant. Some deployments set the conf to a non-numeric
-    * value (e.g. an "auto" shuffle mode): that falls back to Spark's
-    * default of 200, visibly, so the drift can be found in the logs. */
-  def shufflePartitions(s: SparkSession): Int =
+  /** Hash-spreads `df` on `keys` over the session's shuffle-partition
+    * count. Every explicit-count spread in the engine goes through here,
+    * so the count is decided in one place.
+    *
+    * The count is explicit on purpose. A by-column repartition without
+    * one is an AQE-coalescible shuffle, and a stream that is tiny in
+    * BYTES but explodes downstream (band buckets, self-join candidates)
+    * gets coalesced to one partition — measured at sf0.1, the whole
+    * 12M-pair minhash explosion ran in ONE task. A repartition with a
+    * count plans as REPARTITION_BY_NUM, which AQE never coalesces
+    * (`ParSpec` pins this). */
+  def spread(df: DataFrame, keys: Column*): DataFrame =
+    df.repartition(shufflePartitions(df.sparkSession), keys: _*)
+
+  /** The session's `spark.sql.shuffle.partitions`, so the count is the
+    * cluster's own setting, not a local constant. Some deployments set
+    * the conf to a non-numeric value (e.g. an "auto" shuffle mode):
+    * that falls back to Spark's default of 200, visibly, so the drift
+    * can be found in the logs. */
+  private def shufflePartitions(s: SparkSession): Int =
     try s.conf.get("spark.sql.shuffle.partitions").toInt
     catch {
       case _: NumberFormatException | _: NoSuchElementException =>

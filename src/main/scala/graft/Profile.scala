@@ -8,7 +8,9 @@ import scala.collection.mutable
   * runs the named query through the noop sink twice (cold, warm)
   * with a listener that records every job's wall time and every
   * stage's task-time / shuffle-bytes totals, then prints a summary
-  * sorted by cost. Usage:
+  * sorted by cost. Artifact construction is memoized as in the bench
+  * ([[BuildCache]] on), so pass 1 of a build/probe entry is its build
+  * and pass 2 the served read the bench times. Usage:
   *
   *   sbt "runMain graft.Profile <name> [<name2> ...]"
   *
@@ -22,6 +24,7 @@ object Profile {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: Profile <queryName> [more...]")
     val sfDir = Session.sfDir
+    BuildCache.enable()
     val spark = Session.local()
 
     val jobs = mutable.LinkedHashMap[Int, (Long, Long, String)]() // id -> (start, end, call site)

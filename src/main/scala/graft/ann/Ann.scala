@@ -3,7 +3,7 @@ package graft.ann
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.Tables
+import graft.{Par, Tables}
 
 /** Approximate-nearest-neighbor search over the `embeddings` table
   * (`embedding: array<float>`, 64-dim).
@@ -818,16 +818,13 @@ object Ann {
   def a33AnnIvfPq(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val nprobe = 4
-    // explicit-count repartition (the a42Base rationale): the encode
-    // chain below is heavy per-row array math (16-centroid routing +
-    // 8 codebook argmins over the residual) that inherits the SCAN's
-    // partitioning, and the gate corpus is one parquet split — the
-    // whole corpus encode ran in one task. REPARTITION_BY_NUM with the
-    // session's own shuffle-partition knob is never AQE-coalesced and
-    // scales with the cluster, not a local constant.
-    val nPart = graft.Par.shufflePartitions(s)
+    // spread (the a42Base rationale): the encode chain below is heavy
+    // per-row array math (16-centroid routing + 8 codebook argmins over
+    // the residual) that inherits the SCAN's partitioning, and the gate
+    // corpus is one parquet split — the whole corpus encode ran in one
+    // task.
     val base = Tables.embeddings(s, dir).select("vec_id", "embedding")
-      .repartition(nPart, col("vec_id"))
+      .transform(Par.spread(_, col("vec_id")))
       .withColumn("dl", centroidDistsExpr("embedding"))
       .withColumn("cell", expr("CAST(array_position(dl, array_min(dl)) - 1 AS INT)"))
     // corpus: residual vs the assigned cell's centroid, PQ-encoded
@@ -2079,15 +2076,14 @@ object Ann {
     * vectors land in the same geometry. Default: train on all. */
   private[graft] def a42Base(s: SparkSession, dir: String,
       histPred: Column = lit(true)): DataFrame = {
-    // explicit-count repartition (the a48 rationale): every
-    // consumer of the quantized base — the Lloyd step's assignment,
-    // the index assignment, the probe scoring — is a crossJoin
-    // against BROADCAST centroids, so the per-vector work inherits
-    // THIS frame's partitioning; the gate corpus is one parquet
-    // split and all of it ran in one task.
-    val nPart = graft.Par.shufflePartitions(s)
-    val corpus = withNorm(Tables.embeddings(s, dir).select("vec_id", "embedding"))
-      .repartition(nPart, col("vec_id"))
+    // spread (the a48 rationale): every consumer of the quantized base
+    // — the Lloyd step's assignment, the index assignment, the probe
+    // scoring — is a crossJoin against BROADCAST centroids, so the
+    // per-vector work inherits THIS frame's partitioning; the gate
+    // corpus is one parquet split and all of it ran in one task.
+    val corpus = Par.spread(
+      withNorm(Tables.embeddings(s, dir).select("vec_id", "embedding")),
+      col("vec_id"))
     val mx = corpus.filter(histPred).agg(max(col("norm")).as("mnorm"))
     corpus.crossJoin(broadcast(mx))
       .withColumn("aug", sqrt(greatest(
@@ -2885,17 +2881,13 @@ object Ann {
     * stream. Every arithmetic step is the audited dual-dialect
     * cosine/argmin, byte-exact. */
   def a48HardNegatives(s: SparkSession, dir: String): DataFrame = {
-    // explicit-count repartition (the Par.shufflePartitions
-    // rationale): the cell join below explodes |cell|² scored pairs
-    // with its anchor side broadcast, so the explosion inherits THIS
-    // side's partitioning — the gate corpus is one parquet split, and
-    // the whole scoring ran in one task (profiled: a 7.6 s 1-task
-    // stage). A by-num repartition on vec_id spreads it evenly and is
-    // never AQE-coalesced.
-    val nPart = graft.Par.shufflePartitions(s)
-    val corpus = withNorm(Tables.embeddings(s, dir)
-        .select("vec_id", "embedding", "label"))
-      .repartition(nPart, col("vec_id"))
+    // spread on vec_id: the cell join below explodes |cell|² scored
+    // pairs with its anchor side broadcast, so the explosion inherits
+    // THIS side's partitioning — the gate corpus is one parquet split,
+    // and the whole scoring ran in one task (profiled: a 7.6 s 1-task
+    // stage).
+    val corpus = Par.spread(withNorm(Tables.embeddings(s, dir)
+        .select("vec_id", "embedding", "label")), col("vec_id"))
       .withColumn("dl", centroidDistsExpr("embedding"))
       .withColumn("cell",
         expr("CAST(array_position(dl, array_min(dl)) - 1 AS INT)"))

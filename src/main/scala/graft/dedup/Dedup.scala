@@ -3,7 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Par, Tables}
 import graft.functions.SetExprs
 
 /** Deduplication family for the LLM training-data pipeline:
@@ -210,8 +210,7 @@ object Dedup {
     // without the salt the whole hot bucket (and the verify compute
     // fused after it) lands in ONE task per band
     val a = bands.withColumn("bucket", pmod(col("doc_id"), lit(bandSalt)))
-      .repartition(graft.Par.shufflePartitions(bands.sparkSession),
-        col("band_id"), col("band_hash"), col("bucket"))
+      .transform(Par.spread(_, col("band_id"), col("band_hash"), col("bucket")))
     val b = bands.withColumn("bucket",
       explode(sequence(lit(0), lit(bandSalt - 1)).cast("array<long>")))
     a.as("a").join(b.as("b"),
@@ -337,8 +336,7 @@ object Dedup {
     // SALTED like [[bandCandidatePairs]] (see [[bandSalt]]) — the
     // md5-affine stream buckets the same mega-cluster
     val a = stream.withColumn("bucket", pmod(col("doc_id"), lit(bandSalt)))
-      .repartition(graft.Par.shufflePartitions(stream.sparkSession),
-        col("band_id"), col("band_hash"), col("bucket"))
+      .transform(Par.spread(_, col("band_id"), col("band_hash"), col("bucket")))
     val b = stream.withColumn("bucket",
       explode(sequence(lit(0), lit(bandSalt - 1)).cast("array<long>")))
       // SHUFFLE_HASH (guide §3.1): enumerate candidates by hash probe
@@ -476,8 +474,8 @@ object Dedup {
     // mega-cluster's docs share their simhash, so its chunk buckets
     // carry the same single-key skew as the minhash bands
     val a = chunks.withColumn("bucket", pmod(col("doc_id"), lit(bandSalt)))
-      .repartition(graft.Par.shufflePartitions(chunks.sparkSession),
-        col("chunk_id"), col("chunk_val"), col("bucket")).as("a")
+      .transform(Par.spread(_, col("chunk_id"), col("chunk_val"), col("bucket")))
+      .as("a")
     val b = chunks.withColumn("bucket",
       explode(sequence(lit(0), lit(bandSalt - 1)).cast("array<long>"))).as("b")
     // each pair emitted by exactly its first matching chunk — unique
@@ -521,8 +519,7 @@ object Dedup {
       .persist() // both self-join sides — one vote-sum pass
     // SALTED like d24's chunk join (see [[bandSalt]])
     val a = chunks.withColumn("bucket", pmod(col("doc_id"), lit(bandSalt)))
-      .repartition(graft.Par.shufflePartitions(chunks.sparkSession),
-        col("chunk_id"), col("chunk_val"), col("bucket"))
+      .transform(Par.spread(_, col("chunk_id"), col("chunk_val"), col("bucket")))
     val b = chunks.withColumn("bucket",
       explode(sequence(lit(0), lit(bandSalt - 1)).cast("array<long>")))
     a.as("a").join(b.as("b"),
@@ -608,16 +605,14 @@ object Dedup {
     val ids = docs.select("doc_id", "lang")
     // pmod: a sign-following % would put negative ids in buckets the
     // replicated side never covers, silently dropping their pairs.
-    // REPARTITION_BY_NUM pin, on the declared-quadratic leg too: the
-    // id streams are a few KB, so AQE would coalesce the (lang,
-    // bucket) join's exchanges to ONE partition and run the whole
+    // spread, on the declared-quadratic leg too: the id streams are a
+    // few KB, so a coalescible exchange would run the whole
     // O(n²)-per-lang pair explosion plus the fused broadcast-attach
-    // Jaccard verify in one task. The
-    // declared quadratic declares the WORK, not its serialization;
-    // spreading it changes no pair (d51Truth precedent, 2.7×).
-    val nPart = graft.Par.shufflePartitions(ids.sparkSession)
-    val a = ids.withColumn("bucket", pmod(col("doc_id"), lit(16)))
-      .repartition(nPart, col("lang"), col("bucket"))
+    // Jaccard verify in one task. The declared quadratic declares the
+    // WORK, not its serialization; spreading it changes no pair
+    // (d51Truth precedent, 2.7×).
+    val a = Par.spread(ids.withColumn("bucket", pmod(col("doc_id"), lit(16))),
+      col("lang"), col("bucket"))
     val b = ids.withColumn("bucket", explode(sequence(lit(0), lit(15)).cast("array<long>")))
     val pairs = a.as("a").join(b.as("b"),
         col("a.lang") === col("b.lang") &&
@@ -738,14 +733,10 @@ object Dedup {
     * (a28) which reduces this to within-bucket pairs. */
   def d26EmbedNeardup(s: SparkSession, dir: String): DataFrame = {
     val e = withNorm(Tables.embeddings(s, dir).select("vec_id", "embedding"))
-    // probe side repartitioned: the nested-loop pair explosion must
-    // parallelize beyond the input's split count. BY_NUM: the
-    // by-column form is an AQE-coalescible exchange and the vector
-    // stream is tiny in bytes, so it would collapse back to one
-    // partition — the explicit count is never
-    // coalesced and is the session's own parallelism knob.
-    val a = e.repartition(graft.Par.shufflePartitions(e.sparkSession), col("vec_id"))
-      .as("a")
+    // probe side spread: the nested-loop pair explosion must
+    // parallelize beyond the input's split count, and the vector
+    // stream is tiny in bytes.
+    val a = Par.spread(e, col("vec_id")).as("a")
     val b = e.as("b")
     a.join(b, col("a.vec_id") < col("b.vec_id"))
       .select(
@@ -802,13 +793,10 @@ object Dedup {
     * uniqueness. Shared by d28 (full corpus) and d38 (within-batch). */
   private def hyperplaneCandidatePairs(chunks0: DataFrame): DataFrame = {
     // persisted: both self-join sides consume the chunk stream;
-    // probe side repartitioned on the band key WITH an explicit count
-    // (REPARTITION_BY_NUM — see [[graft.Par.shufflePartitions]]: the
-    // by-column form is AQE-coalescible and the tiny band shuffle
-    // collapsed the whole explosion into one task)
+    // probe side spread on the band key (a coalescible exchange
+    // collapsed the tiny band shuffle's whole explosion into one task)
     val chunks = chunks0.persist()
-    val probe = chunks.repartition(graft.Par.shufflePartitions(chunks.sparkSession),
-      col("band_id"), col("band_val"))
+    val probe = Par.spread(chunks, col("band_id"), col("band_val"))
     probe.as("a").join(chunks.as("b"),
         col("a.band_id") === col("b.band_id") &&
           col("a.band_val") === col("b.band_val") &&
@@ -892,9 +880,7 @@ object Dedup {
     val index = Tables.parquet(s, idxDir)
     val batchChunks = chunks.filter(col("vec_id") % 4 === 0)
     val vsIndex = index.as("a")
-      .join(batchChunks
-        .repartition(graft.Par.shufflePartitions(batchChunks.sparkSession),
-          col("band_id"), col("band_val")).as("b"),
+      .join(Par.spread(batchChunks, col("band_id"), col("band_val")).as("b"),
         col("a.band_id") === col("b.band_id") &&
           col("a.band_val") === col("b.band_val") &&
           col("a.band_id") ===
@@ -1106,11 +1092,10 @@ object Dedup {
     // signature computation (scan + shingle + 16-hash) has THREE
     // consumers below — the bucket-size rollup and both join sides —
     // and would inherit the 1-split scan's single task, running
-    // three times serially. Repartition by count before the per-doc
-    // hash work, persist the band stream so each consumer reads the
-    // one materialization. Rows unchanged.
-    val docsP = shingledDocs(s, dir)
-      .repartition(graft.Par.shufflePartitions(s), col("doc_id"))
+    // three times serially. Spread before the per-doc hash work,
+    // persist the band stream so each consumer reads the one
+    // materialization. Rows unchanged.
+    val docsP = Par.spread(shingledDocs(s, dir), col("doc_id"))
     val bands = minhashBands(docsP).persist()
     // size buckets on a SLIM (band_id, band_hash) projection — the
     // hot bucket this guards against must never be buffered with
@@ -1123,8 +1108,7 @@ object Dedup {
     // OVER-CAP bucket), so a broadcast hint here is size-safe at any
     // corpus scale — unlike the per-doc attach tables in verifyPairs
     val kept = bands.join(broadcast(hotKeys), Seq("band_id", "band_hash"), "left_anti")
-    val probe = kept.repartition(graft.Par.shufflePartitions(kept.sparkSession),
-      col("band_id"), col("band_hash"))
+    val probe = Par.spread(kept, col("band_id"), col("band_hash"))
     probe.as("a").join(kept.as("b"),
         col("a.band_id") === col("b.band_id") &&
           col("a.band_hash") === col("b.band_hash") &&
@@ -1631,21 +1615,21 @@ object Dedup {
     * The final per-doc rollup carries two longs per doc. */
   def d30RepeatedNgrams(s: SparkSession, dir: String): DataFrame = {
     val n = d30GramSize
-    // two pinned repartitions around the gram explode (the q12
-    // rationale plus exchange reuse): (doc_id) BY_NUM under the
-    // tokenize spreads the 1-split scan's per-window md5 work across
-    // the session's parallelism, and (gram) BY_NUM above the explode
-    // is the SHARED exchange both consumers (the repeated-gram rollup
-    // and the join's probe side) dedup through ReuseExchange — the
-    // tokenize + md5 chain runs ONCE instead of once per consumer,
-    // and the gram hash partitioning feeds the rollup's groupBy and
-    // the join without further exchanges. Rows unchanged.
+    // two spreads around the gram explode (the q12 rationale plus
+    // exchange reuse): (doc_id) under the tokenize spreads the 1-split
+    // scan's per-window md5 work across the session's parallelism, and
+    // (gram) above the explode is the SHARED exchange both consumers
+    // (the repeated-gram rollup and the join's probe side) dedup
+    // through ReuseExchange — the tokenize + md5 chain runs ONCE
+    // instead of once per consumer, and the gram hash partitioning
+    // feeds the rollup's groupBy and the join without further
+    // exchanges. Rows unchanged.
     val grams = Tables.documents(s, dir)
       .select(col("doc_id"), col("text"))
-      .repartition(graft.Par.shufflePartitions(s), col("doc_id"))
+      .transform(Par.spread(_, col("doc_id")))
       .select(col("doc_id"), split(col("text"), " ").as("toks"))
       .select(col("doc_id"), explode(gramKeys(col("toks"), n)).as("gram"))
-      .repartition(graft.Par.shufflePartitions(s), col("gram"))
+      .transform(Par.spread(_, col("gram")))
     // grams seen in ≥ 2 DISTINCT docs: min(doc) ≠ max(doc) — exact,
     // and partial-aggregable where count(distinct) is not. A gram
     // repeated only within one doc is t35's business, not d30's.
@@ -1713,12 +1697,9 @@ object Dedup {
     // the d44Runs treatment: the md5-per-gram hash
     // stream is consumed twice (min≠max rollup + covered-position
     // semi join) and the token stream twice more, all inheriting the
-    // 1-split scan's single task — repartition the docs by count
-    // (scale-adaptive knob, never AQE-coalesced) and persist the gram
-    // stream so each pass runs once, 32-way. Rows unchanged.
-    val nPart = graft.Par.shufflePartitions(s)
-    val toksDf = Tables.documents(s, dir)
-      .repartition(nPart, col("doc_id"))
+    // 1-split scan's single task — spread the docs and persist the
+    // gram stream so each pass runs once, 32-way. Rows unchanged.
+    val toksDf = Par.spread(Tables.documents(s, dir), col("doc_id"))
       .select(col("doc_id"), split(col("text"), " ").as("toks"))
     // positions ride along as posexplode's 0-based index + 1, so the
     // gram HASH comes from the same shared gramKeys expression as
@@ -2320,8 +2301,7 @@ object Dedup {
     // rides on the small stream. Each (a, b) pair still emerges from
     // exactly one bucket — a's.
     val a = index.withColumn("bucket", pmod(col("doc_id"), lit(bandSalt)))
-      .repartition(graft.Par.shufflePartitions(index.sparkSession),
-        col("band_id"), col("band_hash"), col("bucket"))
+      .transform(Par.spread(_, col("band_id"), col("band_hash"), col("bucket")))
     val b = probeStream.withColumn("bucket",
       explode(sequence(lit(0), lit(bandSalt - 1)).cast("array<long>")))
     a.as("a").join(b.as("b"),
@@ -2515,7 +2495,7 @@ object Dedup {
     // The d23-family treatment applied here too (buckets are capped,
     // so skew is not the problem, but the winnowing stream has THREE
     // consumers and would run single-task):
-    //  1. explicit-count repartition of the docs (a42Base rationale):
+    //  1. spread the docs (a42Base rationale):
     //     fingerprint selection is O(n·w²) per-row work that inherits
     //     the scan's partitioning, and the gate corpus is one parquet
     //     split — all selection would run in one task, once per
@@ -2523,17 +2503,15 @@ object Dedup {
     //  2. persist the fingerprint stream (guide §5: three consumers —
     //     the hot-gram rollup and both self-join sides — would each
     //     re-execute the full winnowing pass);
-    //  3. pin the self-join's exchange with REPARTITION_BY_NUM on the
-    //     gram key (a by-column repartition is AQE-coalescible and
-    //     the slim fingerprint stream is < 1 MB at sf0.1, so the
-    //     verify/extension stage — the pair-volume work — would
-    //     collapse to one partition). Both join sides carry
-    //     the same pinned partitioning, so the join adds no exchange.
+    //  3. spread the self-join's input on the gram key (the slim
+    //     fingerprint stream is < 1 MB at sf0.1, so a coalescible
+    //     exchange would collapse the verify/extension stage — the
+    //     pair-volume work — to one partition). Both join sides carry
+    //     the same partitioning, so the join adds no exchange.
     // Row-identical: partitioning and caching change where work runs,
     // never which pairs emerge (DedupSpec's planted constructions and
     // the d44/d45/d48 oracles pin this).
-    val nPart = graft.Par.shufflePartitions(docs.sparkSession)
-    val docsP = docs.repartition(nPart, col("doc_id"))
+    val docsP = Par.spread(docs, col("doc_id"))
     val fps0 = d44Fingerprints(docsP).persist()
     // [[d44MaxBucket]]: size buckets on the slim gram projection,
     // broadcast the (tiny, one row per over-cap gram) hot list, and
@@ -2551,7 +2529,7 @@ object Dedup {
       .filter(col("bucket_size") > maxBucket)
       .select("gram")
     val fps = fps0.join(broadcast(hotGrams), Seq("gram"), "left_anti")
-      .repartition(nPart, col("gram"))
+      .transform(Par.spread(_, col("gram")))
       .persist()
     val cands = fps.as("a").join(fps.as("b"),
         col("a.gram") === col("b.gram") && col("a.doc_id") < col("b.doc_id"))
@@ -3199,15 +3177,13 @@ object Dedup {
     // BroadcastNestedLoopJoin whose output inherits the LEFT side's
     // partitioning — the id list is one parquet split locally, so the
     // quadratic pair explosion AND the fused broadcast-attach verify
-    // ran in ONE task. REPARTITION_BY_NUM on the left spreads the
-    // explosion across the session's own shuffle-partition count
-    // (never AQE-coalesced, scales with the cluster); the id stream
-    // being repartitioned is |sample| rows, so the added exchange is
+    // ran in ONE task. Spreading the left spreads the explosion; the
+    // id stream being spread is |sample| rows, so the added exchange is
     // negligible next to the |sample|²/2 verify it parallelizes.
     // Pair set unchanged: partitioning never changes which pairs the
     // cross join emits.
     val allPairs = ids.select(col("doc_id").as("doc_a"))
-      .repartition(graft.Par.shufflePartitions(ids.sparkSession), col("doc_a"))
+      .transform(Par.spread(_, col("doc_a")))
       .crossJoin(ids.select(col("doc_id").as("doc_b")))
       .filter(col("doc_a") < col("doc_b"))
     verifyPairs(allPairs, docs0).select("doc_a", "doc_b")

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.Tables
+import graft.{Par, Tables}
 
 /** Core relational / lakehouse operators, re-expressed Spark-first.
   *
@@ -148,15 +148,13 @@ object Relational {
     * Reference: pervasive from_json / `args:method_name` JSON-path
     * extraction (Silver Lake Mainnet.sql:139-146, 256-263). */
   def q06JsonExtract(s: SparkSession, dir: String): DataFrame = {
-    // explicit-count repartition before the JSON parses (the q12
-    // rationale): two parses per row otherwise run in the 1-split
-    // scan's single task, and once more under the range sort's
-    // sampling job when the input is too large for SmallSort. Rows
-    // unchanged.
-    val nPart = graft.Par.shufflePartitions(s)
+    // spread before the JSON parses (the q12 rationale): two parses
+    // per row otherwise run in the 1-split scan's single task, and once
+    // more under the range sort's sampling job when the input is too
+    // large for SmallSort. Rows unchanged.
     Tables.events(s, dir)
       .select(col("event_id"), col("props"))
-      .repartition(nPart, col("event_id"))
+      .transform(Par.spread(_, col("event_id")))
       .select(
         col("event_id"),
         get_json_object(col("props"), "$.k").cast("int").as("prop_k"),
@@ -306,19 +304,16 @@ object Relational {
     * double-entry rows with exactly this idiom
     * (Silver Lake Mainnet - FT and NFT events.py:63-69). */
   def q12DoubleEntry(s: SparkSession, dir: String): DataFrame = {
-    // explicit-count repartition before the inline explode (the t35
-    // rationale): the gate corpus is one parquet split, so the
-    // 2×|lineitem| generate + decimal rounding otherwise run in ONE
-    // task (and, above SmallSort's size limit, again under the range
-    // sort's sampling job). REPARTITION_BY_NUM (never AQE-coalesced),
-    // sized by the session's own shuffle-partitions knob; the added
-    // exchange carries five narrow columns, strictly smaller than the
-    // exchange the orderBy already pays. Rows unchanged.
-    val nPart = graft.Par.shufflePartitions(s)
+    // spread before the inline explode: the gate corpus is one
+    // parquet split, so the 2×|lineitem| generate + decimal rounding
+    // otherwise run in ONE task (and, above SmallSort's size limit,
+    // again under the range sort's sampling job). The added exchange
+    // carries five narrow columns, strictly smaller than the exchange
+    // the orderBy already pays. Rows unchanged.
     Tables.lineitem(s, dir)
       .select("l_orderkey", "l_linenumber", "l_extendedprice",
         "l_discount", "l_tax")
-      .repartition(nPart, col("l_orderkey"))
+      .transform(Par.spread(_, col("l_orderkey")))
       .select(
         col("l_orderkey").as("order_key"),
         col("l_linenumber").as("line_number"),
@@ -739,13 +734,12 @@ object Relational {
       col("user_id"), col("event_type"), col("value"),
       array(col("user_id") % 10, col("user_id") % 7).as("shards")))
     val schema = "user_id BIGINT, event_type STRING, value DOUBLE, shards ARRAY<BIGINT>"
-    // explicit-count repartition before the serde roundtrip (the q12
-    // rationale): to_json + from_json + posexplode per row otherwise
-    // run in the 1-split scan's single task. Rows unchanged.
-    val nPart = graft.Par.shufflePartitions(s)
+    // spread before the serde roundtrip (the q12 rationale): to_json
+    // + from_json + posexplode per row otherwise run in the 1-split
+    // scan's single task. Rows unchanged.
     Tables.events(s, dir)
       .select("event_id", "user_id", "event_type", "value")
-      .repartition(nPart, col("event_id"))
+      .transform(Par.spread(_, col("event_id")))
       .select(col("event_id"), envelope.as("payload"))
       .select(col("event_id"), from_json(col("payload"), lit(schema)).as("p"))
       .select(
@@ -869,16 +863,13 @@ object Relational {
     * stack — the reference's stack() usage generalized.
     * Reference: BQ Writer Views & Data Dictionary.py stack call. */
   def q26Unpivot(s: SparkSession, dir: String): DataFrame = {
-    // explicit-count repartition before the stack explode (the q12
-    // rationale): the 3×|lineitem| generate otherwise runs in the
-    // 1-split scan's single task. Narrow 5-column exchange,
-    // REPARTITION_BY_NUM, sized by the session's shuffle-partitions
-    // knob. Rows unchanged.
-    val nPart = graft.Par.shufflePartitions(s)
+    // spread before the stack explode (the q12 rationale): the
+    // 3×|lineitem| generate otherwise runs in the 1-split scan's single
+    // task. Narrow 5-column exchange. Rows unchanged.
     Tables.lineitem(s, dir)
       .select("l_orderkey", "l_linenumber", "l_extendedprice",
         "l_discount", "l_tax")
-      .repartition(nPart, col("l_orderkey"))
+      .transform(Par.spread(_, col("l_orderkey")))
       .select(col("l_orderkey").as("order_key"),
         col("l_linenumber").as("line_number"),
         expr("""stack(3,
@@ -978,14 +969,12 @@ object Relational {
       array(lit("type"), lit("user"), lit("day")),
       array(col("event_type"), col("user_id").cast("string"),
         to_date(col("ts")).cast("string"))))
-    // explicit-count repartition before the JSON roundtrip + explode
-    // (the q12 rationale): per-row to_json/from_json serde and the 3×
-    // key explode otherwise run in the 1-split scan's single task.
-    // Rows unchanged.
-    val nPart = graft.Par.shufflePartitions(s)
+    // spread before the JSON roundtrip + explode (the q12 rationale):
+    // per-row to_json/from_json serde and the 3× key explode otherwise
+    // run in the 1-split scan's single task. Rows unchanged.
     Tables.events(s, dir)
       .select("event_id", "event_type", "user_id", "ts")
-      .repartition(nPart, col("event_id"))
+      .transform(Par.spread(_, col("event_id")))
       .select(col("event_id"), payload.as("payload"))
       .select(col("event_id"),
         explode(map_entries(from_json(col("payload"), lit("map<string,string>"))))
@@ -1216,15 +1205,13 @@ object Relational {
       // shift so ~32 z-aligned cells cover the populated z-range
       val k = math.max(64 - java.lang.Long.numberOfLeadingZeros(zmax) - 5, 0)
       val o = graft.sources.Export.scratch("q34_zorder", dir)
-      // BY_NUM pin: the by-column form is an
-      // AQE-coalescible exchange and orders' bytes are small at gate
-      // SFs, so the z-sort + write ran in ONE task. Same-key rows land
-      // in one task under either form, so each zbucket directory still
-      // gets exactly one file — the layout (and ExportSpec's measured
-      // skip rate) is unchanged; only the write parallelism moves.
+      // spread on the bucket: orders' bytes are small at gate SFs, so
+      // a coalescible exchange ran the z-sort + write in ONE task.
+      // Same-key rows land in one task either way, so each zbucket
+      // directory still gets exactly one file — the layout (and
+      // ExportSpec's measured skip rate) is unchanged.
       base.withColumn("zbucket", expr(s"shiftright(zval, $k)"))
-        .repartition(
-          graft.Par.shufflePartitions(s), col("zbucket"))
+        .transform(Par.spread(_, col("zbucket")))
         .sortWithinPartitions("zval")
         .write.mode("overwrite").partitionBy("zbucket").parquet(o)
       o
@@ -2960,16 +2947,15 @@ object Relational {
     * returnflag rolled away; InvariantSpec pins the partition laws
     * (each marginal == the sum of its leaves; no gid-3 row exists). */
   def q97GroupingSets(s: SparkSession, dir: String): DataFrame = {
-    // pinned repartition before the Expand (the q12 rationale):
-    // the 3× grouping-sets expansion and its partial aggregate — with
-    // a countDistinct leg, keyed by (gid, keys, l_orderkey) — ran in
-    // the 1-split scan's single task. Narrow 5-column exchange; rows
+    // spread before the Expand (the q12 rationale): the 3×
+    // grouping-sets expansion and its partial aggregate — with a
+    // countDistinct leg, keyed by (gid, keys, l_orderkey) — ran in the
+    // 1-split scan's single task. Narrow 5-column exchange; rows
     // unchanged.
-    val nPart = graft.Par.shufflePartitions(s)
     Tables.lineitem(s, dir)
       .select("l_returnflag", "l_linestatus", "l_orderkey",
         "l_extendedprice", "l_quantity")
-      .repartition(nPart, col("l_orderkey"))
+      .transform(Par.spread(_, col("l_orderkey")))
       .groupingSets(
         Seq(Seq(col("l_returnflag"), col("l_linestatus")),
           Seq(col("l_returnflag")), Seq(col("l_linestatus"))),
@@ -6107,15 +6093,13 @@ object Relational {
     * expand exchange q52 already declares as the gate-only
     * instrument. */
   def q52bHllNdv(s: SparkSession, dir: String): DataFrame = {
-    // pinned repartition below the stack: without it the 1-split
-    // scan's single task carries the 6× stack explode + per-row md5
-    // rho chain (3.3 s of a 4.3 s entry in a profile) — the q12/t35
-    // class. The exchange moves raw event rows once and both legs
-    // ReuseExchange it; measured 3.60 → 1.66 s in a matched-window
-    // A/B (OPTIMIZATION_r16.md).
-    val nPart = graft.Par.shufflePartitions(s)
-    val st = q52Stacked(Tables.events(s, dir)
-      .repartition(nPart, col("event_id")))
+    // spread below the stack: without it the 1-split scan's single
+    // task carries the 6× stack explode + per-row md5 rho chain (3.3 s
+    // of a 4.3 s entry in a profile) — the q12/t35 class. The exchange
+    // moves raw event rows once and both legs ReuseExchange it;
+    // measured 3.60 → 1.66 s in a matched-window A/B
+    // (OPTIMIZATION_r16.md).
+    val st = q52Stacked(Par.spread(Tables.events(s, dir), col("event_id")))
     val ndv = st.groupBy("col_name").agg(
       (countDistinct(col("value_num")) + countDistinct(col("value_str")))
         .as("ndv"))

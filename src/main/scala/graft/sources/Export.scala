@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Par, Tables}
 
 /** Export-side operators: incremental high-watermark extraction and
   * export-format conversion.
@@ -126,47 +126,22 @@ object Export {
       |ORDER BY order_key""".stripMargin
 
   /** Format-parameterized export sink: one time-partition directory
-    * per bucket value, repartitioned by the bucket first so each
-    * partition directory is written by FEW tasks (the at-scale
-    * defense against the small-files explosion of NxM task-level
-    * partition writes).
-    *
-    * Write parallelism is a dial, not a constant: with the default
-    * `writeTasksPerBucket = 1` each bucket is one task — the right
-    * shape when buckets are small and many (hourly exports). When a
-    * single bucket's output is large (a hot day at corpus scale),
-    * raise it: rows are repartitioned on (bucket, rowhash % n), so
-    * each bucket fans out to ≤ n writer tasks while still touching
-    * only its own directory. The salt is a full-row xxhash64 —
-    * deterministic, no extra column needed from the caller.
-    * `maxRecordsPerFile` additionally caps file size WITHIN a task
-    * (0 = Spark default, unlimited). */
+    * per bucket value, spread by the bucket first so each partition
+    * directory is written by ONE task (the at-scale defense against
+    * the small-files explosion of NxM task-level partition writes).
+    * `maxRecordsPerFile` caps file size WITHIN that task (0 = Spark
+    * default, unlimited). */
   def exportConvert(df: DataFrame, outDir: String, format: String,
-      partitionCol: String, writeTasksPerBucket: Int = 1,
-      maxRecordsPerFile: Long = 0L,
+      partitionCol: String, maxRecordsPerFile: Long = 0L,
       options: Map[String, String] = Map.empty): Unit = {
-    // EXPLICIT partition count in BOTH modes: a count-less
-    // repartition(cols…) is an AQE-coalescible hint, and coalescing
-    // is wrong for this writer twice over. Salted mode: without it
-    // the small (bucket, salt) shuffle was folded back into few
-    // tasks and the salt never materialized as separate
-    // writer tasks — a user-fixed count is exempt from AQE
-    // coalescing. Default mode: AQE coalesces the pre-write shuffle
-    // to a handful of target-size tasks, and each task then creates
-    // its buckets' partition directories and files SEQUENTIALLY — a
-    // many-bucket export is file-creation-bound, not byte-bound, so
-    // spreading buckets across the configured parallelism cut q31
-    // from 17.6 s to 4.7 s at sf0.1 (same-window A/B) while still
-    // writing exactly one file per bucket (the hash key is the
-    // bucket alone). The session's shuffle-partition setting is the
-    // right magnitude: it's the cluster-sized parallelism the user
-    // already tuned, and empty partitions write nothing.
-    val n = graft.Par.shufflePartitions(df.sparkSession).max(writeTasksPerBucket)
-    val keyed =
-      if (writeTasksPerBucket <= 1) df.repartition(n, col(partitionCol))
-      else df.repartition(n, col(partitionCol),
-        pmod(xxhash64(df.columns.map(col).toSeq: _*), lit(writeTasksPerBucket)))
-    keyed.write.mode("overwrite").format(format)
+    // spread on the bucket alone: a coalesced pre-write shuffle runs
+    // a handful of tasks, and each then creates its buckets' partition
+    // directories and files SEQUENTIALLY — a many-bucket export is
+    // file-creation-bound, not byte-bound, so spreading buckets across
+    // the configured parallelism cut q31 from 17.6 s to 4.7 s at sf0.1
+    // (same-window A/B) while still writing exactly one file per
+    // bucket. Empty partitions write nothing.
+    Par.spread(df, col(partitionCol)).write.mode("overwrite").format(format)
       .option("maxRecordsPerFile", maxRecordsPerFile)
       .options(options)
       .partitionBy(partitionCol).save(outDir)
@@ -1432,26 +1407,36 @@ object Export {
           case _ => maxc >= c1 && minc <= c2 && maxd >= day1 && mind <= day2
         })
       }.map(_._1).sorted
-      val served = Tables.parquet(s, lpath, kept.map(paths)).filter(rowPred(pname)).count()
-      (lname, pname, kept.length, stats.length, served)
+      ((lname, pname, kept.length, stats.length),
+        Tables.parquet(s, lpath, kept.map(paths)).filter(rowPred(pname)))
     }
-    val byCell = cells.map(c => (c._1, c._2) -> c).toMap
+    val counts = cells.map(_._1)
+    val byCell = counts.map(c => (c._1, c._2) -> c).toMap
     def frac(l: String, p: String) = {
       val c = byCell((l, p)); (c._3, c._4)
     }
     // the folklore, fail-stopped: linear prunes its own dimension...
     require(frac("linear_cust", "cust")._1 < frac("linear_cust", "cust")._2 &&
       frac("linear_date", "date")._1 < frac("linear_date", "date")._2,
-      s"q102: linear layouts must prune their own dimension: $cells")
+      s"q102: linear layouts must prune their own dimension: $counts")
     // ...keeps every file under the orthogonal predicate...
     require(frac("linear_cust", "date")._1 == frac("linear_cust", "date")._2 &&
       frac("linear_date", "cust")._1 == frac("linear_date", "cust")._2,
-      s"q102: a linear layout cannot prune the orthogonal dimension: $cells")
+      s"q102: a linear layout cannot prune the orthogonal dimension: $counts")
     // ...and z-order prunes under ALL THREE predicates
     require(preds.forall(p => frac("zorder", p)._1 < frac("zorder", p)._2),
-      s"q102: z-order must prune every predicate: $cells")
-    cells.map(c => (c._1, c._2, c._5))
-      .toDF("layout", "predicate", "rows_matched")
+      s"q102: z-order must prune every predicate: $counts")
+    // one aggregate serves all nine cells from their kept files; each
+    // cell also gets one null `hit` row, so a cell whose kept files
+    // match nothing still reads 0
+    val hits = cells.map { case ((lname, pname, _, _), served) =>
+      served.select(lit(lname).as("layout"), lit(pname).as("predicate"),
+        lit(1).as("hit"))
+    }
+    val zero = counts.map(c => (c._1, c._2)).toDF("layout", "predicate")
+      .withColumn("hit", lit(null).cast("int"))
+    (hits :+ zero).reduce(_ union _)
+      .groupBy("layout", "predicate").agg(count(col("hit")).as("rows_matched"))
       .orderBy("layout", "predicate")
   }
 

@@ -418,17 +418,16 @@ object Streaming {
     val n = graft.dedup.Dedup.d29GramSize
     val docs = graft.Tables.documents(s, dir)
     val eval = evalGramRow(docs.filter(col("doc_id") % 53 === 0), n)
-    // explicit-count repartition of the BATCH entry's train side (the
-    // a42Base rationale): the per-doc cost downstream is eval-set-
-    // sized (gram hashing plus an arrays_overlap probe against the
-    // whole broadcast eval array), not row-sized, and the gate corpus
-    // is one parquet split — the entire decide-on-arrival pass ran in
-    // one task. The shared decontaminateStream transform is untouched
-    // (a real ingest is already partitioned by its source); rows are
-    // unchanged and the entry orders its own output.
-    val nPart = graft.Par.shufflePartitions(s)
+    // spread the BATCH entry's train side (the a42Base rationale): the
+    // per-doc cost downstream is eval-set-sized (gram hashing plus an
+    // arrays_overlap probe against the whole broadcast eval array), not
+    // row-sized, and the gate corpus is one parquet split — the entire
+    // decide-on-arrival pass ran in one task. The shared
+    // decontaminateStream transform is untouched (a real ingest is
+    // already partitioned by its source); rows are unchanged and the
+    // entry orders its own output.
     decontaminateStream(
-        docs.filter(col("doc_id") % 53 =!= 0).repartition(nPart, col("doc_id")),
+        graft.Par.spread(docs.filter(col("doc_id") % 53 =!= 0), col("doc_id")),
         broadcast(eval), n)
       .select("doc_id", "lang", "source", "n_chars")
       .orderBy("doc_id")

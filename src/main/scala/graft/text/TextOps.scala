@@ -3,7 +3,7 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Par, Tables}
 
 /** Text-analysis operators for the LLM training-data pipeline:
   * language ID, quality scoring, token counting, fingerprinting.
@@ -309,19 +309,14 @@ object TextOps {
   def t35Repetition(s: SparkSession, dir: String): DataFrame = {
     val toks = tokens(col("text"))
     val grams = bigrams(toks)
-    // explicit-count repartition before the explode (the a33/
-    // a42Base rationale): the scan stage carries the tokenize +
-    // 2×|tokens| explode + the MAP-SIDE partial of the (doc,k,g)
-    // count — heavy per-row work that inherits the scan's splits, and
-    // the gate corpus is ONE parquet split, so the whole wordcount's
-    // map side ran in one task. Scale-safe: the added exchange moves
-    // (doc_id, text) rows, strictly FEWER bytes than the gram-keyed
-    // exchange the groupBy below already pays, and the count is the
-    // session's own shuffle-partitions knob (never AQE-coalesced,
-    // cluster-sized at every scale).
-    val nPart = graft.Par.shufflePartitions(s)
-    val kg = Tables.documents(s, dir)
-      .repartition(nPart, col("doc_id")).select(
+    // spread before the explode (the a33/a42Base rationale): the scan
+    // stage carries the tokenize + 2×|tokens| explode + the MAP-SIDE
+    // partial of the (doc,k,g) count — heavy per-row work that inherits
+    // the scan's splits, and the gate corpus is ONE parquet split, so
+    // the whole wordcount's map side ran in one task. Scale-safe: the
+    // added exchange moves (doc_id, text) rows, strictly FEWER bytes
+    // than the gram-keyed exchange the groupBy below already pays.
+    val kg = Par.spread(Tables.documents(s, dir), col("doc_id")).select(
       col("doc_id"), size(toks).as("n_tokens"),
       explode(concat(
         transform(toks, t => struct(lit(1).as("k"), t.as("g"))),
@@ -504,13 +499,11 @@ object TextOps {
   def t38Keyphrase(s: SparkSession, dir: String): DataFrame = {
     val toks = tokens(col("text"))
     val grams = bigrams(toks)
-    // explicit-count repartition before the explode — the t35
-    // rationale verbatim (1-split scan ran the tokenize + bigram
-    // explode + tf partial-agg in one task; the added (doc_id, text)
-    // exchange is bounded by the gram exchange the tf groupBy pays).
-    val nPart = graft.Par.shufflePartitions(s)
-    val base = Tables.documents(s, dir)
-      .repartition(nPart, col("doc_id")).select(
+    // spread before the explode — the t35 rationale verbatim (1-split
+    // scan ran the tokenize + bigram explode + tf partial-agg in one
+    // task; the added (doc_id, text) exchange is bounded by the gram
+    // exchange the tf groupBy pays).
+    val base = Par.spread(Tables.documents(s, dir), col("doc_id")).select(
       col("doc_id"), size(toks).minus(1).cast("long").as("n_grams"),
       explode(grams).as("gram"))
     val tf = base.groupBy("doc_id", "n_grams", "gram")
@@ -752,15 +745,12 @@ object TextOps {
     * sample is a pure filter. */
   def t40Pipeline(s: SparkSession, dir: String): DataFrame = {
     val toks = tokens(col("text"))
-    // explicit-count repartition (the t35 rationale): the gate
-    // projection is heavy per-row work (tokenize + quality score +
-    // scrub regexes + downstream fingerprint md5) that ran in the
-    // 1-split scan's single task; the fingerprint window below
-    // already exchanges the gated rows, so the added exchange is
-    // bounded by an existing one.
-    val nPart = graft.Par.shufflePartitions(s)
-    val gated = Tables.documents(s, dir)
-      .repartition(nPart, col("doc_id"))
+    // spread (the t35 rationale): the gate projection is heavy per-row
+    // work (tokenize + quality score + scrub regexes + downstream
+    // fingerprint md5) that ran in the 1-split scan's single task; the
+    // fingerprint window below already exchanges the gated rows, so
+    // the added exchange is bounded by an existing one.
+    val gated = Par.spread(Tables.documents(s, dir), col("doc_id"))
       .select(col("doc_id"), col("lang"),
         qualityScoreBp(toks).as("quality_score_bp"),
         scrubbed(col("text")).as("clean_text"))
@@ -1273,14 +1263,12 @@ object TextOps {
     * ready for d22-style hash-groupBy dedup. */
   def t47CdcChunk(s: SparkSession, dir: String): DataFrame = {
     val w = 4; val div = 16
-    // explicit-count repartition before the chunking chain (the t35
-    // rationale): window keys, boundary transforms, posexplode and
-    // per-chunk md5 otherwise all run in the 1-split scan's single
-    // task. Rows unchanged.
-    val nPart = graft.Par.shufflePartitions(s)
+    // spread before the chunking chain (the t35 rationale): window
+    // keys, boundary transforms, posexplode and per-chunk md5 otherwise
+    // all run in the 1-split scan's single task. Rows unchanged.
     Tables.documents(s, dir)
       .select(col("doc_id"), col("text"))
-      .repartition(nPart, col("doc_id"))
+      .transform(Par.spread(_, col("doc_id")))
       .select(col("doc_id"), split(col("text"), " ").as("toks"))
       .withColumn("gk", graft.dedup.Dedup.gramKeys(col("toks"), w))
       // boundary ends: window STARTING at s ends at s+w-1; gk is
@@ -1444,14 +1432,12 @@ object TextOps {
          |    cast(cast(conv(substring(md5(t), 1, 7), 16, 10) as bigint)
          |      % $t49D as int) + 1)),
          | 0.0d, (a, v) -> a + v)""".stripMargin
-    // explicit-count repartition before the feature hashing (the
-    // t35 rationale): one md5 per token AND per bigram — the whole
-    // classifier — otherwise runs in the 1-split scan's single task.
-    // Rows unchanged.
-    val nPart = graft.Par.shufflePartitions(s)
+    // spread before the feature hashing (the t35 rationale): one md5
+    // per token AND per bigram — the whole classifier — otherwise runs
+    // in the 1-split scan's single task. Rows unchanged.
     Tables.documents(s, dir)
       .select(col("doc_id"), col("lang"), col("text"))
-      .repartition(nPart, col("doc_id"))
+      .transform(Par.spread(_, col("doc_id")))
       .withColumn("toks", tokens(col("text")))
       .withColumn("grams", bigrams(col("toks")))
       .withColumn("n_feats",
@@ -1599,18 +1585,16 @@ object TextOps {
     * caller that will scan the applied stream. */
   private def t51Train(s: SparkSession, dir: String, keepLast: Boolean)
       : (Seq[(Int, String, String, Long)], DataFrame) = {
-    // explicit-count repartition ONCE before the first merge round
-    // (the t35 rationale): the gate corpus is one parquet split and each
-    // round's persist PRESERVES its parent's partitioning, so every
-    // round's merge-apply + pair-count map side otherwise ran in ONE
-    // task for the whole K-round loop. The training stays the
-    // declared SEQUENTIAL driver loop (K argmax rounds);
-    // this spreads each round's per-row work, it does not reorder or
-    // batch the merges. Rows unchanged.
-    val nPart = graft.Par.shufflePartitions(s)
+    // spread ONCE before the first merge round (the t35 rationale):
+    // the gate corpus is one parquet split and each round's persist
+    // PRESERVES its parent's partitioning, so every round's merge-apply
+    // + pair-count map side otherwise ran in ONE task for the whole
+    // K-round loop. The training stays the declared SEQUENTIAL driver
+    // loop (K argmax rounds); this spreads each round's per-row work,
+    // it does not reorder or batch the merges. Rows unchanged.
     var toks = Tables.documents(s, dir)
       .select(col("doc_id"), col("text"))
-      .repartition(nPart, col("doc_id"))
+      .transform(Par.spread(_, col("doc_id")))
       .select(col("doc_id"), split(col("text"), " ").as("t"))
     val cached = Seq.newBuilder[DataFrame]
     val merges = Seq.newBuilder[(Int, String, String, Long)]

@@ -36,6 +36,27 @@ class BenchPlanSpec extends SparkSpec {
     }
   }
 
+  test("the summary line is one short JSON object carrying the total") {
+    import Bench.{FamilyTiming, Timing}
+    val fams = Seq(
+      "solo_00" -> FamilyTiming(Seq(Timing("a", 1.5, 1.25, 2.0),
+        Timing("b", -1.0, -1.0, -1.0)), sentBefore = 0.5, sentAfter = 0.5),
+      "relational" -> FamilyTiming(Seq(Timing("c", 0.25, 0.25, 0.5),
+        Timing("d", 2.0, 2.0, 2.0, buildSec = 3.0)), sentBefore = 0.5, sentAfter = 0.5))
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+    val line = Bench.summaryJson(fams, mixed = false)
+    assert(line.length < 500 && !line.contains("\n"), line)
+    val j = json.readTree(line)
+    assert(j.get("metric").asText == "total")
+    assert(j.get("value").asDouble == 3.75, line)
+    assert(j.get("unit").asText == "sec")
+    assert(j.get("entries").asInt == 4)
+    assert(j.get("failed").asInt == 1)
+    assert(j.get("isolation").asText == "jvm-per-group")
+    assert(json.readTree(Bench.summaryJson(fams, mixed = true))
+      .get("isolation").asText == "mixed")
+  }
+
   test("an entry's first pass is its build pass exactly when it builds an artifact") {
     try {
       BuildCache.reset()

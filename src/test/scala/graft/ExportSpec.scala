@@ -44,7 +44,7 @@ class ExportSpec extends SparkSpec {
     }
   }
 
-  test("export write parallelism: salt fans a bucket out to n tasks; maxRecordsPerFile splits within a task") {
+  test("export write parallelism: one file per bucket; maxRecordsPerFile splits a task") {
     val src = Tables.events(spark, sfDir)
       .select(col("event_id"), col("user_id"), col("event_type"),
         col("value"), col("ts"),
@@ -59,37 +59,6 @@ class ExportSpec extends SparkSpec {
     val files1 = dataFiles(new java.io.File(out1))
     assert(files1.nonEmpty && files1.values.forall(_ == 1),
       "default export writes exactly one file per bucket")
-    // writeTasksPerBucket = 2: row-hash salt spreads each bucket over
-    // up to 2 writer tasks. On the REAL corpus only the hard
-    // invariants are assertable: sf0.001 events has 236 single-row
-    // buckets out of 531 (and 171 two-row ones whose rows carry one
-    // salt half the time), so "most buckets produce 2 files" is
-    // physically impossible here — the r4 version of this spec
-    // asserted it anyway and could never pass. The fan-out itself is
-    // asserted below on a controlled corpus where every bucket is
-    // big enough that both salts are present w.h.p. 1−2⁻³⁹.
-    val out2 = Export.scratch("par_salted", sfDir)
-    Export.exportConvert(src, out2, "parquet", "hour_bucket", writeTasksPerBucket = 2)
-    val files2 = dataFiles(new java.io.File(out2))
-    assert(files2.keySet == files1.keySet, "same bucket directories")
-    assert(files2.values.forall(n => n >= 1 && n <= 2), "at most n files per bucket")
-    // controlled corpus: 50 buckets × 40 rows. Fan-out is then limited
-    // only by (bucket,salt)-key partition collisions (P ≈ 1/numShuffle
-    // Partitions = 1/4 in this suite), so MOST buckets must show 2
-    // writer files — this is exactly the assertion that was a no-op in
-    // round 4 (count-less repartition let AQE coalesce the salt away;
-    // it failed with ZERO buckets fanned out). Deterministic: the salt
-    // is a row hash, so the outcome is fixed for this dataset.
-    val ctl = spark.range(2000).select(
-      format_string("b%02d", col("id") % 50).as("hour_bucket"),
-      col("id").as("event_id"))
-    val outC = Export.scratch("par_ctl", sfDir)
-    Export.exportConvert(ctl, outC, "parquet", "hour_bucket", writeTasksPerBucket = 2)
-    val filesC = dataFiles(new java.io.File(outC))
-    assert(filesC.size == 50, "one directory per controlled bucket")
-    assert(filesC.values.forall(n => n >= 1 && n <= 2), "at most n files per bucket")
-    assert(filesC.values.count(_ == 2) > filesC.size / 2,
-      "most buckets fan out to 2 writer files")
     // maxRecordsPerFile: deterministic within-task split — every
     // bucket with r rows yields ceil(r/5) files
     val out3 = Export.scratch("par_maxrec", sfDir)
@@ -100,11 +69,13 @@ class ExportSpec extends SparkSpec {
     assert(files3.forall { case (d, n) =>
       n == math.ceil(rowsPerBucket(d) / 5.0).toInt },
       "maxRecordsPerFile=5 yields ceil(rows/5) files per bucket")
-    // parallelism dials change LAYOUT only, never content
-    val back = spark.read.parquet(out2)
-      .select(src.columns.map(col).toSeq: _*)
-    assert(back.except(src).isEmpty && src.except(back).isEmpty,
-      "salted export is value-lossless")
+    // the file cap changes LAYOUT only, never content
+    Seq(out1, out3).foreach { out =>
+      val back = spark.read.parquet(out)
+        .select(src.columns.map(col).toSeq: _*)
+      assert(back.except(src).isEmpty && src.except(back).isEmpty,
+        s"$out: export is value-lossless")
+    }
   }
 
   test("q38 merged partials equal an unsplit recompute; both maintenance legs bite") {

@@ -4,14 +4,34 @@ import java.util.concurrent.atomic.AtomicBoolean
 
 import org.apache.spark.SparkException
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
+import org.apache.spark.sql.functions.col
 import graft.ann.Ann
 
 /** [[Par.run]] under failure: the first thunk failure cancels the
   * jobs its siblings are running and is rethrown, leaving no running
   * job and no changed session conf behind; without a failure the
   * thunks' jobs keep the caller's job group. A caller that persists
-  * frames around Par.run (a55) releases them on that failure too. */
+  * frames around Par.run (a55) releases them on that failure too.
+  * [[Par.spread]]'s shuffle keeps the session's partition count under
+  * AQE. */
 class ParSpec extends SparkSpec {
+
+  test("Par.spread plans a by-count shuffle that AQE does not coalesce") {
+    assert(spark.conf.get("spark.sql.adaptive.enabled").toBoolean)
+    val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val input = spark.range(64).toDF("id")
+    // control: the same tiny input under a count-less repartition is
+    // coalesced, so the input is small enough to show the difference
+    assert(input.repartition(col("id")).queryExecution.toRdd.getNumPartitions < n)
+    val spread = Par.spread(input, col("id"))
+    val origins = spread.queryExecution.sparkPlan.collect {
+      case e: ShuffleExchangeExec => e.shuffleOrigin
+    }
+    assert(origins == Seq(REPARTITION_BY_NUM), origins)
+    assert(spread.queryExecution.toRdd.getNumPartitions == n)
+    assert(spread.collect().map(_.getLong(0)).sorted.toSeq == (0L until 64L))
+  }
 
   test("a failing thunk cancels its sibling's running job, then rethrows") {
     val sc = spark.sparkContext
