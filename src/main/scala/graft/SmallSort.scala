@@ -5,8 +5,10 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Sort}
-import org.apache.spark.sql.catalyst.plans.physical.{AllTuples, Distribution, Partitioning, SinglePartition}
-import org.apache.spark.sql.execution.{SortExec, SparkPlan, SparkStrategy, UnaryExecNode}
+import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, SinglePartition}
+import org.apache.spark.sql.execution.{ShuffledRowRDD, SortExec, SparkPlan, SparkStrategy, UnaryExecNode, UnsafeRowSerializer}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.metric.{SQLMetric, SQLShuffleReadMetricsReporter, SQLShuffleWriteMetricsReporter}
 import org.apache.spark.sql.internal.SQLConf
 
 /** Plans a global sort whose input is estimated at or below
@@ -19,7 +21,8 @@ import org.apache.spark.sql.internal.SQLConf
   * range exchange, and a threshold of zero or less turns this off just
   * as it turns off broadcasts. `orderBy(...).limit(k)` is unaffected:
   * Spark plans it at the `Limit` node, as `TakeOrderedAndProject`,
-  * before reaching the sort. */
+  * before reaching the sort. The input reaches one partition through
+  * [[OnePartitionExec]], inside the sort's own job. */
 object SmallSort extends SparkStrategy {
   def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case Sort(order, true, child, _) if fitsOnePartition(child) =>
@@ -41,15 +44,42 @@ object SmallSort extends SparkStrategy {
   }
 }
 
-/** Its child's rows in one partition. Requiring all tuples lets Spark
-  * add the single-partition exchange below it only when the child is
-  * not in one partition already, as after a top-k, a global aggregate
-  * or an unpartitioned window. */
+/** Its child's rows in one partition, gathered inside the job that
+  * reads them. Requiring `AllTuples` instead would make Spark plan a
+  * single-partition exchange below the sort whenever the child's
+  * planned partitioning is not already one partition (a file scan
+  * reports unknown partitioning, a hash exchange the session's count),
+  * and under AQE every exchange is a job of its own, with its own
+  * re-optimization, even where AQE has already coalesced the child to
+  * one partition. So the child is taken as it runs: one partition
+  * passes through unchanged (a coalesced shuffle, a top-k, a global
+  * aggregate, a one-split scan), none becomes one empty partition, and
+  * more are shuffled into one in the same job, as Spark's
+  * `TakeOrderedAndProjectExec` gathers its local top-k. No stage below
+  * changes its task count: the sort above runs in one task either
+  * way. */
 private[graft] case class OnePartitionExec(child: SparkPlan) extends UnaryExecNode {
   override def output: Seq[Attribute] = child.output
-  override def requiredChildDistribution: Seq[Distribution] = AllTuples :: Nil
   override def outputPartitioning: Partitioning = SinglePartition
-  override protected def doExecute(): RDD[InternalRow] = child.execute()
+
+  private lazy val writeMetrics =
+    SQLShuffleWriteMetricsReporter.createShuffleWriteMetrics(sparkContext)
+  private lazy val readMetrics =
+    SQLShuffleReadMetricsReporter.createShuffleReadMetrics(sparkContext)
+  override lazy val metrics: Map[String, SQLMetric] = readMetrics ++ writeMetrics
+
+  override protected def doExecute(): RDD[InternalRow] = {
+    val rdd = child.execute()
+    rdd.getNumPartitions match {
+      case 1 => rdd
+      case 0 => sparkContext.parallelize(Seq.empty[InternalRow], 1)
+      case _ => new ShuffledRowRDD(
+        ShuffleExchangeExec.prepareShuffleDependency(rdd, child.output, SinglePartition,
+          new UnsafeRowSerializer(child.output.size), writeMetrics),
+        readMetrics)
+    }
+  }
+
   override protected def withNewChildInternal(newChild: SparkPlan): OnePartitionExec =
     copy(child = newChild)
 }

@@ -1390,11 +1390,20 @@ object Export {
         to_date(col("o_orderdate")).between(lit(d1), lit(d2))
     }
     val layouts = Seq("linear_cust" -> lc, "linear_date" -> ld, "zorder" -> lz)
+    // the three sidecars in one read, each row tagged by the name of
+    // the sidecar directory it came from
+    val sidecarOf = layouts.map { case (lname, lpath) =>
+      new java.io.File(s"${lpath}_stats").getName -> lname }.toMap
+    val statsOf = Tables.parquet(s, layouts.map { case (_, l) => s"${l}_stats" })
+      .select(regexp_extract(col("_metadata.file_path"), "([^/]+)/[^/]+$", 1),
+        col("file"), col("minc"), col("maxc"), col("mind"), col("maxd"))
+      .collect()
+      .groupBy(r => sidecarOf(r.getString(0)))
+      .map { case (lname, rs) => lname -> rs.map(r => (r.getString(1), r.getLong(2),
+        r.getLong(3), r.getLong(4), r.getLong(5))) }
     val cells = for {
       (lname, lpath) <- layouts
-      stats = Tables.parquet(s, s"${lpath}_stats")
-        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
-          r.getLong(3), r.getLong(4)))
+      stats = statsOf.getOrElse(lname, Array.empty[(String, Long, Long, Long, Long)])
       paths = q95PathOf(lpath)
       pname <- preds
     } yield {

@@ -1,11 +1,13 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicBoolean
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicReference}
+
+import scala.util.control.NonFatal
 
 import org.apache.spark.SparkException
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, udf}
 import graft.ann.Ann
 
 /** [[Par.run]] under failure: the first thunk failure cancels the
@@ -13,6 +15,8 @@ import graft.ann.Ann
   * job and no changed session conf behind; without a failure the
   * thunks' jobs keep the caller's job group. A caller that persists
   * frames around Par.run (a55) releases them on that failure too.
+  * A query cancelled while a one-partition sort gathers its input
+  * inside the sort's job leaves nothing behind either.
   * [[Par.spread]]'s shuffle keeps the session's partition count under
   * AQE. */
 class ParSpec extends SparkSpec {
@@ -102,4 +106,49 @@ class ParSpec extends SparkSpec {
     assert(sc.getPersistentRDDs.isEmpty, s"cached frames left: ${sc.getPersistentRDDs}")
     assert(spark.conf.getAll == confBefore)
   }
+
+  test("cancelling a query's job tag while its sort gathers in-job leaves no job or frame behind") {
+    val sc = spark.sparkContext
+    spark.catalog.clearCache()
+    val confBefore = spark.conf.getAll
+    def q06 = SparkEntry.queries("q06_json_extract")(spark, sfDir)
+    val expected = q06.collect().toSeq
+    // q06 spread over the session's partitions once more, with a slow
+    // column between the spread and the sort: it is computed in the
+    // map stage of the gather inside the sort's job
+    GatherFault.started.set(false)
+    val slow = udf { (id: Long) => GatherFault.started.set(true); Thread.sleep(200); id }
+    val gathered = Par.spread(q06, col("event_id"))
+      .withColumn("slow", slow(col("event_id"))).orderBy("event_id")
+    val p = gathered.queryExecution.executedPlan.toString
+    assert(p.contains("OnePartition") && !p.contains("SinglePartition"), p)
+    val tag = s"gather-fault-${System.nanoTime()}"
+    val failure = new AtomicReference[Throwable]()
+    val runner = new Thread(() => {
+      sc.addJobTag(tag)
+      try gathered.collect()
+      catch { case NonFatal(e) => failure.set(e) }
+      finally sc.removeJobTag(tag)
+    })
+    runner.start()
+    val deadline = System.nanoTime() + 30L * 1000000000L
+    while (!GatherFault.started.get && System.nanoTime() < deadline) Thread.sleep(10)
+    assert(GatherFault.started.get, "the gather's map stage never ran")
+    sc.cancelJobsWithTag(tag)
+    runner.join(30000)
+    assert(!runner.isAlive, "the cancelled collect did not return")
+    assert(failure.get.isInstanceOf[SparkException], failure.get)
+    val idle = System.nanoTime() + 10L * 1000000000L
+    while (sc.statusTracker.getActiveJobIds.nonEmpty && System.nanoTime() < idle)
+      Thread.sleep(10)
+    assert(sc.statusTracker.getActiveJobIds.isEmpty)
+    assert(sc.getPersistentRDDs.isEmpty, s"cached frames left: ${sc.getPersistentRDDs}")
+    assert(spark.conf.getAll == confBefore)
+    assert(q06.collect().toSeq == expected)
+  }
+}
+
+/** Set by the gather fault-injection UDF once its map stage runs. */
+private object GatherFault {
+  val started = new AtomicBoolean(false)
 }

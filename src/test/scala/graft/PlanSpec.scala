@@ -271,20 +271,23 @@ class PlanSpec extends SparkSpec {
     // VERDICT r3 #1: the production path must have NO single-task
     // stage — at corpus scale the old repartition(1) presentation
     // funnel pushed every verified pair through one task
-    assert(!plan.contains("SinglePartition"),
-      s"d28 must not contain a single-partition exchange:\n$plan")
+    // a one-partition sort gathers inside its job, with no exchange to
+    // show for it, so the OnePartition node is rejected as well
+    assert(!plan.contains("SinglePartition") && !plan.contains("OnePartition"),
+      s"d28 must not contain a single-partition exchange or gather:\n$plan")
   }
 
   test("dedup pair pipelines have no single-partition exchange (d25/d26/d28)") {
     // the repartition(1) presentation sorts were dropped in round 4;
-    // this pins that none creeps back into any pair-producing entry
+    // this pins that none creeps back into any pair-producing entry,
+    // neither as an exchange nor as a one-partition sort's gather
     Seq("d25_ngram_jaccard", "d26_embed_neardup", "d28_embed_neardup_lsh",
       "d23_dedup_minhash", "d23b_minhash_oracle", "d24_dedup_simhash",
       "d24b_simhash_oracle", "d25b_ngram_banded",
       "d25c_ngram_banded_oracle").foreach { name =>
       val (plan, _) = planOf(name)
-      assert(!plan.contains("SinglePartition"),
-        s"$name grew a single-partition exchange:\n$plan")
+      assert(!plan.contains("SinglePartition") && !plan.contains("OnePartition"),
+        s"$name grew a single-partition exchange or gather:\n$plan")
     }
   }
 
@@ -305,8 +308,10 @@ class PlanSpec extends SparkSpec {
       s"label equi-key must hash-join against the broadcast queries:\n$plan")
     assert(plan.contains("Scan parquet"), "expected a parquet corpus scan")
     // every Exchange must be: a broadcast (queries/stats/candidates),
-    // the final presentation sort's (SinglePartition below the
-    // broadcast threshold, rangepartitioning above), or a
+    // a single-partition one (a presentation sort below the broadcast
+    // threshold gathers inside its own job with none; a global
+    // aggregate's final stage still has one), the final presentation
+    // sort's rangepartitioning above the threshold, or a
     // hashpartitioning ON query_id — the post-partial-agg top-C
     // stream, which the bounded-buffer aggregator caps at <=C rows
     // per (query, map task) BEFORE it crosses the wire. Nothing may
