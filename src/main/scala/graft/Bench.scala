@@ -1,7 +1,11 @@
 package graft
 
+import scala.util.Try
 import scala.util.control.NonFatal
 
+import com.fasterxml.jackson.databind.DeserializationFeature
+import com.fasterxml.jackson.databind.json.JsonMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every SparkEntry query against
@@ -10,102 +14,32 @@ import org.apache.spark.sql.SparkSession
   * whole plan executes (a bare count() would let Catalyst prune
   * projections and skip the work being measured).
   *
-  * Isolation: in one shared JVM, JIT/GC state left behind by heavy
-  * entries makes later times unattributable (q29 read 6.4 s after the
-  * dedup family and 2.4 s alone). One JVM per heavy entry costs more
-  * start-up than the measurement itself, so heavy ("solo") entries
-  * share one JVM per group of 4, with a q01 drift sentinel timed
-  * immediately before each member after the first (`sentinel_mid_sec`)
-  * so every entry still stamps a polluted window. Light entries share
-  * one JVM per name prefix. The parent runs each group in a child
-  * JVM of this same main (`--part q1,q2,...`, `--mid` for the
-  * per-entry sentinel); if a child cannot be spawned it times that
-  * group in-process and marks the record `isolation: "mixed"`. */
+  * Isolation, one rule for every entry: in one shared JVM, JIT/GC
+  * state left behind by heavy entries makes later times
+  * unattributable (q29 read 6.4 s after the dedup family and 2.4 s
+  * alone), while one JVM per entry costs more start-up than most
+  * measurements. So the registry, sorted by name, splits into groups
+  * of `groupSize`, each timed in a child JVM of this same main
+  * (`--part q1,q2,...`), with a q01 drift sentinel timed immediately
+  * before each member after the first (`sentinel_mid_sec`), so every
+  * entry stamps its own window. If a child cannot be spawned or its
+  * part line does not parse, the parent times that group in-process
+  * and marks the record `isolation: "mixed"`. */
 object Bench {
 
-  /** Entries that need a window of their own: those whose sf0.1
-    * median exceeds ~2 s, and those that write persisted artifacts or
-    * fold parquet generations. Either kind leaves JIT, GC or disk
-    * state that would perturb the light entries sharing a prefix
-    * family's JVM, and their own numbers must be attributable from
-    * one record to the next. */
-  private[graft] val solo = Set(
-    "a29_ann_ivf", "a29b_ann_ivf_oracle", "a33_ann_ivfpq",
-    "a42_ann_ivf_mips", "a43_persisted_mips", "a44_cell_stats",
-    "a45_cell_split", "a46_cell_merge", "a47_nprobe_curve",
-    "a48_hard_negatives", "a49_knn_join", "a51_range_search",
-    "a52_cell_compaction", "a53_index_time_travel",
-    "a54_retrain_decision", "a55_pq_tradeoff",
-    "d23_dedup_minhash", "d23b_minhash_oracle", "d24_dedup_simhash",
-    "d24b_simhash_oracle", "d25_ngram_jaccard", "d25b_ngram_banded",
-    "d25c_ngram_banded_oracle", "d26_embed_neardup",
-    "d27_dedup_components", "d27b_components_oracle",
-    "d28_embed_neardup_lsh", "d31_passage_scrub", "d32_embed_dedup",
-    "d37_incremental_neardup", "d38_incremental_embed_neardup",
-    "d39_incremental_components", "d44_substring_dedup",
-    "d45_substring_scrub", "d46_semantic_dedup", "d47_index_forget",
-    "d48_containment_dedup", "d51_neardup_eval", "d52_corpus_overlap",
-    "d53_banding_curve", "d54_overlap_matrix",
-    "m35_media_neardup", "m36_media_dedup_closure",
-    "q100_replace_where", "q101_record_index", "q102_layout_matrix",
-    "q103_atomic_publish", "q104_data_dictionary", "q12_double_entry",
-    "q26_unpivot", "q29_json_keys", "q31_export_roundtrip",
-    "q33_bucketed_join", "q34_zorder", "q42_jsonl_roundtrip",
-    "q52_profile", "q52b_hll_ndv", "q53_communities",
-    "q68_quantile_sketch", "q74_pruned_export", "q75_compaction",
-    "q76_data_skipping", "q78_retention", "q79_incremental_stats",
-    "q81_restore", "q82_bloom_skipping", "q84_partition_evolution",
-    "q85_khop", "q87_shallow_clone", "q92_checkpointed_travel",
-    "q93_change_feed", "q94_orphan_gc", "q95_deletion_vectors",
-    "q96_wap",
-    "s39_stream_decontaminate", "s44_stream_neardup_admit",
-    "s48_stream_semantic_admit", "s49_stream_heavy_hitters",
-    "s50_stream_funnel", "s51_stream_scd2", "s53_stream_hll",
-    "s54_stream_transitions", "s55_stream_profile",
-    "s56_stream_attribution", "s57_stream_anomaly", "s58_stream_psi",
-    "s59_stream_benford", "s60_stream_quantiles", "s61_stream_xmr",
-    "s62_stream_forecast", "s63_stream_sessions",
-    "s64_stream_weighted_sample", "s65_exactly_once", "s66_stream_rfm",
-    "s67_stream_overlap", "s68_stream_compaction",
-    "s69_stream_schema_evolution", "s70_stream_skipping",
-    "s71_stream_late_data", "s72_stream_join_mv", "s73_stream_fifo",
-    "s74_stream_asof", "s75_stream_cdf", "s76_stream_wap",
-    "s77_stream_mor", "s78_stream_record_index",
-    "s79_stream_pseudonymize",
-    "t35_repetition", "t38_keyphrase", "t40_pipeline", "t51_bpe_merges",
-    "t52_bpe_apply", "t57_bpe_batched", "t58_ccnet_buckets")
-
-  /** Entries per solo-group JVM. One JVM per entry overran the bench
-    * slot; 8 per JVM inflated neighbours' times by 1.26× through shared
+  /** Entries per group JVM. One JVM per entry overran the bench slot;
+    * 8 per JVM inflated neighbours' times by 1.26× through shared
     * JIT/GC state, against 1.12× at 4. The per-entry mid sentinel
     * stamps any window the sharing does pollute. */
   private val groupSize = 4
 
-  private def prefixFamily(name: String): String =
-    name.head match {
-      case 'q' => "relational"
-      case 't' => "text"
-      case 's' => "streaming"
-      case 'a' => "ann"
-      case 'd' => "dedup_small"
-      case _   => "misc"
-    }
-
-  /** (familyName, members, midSentinels?) for every registered query:
-    * solo entries chunk into groups of `groupSize` (sorted by name so
-    * the grouping is deterministic; boundaries shift only when the
-    * registry grows, which per-entry mid sentinels make harmless),
-    * light entries group by prefix. */
-  private[graft] def familyPlan(): Seq[(String, Seq[String], Boolean)] = {
-    val all = SparkEntry.queries.keys.toSeq.sorted
-    val (solos, lights) = all.partition(solo)
-    val groups = solos.grouped(groupSize).zipWithIndex.map {
-      case (part, i) => (f"solo_$i%02d", part, true)
-    }.toSeq
-    val fams = lights.groupBy(prefixFamily).toSeq.sortBy(_._1)
-      .map { case (f, part) => (f, part, false) }
-    groups ++ fams
-  }
+  /** (groupName, members) covering every registered query: the names
+    * in sorted order, chunked by `groupSize`, so the grouping is
+    * deterministic and its boundaries shift only when the registry
+    * changes, which the per-entry mid sentinels make harmless. */
+  private[graft] def familyPlan(): Seq[(String, Seq[String])] =
+    SparkEntry.queries.keys.toSeq.sorted.grouped(groupSize).zipWithIndex
+      .map { case (part, i) => (f"group_$i%02d", part) }.toSeq
 
   /** One measured query: median plus the min/max band. The band is
     * the error bar: on a shared host the same query in the same warm
@@ -117,16 +51,16 @@ object Bench {
   case class Timing(name: String, med: Double, lo: Double, hi: Double,
       buildSec: Double = -1.0)
 
-  /** A family's timings bracketed by the drift sentinel: the fixed
-    * micro-query (q01) timed immediately before and after the family.
+  /** A group's timings bracketed by the drift sentinel: the fixed
+    * micro-query (q01) timed immediately before and after the group.
     * Min/max bands alone cannot flag a contended window (a 1.2 s
     * query once recorded a 54.8 s median). A sentinel that should always take ~the same time makes
-    * each family's numbers self-identify as clean (ratio ≈ 1, small
+    * each group's numbers self-identify as clean (ratio ≈ 1, small
     * absolute sentinel) or polluted (inflated sentinel on either
-    * side). `mids` (solo groups only) adds one single-run q01 time
-    * immediately before each member after the first, keyed by that
-    * member — the per-entry drift stamp that lets heavy entries
-    * share a JVM without losing attribution.
+    * side). `mids` adds one single-run q01 time immediately before
+    * each member after the first, keyed by that member — the
+    * per-entry drift stamp that lets entries share a JVM without
+    * losing attribution.
     *
     * The `*Io` twins are the IO leg: q01 is a CPU
     * micro-query, so a disk-contended window inflates it far less
@@ -134,12 +68,13 @@ object Bench {
     * (m35's 20.8× window carried a 5.0× cpu stamp). Each cpu
     * sentinel point is paired with one fixed small shuffle+
     * parquet-write probe whose inflation stamps disk contention in
-    * the same cost class as the entries that suffer it. */
-  case class FamilyTiming(timings: Seq[Timing],
-      sentBefore: Double, sentAfter: Double,
-      mids: Seq[(String, Double)] = Seq.empty,
-      sentBeforeIo: Double = -1.0, sentAfterIo: Double = -1.0,
-      midsIo: Seq[(String, Double)] = Seq.empty)
+    * the same cost class as the entries that suffer it.
+    *
+    * A child JVM reports its group as this record, one JSON line on
+    * stdout ([[partLine]], read back by [[readPart]]). */
+  case class FamilyTiming(queries: Seq[Timing],
+      sentBefore: Double, sentAfter: Double, mids: Seq[(String, Double)],
+      sentBeforeIo: Double, sentAfterIo: Double, midsIo: Seq[(String, Double)])
 
   private def q01Once(spark: SparkSession, sfDir: String): Double = {
     val t0 = System.nanoTime()
@@ -185,9 +120,9 @@ object Bench {
     * of each other (the skipped third pass could only have moved the
     * number inside the band) — and the full median-of-3 runs when the
     * first two disagree, which is also when pass 1 carried
-    * codegen-compile cost. With `mid` set (solo groups), each query
-    * after the first is preceded by one q01 run whose time is recorded
-    * against that query — its drift stamp.
+    * codegen-compile cost. Each query after the first is preceded by
+    * one q01 run and one io probe whose times are recorded against
+    * that query — its drift stamp.
     *
     * Build/probe split: with [[BuildCache]] enabled, an entry whose
     * first pass grows `BuildCache.builtKeys` has just constructed a
@@ -197,7 +132,7 @@ object Bench {
     * served read. Any other entry's first pass is its first timed
     * pass. */
   private[graft] def timeQueries(spark: SparkSession, sfDir: String,
-      names: Seq[String], mid: Boolean)
+      names: Seq[String])
       : (Seq[Timing], Seq[(String, Double)], Seq[(String, Double)]) = {
     // no separate warmup pass: timeFamily's leading sentinel has just
     // run q01 three times in this JVM
@@ -226,7 +161,7 @@ object Bench {
     val mids = Vector.newBuilder[(String, Double)]
     val midsIo = Vector.newBuilder[(String, Double)]
     val ts = names.zipWithIndex.map { case (name, i) =>
-      if (mid && i > 0) {
+      if (i > 0) {
         val s = q01Once(spark, sfDir)
         val io = ioOnce(spark, sfDir)
         mids += name -> round3(s)
@@ -271,12 +206,12 @@ object Bench {
   /** timeQueries bracketed by the drift sentinel (cpu + io legs).
     * The leading sentinel doubles as the JVM warmup: its median-of-3
     * absorbs q01's one-off codegen-compile cost in a single run, and
-    * by the time the family is measured the session is warm. */
+    * by the time the group is measured the session is warm. */
   private def timeFamily(spark: SparkSession, sfDir: String,
-      names: Seq[String], mid: Boolean): FamilyTiming = {
+      names: Seq[String]): FamilyTiming = {
     val before = sentinelTime(spark, sfDir)
     val beforeIo = ioOnce(spark, sfDir)
-    val (ts, mids, midsIo) = timeQueries(spark, sfDir, names, mid)
+    val (ts, mids, midsIo) = timeQueries(spark, sfDir, names)
     val after = sentinelTime(spark, sfDir)
     val afterIo = ioOnce(spark, sfDir)
     FamilyTiming(ts, before, after, mids, beforeIo, afterIo, midsIo)
@@ -292,11 +227,11 @@ object Bench {
   /** Child JVM command: FORWARD the parent's own JVM flags (module
     * opens, heap, -D system props) so parent and child can never
     * drift — a hardcoded copy of build.sbt's javaOptions would
-    * silently degrade every family to the in-process fallback the
+    * silently degrade every group to the in-process fallback the
     * first time the required flags change. Plus the full application
     * classpath (real here because build.sbt forks `run`) and the
     * child part protocol. */
-  private def childCommand(part: Seq[String], mid: Boolean): Seq[String] = {
+  private def childCommand(part: Seq[String]): Seq[String] = {
     import scala.jdk.CollectionConverters._
     val javaBin = s"${sys.props("java.home")}/bin/java"
     val parentArgs = java.lang.management.ManagementFactory
@@ -312,64 +247,46 @@ object Bench {
     }
     Seq(javaBin) ++ forwarded ++ Seq(
       "-cp", sys.props("java.class.path"),
-      "graft.Bench", "--part", part.mkString(",")) ++
-      (if (mid) Seq("--mid") else Seq.empty)
+      "graft.Bench", "--part", part.mkString(","))
   }
 
-  /** Run one family in a fresh JVM; None if the child failed. */
-  private def runChild(family: String, part: Seq[String],
-      mid: Boolean): Option[FamilyTiming] = {
+  /** The part protocol's mapper. Every field must be present and
+    * non-null, so a truncated or foreign line fails to parse instead
+    * of reading as zeros. */
+  private lazy val partMapper = JsonMapper.builder()
+    .addModule(DefaultScalaModule)
+    .enable(DeserializationFeature.FAIL_ON_MISSING_CREATOR_PROPERTIES,
+      DeserializationFeature.FAIL_ON_NULL_CREATOR_PROPERTIES)
+    .build()
+
+  /** A child's report of its group: one JSON line. */
+  private[graft] def partLine(ft: FamilyTiming): String =
+    partMapper.writeValueAsString(ft)
+
+  /** The group a part line reports; None for any line that is not a
+    * whole part line with at least one query. */
+  private[graft] def readPart(line: String): Option[FamilyTiming] =
+    Try(partMapper.readValue(line, classOf[FamilyTiming])).toOption
+      .filter(_.queries.nonEmpty)
+
+  /** Run one group in a fresh JVM over the same tables; None if the
+    * child failed or reported no part line. */
+  private[graft] def runChild(group: String, part: Seq[String],
+      sfDir: String): Option[FamilyTiming] = {
     try {
-      val pb = new ProcessBuilder(childCommand(part, mid): _*)
+      val pb = new ProcessBuilder(childCommand(part): _*)
+      pb.environment().put("SPARK_GRAFT_SF_DIR", sfDir)
       pb.redirectError(ProcessBuilder.Redirect.INHERIT)
       val proc = pb.start()
       val out = new String(proc.getInputStream.readAllBytes(), "UTF-8")
       val rc = proc.waitFor()
-      val line = out.linesIterator.find(_.contains("\"metric\":\"part\""))
-      if (rc != 0 || line.isEmpty) {
-        System.err.println(s"[bench] child $family rc=$rc, falling back in-process")
-        None
-      } else {
-        val re = """"([a-z0-9_]+)":(-?[0-9.]+(?:[eE]-?[0-9]+)?)""".r
-        // guarded extraction: a missing tag or brace must trigger the
-        // in-process fallback, not a silent substring of the wrong
-        // object
-        def section(tag: String): Option[Map[String, Double]] = {
-          val from = line.get.indexOf("\"" + tag + "\"")
-          if (from < 0) None
-          else {
-            val open = line.get.indexOf('{', from)
-            val close = if (open < 0) -1 else line.get.indexOf('}', open)
-            if (open < 0 || close < 0) None
-            else Some(re.findAllMatchIn(line.get.substring(open, close + 1))
-              .map(m => m.group(1) -> m.group(2).toDouble).toMap)
-          }
-        }
-        section("queries").filter(_.nonEmpty) match {
-          case Some(med) =>
-            val lo = section("qlo").getOrElse(Map.empty[String, Double])
-            val hi = section("qhi").getOrElse(Map.empty[String, Double])
-            val sent = section("sent").getOrElse(Map.empty[String, Double])
-            val sentIo = section("sentio").getOrElse(Map.empty[String, Double])
-            val mids = section("qmid").getOrElse(Map.empty[String, Double])
-            val midsIo = section("qmidio").getOrElse(Map.empty[String, Double])
-            val builds = section("qbuild").getOrElse(Map.empty[String, Double])
-            Some(FamilyTiming(
-              med.keys.toSeq.sorted.map(k =>
-                Timing(k, med(k), lo.getOrElse(k, med(k)), hi.getOrElse(k, med(k)),
-                  builds.getOrElse(k, -1.0))),
-              sent.getOrElse("before", -1.0), sent.getOrElse("after", -1.0),
-              mids.toSeq.sortBy(_._1),
-              sentIo.getOrElse("before", -1.0), sentIo.getOrElse("after", -1.0),
-              midsIo.toSeq.sortBy(_._1)))
-          case None =>
-            System.err.println(
-              s"[bench] child $family emitted malformed part JSON, falling back in-process")
-            None
-        }
-      }
+      val ft = if (rc == 0) out.linesIterator.flatMap(readPart).toSeq.lastOption else None
+      if (ft.isEmpty)
+        System.err.println(
+          s"[bench] child $group rc=$rc, no part line, falling back in-process")
+      ft
     } catch { case NonFatal(e) =>
-      System.err.println(s"[bench] spawn $family failed: ${e.getMessage}")
+      System.err.println(s"[bench] spawn $group failed: ${e.getMessage}")
       None
     }
   }
@@ -382,27 +299,23 @@ object Bench {
     if (args.length >= 2 && args(0) == "--part") {
       // child: time the named queries in THIS JVM, report a partial
       val spark = Session.local()
-      val ft = timeFamily(spark, sfDir, args(1).split(",").toSeq,
-        args.contains("--mid"))
-      val rs = ft.timings
-      val builds = rs.filter(_.buildSec >= 0).map(t => t.name -> t.buildSec)
-      println(s"""{"metric":"part","sent":{"before":${ft.sentBefore},"after":${ft.sentAfter}},"sentio":{"before":${ft.sentBeforeIo},"after":${ft.sentAfterIo}},"qmid":${mapJson(ft.mids)},"qmidio":${mapJson(ft.midsIo)},"qbuild":${mapJson(builds)},"queries":${numJson(rs, _.med)},"qlo":${numJson(rs, _.lo)},"qhi":${numJson(rs, _.hi)}}""")
+      println(partLine(timeFamily(spark, sfDir, args(1).split(",").toSeq)))
       spark.stop()
       return
     }
     var mixed = false
     val plan = familyPlan()
     val acc = Vector.newBuilder[(String, FamilyTiming)]
-    plan.zipWithIndex.foreach { case ((family, part, mid), i) =>
-      System.err.println(s"[bench] === family $family (${part.size} queries, fresh JVM${if (mid) ", mid-sentinels" else ""}) ===")
-      acc += family -> runChild(family, part, mid).getOrElse {
+    plan.zipWithIndex.foreach { case ((group, part), i) =>
+      System.err.println(s"[bench] === $group (${part.size} queries, fresh JVM) ===")
+      acc += group -> runChild(group, part, sfDir).getOrElse {
         mixed = true
         val spark = Session.local()
-        try timeFamily(spark, sfDir, part, mid) finally spark.stop()
+        try timeFamily(spark, sfDir, part) finally spark.stop()
       }
-      // Rewrite bench_out.json after every family, marked partial until
+      // Rewrite bench_out.json after every group, marked partial until
       // the final write below replaces it, so a run killed by a
-      // timeout still leaves every measured family on disk.
+      // timeout still leaves every measured group on disk.
       if (i + 1 < plan.size)
         writeBenchOut(buildJson(acc.result(), mixed, sfDir,
           partial = Some((i + 1, plan.size))))
@@ -432,33 +345,33 @@ object Bench {
     * whose timing is -1 (the query threw). */
   private[graft] def summaryJson(famResults: Seq[(String, FamilyTiming)],
       mixed: Boolean): String = {
-    val results = famResults.flatMap(_._2.timings)
+    val results = famResults.flatMap(_._2.queries)
     s"""{"metric":"total","value":${totalSec(results)},"unit":"sec","entries":${results.size},"failed":${results.count(_.med < 0)},"isolation":"${isolation(mixed)}"}"""
   }
 
   /** Assemble the result JSON. With `partial = Some((done, of))` the
     * object leads with a "partial" marker — the crash-safe
-    * families-so-far record written between families; the final
+    * groups-so-far record written between groups; the final
     * (complete) form has no such field, so a finished bench_out can
     * never be mistaken for a truncated one. */
   private def buildJson(famResults: Seq[(String, FamilyTiming)],
       mixed: Boolean, sfDir: String, partial: Option[(Int, Int)]): String = {
-    val results = famResults.flatMap(_._2.timings)
+    val results = famResults.flatMap(_._2.queries)
     val total = totalSec(results)
     val iso = isolation(mixed)
-    // Drift sentinel: each family's numbers are
+    // Drift sentinel: each group's numbers are
     // bracketed by a fixed micro-query (q01) timed in the same JVM.
     // The two sides live at DIFFERENT JVM ages (before = JIT-cold
     // right after session start, after = fully warm), so each side is
     // normalized against its own best across the run — all "befores"
     // share a lifecycle, all "afters" share a lifecycle — and
     // sentinel_ratio is the worse of the two per-side ratios. A
-    // family measured in a contended window stamps itself (windows
+    // group measured in a contended window stamps itself (windows
     // of 10-45× on a 1.2 s query have been seen); a
     // uniformly slow run shows in the absolute before/after seconds.
     // Ratios ≳ 3 mean: do not trust round-over-round deltas for that
-    // family. sentinel_mid_sec adds the per-entry stamp inside solo
-    // groups: one warm q01 run timed immediately before that entry
+    // group. sentinel_mid_sec adds the per-entry stamp for every
+    // member after a group's first: one warm q01 run timed immediately before that entry
     // (same lifecycle as "after" — compare against the best "after").
     val sentBefore = famResults.map { case (f, ft) => f -> ft.sentBefore }
     val sentAfter = famResults.map { case (f, ft) => f -> ft.sentAfter }
@@ -489,7 +402,7 @@ object Bench {
     val builds = results.filter(_.buildSec >= 0).map(t => t.name -> t.buildSec)
     val buildTotal = math.rint(builds.map(_._2).filter(_ >= 0).sum * 1000) / 1000
     val partialField = partial.fold("")(p =>
-      "\"partial\":\"" + p._1 + "/" + p._2 + " families\",")
+      "\"partial\":\"" + p._1 + "/" + p._2 + " groups\",")
     s"""{"metric":"total",$partialField"value":$total,"unit":"sec","n":"3 (2, reported as min, when pass 1 < 1s or passes 1-2 agree within 10%); every pass starts cache-cold (catalog.clearCache, so in-invocation persists never carry between passes); artifact-writer entries add a build-only first pass — their queries/lo/hi time the served read, build_sec the construction","isolation":"$iso","sf":"$sfDir","build_total_sec":$buildTotal,"build_sec":${mapJson(builds)},"sentinel_before_sec":${mapJson(sentBefore)},"sentinel_after_sec":${mapJson(sentAfter)},"sentinel_mid_sec":${mapJson(sentMid)},"sentinel_before_io_sec":${mapJson(sentBeforeIo)},"sentinel_after_io_sec":${mapJson(sentAfterIo)},"sentinel_mid_io_sec":${mapJson(sentMidIo)},"sentinel_ratio":${mapJson(sentRatio)},"sentinel_io_ratio":${mapJson(sentIoRatio)},"queries_lo":${numJson(results, _.lo)},"queries_hi":${numJson(results, _.hi)},"queries":${numJson(results, _.med)}}"""
   }
 

@@ -60,8 +60,8 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // one greppable summary line: the r7 gate silently lost 21
-    // queries to per-query stderr scattered through Spark logs — a
+    // one greppable summary line: per-query failures alone scatter
+    // through Spark's stderr logs, where they are easy to lose — a
     // non-zero failure count must be impossible to miss
     System.err.println(
       s"[verify] summary: ${selected.size - failed.size} ok, " +

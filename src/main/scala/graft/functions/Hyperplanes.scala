@@ -12,9 +12,9 @@ import org.apache.spark.sql.functions.expr
   * the Spark and DuckDB dialects, so both parse to bit-identical
   * doubles and the sign buckets are byte-reproducible cross-engine —
   * which is what makes an exact DuckDB oracle possible for an LSH
-  * operator. The first 8 planes are identical to round-1's a28
-  * planes (Seq.fill draws row-major from the same seeded generator),
-  * so a28's output is unchanged by the refactor.
+  * operator. a28 takes the first 8 planes; Seq.fill draws row-major
+  * from one seeded generator, so those 8 are the same whatever the
+  * total drawn, and a28's output does not depend on the 32 here.
   */
 object Hyperplanes {
 

@@ -16,7 +16,7 @@ import scala.collection.mutable
 case class MGBuf(counters: Map[Long, Long], err: Long)
 
 /** Mutable Misra–Gries accumulation state with the LAZY global
-  * decrement offset (the r11 advice item): a live key's counter is
+  * decrement offset: a live key's counter is
   * `raw − dec`, and the classic decrement-all step is `dec += 1` —
   * O(1), no map rebuild — with the dying minimum layer accounted
   * through `hist` (live raw value → #keys), so `live` stays exact
@@ -24,9 +24,9 @@ case class MGBuf(counters: Map[Long, Long], err: Long)
   * an overwriting re-insert reclaims the slot, and a compaction
   * sweep runs only once ≥ k dead entries have accumulated — paid for
   * by the ≥ k inserts since the last sweep, so eviction-regime
-  * reduce is amortized O(1) per element (the old immutable form
-  * rebuilt a k-entry map per unmatched arrival — O(n·k) allocation,
-  * at odds with the 100 TB bounded-memory story). Memory stays
+  * reduce is amortized O(1) per element (an eager decrement-all
+  * would rebuild a k-entry map per unmatched arrival — O(n·k)
+  * allocation, at odds with bounded memory at any scale). Memory stays
   * ≤ 2k counter slots + ≤ k histogram slots. */
 final class MGAcc(
     var counters: mutable.LongMap[Long],

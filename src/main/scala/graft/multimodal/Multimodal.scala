@@ -196,7 +196,7 @@ object Multimodal {
   /** m33 queries entry: features for every media record. The typed
     * API keeps `feat: Array[Float]`; the driver-facing frame renders
     * it as JSON because the driver's pandas compare can't sort/hash
-    * array cells (round-1 harness crash). */
+    * array cells (an array column crashes the compare). */
   def m33Multimodal(s: SparkSession, dir: String): DataFrame =
     decodeFeatures(mediaTable(s, dir)).toDF()
       .withColumn("feat", to_json(col("feat")))

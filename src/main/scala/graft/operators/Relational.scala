@@ -793,7 +793,7 @@ object Relational {
       .groupBy(col("user_id"))
       .agg(
         // comma-joined string, not ARRAY: the driver's pandas compare
-        // can't sort/hash numpy-array cells (round-1 harness crash)
+        // can't sort/hash numpy-array cells (an array column crashes it)
         concat_ws(",", array_sort(collect_set(col("event_type")))).as("event_types"),
         size(collect_set(col("event_type"))).as("distinct_types"),
         count(lit(1)).as("events_count"))
@@ -963,7 +963,7 @@ object Relational {
     * Scale: the document is parsed ONCE per row into MAP&lt;STRING,
     * STRING&gt; and the entries exploded — the json_object_keys +
     * per-key get_json_object formulation re-parses the payload per
-    * key (k+1 parses/row) and was the round-1 bench tail. */
+    * key (k+1 parses/row), the slowest form at scale. */
   def q29JsonKeys(s: SparkSession, dir: String): DataFrame = {
     val payload = to_json(map_from_arrays(
       array(lit("type"), lit("user"), lit("day")),
