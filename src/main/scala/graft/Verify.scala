@@ -3,6 +3,10 @@ package graft
 import scala.util.control.NonFatal
 
 import java.nio.file.{Files, Paths}
+
+import com.fasterxml.jackson.databind.json.JsonMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
+
 /** Schema invariants the driver's hash imposes on every
   * driver-visible output — shared by Verify's runtime gate and
   * PlanSpec's sweep so the two checks cannot drift. */
@@ -67,21 +71,16 @@ object Verify {
       s"[verify] summary: ${selected.size - failed.size} ok, " +
         s"${failed.size} failed" +
         (if (failed.nonEmpty) failed.sorted.mkString(" (", ", ", ")") else ""))
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      oracleJson(SparkEntry.oracleSql))
     spark.stop()
   }
+
+  /** oracle_sql.json's text: one JSON object of name → DuckDB SQL.
+    * Jackson escapes quotes, backslashes and every control character,
+    * so a tab or CR in an oracle cannot break the reader's parse and
+    * silently zero the correctness compare. */
+  private[graft] def oracleJson(oracles: Map[String, String]): String =
+    JsonMapper.builder().addModule(DefaultScalaModule).build()
+      .writeValueAsString(oracles)
 }

@@ -1525,18 +1525,18 @@ object Ann {
 
   /** Remove orphan files (Iceberg `remove_orphan_files`): a data file
     * is LIVE iff some retained version's manifest references it —
-    * the union over manifests 1..head (a bounded O(#files) metadata
-    * read per manifest); everything else under the layout is a
+    * the union over every `manifest_*` under the root (one bounded
+    * O(#files) metadata read); everything else under the layout is a
     * leaked write and is deleted, O(#orphans) metadata. Deleting a
     * referenced file would corrupt a retained version, so the keep
-    * set comes from the manifests, never from age or naming
-    * heuristics. Returns the deleted paths. */
-  private[graft] def q94RemoveOrphans(s: SparkSession, root: String,
-      head: Int = 3): Seq[String] = {
-    val referenced = (1 to head).flatMap(k =>
-      Tables.parquet(s, s"$root/manifest_$k")
-        .filter(col("kind") === "data")
-        .select("path").collect().map(_.getString(0))).toSet
+    * set comes from the manifests on disk, never from a commit count,
+    * age or naming heuristics. Returns the deleted paths. */
+  private[graft] def q94RemoveOrphans(s: SparkSession, root: String): Seq[String] = {
+    val manifests = new java.io.File(root).list().toSeq
+      .filter(_.startsWith("manifest_")).sorted.map(m => s"$root/$m")
+    val referenced = Tables.parquet(s, manifests)
+      .filter(col("kind") === "data")
+      .select("path").collect().map(_.getString(0)).toSet
     val orphans = graft.sources.Export.listParquet(s"$root/data")
       .filterNot(referenced)
     orphans.foreach(p => java.nio.file.Files.delete(java.nio.file.Paths.get(p)))

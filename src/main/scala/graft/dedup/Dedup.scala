@@ -26,40 +26,6 @@ import graft.functions.SetExprs
   */
 object Dedup {
 
-  /** How per-doc payload tables (shingle arrays, set sizes,
-    * embeddings) are attached to a candidate-pair stream in the
-    * verify stage of the LSH paths (d23/d23b/d25b/d28).
-    *
-    * - [[Attach.Auto]]: no hint. Catalyst plans from stats and AQE
-    *   re-plans from runtime shuffle sizes, so at verification scale
-    *   the small attach table broadcasts, while at corpus scale
-    *   (where a full-corpus broadcast would blow the driver and the
-    *   broadcast ceiling long before the pair stream is the problem)
-    *   the same code degrades to a shuffle join keyed on doc_id.
-    *   Default for ALL pipelines, the shingle pipelines included:
-    *   idle-host A/B measurement shows Auto beats forced Shuffle
-    *   2-3.5× at sf0.1 (SURVEY §5).
-    * - [[Attach.Broadcast]]: hard broadcast() hint — only safe when
-    *   the corpus is known to fit the broadcast limit.
-    * - [[Attach.Shuffle]]: force a sort-merge shuffle join via the
-    *   MERGE hint — the explicit large-corpus path; PlanSpec pins
-    *   that this mode really shuffles and Broadcast really
-    *   broadcasts, and DedupSpec pins that all three modes produce
-    *   identical rows. */
-  sealed trait Attach
-  object Attach {
-    case object Auto extends Attach
-    case object Broadcast extends Attach
-    case object Shuffle extends Attach
-  }
-
-  private def attachSide(df: DataFrame, attach: Attach): DataFrame =
-    attach match {
-      case Attach.Auto      => df
-      case Attach.Broadcast => broadcast(df)
-      case Attach.Shuffle   => df.hint("merge")
-    }
-
   /** d22: exact dedup — md5 over whitespace-normalized lowercased
     * text, keep the minimum doc_id per group.
     * Reference analog: content hashing as in DeployContract
@@ -146,12 +112,17 @@ object Dedup {
   /** Verify stage: attach shingle-set sizes (for the sound prefilter)
     * and hashed sorted shingle sets to candidate pairs, compute
     * Jaccard with the native merge-walk intersect, keep pairs ≥ 0.7.
-    * The attach join strategy is size-adaptive (see [[Attach]]) —
-    * broadcast at verification scale, shuffle-on-doc_id at corpus
-    * scale. Unordered — presentation entry points sort; consumers
-    * like d27 use the raw edge stream. */
-  private[graft] def verifyPairs(pairs: DataFrame, docs: DataFrame,
-      attach: Attach = Attach.Auto): DataFrame = {
+    * Every attach join in the LSH verify stages (here, bigramVerify,
+    * verifyCosine, d44Runs) carries no hint, because AQE picks
+    * broadcast or a doc_id-keyed shuffle from runtime size: the small
+    * attach table broadcasts at verification scale, and at corpus
+    * scale, where a full-corpus broadcast would blow the driver, the
+    * same plan shuffles. On an idle host this beat a forced sort-merge
+    * attach 2-3.5× at sf0.1 (SURVEY §5 has the raw runs): four forced
+    * sort-merge attaches re-sort the pair stream four times.
+    * Unordered — presentation entry points sort; consumers like d27
+    * use the raw edge stream. */
+  private[graft] def verifyPairs(pairs: DataFrame, docs: DataFrame): DataFrame = {
     // persisted: four attach sides below derive from this one
     // frame — without the persist each side re-ran the corpus scan +
     // shingle + hash chain (4 redundant passes per action; at 100 TB,
@@ -177,12 +148,12 @@ object Dedup {
     // this byte-exactly.
     val sizes = hashed.select(col("doc_id"), size(col("shz")).as("n"))
     pairs
-      .join(attachSide(sizes.select(col("doc_id").as("doc_a"), col("n").as("n_a")), attach), "doc_a")
-      .join(attachSide(sizes.select(col("doc_id").as("doc_b"), col("n").as("n_b")), attach), "doc_b")
+      .join(sizes.select(col("doc_id").as("doc_a"), col("n").as("n_a")), "doc_a")
+      .join(sizes.select(col("doc_id").as("doc_b"), col("n").as("n_b")), "doc_b")
       .filter(least(col("n_a"), col("n_b")).cast("double")
         / greatest(col("n_a"), col("n_b")) >= prefilterEdge)
-      .join(attachSide(hashed.select(col("doc_id").as("doc_a"), col("shz").as("shz_a")), attach), "doc_a")
-      .join(attachSide(hashed.select(col("doc_id").as("doc_b"), col("shz").as("shz_b")), attach), "doc_b")
+      .join(hashed.select(col("doc_id").as("doc_a"), col("shz").as("shz_a")), "doc_a")
+      .join(hashed.select(col("doc_id").as("doc_b"), col("shz").as("shz_b")), "doc_b")
       .withColumn("jaccard", pairJaccard("shz_a", "shz_b"))
       .filter(col("jaccard") >= verifyThreshold)
       .select("doc_a", "doc_b", "jaccard")
@@ -230,48 +201,34 @@ object Dedup {
 
   /** CANDIDATE-DENSITY fail-stop: LSH banding's
     * scale contract is candidates ≈ linear in the corpus — bucket
-    * sizes bounded, pair volume ∝ docs. A density above `maxPerDoc`
-    * means the banding degenerated (a mega-bucket, a hash collapse)
-    * and the downstream verify would melt at 100 TB; the capped
-    * variant ([[d23DedupMinhashCapped]]) is the production answer
+    * sizes bounded, pair volume ∝ docs. A density above
+    * [[d23MaxPerDoc]] means the banding degenerated (a mega-bucket, a
+    * hash collapse) and the downstream verify would melt at 100 TB;
+    * the capped variant ([[d23DedupMinhashCapped]]) is the production answer
     * once a corpus genuinely carries such a cluster. Run by
     * graft.Scale at sf0.1 AND the synthesized sf1 (both-SF curve in
     * SCALING.md) — not on the per-query hot path, where the extra
-    * count() action would double the candidate join. The default cap
-    * is ~4× the measured density — 1,267 candidates/doc at sf0.1 and
+    * count() action would double the candidate join. The cap is ~4×
+    * the measured density — 1,267 candidates/doc at sf0.1 and
     * 1,247/doc at the synthesized sf1 (SCALING.md's recorded run;
     * this corpus plants heavy dup clusters by design, and the ladder
     * shows density near-constant, which is the linearity being
     * audited). */
-  private[graft] def d23CandidateAudit(s: SparkSession, dir: String,
-      maxPerDoc: Long = 6000L): Unit = {
+  private[graft] def d23CandidateAudit(s: SparkSession, dir: String): Unit = {
     val docs = Tables.documents(s, dir).count()
     val cands = d23CandidatePairs(s, dir).count()
-    require(docs > 0 && cands <= maxPerDoc * docs,
+    require(docs > 0 && cands <= d23MaxPerDoc * docs,
       s"d23: candidate density ${cands / math.max(docs, 1)}/doc exceeds " +
-        s"$maxPerDoc — banding degenerated (use the capped variant)")
+        s"$d23MaxPerDoc — banding degenerated (use the capped variant)")
   }
 
-  def d23DedupMinhash(s: SparkSession, dir: String): DataFrame =
-    // Auto default, not Shuffle: on an idle host Auto measures
-    // 10.2 s vs Shuffle 36.1 s medians at sf0.1, and the full bench
-    // under a Shuffle default ran d23 2-10× slower (SURVEY §5 has
-    // the raw runs). Four forced sort-merge attaches re-sort the
-    // multi-million-row pair stream four times; AQE's broadcast pick
-    // is right at every testable scale, and at true corpus scale Auto
-    // degrades to the shuffle join exactly when stats warrant it.
-    // Shuffle stays one argument away as the explicit escape hatch.
-    d23DedupMinhashAttach(s, dir, Attach.Auto)
+  private val d23MaxPerDoc = 6000L
 
-  /** Attach-strategy-parameterized form (see [[Attach]]); DedupSpec
-    * pins identical output across all three modes, PlanSpec pins the
-    * join type each explicit mode plans. */
-  private[graft] def d23DedupMinhashAttach(s: SparkSession, dir: String,
-      attach: Attach): DataFrame = {
+  def d23DedupMinhash(s: SparkSession, dir: String): DataFrame = {
     val docs = shingledDocs(s, dir)
     // rows-only driver check: no presentation sort (a global sort
     // range-partitions by sampling, executing the pipeline twice)
-    verifyPairs(bandCandidatePairs(docs), docs, attach)
+    verifyPairs(bandCandidatePairs(docs), docs)
   }
 
   /** Affine minhash coefficients: 16 (a, b) pairs from a fixed seed,
@@ -385,7 +342,7 @@ object Dedup {
     // near-dup corpus and the driver compare sorts rows itself — a
     // repartition(1) sort would funnel the whole result through one
     // task (measured +7 s at sf0.1)
-    verifyPairs(md5BandCandidatePairs(docs), docs, Attach.Auto) // same default as d23 — see its note
+    verifyPairs(md5BandCandidatePairs(docs), docs)
   }
 
   /** DuckDB oracle for d23b: same md5-derived base hash and affine
@@ -622,7 +579,7 @@ object Dedup {
     val hashed = docs.select(col("doc_id"), hashedShingles(col("sh")).as("shz"))
       .persist() // two attach sides — one shingle+hash pass
     // no join hint — Catalyst/AQE pick broadcast vs shuffle from
-    // stats, the Attach.Auto behavior (see attachSide)
+    // stats (see verifyPairs)
     pairs
       .join(hashed.select(col("doc_id").as("doc_a"), col("shz").as("shz_a")), "doc_a")
       .join(hashed.select(col("doc_id").as("doc_b"), col("shz").as("shz_b")), "doc_b")
@@ -652,19 +609,14 @@ object Dedup {
     * property vs lang-blocked d25 ≥ 0.7 and score equality.
     *
     * The CANDIDATE stage is the 100 TB part. The verify stage's
-    * attach is size-adaptive (see [[Attach]]): broadcast at
+    * attach is size-adaptive (see [[verifyPairs]]): broadcast at
     * verification scale, a shuffle join keyed on doc_id at corpus
-    * scale — same plan shape, bigger exchange. */
-  def d25NgramJaccardBanded(s: SparkSession, dir: String): DataFrame =
-    // Auto default (see d23DedupMinhash's note): a forced
-    // sort-merge attach makes this entry 3× slower at sf0.1.
-    d25NgramJaccardBandedAttach(s, dir, Attach.Auto)
-
-  private[graft] def d25NgramJaccardBandedAttach(s: SparkSession, dir: String,
-      attach: Attach): DataFrame = {
+    * scale — same plan shape, bigger exchange; a forced sort-merge
+    * attach made this entry 3× slower at sf0.1. */
+  def d25NgramJaccardBanded(s: SparkSession, dir: String): DataFrame = {
     val base = Tables.documents(s, dir)
     val uni = base.select(col("doc_id"), shingleSet.as("sh"))
-    bigramVerify(bandCandidatePairs(uni), base, attach)
+    bigramVerify(bandCandidatePairs(uni), base)
   }
 
   /** The exact-bigram-Jaccard verify stage shared by d25b and d25c —
@@ -677,8 +629,7 @@ object Dedup {
     * shingle-array attach and merge-walk (≈64% of random-size pairs
     * pruned on this corpus; never drops a pair the verify keeps —
     * d25c's prefilter-free DuckDB oracle pins this byte-exactly). */
-  private def bigramVerify(pairs: DataFrame, base: DataFrame,
-      attach: Attach): DataFrame = {
+  private def bigramVerify(pairs: DataFrame, base: DataFrame): DataFrame = {
     val bigrams = base.select(col("doc_id"), bigramShingles.as("sh"))
     // persisted + sizes derived from the hashed frame — the
     // verifyPairs rationale verbatim (4 attach sides, 1 pass)
@@ -686,12 +637,12 @@ object Dedup {
       .persist()
     val sizes = hashed.select(col("doc_id"), size(col("shz")).as("n"))
     pairs
-      .join(attachSide(sizes.select(col("doc_id").as("doc_a"), col("n").as("n_a")), attach), "doc_a")
-      .join(attachSide(sizes.select(col("doc_id").as("doc_b"), col("n").as("n_b")), attach), "doc_b")
+      .join(sizes.select(col("doc_id").as("doc_a"), col("n").as("n_a")), "doc_a")
+      .join(sizes.select(col("doc_id").as("doc_b"), col("n").as("n_b")), "doc_b")
       .filter(least(col("n_a"), col("n_b")).cast("double")
         / greatest(col("n_a"), col("n_b")) >= prefilterEdge)
-      .join(attachSide(hashed.select(col("doc_id").as("doc_a"), col("shz").as("shz_a")), attach), "doc_a")
-      .join(attachSide(hashed.select(col("doc_id").as("doc_b"), col("shz").as("shz_b")), attach), "doc_b")
+      .join(hashed.select(col("doc_id").as("doc_a"), col("shz").as("shz_a")), "doc_a")
+      .join(hashed.select(col("doc_id").as("doc_b"), col("shz").as("shz_b")), "doc_b")
       .select(col("doc_a"), col("doc_b"), pairJaccard("shz_a", "shz_b").as("jaccard"))
       .filter(col("jaccard") >= verifyThreshold)
   }
@@ -711,7 +662,7 @@ object Dedup {
   def d25cNgramBandedOracle(s: SparkSession, dir: String): DataFrame = {
     val base = Tables.documents(s, dir)
     val uni = base.select(col("doc_id"), shingleSet.as("sh"))
-    bigramVerify(md5BandCandidatePairs(uni), base, Attach.Auto)
+    bigramVerify(md5BandCandidatePairs(uni), base)
   }
 
   /** Cosine similarity over float-array embeddings, with norms
@@ -765,8 +716,13 @@ object Dedup {
     * The oracle is exact because the planes are literal decimal
     * strings parsed identically by both engines (same construction
     * as a28's oracle, Ann.scala). */
-  def d28EmbedNeardupLsh(s: SparkSession, dir: String): DataFrame =
-    d28EmbedNeardupLshAttach(s, dir, Attach.Auto)
+  def d28EmbedNeardupLsh(s: SparkSession, dir: String): DataFrame = {
+    val (e, chunks) = hyperplaneBanded(s, dir)
+    verifyCosine(hyperplaneCandidatePairs(chunks), e)
+    // no presentation sort: this is the production 100 TB path, and a
+    // repartition(1) funnel would push every verified pair through a
+    // single task; the driver compare sorts rows itself (see d23b)
+  }
 
   /** Norm-filtered embeddings with their 4×8 hyperplane band values,
     * plus the exploded per-band chunk stream — ONE definition shared
@@ -809,28 +765,18 @@ object Dedup {
     * [[verifyPairs]]-style definition both d28 and d38 feed: attach
     * embedding+norm per side (size-adaptive), double dot / norms,
     * keep cosine ≥ 0.4. */
-  private def verifyCosine(pairs: DataFrame, e: DataFrame,
-      attach: Attach): DataFrame = {
+  private def verifyCosine(pairs: DataFrame, e: DataFrame): DataFrame = {
     val emb = e.select(col("vec_id"), col("embedding"), col("norm"))
     pairs
-      .join(attachSide(emb.select(col("vec_id").as("vec_a"),
-        col("embedding").as("emb_a"), col("norm").as("norm_a")), attach), "vec_a")
-      .join(attachSide(emb.select(col("vec_id").as("vec_b"),
-        col("embedding").as("emb_b"), col("norm").as("norm_b")), attach), "vec_b")
+      .join(emb.select(col("vec_id").as("vec_a"),
+        col("embedding").as("emb_a"), col("norm").as("norm_a")), "vec_a")
+      .join(emb.select(col("vec_id").as("vec_b"),
+        col("embedding").as("emb_b"), col("norm").as("norm_b")), "vec_b")
       .select(
         col("vec_a"), col("vec_b"),
         round(graft.functions.VectorExprs.floatDot(col("emb_a"), col("emb_b"))
           / (col("norm_a") * col("norm_b")), 4).as("cosine"))
       .filter(col("cosine") >= 0.4)
-  }
-
-  private[graft] def d28EmbedNeardupLshAttach(s: SparkSession, dir: String,
-      attach: Attach): DataFrame = {
-    val (e, chunks) = hyperplaneBanded(s, dir)
-    verifyCosine(hyperplaneCandidatePairs(chunks), e, attach)
-    // no presentation sort: this is the production 100 TB path, and a
-    // repartition(1) funnel would push every verified pair through a
-    // single task; the driver compare sorts rows itself (see d23b)
   }
 
   /** d38: incremental EMBEDDING near-dup against a persisted
@@ -887,7 +833,7 @@ object Dedup {
             SetExprs.firstEqualBand(col("a.bands"), col("b.bands"), 1))
       .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"))
     val inBatch = hyperplaneCandidatePairs(batchChunks)
-    verifyCosine(vsIndex.union(inBatch), e, Attach.Auto)
+    verifyCosine(vsIndex.union(inBatch), e)
       .withColumn("source",
         when(col("vec_a") % 4 === 0, "in_batch").otherwise("vs_index"))
   }
@@ -929,8 +875,7 @@ object Dedup {
     try {
       // history-only clustering, persisted — the state a daily run carries
       val histPairs = verifyCosine(
-        hyperplaneCandidatePairs(chunks.filter(col("vec_id") % 4 =!= 0)),
-        e, Attach.Auto)
+        hyperplaneCandidatePairs(chunks.filter(col("vec_id") % 4 =!= 0)), e)
       val histVerts = Tables.embeddings(s, dir)
         .filter(col("vec_id") % 4 =!= 0).select(col("vec_id").as("id"))
       // build/probe split (the d37/s48 criterion): the history
@@ -1079,8 +1024,7 @@ object Dedup {
   def d23DedupMinhashCapped(s: SparkSession, dir: String, maxBucket: Int): DataFrame =
     // rows-only driver check: no presentation sort (a global sort
     // range-partitions by sampling, executing the pipeline twice)
-    verifyPairs(cappedCandidatePairs(s, dir, maxBucket), shingledDocs(s, dir),
-      Attach.Auto) // same shingle-attach default as d23 — see its note
+    verifyPairs(cappedCandidatePairs(s, dir, maxBucket), shingledDocs(s, dir))
 
   /** The capped candidate stage alone — exposed so SketchCapSpec can
     * bound the candidate VOLUME (≤ Σ_cold-bucket |bucket|² ≤
@@ -2321,7 +2265,7 @@ object Dedup {
     val inBatch = md5BandCandidatePairs(batchDocs)
     // rows-only presentation: no global sort (the d23b stance — the
     // driver compare sorts rows itself)
-    verifyPairs(vsIndex.union(inBatch), docs, Attach.Auto)
+    verifyPairs(vsIndex.union(inBatch), docs)
       .withColumn("source",
         when(col("doc_a") % 4 === 0, "in_batch").otherwise("vs_index"))
   }
@@ -2382,7 +2326,7 @@ object Dedup {
           col("a.band_id") ===
             SetExprs.firstEqualBand(col("a.bandh"), col("b.bandh"), 1))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-    verifyPairs(cands, docs, Attach.Auto)
+    verifyPairs(cands, docs)
       .groupBy("doc_a")
       .agg(count(lit(1)).as("matched_evals"),
         max(col("jaccard")).as("max_jaccard"),
@@ -2475,7 +2419,7 @@ object Dedup {
     * run the planted-passage constructions through the exact
     * production pipeline. Stages: winnowing fingerprints →
     * candidate seeds by gram equi-join (doc_a < doc_b) → token
-    * arrays attached ([[Attach]] stance) → exact token verify of the
+    * arrays attached (the [[verifyPairs]] stance) → exact token verify of the
     * seed gram (hash collisions die here) → maximal run extension
     * left/right along the seed diagonal (first-mismatch scan via
     * array_position, O(run) per seed) → best witness per pair
@@ -2489,7 +2433,6 @@ object Dedup {
     * insensitive to that multiplicity and d44's witness aggregate
     * collapses it). */
   private[graft] def d44Runs(docs: DataFrame,
-      attach: Attach = Attach.Auto,
       maxBucket: Int = d44MaxBucket): DataFrame = {
     val km1 = d44K - 1
     // The d23-family treatment applied here too (buckets are capped,
@@ -2537,10 +2480,10 @@ object Dedup {
         col("a.pos").as("pa"), col("b.pos").as("pb"))
     val toksTbl = docsP.select(col("doc_id"), split(col("text"), " ").as("toks"))
     cands
-      .join(attachSide(toksTbl.select(col("doc_id").as("doc_a"),
-        col("toks").as("ta")), attach), Seq("doc_a"))
-      .join(attachSide(toksTbl.select(col("doc_id").as("doc_b"),
-        col("toks").as("tb")), attach), Seq("doc_b"))
+      .join(toksTbl.select(col("doc_id").as("doc_a"),
+        col("toks").as("ta")), Seq("doc_a"))
+      .join(toksTbl.select(col("doc_id").as("doc_b"),
+        col("toks").as("tb")), Seq("doc_b"))
       .filter(expr(s"""size(filter(sequence(0, $km1), f ->
         element_at(ta, pa + f) = element_at(tb, pb + f))) = $d44K"""))
       .withColumn("dl", expr("least(pa, pb) - 1"))
@@ -2562,9 +2505,8 @@ object Dedup {
   }
 
   private[graft] def d44Core(docs: DataFrame,
-      attach: Attach = Attach.Auto,
       maxBucket: Int = d44MaxBucket): DataFrame =
-    d44Runs(docs, attach, maxBucket)
+    d44Runs(docs, maxBucket)
       .groupBy("doc_a", "doc_b")
       .agg(max(struct(col("run_len"), (-col("start_a")).as("nsa"),
         (-col("start_b")).as("nsb"), col("start_a"), col("start_b"))).as("w"))
@@ -2587,7 +2529,7 @@ object Dedup {
     * the ONLY corpus-keyed exchanges are the fingerprint equi-join on
     * a uniform 60-bit key (~22 % of gram volume, winnowing density
     * 2/(w+1)) and the doc_id-keyed token-array attach, which is
-    * size-adaptive ([[Attach]]). Boilerplate grams that recur across
+    * size-adaptive (see [[verifyPairs]]). Boilerplate grams that recur across
     * the corpus concentrate a bucket; the d23 capped-bucket stance
     * IS applied to this join ([[d44MaxBucket]] — slim DISTINCT-DOC
     * count per gram, broadcast anti-join of over-cap grams, recall contract
@@ -2681,9 +2623,8 @@ object Dedup {
   def d45SubstringScrub(s: SparkSession, dir: String): DataFrame =
     d45Core(Tables.documents(s, dir))
 
-  private[graft] def d45Core(docs: DataFrame,
-      attach: Attach = Attach.Auto): DataFrame = {
-    val spans = d44Runs(docs, attach)
+  private[graft] def d45Core(docs: DataFrame): DataFrame = {
+    val spans = d44Runs(docs)
       .filter(col("run_len") >= d44MinRun)
       .select(col("doc_b").as("doc_id"), col("start_b").as("lo"),
         (col("start_b") + col("run_len") - 1).as("hi"))

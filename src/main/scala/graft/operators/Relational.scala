@@ -1355,39 +1355,67 @@ object Relational {
     graft.streaming.Streaming.s42Cutoff,
     "2024-01-23 00:00:00")
 
-  /** Persist the version chain: the v0 base snapshot (latest-per-key
-    * INCLUDING tombstones — they keep their sequence so stale
-    * updates still lose, the s42 stance) plus one change-log parquet
-    * per version window. Real artifacts, not plan branches — a
-    * reader holds only the base and the logs, exactly Delta's
-    * checkpoint + commit-log layout. */
-  private[graft] def q77WriteChain(s: SparkSession, dir: String,
-      tag: String = "q77_chain"): String = {
-    val S = graft.streaming.Streaming
+  /** A chain's version split over `bounds`: the base window is every
+    * event at or before bounds(0); log k is (bounds(k−1), bounds(k)]
+    * for k < head and the open tail (bounds(head−1), ∞) at the head,
+    * head = bounds.size. Every written chain and s74's live fold cut
+    * their versions here, so a reader's versions and a stream's
+    * commits cannot drift. */
+  private[graft] def chainWindows(ev: DataFrame,
+      bounds: Seq[String]): (DataFrame, Seq[DataFrame]) =
+    (ev.filter(col("ts") <= lit(bounds.head)),
+      bounds.indices.map { i =>
+        val after = col("ts") > lit(bounds(i))
+        ev.filter(if (i + 1 < bounds.size) after && col("ts") <= lit(bounds(i + 1))
+          else after)
+      })
+
+  /** Persist the version chain over `bounds`: the v0 base snapshot
+    * (latest-per-key INCLUDING tombstones — they keep their sequence
+    * so stale updates still lose, the s42 stance) plus one change-log
+    * parquet `changes_k` per version window, k = 1..bounds.size. Real
+    * artifacts, not plan branches — a reader holds only the base and
+    * the logs, exactly Delta's checkpoint + commit-log layout. */
+  private[graft] def writeChain(s: SparkSession, dir: String, tag: String,
+      bounds: Seq[String]): String = {
     val ev = Tables.events(s, dir)
       .select("user_id", "event_id", "ts", "event_type", "value")
+    val (base, logs) = chainWindows(ev, bounds)
     val out = graft.sources.Export.scratch(tag, dir)
-    S.applyChangesSnapshot(ev.filter(col("ts") <= lit(q77Cutoffs(0))))
+    graft.streaming.Streaming.applyChangesSnapshot(base)
       .write.mode("overwrite").parquet(s"$out/v0")
-    (1 to 3).foreach { k =>
-      val lo = q77Cutoffs(k - 1)
-      val win =
-        if (k < 3) ev.filter(col("ts") > lit(lo) && col("ts") <= lit(q77Cutoffs(k)))
-        else ev.filter(col("ts") > lit(lo))
-      win.write.mode("overwrite").parquet(s"$out/changes_$k")
+    logs.zipWithIndex.foreach { case (log, i) =>
+      log.write.mode("overwrite").parquet(s"$out/changes_${i + 1}")
     }
     out
   }
 
-  /** Read AS OF version k: base ∪ change logs ≤ k, replayed through
-    * the ONE latest-per-key rule ([[graft.streaming.Streaming
-    * .applyChangesSnapshot]]) — replay(v0, changes ≤ k) IS the
-    * versioned table. k = 0 reads the base alone (already
-    * latest-per-key; the re-apply is a no-op on it). */
-  private[graft] def q77AsOf(s: SparkSession, chain: String, k: Int): DataFrame = {
-    val parts = Tables.parquet(s, s"$chain/v0") +:
-      (1 to k).map(i => Tables.parquet(s, s"$chain/changes_$i"))
-    graft.streaming.Streaming.applyChangesSnapshot(parts.reduce(_.unionByName(_)))
+  /** The commit logs changes_(a..b] of a chain as one union (a < b). */
+  private[graft] def logWindow(s: SparkSession, chain: String,
+      a: Int, b: Int): DataFrame =
+    (a + 1 to b).map(i => Tables.parquet(s, s"$chain/changes_$i"))
+      .reduce(_.unionByName(_))
+
+  /** Read AS OF version k: the snapshot artifact `base` (holding
+    * version `from` — the genesis `v0` at 0, a checkpoint above it)
+    * plus the logs (from, k], replayed through the ONE latest-per-key
+    * rule ([[graft.streaming.Streaming.applyChangesSnapshot]]) —
+    * replay(v0, changes ≤ k) IS the versioned table; k = from reads
+    * the base alone (already latest-per-key; the re-apply is a no-op
+    * on it). A version below the base's is gone, so reading it is a
+    * fail-fast, not a wrong answer. `keys` restricts the replay to a
+    * key set BEFORE the latest-per-key window (safe — the window
+    * partitions by user_id, so restricting keys commutes with it):
+    * q93's Δ-restricted pre-image read, which must happen BELOW the
+    * window or the feed pays an O(table) shuffle for a tiny change
+    * window (Spark cannot push a join below a window). */
+  private[graft] def replay(s: SparkSession, chain: String, base: String,
+      from: Int, k: Int, keys: Option[DataFrame] = None): DataFrame = {
+    require(k >= from, s"version $k is below the base's version $from")
+    val snap = Tables.parquet(s, s"$chain/$base")
+    val all = if (k == from) snap else snap.unionByName(logWindow(s, chain, from, k))
+    val scoped = keys.fold(all)(ks => all.join(ks, Seq("user_id"), "left_semi"))
+    graft.streaming.Streaming.applyChangesSnapshot(scoped)
   }
 
   /** q77: time-travel read — q35's two-snapshot diff generalized to
@@ -1406,8 +1434,8 @@ object Relational {
     * replay is exchange-free. The chain write is 4 bounded exports
     * (the q30/q35 persisted-artifact stance). */
   def q77TimeTravel(s: SparkSession, dir: String): DataFrame = {
-    val chain = q77WriteChain(s, dir)
-    graft.streaming.Streaming.applyServing(q77AsOf(s, chain, 2))
+    val chain = writeChain(s, dir, "q77_chain", q77Cutoffs)
+    graft.streaming.Streaming.applyServing(replay(s, chain, "v0", 0, 2))
   }
 
   /** q78's retention horizon: versions strictly below it lose their
@@ -1415,30 +1443,17 @@ object Relational {
   private[graft] val q78Horizon = 1
 
   /** Vacuum a q77 chain IN PLACE to `horizon`: materialize the
-    * checkpoint snapshot AS OF horizon (one replay — the Delta
+    * checkpoint snapshot `ckpt` AS OF horizon (one replay — the Delta
     * checkpoint write), then DELETE the base and the compacted logs.
     * Order matters: the checkpoint is written and durable BEFORE
     * anything is removed, so a crash mid-vacuum never loses a
     * readable version. Deletion is O(#files) metadata. */
   private[graft] def q78VacuumChain(s: SparkSession, chain: String,
       horizon: Int): Unit = {
-    q77AsOf(s, chain, horizon).write.mode("overwrite").parquet(s"$chain/ckpt")
+    replay(s, chain, "v0", 0, horizon).write.mode("overwrite").parquet(s"$chain/ckpt")
     graft.sources.Export.deleteTree(s"$chain/v0")
     (1 to horizon).foreach(k =>
       graft.sources.Export.deleteTree(s"$chain/changes_$k"))
-  }
-
-  /** Read AS OF version k against a vacuumed chain: the checkpoint
-    * plus the surviving logs (horizon, k]. k below the horizon is
-    * GONE — the retention contract makes that a fail-fast, not a
-    * wrong answer. */
-  private[graft] def q78AsOf(s: SparkSession, chain: String,
-      horizon: Int, k: Int): DataFrame = {
-    require(k >= horizon,
-      s"version $k is below the retention horizon $horizon")
-    val parts = Tables.parquet(s, s"$chain/ckpt") +:
-      (horizon + 1 to k).map(i => Tables.parquet(s, s"$chain/changes_$i"))
-    graft.streaming.Streaming.applyChangesSnapshot(parts.reduce(_.unionByName(_)))
   }
 
   /** q78: VACUUM / retention — time travel's other half (q77 reads
@@ -1461,11 +1476,11 @@ object Relational {
     // part of the lifecycle, and memoizing them keeps the vacuumed
     // chain exactly as a fresh build leaves it
     val chain = graft.BuildCache.build(s"q78:$dir") {
-      val c = q77WriteChain(s, dir, "q78_chain")
+      val c = writeChain(s, dir, "q78_chain", q77Cutoffs)
       q78VacuumChain(s, c, q78Horizon)
       c
     }
-    graft.streaming.Streaming.applyServing(q78AsOf(s, chain, q78Horizon, 2))
+    graft.streaming.Streaming.applyServing(replay(s, chain, "ckpt", q78Horizon, 2))
   }
 
   /** DuckDB oracle for q77: the direct latest-per-key snapshot at
@@ -1497,8 +1512,8 @@ object Relational {
     * enters. The log is bounded by the diff, never the table. */
   private[graft] def q81RestoreLog(s: SparkSession, chain: String,
       k: Int): DataFrame = {
-    val head = q77AsOf(s, chain, 3)
-    val target = q77AsOf(s, chain, k)
+    val head = replay(s, chain, "v0", 0, q77Cutoffs.size)
+    val target = replay(s, chain, "v0", 0, k)
       .withColumnsRenamed(Map("event_id" -> "t_event_id",
         "event_type" -> "t_event_type", "value" -> "t_value"))
       .drop("ts")
@@ -1543,15 +1558,17 @@ object Relational {
     // chain + restore-commit construction behind the build/probe
     // split (q92's sibling — the version chain is carried
     // state, the post-restore AS OF read is the served face)
+    // the restore commit is the version after the chain's head
+    val restoreV = q77Cutoffs.size + 1
     val chain = graft.BuildCache.build(s"q81:$dir") {
-      val c = q77WriteChain(s, dir, "q81_chain")
+      val c = writeChain(s, dir, "q81_chain", q77Cutoffs)
       val log = q81RestoreLog(s, c, q81Target)
-      log.write.mode("overwrite").parquet(s"$c/changes_4")
-      val replayed = Tables.parquet(s, s"$c/changes_4")
+      log.write.mode("overwrite").parquet(s"$c/changes_$restoreV")
+      val replayed = Tables.parquet(s, s"$c/changes_$restoreV")
       require(!replayed.isEmpty, "q81: the restore must genuinely bite")
       c
     }
-    graft.streaming.Streaming.applyServing(q77AsOf(s, chain, 4))
+    graft.streaming.Streaming.applyServing(replay(s, chain, "v0", 0, restoreV))
   }
 
   /** DuckDB oracle for q81: the direct snapshot at the TARGET
@@ -1581,71 +1598,38 @@ object Relational {
   private[graft] val q92Interval = 3
 
   /** q92's head version. */
-  private[graft] val q92Head = 6
+  private[graft] val q92Head = q92Bounds.size
 
   /** The version the registered face reads: checkpoint-UNALIGNED and
     * neither base nor head, so the read must combine a checkpoint
     * with trailing deltas — both mechanisms bite. */
   private[graft] val q92ReadVersion = 5
 
-  /** Persist q92's chain: v0 base snapshot + one change log per
-    * window (the q77WriteChain layout, 6 versions deep). */
-  private[graft] def q92WriteChain(s: SparkSession, dir: String,
-      tag: String = "q92_chain"): String = {
-    val S = graft.streaming.Streaming
-    val ev = Tables.events(s, dir)
-      .select("user_id", "event_id", "ts", "event_type", "value")
-    val out = graft.sources.Export.scratch(tag, dir)
-    S.applyChangesSnapshot(ev.filter(col("ts") <= lit(q92Bounds(0))))
-      .write.mode("overwrite").parquet(s"$out/v0")
-    (1 to q92Head).foreach { k =>
-      val lo = q92Bounds(k - 1)
-      val win =
-        if (k < q92Head)
-          ev.filter(col("ts") > lit(lo) && col("ts") <= lit(q92Bounds(k)))
-        else ev.filter(col("ts") > lit(lo))
-      win.write.mode("overwrite").parquet(s"$out/changes_$k")
-    }
-    out
-  }
-
-  /** Replay (checkpoint-or-base `from`, logs (from, k]] through the
-    * ONE latest-per-key rule. `from` = 0 reads the genesis base.
-    * `keys` restricts the replay to a key set BEFORE the
-    * latest-per-key window (safe — the window partitions by user_id,
-    * so restricting keys commutes with it): q93's Δ-restricted
-    * pre-image read, which must happen BELOW the window or the feed
-    * pays an O(table) shuffle for a tiny change window (Spark cannot
-    * push a join below a window). */
-  private[graft] def q92Replay(s: SparkSession, chain: String,
-      from: Int, k: Int, keys: Option[DataFrame] = None): DataFrame = {
-    val base =
-      if (from == 0) Tables.parquet(s, s"$chain/v0")
-      else Tables.parquet(s, s"$chain/ckpt_$from")
-    val parts = base +: (from + 1 to k).map(i =>
-      Tables.parquet(s, s"$chain/changes_$i"))
-    val all = parts.reduce(_.unionByName(_))
-    val scoped = keys.fold(all)(ks => all.join(ks, Seq("user_id"), "left_semi"))
-    graft.streaming.Streaming.applyChangesSnapshot(scoped)
-  }
+  /** The snapshot artifact holding version v of a checkpointed
+    * chain (v a multiple of the cadence): genesis or `ckpt_v`. */
+  private def q92Base(v: Int): String = if (v == 0) "v0" else s"ckpt_$v"
 
   /** Maintain the checkpoints: ckpt_K, ckpt_2K, … each replayed from
     * the PREVIOUS checkpoint plus its K deltas — checkpoint
     * maintenance itself is incremental (O(table + K logs) per
     * checkpoint), never a genesis replay. */
-  private[graft] def q92WriteCheckpoints(s: SparkSession, chain: String,
-      head: Int = q92Head): Unit =
-    (q92Interval to head by q92Interval).foreach { k =>
-      q92Replay(s, chain, k - q92Interval, k)
+  private[graft] def q92WriteCheckpoints(s: SparkSession, chain: String): Unit =
+    (q92Interval to q92Head by q92Interval).foreach { k =>
+      val from = k - q92Interval
+      replay(s, chain, q92Base(from), from, k)
         .write.mode("overwrite").parquet(s"$chain/ckpt_$k")
     }
 
   /** Read AS OF version k through the checkpoint index: route to the
     * nearest checkpoint at or below k, replay the ≤ K−1 trailing
-    * deltas. This is the read q77AsOf becomes once a chain is long:
-    * cost is bounded by the CADENCE, not the table's age. */
-  private[graft] def q92AsOf(s: SparkSession, chain: String, k: Int): DataFrame =
-    q92Replay(s, chain, (k / q92Interval) * q92Interval, k)
+    * deltas. This is the read a genesis replay becomes once a chain
+    * is long: cost is bounded by the CADENCE, not the table's age.
+    * `keys` is [[replay]]'s key restriction. */
+  private[graft] def q92AsOf(s: SparkSession, chain: String, k: Int,
+      keys: Option[DataFrame] = None): DataFrame = {
+    val from = (k / q92Interval) * q92Interval
+    replay(s, chain, q92Base(from), from, k, keys)
+  }
 
   /** q92: change-log CHECKPOINTING — the missing piece of the
     * q77/q78/q81 time-travel family:
@@ -1672,7 +1656,7 @@ object Relational {
     // construction (chain + checkpoints) behind the bench's
     // build/probe split; the served read below is the probe
     val chain = graft.BuildCache.build(s"q92:$dir") {
-      val c = q92WriteChain(s, dir)
+      val c = writeChain(s, dir, "q92_chain", q92Bounds)
       q92WriteCheckpoints(s, c)
       c
     }
@@ -1716,15 +1700,11 @@ object Relational {
     * the two served snapshots, which is what the oracle does). */
   private[graft] def q93Feed(s: SparkSession, chain: String,
       k1: Int, k2: Int): DataFrame = {
-    val win = (k1 + 1 to k2).map(i => Tables.parquet(s, s"$chain/changes_$i"))
-      .reduce(_.unionByName(_))
-    val net = graft.streaming.Streaming.applyChangesSnapshot(win)
+    val net = graft.streaming.Streaming.applyChangesSnapshot(logWindow(s, chain, k1, k2))
     // the Δ restriction is applied INSIDE the replay, below its
     // latest-per-key window — the pre-image genuinely costs O(Δ keys)
     // of shuffle, not O(table)
-    cdfFromNet(net, q92Replay(s, chain,
-      (k1 / q92Interval) * q92Interval, k1,
-      Some(net.select("user_id").distinct())))
+    cdfFromNet(net, q92AsOf(s, chain, k1, Some(net.select("user_id").distinct())))
   }
 
   /** The ONE net-CDF assembly — the window's net state classified
@@ -1786,7 +1766,7 @@ object Relational {
     * production one). */
   def q93ChangeFeed(s: SparkSession, dir: String): DataFrame = {
     val chain = graft.BuildCache.build(s"q93:$dir") {
-      val c = q92WriteChain(s, dir, "q93_chain")
+      val c = writeChain(s, dir, "q93_chain", q92Bounds)
       q92WriteCheckpoints(s, c)
       c
     }
@@ -1849,9 +1829,7 @@ object Relational {
   private[graft] def q89Overlap(s: SparkSession, chain: String,
       snapshotV: Int, headV: Int, keys: DataFrame): Long =
     if (headV <= snapshotV) 0L
-    else (snapshotV + 1 to headV)
-      .map(i => Tables.parquet(s, s"$chain/changes_$i"))
-      .reduce(_.unionByName(_)).select("user_id").distinct()
+    else logWindow(s, chain, snapshotV, headV).select("user_id").distinct()
       .join(keys, Seq("user_id")).count()
 
   /** q89's concurrent writers: three prepared commits over the SAME
@@ -1859,8 +1837,7 @@ object Relational {
     * user residue mod 3 (provably disjoint — the both-commit case);
     * W3's %5 slice straddles both (the planted conflict). */
   private[graft] def q89Logs(ev: DataFrame): Seq[(String, DataFrame)] = {
-    val win = ev.filter(col("ts") > lit(q77Cutoffs(0)) &&
-      col("ts") <= lit(q77Cutoffs(1)))
+    val win = chainWindows(ev, q77Cutoffs)._2.head
     Seq("w1" -> win.filter(col("user_id") % 3 === 0),
       "w2" -> win.filter(col("user_id") % 3 === 1),
       "w3" -> win.filter(col("user_id") % 5 === 0))
@@ -1897,8 +1874,7 @@ object Relational {
     val ev = Tables.events(s, dir)
       .select("user_id", "event_id", "ts", "event_type", "value")
     val chain = graft.sources.Export.scratch("q89_chain", dir)
-    graft.streaming.Streaming
-      .applyChangesSnapshot(ev.filter(col("ts") <= lit(q77Cutoffs(0))))
+    graft.streaming.Streaming.applyChangesSnapshot(chainWindows(ev, q77Cutoffs)._1)
       .write.mode("overwrite").parquet(s"$chain/v0")
     var head = 0
     var attemptId = 0
@@ -2031,13 +2007,9 @@ object Relational {
     val cleaned = Tables.events(s, dir)
       .select("event_id", "ts", "user_id", "event_type", "value")
       .filter(expr(q96GateConj))
-    val winA = cleaned.filter(col("ts") > lit(q77Cutoffs(0)) &&
-      col("ts") <= lit(q77Cutoffs(1)))
-    val winC = cleaned.filter(col("ts") > lit(q77Cutoffs(1)) &&
-      col("ts") <= lit(q77Cutoffs(2)))
-    val winB = winC.withColumn("event_type", expr(q96CorruptExpr))
-    (cleaned.filter(col("ts") <= lit(q77Cutoffs(0))),
-      Seq("w_a" -> winA, "w_b" -> winB, "w_c" -> winC))
+    val (base, logs) = chainWindows(cleaned, q77Cutoffs)
+    val winB = logs(1).withColumn("event_type", expr(q96CorruptExpr))
+    (base, Seq("w_a" -> logs(0), "w_b" -> winB, "w_c" -> logs(1)))
   }
 
   /** The audit: q40's gating conjunction as one conditional-sum scan
@@ -2159,9 +2131,8 @@ object Relational {
   private[graft] def q103Delta(s: SparkSession, dir: String, k: Int): DataFrame = {
     val ev = Tables.events(s, dir)
       .select("event_id", "ts", "user_id", "event_type", "value")
-    if (k == 1) ev.filter(col("ts") <= lit(q77Cutoffs(0)))
-    else ev.filter(col("ts") > lit(q77Cutoffs(k - 2)) &&
-      col("ts") <= lit(q77Cutoffs(k - 1)))
+    val (base, logs) = chainWindows(ev, q77Cutoffs)
+    if (k == 1) base else logs(k - 2)
   }
 
   /** The MV grain: mergeable per-event_type partials (count + exact

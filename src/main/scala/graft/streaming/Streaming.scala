@@ -2568,8 +2568,9 @@ object Streaming {
   /** s73's oracle IS q90's. Lazy per the s45Sql stance. */
   lazy val s73Sql: String = graft.operators.Relational.q90Sql
 
-  /** s74's head version (the three q77 change windows). */
-  private[graft] val s74Head = 3
+  /** s74's head version: one per q77 change window. A def — the
+    * Relational/Streaming objects reference each other's vals. */
+  private[graft] def s74Head: Int = graft.operators.Relational.q77Cutoffs.size
 
   /** s74's builder: fold the q77 change windows as live micro-batches
     * maintaining TWO artifacts per trigger — the latest snapshot MV
@@ -2584,13 +2585,8 @@ object Streaming {
     val R = graft.operators.Relational
     val ev = Tables.events(s, dir)
       .select("user_id", "event_id", "ts", "event_type", "value")
-    val cuts = R.q77Cutoffs
-    val base = applyChangesSnapshot(ev.filter(col("ts") <= lit(cuts(0))))
-    val batches = (1 to s74Head).map { k =>
-      if (k < s74Head)
-        ev.filter(col("ts") > lit(cuts(k - 1)) && col("ts") <= lit(cuts(k)))
-      else ev.filter(col("ts") > lit(cuts(s74Head - 1)))
-    }
+    val (v0, batches) = R.chainWindows(ev, R.q77Cutoffs)
+    val base = applyChangesSnapshot(v0)
     val stateDir = graft.sources.Export.scratch(tag, dir)
     val ledger0 = ev.filter(lit(false)).withColumn("version", lit(0))
     foldGenerations(s, stateDir,

@@ -995,6 +995,24 @@ class AnnSpec extends SparkSpec {
     }
   }
 
+  test("q94 orphan GC keeps the files of every manifest, a 4th commit's included") {
+    val root = Ann.a53Build(spark, sfDir, "q94m4spec_index")
+    // a 4th commit: a new data file in the layout plus a manifest
+    // that references it beside commit 3's files
+    val victim = java.nio.file.Paths.get(
+      graft.sources.Export.listParquet(s"$root/data").head)
+    val added = victim.getParent.resolve("commit4-data.parquet")
+    java.nio.file.Files.copy(victim, added)
+    val m3 = spark.read.parquet(s"$root/manifest_3").as[(String, String)].collect()
+    (m3 :+ ("data" -> added.toString)).toSeq.toDF("kind", "path")
+      .coalesce(1).write.parquet(s"$root/manifest_4")
+    val orphan = Ann.q94PlantOrphan(root)
+    val removed = Ann.q94RemoveOrphans(spark, root)
+    assert(removed == Seq(orphan), s"GC removed $removed, planted $orphan")
+    assert(java.nio.file.Files.exists(added),
+      "GC deleted a file only the 4th manifest references")
+  }
+
   test("a52 selective compaction: hybrid == full compaction; cold files untouched; hot cells clean") {
     import org.apache.spark.sql.functions._
     val hybrid = SparkEntry.queries("a52_cell_compaction")(spark, sfDir)

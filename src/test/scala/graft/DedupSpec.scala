@@ -69,28 +69,6 @@ class DedupSpec extends SparkSpec {
     assert(a == b)
   }
 
-  test("attach strategy: d23 output identical under Auto, Broadcast, and Shuffle attach") {
-    // the size-adaptive verify/attach must be a pure physical choice:
-    // the oracle-pinned row set may not depend on which join strategy
-    // attaches the shingle/size tables to the pair stream
-    val dir = sfDir
-    def rows(a: Dedup.Attach): Set[Seq[Any]] =
-      Dedup.d23DedupMinhashAttach(spark, dir, a).collect().map(_.toSeq).toSet
-    val auto = rows(Dedup.Attach.Auto)
-    assert(auto.nonEmpty, "corpus must contain near-dups")
-    assert(rows(Dedup.Attach.Broadcast) == auto, "Broadcast attach diverged")
-    assert(rows(Dedup.Attach.Shuffle) == auto, "Shuffle attach diverged")
-  }
-
-  test("attach strategy: d28 output identical under Auto, Broadcast, and Shuffle attach") {
-    def rows(a: Dedup.Attach): Set[Seq[Any]] =
-      Dedup.d28EmbedNeardupLshAttach(spark, sfDir, a).collect().map(_.toSeq).toSet
-    val auto = rows(Dedup.Attach.Auto)
-    assert(auto.nonEmpty)
-    assert(rows(Dedup.Attach.Broadcast) == auto)
-    assert(rows(Dedup.Attach.Shuffle) == auto)
-  }
-
   test("connected components: reliable checkpoint dir produces the same labels") {
     val ckpt = java.nio.file.Files.createTempDirectory("graftccckpt").toString
     try {

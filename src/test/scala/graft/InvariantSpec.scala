@@ -525,12 +525,12 @@ class InvariantSpec extends SparkSpec {
     val S = graft.streaming.Streaming
     val ev = Tables.events(spark, sfDir)
       .select("user_id", "event_id", "ts", "event_type", "value")
-    val chain = R.q77WriteChain(spark, sfDir)
+    val chain = R.writeChain(spark, sfDir, "q77_chain", R.q77Cutoffs)
     val cuts = R.q77Cutoffs
     // the Delta CDF closure, quantified over every version —
     // artifact level, INCLUDING tombstone rows
     for (k <- 0 to 3) {
-      val replayed = R.q77AsOf(spark, chain, k)
+      val replayed = R.replay(spark, chain, "v0", 0, k)
         .orderBy("user_id").collect().toSeq
       val direct = S.applyChangesSnapshot(
         if (k < 3) ev.filter(col("ts") <= lit(cuts(k))) else ev)
@@ -539,31 +539,31 @@ class InvariantSpec extends SparkSpec {
       assert(replayed.nonEmpty, s"version $k empty")
     }
     // the head's serving view IS s42's registered incremental apply
-    val head = S.applyServing(R.q77AsOf(spark, chain, 3)).collect().toSeq
+    val head = S.applyServing(R.replay(spark, chain, "v0", 0, 3)).collect().toSeq
     val s42 = SparkEntry.queries("s42_apply_changes")(spark, sfDir).collect().toSeq
     assert(head == s42, "head version != s42's incremental apply")
     // the chain is non-degenerate: versions differ
-    val heads = (0 to 3).map(k => R.q77AsOf(spark, chain, k)
+    val heads = (0 to 3).map(k => R.replay(spark, chain, "v0", 0, k)
       .agg(max("event_id")).head.getLong(0))
     assert(heads.distinct.size >= 2, s"degenerate chain: $heads")
   }
 
   test("q78 vacuum: surviving versions identical, below-horizon fails fast, artifacts gone") {
     val R = graft.operators.Relational
-    val chain = R.q77WriteChain(spark, sfDir, "q78spec_chain")
+    val chain = R.writeChain(spark, sfDir, "q78spec_chain", R.q77Cutoffs)
     val h = R.q78Horizon
     val before = (h to 3).map(k =>
-      R.q77AsOf(spark, chain, k).orderBy("user_id").collect().toSeq)
+      R.replay(spark, chain, "v0", 0, k).orderBy("user_id").collect().toSeq)
     R.q78VacuumChain(spark, chain, h)
     // every surviving version reads byte-identically through the
     // checkpoint + surviving logs
     (h to 3).zip(before).foreach { case (k, b) =>
-      val after = R.q78AsOf(spark, chain, h, k).orderBy("user_id").collect().toSeq
+      val after = R.replay(spark, chain, "ckpt", h, k).orderBy("user_id").collect().toSeq
       assert(after == b, s"version $k changed across vacuum")
     }
     // below the horizon: a fail-fast, not a wrong answer
     intercept[IllegalArgumentException] {
-      R.q78AsOf(spark, chain, h, h - 1)
+      R.replay(spark, chain, "ckpt", h, h - 1)
     }
     // the base and compacted logs are genuinely gone; the surviving
     // logs and the checkpoint are present
@@ -581,22 +581,22 @@ class InvariantSpec extends SparkSpec {
   test("q81 restore: post-restore head serves the target version; history preserved; head-restore is identity") {
     val R = graft.operators.Relational
     val S = graft.streaming.Streaming
-    val chain = R.q77WriteChain(spark, sfDir, "q81spec_chain")
+    val chain = R.writeChain(spark, sfDir, "q81spec_chain", R.q77Cutoffs)
     val k = R.q81Target
-    val headBefore = R.q77AsOf(spark, chain, 3)
+    val headBefore = R.replay(spark, chain, "v0", 0, 3)
       .orderBy("user_id").collect().toSeq
     val log = R.q81RestoreLog(spark, chain, k)
     log.write.mode("overwrite").parquet(s"$chain/changes_4")
     // serving the post-restore head == serving the target version
-    val restored = S.applyServing(R.q77AsOf(spark, chain, 4)).collect().toSeq
-    val target = S.applyServing(R.q77AsOf(spark, chain, k)).collect().toSeq
+    val restored = S.applyServing(R.replay(spark, chain, "v0", 0, 4)).collect().toSeq
+    val target = S.applyServing(R.replay(spark, chain, "v0", 0, k)).collect().toSeq
     assert(restored == target, "restored head != target version at serving")
     // history is preserved: the pre-restore head still reads unchanged
-    val headAfter = R.q77AsOf(spark, chain, 3)
+    val headAfter = R.replay(spark, chain, "v0", 0, 3)
       .orderBy("user_id").collect().toSeq
     assert(headAfter == headBefore, "restore must not rewrite history")
     // the restore genuinely bit: head and restored head differ
-    val headServed = S.applyServing(R.q77AsOf(spark, chain, 3)).collect().toSeq
+    val headServed = S.applyServing(R.replay(spark, chain, "v0", 0, 3)).collect().toSeq
     assert(headServed != restored, "degenerate restore: head == target")
     // both branches populate: >=1 tombstone (insert-after-k undone)
     // and >=1 re-assert (moved key rolled back)
@@ -606,9 +606,9 @@ class InvariantSpec extends SparkSpec {
     assert(byType.getOrElse(false, 0L) > 0, "no re-assert branch exercised")
     // the log is exactly the key diff: one row per key whose winning
     // event moved (or that did not exist at the target)
-    val h = R.q77AsOf(spark, chain, 3).select("user_id", "event_id")
+    val h = R.replay(spark, chain, "v0", 0, 3).select("user_id", "event_id")
       .withColumnRenamed("event_id", "h_eid")
-    val t = R.q77AsOf(spark, chain, k).select("user_id", "event_id")
+    val t = R.replay(spark, chain, "v0", 0, k).select("user_id", "event_id")
       .withColumnRenamed("event_id", "t_eid")
     val diffKeys = h.join(t, Seq("user_id"), "left")
       .filter(col("t_eid").isNull || col("t_eid") =!= col("h_eid")).count()
@@ -718,7 +718,7 @@ class InvariantSpec extends SparkSpec {
 
   test("q92 checkpointing: checkpoint-routed read == genesis replay for EVERY version; read scans only ckpt + trailing deltas") {
     val R = graft.operators.Relational
-    val chain = R.q92WriteChain(spark, sfDir, "q92spec_chain")
+    val chain = R.writeChain(spark, sfDir, "q92spec_chain", R.q92Bounds)
     R.q92WriteCheckpoints(spark, chain)
     // the checkpoint closure, quantified over every version —
     // artifact level, INCLUDING tombstone rows. Covers both new
@@ -729,7 +729,7 @@ class InvariantSpec extends SparkSpec {
     for (k <- 0 to R.q92Head) {
       val routed = R.q92AsOf(spark, chain, k)
         .orderBy("user_id").collect().toSeq
-      val genesis = R.q92Replay(spark, chain, 0, k)
+      val genesis = R.replay(spark, chain, "v0", 0, k)
         .orderBy("user_id").collect().toSeq
       assert(routed == genesis, s"version $k: checkpoint route != genesis replay")
       assert(routed.nonEmpty, s"version $k empty")
@@ -753,14 +753,14 @@ class InvariantSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     val R = graft.operators.Relational
     val S = graft.streaming.Streaming
-    val chain = R.q92WriteChain(spark, sfDir, "q93spec_chain")
+    val chain = R.writeChain(spark, sfDir, "q93spec_chain", R.q92Bounds)
     R.q92WriteCheckpoints(spark, chain)
     // serving-level diff of two chain versions, computed the brute
     // way (two full served snapshots, q35's classification) — an
     // independent recompute sharing no code with q93Feed's
     // window-net + restricted-pre path
     def served(k: Int): Map[Long, (Long, String, Double)] =
-      S.applyChangesSnapshot(R.q92Replay(spark, chain, 0, k))
+      S.applyChangesSnapshot(R.replay(spark, chain, "v0", 0, k))
         .filter(col("event_type") =!= "error")
         .select(col("user_id"), col("event_id"), col("event_type"),
           round(col("value"), 4).as("value"))
