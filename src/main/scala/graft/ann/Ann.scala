@@ -3,7 +3,7 @@ package graft.ann
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.{Par, Tables}
+import graft.{Entry, Par, Tables}
 
 /** Approximate-nearest-neighbor search over the `embeddings` table
   * (`embedding: array<float>`, 64-dim).
@@ -197,7 +197,6 @@ object Ann {
     import org.apache.spark.mllib.clustering.GraftKMeans
     import org.apache.spark.mllib.linalg.Vectors
     val nlist = 16
-    val nprobe = 4
     val corpus = withNorm(Tables.embeddings(s, dir).select("vec_id", "embedding"))
       .withColumn("features", array_to_vector(col("embedding")))
     // the quantizer trains on a bounded deterministic sample, never
@@ -224,7 +223,7 @@ object Ann {
     val cellOf = udf((v: MLVector) => model.predict(Vectors.fromML(v)))
     val assigned = corpus.select(col("vec_id"), col("embedding"), col("norm"),
       cellOf(col("features")).as("cell"))
-    // route each query to its nprobe nearest centroids (centroids are
+    // route each query to its Nprobe nearest centroids (centroids are
     // driver-side model state — nlist × dim doubles, not data)
     val centroids = model.clusterCenters.map(_.toArray)
     def nearestCells(v: Array[Double]): Seq[Int] =
@@ -232,7 +231,7 @@ object Ann {
         var d = 0.0; var j = 0
         while (j < v.length) { val t = v(j) - c(j); d += t * t; j += 1 }
         (d, i)
-      }.sortBy(_._1).take(nprobe).map(_._2).toSeq
+      }.sortBy(_._1).take(Nprobe).map(_._2).toSeq
     import s.implicits._
     val queryRows = corpus.filter(col("vec_id") < NQ)
       .select(col("vec_id"), col("embedding"), col("norm"))
@@ -289,35 +288,29 @@ object Ann {
          |    0D, (s, v) -> s + v))""".stripMargin)
   }
 
+  /** The cells an IVF query probes (a29, a29b, a33 and the persisted
+    * index family). */
+  private val Nprobe = 4
+
+  /** A vector's cell: the argmin of its `dl` column
+    * ([[centroidDistsExpr]]) via first-position-of-min, so ties
+    * (bit-equal distances) break to the lowest cell id in BOTH
+    * engines. */
+  private[graft] def nearestCellExpr: Column =
+    expr("CAST(array_position(dl, array_min(dl)) - 1 AS INT)")
+
+  /** A query's [[Nprobe]] nearest cells over `dl`: sort (distance,
+    * cell) structs — lexicographic struct order = distance asc, ties
+    * by cell id — and take the first Nprobe indices. The query's own
+    * cell is by construction the first. */
+  private def probeCellsExpr: Column =
+    expr(s"""transform(slice(array_sort(
+            |  zip_with(dl, sequence(0, 15), (d, i) -> struct(d, i))), 1, $Nprobe),
+            |  s -> s.i)""".stripMargin)
+
   def a29bAnnIvfOracle(s: SparkSession, dir: String): DataFrame = {
-    val nprobe = 4
-    val corpus = withNorm(Tables.embeddings(s, dir).select("vec_id", "embedding"))
-      .withColumn("dl", centroidDistsExpr("embedding"))
-      // argmin via first-position-of-min: ties (bit-equal distances)
-      // break to the lowest cell id in BOTH engines
-      .withColumn("cell", expr("CAST(array_position(dl, array_min(dl)) - 1 AS INT)"))
-    // nprobe nearest cells per query: sort (distance, cell) structs —
-    // lexicographic struct order = distance asc, ties by cell id —
-    // and take the first nprobe indices. The query's own cell is by
-    // construction probe_cells[0].
-    val queries = corpus.filter(col("vec_id") < NQ).select(
-      col("vec_id").as("query_id"),
-      col("embedding").as("q_embedding"),
-      col("norm").as("q_norm"),
-      expr(s"""transform(slice(array_sort(
-              |  zip_with(dl, sequence(0, 15), (d, i) -> struct(d, i))), 1, $nprobe),
-              |  s -> s.i)""".stripMargin).as("probe_cells"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    corpus.select("vec_id", "embedding", "norm", "cell")
-      .join(broadcast(queries),
-        array_contains(col("probe_cells"), col("cell")) &&
-          col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(cosine, 4).as("cosine"))
-      .withColumn("rank", row_number().over(w)).filter(col("rank") <= K)
-      .select("query_id", "rank", "neighbor_id", "cosine")
-      .orderBy("query_id", "rank")
+    val corpus = ivfRoutedCorpus(s, dir)
+    ivfScore(corpus, ivfProbeQueries(corpus))
   }
 
   /** DuckDB oracle for a29b: identical literal centroids, identical
@@ -817,7 +810,6 @@ object Ann {
 
   def a33AnnIvfPq(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val nprobe = 4
     // spread (the a42Base rationale): the encode chain below is heavy
     // per-row array math (16-centroid routing + 8 codebook argmins over
     // the residual) that inherits the SCAN's partitioning, and the gate
@@ -826,7 +818,7 @@ object Ann {
     val base = Tables.embeddings(s, dir).select("vec_id", "embedding")
       .transform(Par.spread(_, col("vec_id")))
       .withColumn("dl", centroidDistsExpr("embedding"))
-      .withColumn("cell", expr("CAST(array_position(dl, array_min(dl)) - 1 AS INT)"))
+      .withColumn("cell", nearestCellExpr)
     // corpus: residual vs the assigned cell's centroid, PQ-encoded
     // with a32's codebooks (one global residual codebook set — the
     // FAISS IVFPQ default). Encode is a pure scan-stage projection.
@@ -843,15 +835,12 @@ object Ann {
     }
     val enc = enc0.select(Seq(col("vec_id"), col("cell")) ++
       (0 until pqM).map(m => col(s"code_$m")): _*)
-    // queries: a29b's nprobe routing (struct-sort of (distance, cell)),
-    // exploded to one row per probed cell, each with the residual-domain
-    // squared-L2 LUT for THAT cell's centroid
+    // queries: a29b's probe cells, exploded to one row per probed
+    // cell, each with the residual-domain squared-L2 LUT for THAT
+    // cell's centroid
     val qx = base.filter(col("vec_id") < NQ)
       .select(col("vec_id").as("query_id"), col("embedding"),
-        explode(expr(
-          s"""transform(slice(array_sort(
-             |  zip_with(dl, sequence(0, 15), (d, i) -> struct(d, i))), 1, $nprobe),
-             |  s -> s.i)""".stripMargin)).as("pcell"))
+        explode(probeCellsExpr).as("pcell"))
       .withColumn("qresid", expr(
         s"zip_with(embedding, element_at($centsSparkLit, pcell + 1), (x, p) -> CAST(x AS DOUBLE) - p)"))
     val qlut = (0 until pqM).foldLeft(qx) { (df, m) =>
@@ -1125,17 +1114,16 @@ object Ann {
   private[graft] def ivfRoutedCorpus(s: SparkSession, dir: String): DataFrame =
     withNorm(Tables.embeddings(s, dir).select("vec_id", "embedding"))
       .withColumn("dl", centroidDistsExpr("embedding"))
-      .withColumn("cell", expr("CAST(array_position(dl, array_min(dl)) - 1 AS INT)"))
+      .withColumn("cell", nearestCellExpr)
 
-  /** a29b's nprobe-cell query routing over the routed corpus. */
-  private[graft] def ivfProbeQueries(corpus: DataFrame, nprobe: Int = 4): DataFrame =
+  /** a29b's query routing over the routed corpus: each query's
+    * [[probeCellsExpr]]. */
+  private[graft] def ivfProbeQueries(corpus: DataFrame): DataFrame =
     corpus.filter(col("vec_id") < NQ).select(
       col("vec_id").as("query_id"),
       col("embedding").as("q_embedding"),
       col("norm").as("q_norm"),
-      expr(s"""transform(slice(array_sort(
-              |  zip_with(dl, sequence(0, 15), (d, i) -> struct(d, i))), 1, $nprobe),
-              |  s -> s.i)""".stripMargin).as("probe_cells"))
+      probeCellsExpr.as("probe_cells"))
 
   /** Probe a persisted `partitionBy(cell)` IVF artifact: the literal
     * probe-cell filter (partition pruning — the invlist seek), then
@@ -1163,6 +1151,14 @@ object Ann {
     // not index-sized) AFTER pruning, so only probed cells pay it
     val index = tombstones.fold(pruned)(t =>
       pruned.join(broadcast(t), Seq("vec_id"), "left_anti"))
+    ivfScore(index, queries)
+  }
+
+  /** a29b's scoring tail: every member of a query's probe cells
+    * (itself excluded) scored by rounded cosine, top-K by (cosine
+    * desc, neighbor_id). Shared by a29b's recompute and every probe
+    * of a persisted index. */
+  private def ivfScore(index: DataFrame, queries: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cosine").desc, col("neighbor_id"))
     index.select("vec_id", "embedding", "norm", "cell")
@@ -1210,16 +1206,6 @@ object Ann {
       .write.mode("append").partitionBy("cell").parquet(idxDir)
     probePersistedIvf(s, idxDir, ivfProbeQueries(corpus))
   }
-
-  /** a36's oracle IS a29b's: probe-from-persisted must equal the
-    * in-memory recompute — sharing the SQL makes the property the
-    * gate itself checks. */
-  val a36Sql: String = a29bSql
-
-  /** a37's oracle IS a29b's too: build-old + append-batch + probe
-    * must land exactly on the full recompute — the incremental ==
-    * recompute property as the gate itself. */
-  val a37Sql: String = a29bSql
 
   /** a38 delete slice — shared by the tombstone writer, the
     * compaction filter, and (negated, interpolated) the oracle. */
@@ -1338,10 +1324,6 @@ object Ann {
     probePersistedIvf(s, hybrid, ivfProbeQueries(live), Some(coldTombs))
   }
 
-  /** a52's oracle IS a38's: hybrid compaction == full compaction ==
-    * recompute on the live slice. */
-  val a52Sql: String = a38Sql
-
   /** Merge persisted IVF shard layouts at the FILE level: every
     * shard invlist file is copied into the merged layout's matching
     * cell directory — O(#files) driver-side metadata, NO vector is
@@ -1401,10 +1383,6 @@ object Ann {
     a50MergeLayouts(Seq(shardA, shardB), merged)
     probePersistedIvf(s, merged, ivfProbeQueries(corpus))
   }
-
-  /** a50's oracle IS a29b's: the merged artifact must serve exactly
-    * the full-corpus recompute. */
-  val a50Sql: String = a29bSql
 
   /** Build a53's versioned index: one append-only physical layout
     * plus one MANIFEST per commit (rows of (kind, path) — the
@@ -1709,10 +1687,6 @@ object Ann {
        |ORDER BY regime""".stripMargin
   }
 
-  /** q94's oracle IS a38's: a layout scrubbed of uncommitted garbage
-    * serves every retained version unchanged. */
-  val q94Sql: String = a38Sql
-
   /** a39: recall evaluation — index QUALITY as a first-class
     * operator: per query, how many of the exact top-K (a27's
     * brute-force pipeline, unchanged) does the IVF probe (a29b's
@@ -1923,9 +1897,6 @@ object Ann {
     * parallelism linearly while the gather stays evaluation-sized. */
   def a40AnnShard(s: SparkSession, dir: String): DataFrame =
     rankedTopK(s, a40Candidates(s, dir))
-
-  /** a40's oracle IS a27's: shard decomposition changes nothing. */
-  val a40Sql: String = a27Sql
 
   /** a41: maximum-inner-product search (MIPS) through the cosine-LSH
     * machinery via the norm-augmentation reduction (Bachrach et al.
@@ -2760,9 +2731,7 @@ object Ann {
     * scored row), two bounded-key aggregates, and a 1-row total
     * broadcast. No join grows with nprobe. */
   def a47NprobeCurve(s: SparkSession, dir: String): DataFrame = {
-    val corpus = withNorm(Tables.embeddings(s, dir).select("vec_id", "embedding"))
-      .withColumn("dl", centroidDistsExpr("embedding"))
-      .withColumn("cell", expr("CAST(array_position(dl, array_min(dl)) - 1 AS INT)"))
+    val corpus = ivfRoutedCorpus(s, dir)
     val qcells = corpus.filter(col("vec_id") < NQ)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"),
         col("norm").as("q_norm"),
@@ -2889,8 +2858,7 @@ object Ann {
     val corpus = Par.spread(withNorm(Tables.embeddings(s, dir)
         .select("vec_id", "embedding", "label")), col("vec_id"))
       .withColumn("dl", centroidDistsExpr("embedding"))
-      .withColumn("cell",
-        expr("CAST(array_position(dl, array_min(dl)) - 1 AS INT)"))
+      .withColumn("cell", nearestCellExpr)
       .select("vec_id", "embedding", "norm", "label", "cell")
     val anchors = corpus.select(col("cell"), col("vec_id").as("anchor_id"),
       col("embedding").as("q_embedding"), col("norm").as("q_norm"),
@@ -3139,69 +3107,43 @@ object Ann {
        |ORDER BY query_id, cos DESC, neighbor_id""".stripMargin
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "a27_ann_brute" -> (a27AnnBrute _),
-    "a28_ann_lsh" -> (a28AnnLsh _),
-    "a29_ann_ivf" -> (a29AnnIvf _),
-    "a29b_ann_ivf_oracle" -> (a29bAnnIvfOracle _),
-    "a30_ann_sq" -> (a30AnnSq _),
-    "a31_ann_rerank" -> (a31AnnRerank _),
-    "a32_ann_pq" -> (a32AnnPq _),
-    "a33_ann_ivfpq" -> (a33AnnIvfPq _),
-    "a34_ann_filtered" -> (a34AnnFiltered _),
-    "a35_ann_filtered_rerank" -> (a35AnnFilteredRerank _),
-    "a36_ann_persisted_ivf" -> (a36AnnPersistedIvf _),
-    "a37_ann_ivf_insert" -> (a37AnnIvfInsert _),
-    "a38_ann_delete" -> (a38AnnDelete _),
-    "a39_recall_eval" -> (a39RecallEval _),
-    "a40_ann_shard" -> (a40AnnShard _),
-    "a41_ann_mips" -> (a41AnnMips _),
-    "a42_ann_ivf_mips" -> (a42AnnIvfMips _),
-    "a43_persisted_mips" -> (a43PersistedMips _),
-    "a44_cell_stats" -> (a44CellStats _),
-    "a45_cell_split" -> (a45CellSplit _),
-    "a46_cell_merge" -> (a46CellMerge _),
-    "a47_nprobe_curve" -> (a47NprobeCurve _),
-    "a48_hard_negatives" -> (a48HardNegatives _),
-    "a49_knn_join" -> (a49KnnJoin _),
-    "a50_index_merge" -> (a50IndexMerge _),
-    "a51_range_search" -> (a51RangeSearch _),
-    "a52_cell_compaction" -> (a52CellCompaction _),
-    "a53_index_time_travel" -> (a53IndexTimeTravel _),
-    "a54_retrain_decision" -> (a54RetrainDecision _),
-    "a55_pq_tradeoff" -> (a55PqTradeoff _),
-    "q94_orphan_gc" -> (q94OrphanGc _))
-
-  def oracles: Map[String, String] = Map(
-    "a27_ann_brute" -> a27Sql,
-    "a28_ann_lsh" -> a28Sql,
-    "a29b_ann_ivf_oracle" -> a29bSql,
-    "a30_ann_sq" -> a30Sql,
-    "a31_ann_rerank" -> a31Sql,
-    "a32_ann_pq" -> a32Sql,
-    "a33_ann_ivfpq" -> a33Sql,
-    "a34_ann_filtered" -> a34Sql,
-    "a35_ann_filtered_rerank" -> a35Sql,
-    "a36_ann_persisted_ivf" -> a36Sql,
-    "a37_ann_ivf_insert" -> a37Sql,
-    "a38_ann_delete" -> a38Sql,
-    "a39_recall_eval" -> a39Sql,
-    "a40_ann_shard" -> a40Sql,
-    "a41_ann_mips" -> a41Sql,
-    "a42_ann_ivf_mips" -> a42Sql,
+  def entries: Seq[Entry] = Seq(
+    Entry("a27_ann_brute", a27AnnBrute, a27Sql),
+    Entry("a28_ann_lsh", a28AnnLsh, a28Sql),
+    Entry("a29_ann_ivf", a29AnnIvf),
+    Entry("a29b_ann_ivf_oracle", a29bAnnIvfOracle, a29bSql),
+    Entry("a30_ann_sq", a30AnnSq, a30Sql),
+    Entry("a31_ann_rerank", a31AnnRerank, a31Sql),
+    Entry("a32_ann_pq", a32AnnPq, a32Sql),
+    Entry("a33_ann_ivfpq", a33AnnIvfPq, a33Sql),
+    Entry("a34_ann_filtered", a34AnnFiltered, a34Sql),
+    Entry("a35_ann_filtered_rerank", a35AnnFilteredRerank, a35Sql),
+    // probe-from-persisted must equal the in-memory recompute
+    Entry("a36_ann_persisted_ivf", a36AnnPersistedIvf, a29bSql),
+    // build-old + append-batch + probe must land exactly on the full recompute
+    Entry("a37_ann_ivf_insert", a37AnnIvfInsert, a29bSql),
+    Entry("a38_ann_delete", a38AnnDelete, a38Sql),
+    Entry("a39_recall_eval", a39RecallEval, a39Sql),
+    // shard decomposition changes nothing
+    Entry("a40_ann_shard", a40AnnShard, a27Sql),
+    Entry("a41_ann_mips", a41AnnMips, a41Sql),
+    Entry("a42_ann_ivf_mips", a42AnnIvfMips, a42Sql),
     // a43's oracle IS a42's: probe-from-persisted == recompute
-    "a43_persisted_mips" -> a42Sql,
-    "a44_cell_stats" -> a44Sql,
-    "a45_cell_split" -> a45Sql,
-    "a46_cell_merge" -> a46Sql,
-    "a47_nprobe_curve" -> a47Sql,
-    "a48_hard_negatives" -> a48Sql,
-    "a49_knn_join" -> a49Sql,
-    "a50_index_merge" -> a50Sql,
-    "a51_range_search" -> a51Sql,
-    "a52_cell_compaction" -> a52Sql,
-    "a53_index_time_travel" -> a53Sql,
-    "a54_retrain_decision" -> a54Sql,
-    "a55_pq_tradeoff" -> a55Sql,
-    "q94_orphan_gc" -> q94Sql)
+    Entry("a43_persisted_mips", a43PersistedMips, a42Sql),
+    Entry("a44_cell_stats", a44CellStats, a44Sql),
+    Entry("a45_cell_split", a45CellSplit, a45Sql),
+    Entry("a46_cell_merge", a46CellMerge, a46Sql),
+    Entry("a47_nprobe_curve", a47NprobeCurve, a47Sql),
+    Entry("a48_hard_negatives", a48HardNegatives, a48Sql),
+    Entry("a49_knn_join", a49KnnJoin, a49Sql),
+    // the merged artifact must serve exactly the full-corpus recompute
+    Entry("a50_index_merge", a50IndexMerge, a29bSql),
+    Entry("a51_range_search", a51RangeSearch, a51Sql),
+    // hybrid compaction == full compaction == recompute on the live slice
+    Entry("a52_cell_compaction", a52CellCompaction, a38Sql),
+    Entry("a53_index_time_travel", a53IndexTimeTravel, a53Sql),
+    Entry("a54_retrain_decision", a54RetrainDecision, a54Sql),
+    Entry("a55_pq_tradeoff", a55PqTradeoff, a55Sql),
+    // a layout scrubbed of uncommitted garbage serves every retained version unchanged
+    Entry("q94_orphan_gc", q94OrphanGc, a38Sql))
 }

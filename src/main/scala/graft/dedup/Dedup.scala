@@ -3,7 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.{Par, Tables}
+import graft.{Entry, Par, Tables}
 import graft.functions.SetExprs
 
 /** Deduplication family for the LLM training-data pipeline:
@@ -2160,8 +2160,7 @@ object Dedup {
   def d36ClusterSample(s: SparkSession, dir: String): DataFrame = {
     val base = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
       .withColumn("dl", graft.ann.Ann.centroidDistsExpr("embedding"))
-      .withColumn("cell",
-        expr("CAST(array_position(dl, array_min(dl)) - 1 AS INT)"))
+      .withColumn("cell", graft.ann.Ann.nearestCellExpr)
       .withColumn("draw", expr(
         "cast(conv(substring(md5(cast(vec_id as string)), 1, 7), 16, 10) as bigint)"))
     graft.functions.Ranks
@@ -2721,8 +2720,8 @@ object Dedup {
 
   /** DuckDB oracle for d46: a42's shared build CTEs, the identical
     * top-2 integer-L2 assignment, DISTINCT within-cell pairs, d26's
-    * rounded-cosine verify, keep-min rollup. Lazy: cross-object
-    * oracle refs at init are the known NPE cycle. */
+    * rounded-cosine verify, keep-min rollup. Lazy: it reads Ann
+    * (see [[graft.Entry]]). */
   lazy val d46Sql: String =
     s"""WITH ${graft.ann.Ann.a42BuildCte},
        |asg AS (
@@ -3665,83 +3664,46 @@ object Dedup {
        |      ELSE 'accepted' END AS status
        |FROM batch ORDER BY doc_id""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "d22_dedup_exact" -> (d22DedupExact _),
-    "d23_dedup_minhash" -> (d23DedupMinhash _),
-    "d23b_minhash_oracle" -> (d23bMinhashOracle _),
-    "d24_dedup_simhash" -> (d24DedupSimhash _),
-    "d24b_simhash_oracle" -> (d24bSimhashOracle _),
-    "d25_ngram_jaccard" -> (d25NgramJaccard _),
-    "d25b_ngram_banded" -> (d25NgramJaccardBanded _),
-    "d25c_ngram_banded_oracle" -> (d25cNgramBandedOracle _),
-    "d26_embed_neardup" -> (d26EmbedNeardup _),
-    "d27_dedup_components" -> (d27DedupComponents _),
-    "d27b_components_oracle" -> (d27bComponentsOracle _),
-    "d28_embed_neardup_lsh" -> (d28EmbedNeardupLsh _),
-    "d29_decontaminate" -> (d29Decontaminate _),
-    "d33_bloom_decontaminate" -> (d33BloomDecontaminate _),
-    "d30_repeated_ngrams" -> (d30RepeatedNgrams _),
-    "d31_passage_scrub" -> (d31PassageScrub _),
-    "d32_embed_dedup" -> (d32EmbedDedup _),
-    "d34_line_dedup" -> (d34LineDedup _),
-    "d35_incremental_dedup" -> (d35IncrementalDedup _),
-    "d36_cluster_sample" -> (d36ClusterSample _),
-    "d37_incremental_neardup" -> (d37IncrementalNeardup _),
-    "d38_incremental_embed_neardup" -> (d38IncrementalEmbedNeardup _),
-    "d39_incremental_components" -> (d39IncrementalComponents _),
-    "d40_daily_admit" -> (d40DailyAdmit _),
-    "d41_fuzzy_decontaminate" -> (d41FuzzyDecontaminate _),
-    "d42_quality_keep" -> (d42QualityKeep _),
-    "d43_admission_audit" -> (d43AdmissionAudit _),
-    "d44_substring_dedup" -> (d44SubstringDedup _),
-    "d45_substring_scrub" -> (d45SubstringScrub _),
-    "d46_semantic_dedup" -> (d46SemanticDedup _),
-    "d47_index_forget" -> (d47IndexForget _),
-    "d48_containment_dedup" -> (d48ContainmentDedup _),
-    "d49_contamination_report" -> (d49ContaminationReport _),
-    "d50_url_dedup" -> (d50UrlDedup _),
-    "d51_neardup_eval" -> (d51NeardupEval _),
-    "d52_corpus_overlap" -> (d52CorpusOverlap _),
-    "d53_banding_curve" -> (d53BandingCurve _),
-    "d54_overlap_matrix" -> (d54OverlapMatrix _),
-    "d55_canonical_dedup" -> (d55CanonicalDedup _))
-
-  def oracles: Map[String, String] = Map(
-    "d22_dedup_exact" -> d22Sql,
-    "d23b_minhash_oracle" -> d23bSql,
-    "d24b_simhash_oracle" -> d24bSql,
-    "d25_ngram_jaccard" -> d25Sql,
-    "d25c_ngram_banded_oracle" -> d25cSql,
-    "d26_embed_neardup" -> d26Sql,
-    "d27b_components_oracle" -> d27bSql,
-    "d28_embed_neardup_lsh" -> d28Sql,
-    "d29_decontaminate" -> d29Sql,
-    "d33_bloom_decontaminate" -> d33Sql,
-    "d30_repeated_ngrams" -> d30Sql,
-    "d31_passage_scrub" -> d31Sql,
-    "d32_embed_dedup" -> d32Sql,
-    "d34_line_dedup" -> d34Sql,
-    "d35_incremental_dedup" -> d35Sql,
-    "d36_cluster_sample" -> d36Sql,
-    "d37_incremental_neardup" -> d37Sql,
-    "d38_incremental_embed_neardup" -> d38Sql,
+  def entries: Seq[Entry] = Seq(
+    Entry("d22_dedup_exact", d22DedupExact, d22Sql),
+    Entry("d23_dedup_minhash", d23DedupMinhash),
+    Entry("d23b_minhash_oracle", d23bMinhashOracle, d23bSql),
+    Entry("d24_dedup_simhash", d24DedupSimhash),
+    Entry("d24b_simhash_oracle", d24bSimhashOracle, d24bSql),
+    Entry("d25_ngram_jaccard", d25NgramJaccard, d25Sql),
+    Entry("d25b_ngram_banded", d25NgramJaccardBanded),
+    Entry("d25c_ngram_banded_oracle", d25cNgramBandedOracle, d25cSql),
+    Entry("d26_embed_neardup", d26EmbedNeardup, d26Sql),
+    Entry("d27_dedup_components", d27DedupComponents),
+    Entry("d27b_components_oracle", d27bComponentsOracle, d27bSql),
+    Entry("d28_embed_neardup_lsh", d28EmbedNeardupLsh, d28Sql),
+    Entry("d29_decontaminate", d29Decontaminate, d29Sql),
+    Entry("d33_bloom_decontaminate", d33BloomDecontaminate, d33Sql),
+    Entry("d30_repeated_ngrams", d30RepeatedNgrams, d30Sql),
+    Entry("d31_passage_scrub", d31PassageScrub, d31Sql),
+    Entry("d32_embed_dedup", d32EmbedDedup, d32Sql),
+    Entry("d34_line_dedup", d34LineDedup, d34Sql),
+    Entry("d35_incremental_dedup", d35IncrementalDedup, d35Sql),
+    Entry("d36_cluster_sample", d36ClusterSample, d36Sql),
+    Entry("d37_incremental_neardup", d37IncrementalNeardup, d37Sql),
+    Entry("d38_incremental_embed_neardup", d38IncrementalEmbedNeardup, d38Sql),
     // d39's oracle IS the full-recompute d32 SQL: incremental label
     // maintenance must equal re-clustering from scratch
-    "d39_incremental_components" -> d32Sql,
-    "d40_daily_admit" -> d40Sql,
-    "d41_fuzzy_decontaminate" -> d41Sql,
-    "d42_quality_keep" -> d42Sql,
-    "d43_admission_audit" -> d43Sql,
-    "d44_substring_dedup" -> d44Sql,
-    "d45_substring_scrub" -> d45Sql,
-    "d46_semantic_dedup" -> d46Sql,
-    "d47_index_forget" -> d47Sql,
-    "d48_containment_dedup" -> d48Sql,
-    "d49_contamination_report" -> d49Sql,
-    "d50_url_dedup" -> d50Sql,
-    "d51_neardup_eval" -> d51Sql,
-    "d52_corpus_overlap" -> d52Sql,
-    "d53_banding_curve" -> d53Sql,
-    "d54_overlap_matrix" -> d54Sql,
-    "d55_canonical_dedup" -> d55Sql)
+    Entry("d39_incremental_components", d39IncrementalComponents, d32Sql),
+    Entry("d40_daily_admit", d40DailyAdmit, d40Sql),
+    Entry("d41_fuzzy_decontaminate", d41FuzzyDecontaminate, d41Sql),
+    Entry("d42_quality_keep", d42QualityKeep, d42Sql),
+    Entry("d43_admission_audit", d43AdmissionAudit, d43Sql),
+    Entry("d44_substring_dedup", d44SubstringDedup, d44Sql),
+    Entry("d45_substring_scrub", d45SubstringScrub, d45Sql),
+    Entry("d46_semantic_dedup", d46SemanticDedup, d46Sql),
+    Entry("d47_index_forget", d47IndexForget, d47Sql),
+    Entry("d48_containment_dedup", d48ContainmentDedup, d48Sql),
+    Entry("d49_contamination_report", d49ContaminationReport, d49Sql),
+    Entry("d50_url_dedup", d50UrlDedup, d50Sql),
+    Entry("d51_neardup_eval", d51NeardupEval, d51Sql),
+    Entry("d52_corpus_overlap", d52CorpusOverlap, d52Sql),
+    Entry("d53_banding_curve", d53BandingCurve, d53Sql),
+    Entry("d54_overlap_matrix", d54OverlapMatrix, d54Sql),
+    Entry("d55_canonical_dedup", d55CanonicalDedup, d55Sql))
 }

@@ -3,7 +3,7 @@ package graft.multimodal
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Entry, Tables}
 
 /** Typed metadata carried alongside an opaque media payload. */
 case class MediaMeta(mime: String, width: Int, height: Int, durationMs: Long)
@@ -1701,33 +1701,22 @@ object Multimodal {
       |WHERE ROUND(CAST(matched_frames AS DOUBLE) / total_frames, 4) >= 0.5
       |ORDER BY doc_a, doc_b""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "m33_multimodal" -> (m33Multimodal _),
-    "m33b_decode_oracle" -> (m33bDecodeOracle _),
-    "m34_media_dedup" -> (m34MediaDedup _),
-    "m34b_dedup_oracle" -> (m34bDedupOracle _),
-    "m35_media_neardup" -> (m35MediaNeardup _),
-    "m35b_neardup_oracle" -> (m35bNeardupOracle _),
-    "m36_media_dedup_closure" -> (m36MediaDedupClosure _),
-    "m36b_closure_oracle" -> (m36bClosureOracle _),
-    "m37_video_neardup" -> (m37VideoNeardup _),
-    "m37b_video_oracle" -> (m37bVideoOracle _),
-    "m38_audio_neardup" -> (m38AudioNeardup _),
-    "m38b_audio_oracle" -> (m38bAudioOracle _),
-    "m39_thumbnail_match" -> (m39ThumbnailMatch _),
-    "m39b_thumbnail_oracle" -> (m39bThumbnailOracle _),
-    "m40_scene_cut" -> (m40SceneCut _),
-    "m40b_scene_cut_oracle" -> (m40bSceneCutOracle _),
-    "m41_metadata_scrub" -> (m41MetadataScrub _))
-
-  def oracles: Map[String, String] = Map(
-    "m33b_decode_oracle" -> m33bSql,
-    "m34b_dedup_oracle" -> m34bSql,
-    "m35b_neardup_oracle" -> m35bSql,
-    "m36b_closure_oracle" -> m36bSql,
-    "m37b_video_oracle" -> m37bSql,
-    "m38b_audio_oracle" -> m38bSql,
-    "m39b_thumbnail_oracle" -> m39bSql,
-    "m40b_scene_cut_oracle" -> m40bSql,
-    "m41_metadata_scrub" -> m41Sql)
+  def entries: Seq[Entry] = Seq(
+    Entry("m33_multimodal", m33Multimodal),
+    Entry("m33b_decode_oracle", m33bDecodeOracle, m33bSql),
+    Entry("m34_media_dedup", m34MediaDedup),
+    Entry("m34b_dedup_oracle", m34bDedupOracle, m34bSql),
+    Entry("m35_media_neardup", m35MediaNeardup),
+    Entry("m35b_neardup_oracle", m35bNeardupOracle, m35bSql),
+    Entry("m36_media_dedup_closure", m36MediaDedupClosure),
+    Entry("m36b_closure_oracle", m36bClosureOracle, m36bSql),
+    Entry("m37_video_neardup", m37VideoNeardup),
+    Entry("m37b_video_oracle", m37bVideoOracle, m37bSql),
+    Entry("m38_audio_neardup", m38AudioNeardup),
+    Entry("m38b_audio_oracle", m38bAudioOracle, m38bSql),
+    Entry("m39_thumbnail_match", m39ThumbnailMatch),
+    Entry("m39b_thumbnail_oracle", m39bThumbnailOracle, m39bSql),
+    Entry("m40_scene_cut", m40SceneCut),
+    Entry("m40b_scene_cut_oracle", m40bSceneCutOracle, m40bSql),
+    Entry("m41_metadata_scrub", m41MetadataScrub, m41Sql))
 }

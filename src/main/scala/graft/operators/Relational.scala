@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.{Par, Tables}
+import graft.{Entry, Par, Tables}
 
 /** Core relational / lakehouse operators, re-expressed Spark-first.
   *
@@ -1957,8 +1957,8 @@ object Relational {
     * is the DLT expectations contract run as a COMMIT GATE — one
     * rule-table definition, so the audit can never disagree with the
     * q40/s47 meters on what "clean" means). */
-  // lazy: q40Rules is defined further down the object body (the s45
-  // lazy-oracle stance — init order, not semantics)
+  // lazy: q40Rules is defined further down the object body (init
+  // order, not semantics)
   private[graft] lazy val q96GateConj: String =
     q40Rules.filter(_._2 == "drop").map { case (_, _, p) => s"($p)" }
       .mkString(" AND ")
@@ -6125,95 +6125,97 @@ object Relational {
        | abs(hll_ndv_e4 - ndv * 10000) // ndv AS err_bp
        |FROM est ORDER BY col_name""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q01_agg_filter" -> (q01AggFilter _),
-    "q02_project_enrich" -> (q02ProjectEnrich _),
-    "q03_join_enrich" -> (q03JoinEnrich _),
-    "q04_multiway_left_join" -> (q04MultiwayLeftJoin _),
-    "q05_explode_pos" -> (q05ExplodePos _),
-    "q06_json_extract" -> (q06JsonExtract _),
-    "q07_classify_case" -> (q07ClassifyCase _),
-    "q08_latest_per_key" -> (q08LatestPerKey _),
-    "q09_daily_active" -> (q09DailyActive _),
-    "q10_epoch_rollup" -> (q10EpochRollup _),
-    "q11_range_join" -> (q11RangeJoin _),
-    "q12_double_entry" -> (q12DoubleEntry _),
-    "q13_event_index" -> (q13EventIndex _),
-    "q14_semi_anti" -> (q14SemiAnti _),
-    "q15_topn_per_group" -> (q15TopNPerGroup _),
-    "q16_string_codec" -> (q16StringCodec _),
-    "q17_conditional_pivot" -> (q17ConditionalPivot _),
-    "q18_rollup" -> (q18Rollup _),
-    "q19_sliding_window" -> (q19SlidingWindow _),
-    "q20_time_bucket" -> (q20TimeBucket _),
-    "q21_merge_upsert" -> (q21MergeUpsert _),
-    "q22_json_roundtrip" -> (q22JsonRoundtrip _),
-    "q23_codec_chain" -> (q23CodecChain _),
-    "q24_collect_set" -> (q24CollectSet _),
-    "q25_asof_join" -> (q25AsofJoin _),
-    "q26_unpivot" -> (q26Unpivot _),
-    "q27_percentiles" -> (q27Percentiles _),
-    "q28_date_spine" -> (q28DateSpine _),
-    "q29_json_keys" -> (q29JsonKeys _),
-    "q32_scd2" -> (q32Scd2 _),
-    "q33_bucketed_join" -> (q33BucketedJoin _),
-    "q34_zorder" -> (q34Zorder _),
-    "q35_snapshot_diff" -> (q35SnapshotDiff _),
-    "q77_time_travel" -> (q77TimeTravel _),
-    "q78_retention" -> (q78Retention _),
-    "q81_restore" -> (q81Restore _),
-    "q92_checkpointed_travel" -> (q92CheckpointedTravel _),
-    "q93_change_feed" -> (q93ChangeFeed _),
-    "q89_optimistic_commit" -> (q89OptimisticCommit _),
-    "q96_wap" -> (q96Wap _),
-    "q103_atomic_publish" -> (q103AtomicPublish _),
-    "q85_khop" -> (q85Khop _),
-    "q86_merge_full" -> (q86MergeFull _),
-    "q36_lockup_schedule" -> (q36LockupSchedule _),
-    "q37_lockup_termination" -> (q37LockupTermination _),
-    "q38_mv_maintenance" -> (q38MvMaintenance _),
-    "q88_join_mv" -> (q88JoinMv _),
-    "q90_fifo_attribution" -> (q90FifoAttribution _),
-    "q39_skew_join" -> (q39SkewJoin _),
-    "q40_expectations" -> (q40Expectations _),
-    "q41_heavy_hitters" -> (q41HeavyHitters _),
-    "q43_cube" -> (q43Cube _),
-    "q97_grouping_sets" -> (q97GroupingSets _),
-    "q98_pseudonymize" -> (q98Pseudonymize _),
-    "q99_constraint_audit" -> (q99ConstraintAudit _),
-    "q44_funnel" -> (q44Funnel _),
-    "q45_rfm" -> (q45Rfm _),
-    "q45b_rfm_sketch" -> (q45bRfmSketch _),
-    "q46_copurchase" -> (q46CoPurchase _),
-    "q47_pit_join" -> (q47PitJoin _),
-    "q48_retention" -> (q48Retention _),
-    "q49_hll_distinct" -> (q49HllDistinct _),
-    "q91_rolling_distinct" -> (q91RollingDistinct _),
-    "q50_event_transitions" -> (q50EventTransitions _),
-    "q51_pagerank" -> (q51PageRank _),
-    "q52_profile" -> (q52Profile _),
-    "q53_communities" -> (q53Communities _),
-    "q54_similar_parts" -> (q54SimilarParts _),
-    "q55_attribution" -> (q55Attribution _),
-    "q56_ab_test" -> (q56AbTest _),
-    "q57_anomaly" -> (q57Anomaly _),
-    "q58_pit_features" -> (q58PitFeatures _),
-    "q59_psi_drift" -> (q59PsiDrift _),
-    "q60_supplier_scorecard" -> (q60SupplierScorecard _),
-    "q61_histogram" -> (q61Histogram _),
-    "q62_gap_fill" -> (q62GapFill _),
-    "q63_benford" -> (q63Benford _),
-    "q64_market_share" -> (q64MarketShare _),
-    "q65_survival" -> (q65Survival _),
-    "q66_cohort_ltv" -> (q66CohortLtv _),
-    "q67_abc_pareto" -> (q67AbcPareto _),
-    "q68_quantile_sketch" -> (q68QuantileSketch _),
-    "q52b_hll_ndv" -> (q52bHllNdv _),
-    "q69_sessions" -> (q69Sessions _),
-    "q70_aging" -> (q70Aging _),
-    "q71_xmr_control" -> (q71XmrControl _),
-    "q72_forecast_backtest" -> (q72ForecastBacktest _),
-    "q73_triangles" -> (q73Triangles _))
+  def entries: Seq[Entry] = Seq(
+    Entry("q01_agg_filter", q01AggFilter, q01Sql),
+    Entry("q02_project_enrich", q02ProjectEnrich, q02Sql),
+    Entry("q03_join_enrich", q03JoinEnrich, q03Sql),
+    Entry("q04_multiway_left_join", q04MultiwayLeftJoin, q04Sql),
+    Entry("q05_explode_pos", q05ExplodePos, q05Sql),
+    Entry("q06_json_extract", q06JsonExtract, q06Sql),
+    Entry("q07_classify_case", q07ClassifyCase, q07Sql),
+    Entry("q08_latest_per_key", q08LatestPerKey, q08Sql),
+    Entry("q09_daily_active", q09DailyActive, q09Sql),
+    Entry("q10_epoch_rollup", q10EpochRollup, q10Sql),
+    Entry("q11_range_join", q11RangeJoin, q11Sql),
+    Entry("q12_double_entry", q12DoubleEntry, q12Sql),
+    Entry("q13_event_index", q13EventIndex, q13Sql),
+    Entry("q14_semi_anti", q14SemiAnti, q14Sql),
+    Entry("q15_topn_per_group", q15TopNPerGroup, q15Sql),
+    Entry("q16_string_codec", q16StringCodec, q16Sql),
+    Entry("q17_conditional_pivot", q17ConditionalPivot, q17Sql),
+    Entry("q18_rollup", q18Rollup, q18Sql),
+    Entry("q19_sliding_window", q19SlidingWindow, q19Sql),
+    Entry("q20_time_bucket", q20TimeBucket, q20Sql),
+    Entry("q21_merge_upsert", q21MergeUpsert, q21Sql),
+    Entry("q22_json_roundtrip", q22JsonRoundtrip, q22Sql),
+    Entry("q23_codec_chain", q23CodecChain, q23Sql),
+    Entry("q24_collect_set", q24CollectSet, q24Sql),
+    Entry("q25_asof_join", q25AsofJoin, q25Sql),
+    Entry("q26_unpivot", q26Unpivot, q26Sql),
+    Entry("q27_percentiles", q27Percentiles, q27Sql),
+    Entry("q28_date_spine", q28DateSpine, q28Sql),
+    Entry("q29_json_keys", q29JsonKeys, q29Sql),
+    Entry("q32_scd2", q32Scd2, q32Sql),
+    Entry("q33_bucketed_join", q33BucketedJoin, q33Sql),
+    Entry("q34_zorder", q34Zorder, q34Sql),
+    Entry("q35_snapshot_diff", q35SnapshotDiff, q35Sql),
+    Entry("q77_time_travel", q77TimeTravel, q77Sql),
+    // q78 serves the SAME version q77 does, through the vacuumed
+    // chain - retention above the horizon must be invisible
+    Entry("q78_retention", q78Retention, q77Sql),
+    Entry("q81_restore", q81Restore, q81Sql),
+    Entry("q92_checkpointed_travel", q92CheckpointedTravel, q92Sql),
+    Entry("q93_change_feed", q93ChangeFeed, q93Sql),
+    Entry("q89_optimistic_commit", q89OptimisticCommit, q89Sql),
+    Entry("q96_wap", q96Wap, q96Sql),
+    Entry("q103_atomic_publish", q103AtomicPublish, q103Sql),
+    Entry("q85_khop", q85Khop, q85Sql),
+    Entry("q86_merge_full", q86MergeFull, q86Sql),
+    Entry("q36_lockup_schedule", q36LockupSchedule, q36Sql),
+    Entry("q37_lockup_termination", q37LockupTermination, q37Sql),
+    Entry("q38_mv_maintenance", q38MvMaintenance, q38Sql),
+    Entry("q88_join_mv", q88JoinMv, q88Sql),
+    Entry("q90_fifo_attribution", q90FifoAttribution, q90Sql),
+    Entry("q39_skew_join", q39SkewJoin, q39Sql),
+    Entry("q40_expectations", q40Expectations, q40Sql),
+    Entry("q41_heavy_hitters", q41HeavyHitters, q41Sql),
+    Entry("q43_cube", q43Cube, q43Sql),
+    Entry("q97_grouping_sets", q97GroupingSets, q97Sql),
+    Entry("q98_pseudonymize", q98Pseudonymize, q98Sql),
+    Entry("q99_constraint_audit", q99ConstraintAudit, q99Sql),
+    Entry("q44_funnel", q44Funnel, q44Sql),
+    Entry("q45_rfm", q45Rfm, q45Sql),
+    Entry("q45b_rfm_sketch", q45bRfmSketch, q45bSql),
+    Entry("q46_copurchase", q46CoPurchase, q46Sql),
+    Entry("q47_pit_join", q47PitJoin, q47Sql),
+    Entry("q48_retention", q48Retention, q48Sql),
+    Entry("q49_hll_distinct", q49HllDistinct, q49Sql),
+    Entry("q91_rolling_distinct", q91RollingDistinct, q91Sql),
+    Entry("q50_event_transitions", q50EventTransitions, q50Sql),
+    Entry("q51_pagerank", q51PageRank, q51Sql),
+    Entry("q52_profile", q52Profile, q52Sql),
+    Entry("q53_communities", q53Communities, q53Sql),
+    Entry("q54_similar_parts", q54SimilarParts, q54Sql),
+    Entry("q55_attribution", q55Attribution, q55Sql),
+    Entry("q56_ab_test", q56AbTest, q56Sql),
+    Entry("q57_anomaly", q57Anomaly, q57Sql),
+    Entry("q58_pit_features", q58PitFeatures, q58Sql),
+    Entry("q59_psi_drift", q59PsiDrift, q59Sql),
+    Entry("q60_supplier_scorecard", q60SupplierScorecard, q60Sql),
+    Entry("q61_histogram", q61Histogram, q61Sql),
+    Entry("q62_gap_fill", q62GapFill, q62Sql),
+    Entry("q63_benford", q63Benford, q63Sql),
+    Entry("q64_market_share", q64MarketShare, q64Sql),
+    Entry("q65_survival", q65Survival, q65Sql),
+    Entry("q66_cohort_ltv", q66CohortLtv, q66Sql),
+    Entry("q67_abc_pareto", q67AbcPareto, q67Sql),
+    Entry("q68_quantile_sketch", q68QuantileSketch, q68Sql),
+    Entry("q52b_hll_ndv", q52bHllNdv, q52bSql),
+    Entry("q69_sessions", q69Sessions, q69Sql),
+    Entry("q70_aging", q70Aging, q70Sql),
+    Entry("q71_xmr_control", q71XmrControl, q71Sql),
+    Entry("q72_forecast_backtest", q72ForecastBacktest, q72Sql),
+    Entry("q73_triangles", q73Triangles, q73Sql))
 
   // ---- q40: data-quality expectations audit (DLT expectations) ----
 
@@ -6308,96 +6310,4 @@ object Relational {
        | retained * 1000000 // total FROM agg
        |ORDER BY rule""".stripMargin
   }
-
-  def oracles: Map[String, String] = Map(
-    "q01_agg_filter" -> q01Sql,
-    "q02_project_enrich" -> q02Sql,
-    "q03_join_enrich" -> q03Sql,
-    "q04_multiway_left_join" -> q04Sql,
-    "q05_explode_pos" -> q05Sql,
-    "q06_json_extract" -> q06Sql,
-    "q07_classify_case" -> q07Sql,
-    "q08_latest_per_key" -> q08Sql,
-    "q09_daily_active" -> q09Sql,
-    "q10_epoch_rollup" -> q10Sql,
-    "q11_range_join" -> q11Sql,
-    "q12_double_entry" -> q12Sql,
-    "q13_event_index" -> q13Sql,
-    "q14_semi_anti" -> q14Sql,
-    "q15_topn_per_group" -> q15Sql,
-    "q16_string_codec" -> q16Sql,
-    "q17_conditional_pivot" -> q17Sql,
-    "q18_rollup" -> q18Sql,
-    "q19_sliding_window" -> q19Sql,
-    "q20_time_bucket" -> q20Sql,
-    "q21_merge_upsert" -> q21Sql,
-    "q22_json_roundtrip" -> q22Sql,
-    "q23_codec_chain" -> q23Sql,
-    "q24_collect_set" -> q24Sql,
-    "q25_asof_join" -> q25Sql,
-    "q26_unpivot" -> q26Sql,
-    "q27_percentiles" -> q27Sql,
-    "q28_date_spine" -> q28Sql,
-    "q29_json_keys" -> q29Sql,
-    "q32_scd2" -> q32Sql,
-    "q33_bucketed_join" -> q33Sql,
-    "q34_zorder" -> q34Sql,
-    "q35_snapshot_diff" -> q35Sql,
-    "q77_time_travel" -> q77Sql,
-    // q78 serves the SAME version q77 does, through the vacuumed
-    // chain - retention above the horizon must be invisible
-    "q78_retention" -> q77Sql,
-    "q81_restore" -> q81Sql,
-    "q92_checkpointed_travel" -> q92Sql,
-    "q93_change_feed" -> q93Sql,
-    "q89_optimistic_commit" -> q89Sql,
-    "q96_wap" -> q96Sql,
-    "q103_atomic_publish" -> q103Sql,
-    "q85_khop" -> q85Sql,
-    "q86_merge_full" -> q86Sql,
-    "q36_lockup_schedule" -> q36Sql,
-    "q37_lockup_termination" -> q37Sql,
-    "q38_mv_maintenance" -> q38Sql,
-    "q88_join_mv" -> q88Sql,
-    "q90_fifo_attribution" -> q90Sql,
-    "q39_skew_join" -> q39Sql,
-    "q40_expectations" -> q40Sql,
-    "q41_heavy_hitters" -> q41Sql,
-    "q43_cube" -> q43Sql,
-    "q97_grouping_sets" -> q97Sql,
-    "q98_pseudonymize" -> q98Sql,
-    "q99_constraint_audit" -> q99Sql,
-    "q44_funnel" -> q44Sql,
-    "q45_rfm" -> q45Sql,
-    "q45b_rfm_sketch" -> q45bSql,
-    "q46_copurchase" -> q46Sql,
-    "q47_pit_join" -> q47Sql,
-    "q48_retention" -> q48Sql,
-    "q49_hll_distinct" -> q49Sql,
-    "q91_rolling_distinct" -> q91Sql,
-    "q50_event_transitions" -> q50Sql,
-    "q51_pagerank" -> q51Sql,
-    "q52_profile" -> q52Sql,
-    "q53_communities" -> q53Sql,
-    "q54_similar_parts" -> q54Sql,
-    "q55_attribution" -> q55Sql,
-    "q56_ab_test" -> q56Sql,
-    "q57_anomaly" -> q57Sql,
-    "q58_pit_features" -> q58Sql,
-    "q59_psi_drift" -> q59Sql,
-    "q60_supplier_scorecard" -> q60Sql,
-    "q61_histogram" -> q61Sql,
-    "q62_gap_fill" -> q62Sql,
-    "q63_benford" -> q63Sql,
-    "q64_market_share" -> q64Sql,
-    "q65_survival" -> q65Sql,
-    "q66_cohort_ltv" -> q66Sql,
-    "q67_abc_pareto" -> q67Sql,
-    "q68_quantile_sketch" -> q68Sql,
-    "q52b_hll_ndv" -> q52bSql,
-    "q69_sessions" -> q69Sql,
-    "q70_aging" -> q70Sql,
-    "q71_xmr_control" -> q71Sql,
-    "q72_forecast_backtest" -> q72Sql,
-    "q73_triangles" -> q73Sql)
 }

@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Par, Tables}
+import graft.{Entry, Par, Tables}
 
 /** Export-side operators: incremental high-watermark extraction and
   * export-format conversion.
@@ -215,10 +215,6 @@ object Export {
     back.select("event_id", "user_id", "event_type", "value", "ts", "hour_bucket")
       .orderBy("event_id")
   }
-
-  /** q42's oracle IS q31's: a faithful round-trip in any format must
-    * land on the same rows as the source projection. */
-  val q42Sql: String = q31Sql
 
   /** q74: partition-pruned export probe — the a43 plan-time pruning
     * stance applied to the relational sink: orders export through
@@ -1820,44 +1816,27 @@ object Export {
        |ORDER BY table_name, ordinal""".stripMargin
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q30_incremental_export" -> (q30IncrementalExport _),
-    "q31_export_roundtrip" -> (q31ExportRoundtrip _),
-    "q42_jsonl_roundtrip" -> (q42JsonlRoundtrip _),
-    "q74_pruned_export" -> (q74PrunedExport _),
-    "q75_compaction" -> (q75Compaction _),
-    "q76_data_skipping" -> (q76DataSkipping _),
-    "q79_incremental_stats" -> (q79IncrementalStats _),
-    "q80_schema_evolution" -> (q80SchemaEvolution _),
-    "q82_bloom_skipping" -> (q82BloomSkipping _),
-    "q83_column_mapping" -> (q83ColumnMapping _),
-    "q84_partition_evolution" -> (q84PartitionEvolution _),
-    "q87_shallow_clone" -> (q87ShallowClone _),
-    "q95_deletion_vectors" -> (q95DeletionVectors _),
-    "q100_replace_where" -> (q100ReplaceWhere _),
-    "q101_record_index" -> (q101RecordIndex _),
-    "q102_layout_matrix" -> (q102LayoutMatrix _),
-    "q104_data_dictionary" -> (q104DataDictionary _))
-
-  def oracles: Map[String, String] = Map(
-    "q30_incremental_export" -> q30Sql,
-    "q31_export_roundtrip" -> q31Sql,
-    "q42_jsonl_roundtrip" -> q42Sql,
-    "q74_pruned_export" -> q74Sql,
-    "q75_compaction" -> q75Sql,
-    "q76_data_skipping" -> q76Sql,
+  def entries: Seq[Entry] = Seq(
+    Entry("q30_incremental_export", q30IncrementalExport, q30Sql),
+    Entry("q31_export_roundtrip", q31ExportRoundtrip, q31Sql),
+    // a faithful round-trip in any format must land on the same rows as the
+    // source projection
+    Entry("q42_jsonl_roundtrip", q42JsonlRoundtrip, q31Sql),
+    Entry("q74_pruned_export", q74PrunedExport, q74Sql),
+    Entry("q75_compaction", q75Compaction, q75Sql),
+    Entry("q76_data_skipping", q76DataSkipping, q76Sql),
     // q79 answers the same range query over the same (appended) table
     // through the incrementally-maintained manifest - a correct
     // manifest is invisible to the reader
-    "q79_incremental_stats" -> q76Sql,
-    "q80_schema_evolution" -> q80Sql,
-    "q82_bloom_skipping" -> q82Sql,
-    "q83_column_mapping" -> q83Sql,
-    "q84_partition_evolution" -> q84Sql,
-    "q87_shallow_clone" -> q87Sql,
-    "q95_deletion_vectors" -> q95Sql,
-    "q100_replace_where" -> q100Sql,
-    "q101_record_index" -> q101Sql,
-    "q102_layout_matrix" -> q102Sql,
-    "q104_data_dictionary" -> q104Sql)
+    Entry("q79_incremental_stats", q79IncrementalStats, q76Sql),
+    Entry("q80_schema_evolution", q80SchemaEvolution, q80Sql),
+    Entry("q82_bloom_skipping", q82BloomSkipping, q82Sql),
+    Entry("q83_column_mapping", q83ColumnMapping, q83Sql),
+    Entry("q84_partition_evolution", q84PartitionEvolution, q84Sql),
+    Entry("q87_shallow_clone", q87ShallowClone, q87Sql),
+    Entry("q95_deletion_vectors", q95DeletionVectors, q95Sql),
+    Entry("q100_replace_where", q100ReplaceWhere, q100Sql),
+    Entry("q101_record_index", q101RecordIndex, q101Sql),
+    Entry("q102_layout_matrix", q102LayoutMatrix, q102Sql),
+    Entry("q104_data_dictionary", q104DataDictionary, q104Sql))
 }

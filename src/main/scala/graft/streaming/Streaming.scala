@@ -3,7 +3,11 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import graft.Tables
+import graft.{Entry, Tables}
+import graft.dedup.Dedup
+import graft.operators.Relational
+import graft.sources.Export
+import graft.text.TextOps
 
 /** Typed event row for the custom-state streaming ops. */
 case class EventRow(event_id: Long, ts: java.sql.Timestamp, user_id: Long,
@@ -680,7 +684,6 @@ object Streaming {
     * pipeline). */
   def neardupAdmitBatch(batchDocs: DataFrame, index: DataFrame,
       corpus: DataFrame): DataFrame = {
-    import graft.dedup.Dedup
     val shingled = batchDocs.select(col("doc_id"), Dedup.shingleSet.as("sh"))
     val dropIds = Dedup
       .verifyPairs(Dedup.indexBandCandidates(index, Dedup.md5BandStream(shingled)),
@@ -705,7 +708,6 @@ object Streaming {
     * (shared CTE fragments), hits = batch docs with a verified
     * cross-split near-dup in history, admitted = batch minus hits. */
   val s44Sql: String = {
-    import graft.dedup.Dedup
     s"""WITH ${Dedup.md5SigsCte},
        |banded AS (
        | SELECT s.doc_id, d.sh, s.* EXCLUDE (doc_id)
@@ -741,7 +743,6 @@ object Streaming {
     * on the same rows. Scale: per batch the state side is MV-sized
     * and bucketed by customer; only the batch's partials shuffle. */
   def s45StreamMvRefresh(s: SparkSession, dir: String): DataFrame = {
-    import graft.operators.Relational
     val mvDir = graft.sources.Export.scratch("s45_mv", dir)
     val orders = Relational.q38Facts(s, dir)
     Relational.q38Partials(orders.filter(col("od") < lit(Relational.q38Cutoff)))
@@ -759,14 +760,6 @@ object Streaming {
   /** s45's second micro-batch boundary (orders run through 1998 at
     * every SF, so both slices are non-empty). */
   private[graft] val s45Mid = "1997-07-01"
-
-  /** s45's oracle IS q38's full recompute: slicing the day into
-    * micro-batches must be invisible. LAZY: Relational's own init
-    * touches Streaming (q35Sql interpolates s42Cutoff), so an eager
-    * read of q38Sql here would observe Relational mid-init (null) —
-    * deferral breaks the cycle; by the time any oracles map is
-    * materialized both objects are fully constructed. */
-  lazy val s45Sql: String = graft.operators.Relational.q38Sql
 
   /** Attach the gold-merge sink to a stream of events. */
   def goldMergeQuery(events: DataFrame, targetDir: String)
@@ -799,7 +792,6 @@ object Streaming {
     * drives the same fold through a REAL MemoryStream + foreachBatch
     * generation chain and lands on the batch card. */
   def s46StreamCard(s: SparkSession, dir: String): DataFrame = {
-    import graft.text.TextOps
     val cardDir = graft.sources.Export.scratch("s46_card", dir)
     val docs = TextOps.t56Project(graft.Tables.documents(s, dir))
     TextOps.t56Partials(docs.filter(pmod(col("doc_id"), lit(3)) === 0))
@@ -810,10 +802,6 @@ object Streaming {
         TextOps.t56Partials(docs.filter(pmod(col("doc_id"), lit(3)) === r)))
     TextOps.t56Present(state)
   }
-
-  /** s46's oracle IS t56's full recompute — micro-batch slicing of
-    * the corpus must be invisible. LAZY per the s45Sql stance. */
-  lazy val s46Sql: String = graft.text.TextOps.t56Sql
 
   /** s47: streaming expectations — q40's DLT data-quality audit kept
     * LIVE over an arriving event stream, the way a deployed DLT
@@ -834,7 +822,6 @@ object Streaming {
     * conditional-sum row — the cheapest possible streaming
     * observability operator. */
   def s47StreamExpectations(s: SparkSession, dir: String): DataFrame = {
-    import graft.operators.Relational
     val stateDir = graft.sources.Export.scratch("s47_exp", dir)
     val ev = graft.Tables.events(s, dir)
     Relational.q40Partials(ev.filter(pmod(col("event_id"), lit(3)) === 0))
@@ -845,10 +832,6 @@ object Streaming {
         Relational.q40Partials(ev.filter(pmod(col("event_id"), lit(3)) === r)))
     Relational.q40Present(state)
   }
-
-  /** s47's oracle IS q40's full recompute — micro-batch slicing of
-    * the audit must be invisible. LAZY per the s45Sql stance. */
-  lazy val s47Sql: String = graft.operators.Relational.q40Sql
 
   /** s48's per-micro-batch transform: SEMANTIC admission at ingest —
     * d46's SemDeDup drop rule moved to the stream boundary, the
@@ -917,7 +900,7 @@ object Streaming {
   /** DuckDB oracle for s48: the shared a42 build CTEs restricted to
     * history, both splits routed to their top-2 cells in the trained
     * basis, cell-join + rounded-cosine verify, batch minus hits.
-    * Lazy: cross-object oracle refs at init are the known NPE cycle. */
+    * Lazy: it reads Ann (see [[graft.Entry]]). */
   lazy val s48Sql: String =
     s"""WITH ${graft.ann.Ann.a42BuildCteWhere("vec_id % 4 <> 0")},
        |asgh AS (
@@ -1099,11 +1082,6 @@ object Streaming {
       .orderBy("rank")
   }
 
-  /** s49's oracle IS q41's exact top-20: in the exact regime every
-    * micro-batch slicing of the stream folds to the exact counts.
-    * Lazy: cross-object oracle refs at init are the known NPE cycle. */
-  lazy val s49Sql: String = graft.operators.Relational.q41Sql
-
   /** s50's per-micro-batch state fold: the live funnel. State = one
     * row per user seen so far with the three witness timestamps
     * (v_ts, c_ts, p_ts — each null until its leg converts). A batch
@@ -1196,10 +1174,6 @@ object Streaming {
     funnelPresent(fin(0))
   }
 
-  /** s50's oracle IS q44's batch funnel — ordered micro-batch
-    * slicing must be invisible. Lazy per the s45Sql stance. */
-  lazy val s50Sql: String = graft.operators.Relational.q44Sql
-
   /** s51's per-micro-batch state fold: the live SCD2 dimension.
     * State = q32's full dimension table so far (closed rows + one
     * OPEN row per user). A batch of raw events folds in with q32's
@@ -1275,10 +1249,6 @@ object Streaming {
     fin(0).orderBy("user_id", "version")
   }
 
-  /** s51's oracle IS q32's SCD2 build — ordered slicing must be
-    * invisible. Lazy per the s45Sql stance. */
-  lazy val s51Sql: String = graft.operators.Relational.q32Sql
-
   /** s52's per-micro-batch state fold: the live retention activity
     * set. State = the distinct qualifying (user_id, week) pairs seen
     * so far — exactly [[graft.operators.Relational.q48ActivityPairs]]
@@ -1316,10 +1286,6 @@ object Streaming {
     }
     graft.operators.Relational.q48Present(fin(0))
   }
-
-  /** s52's oracle IS q48's batch retention matrix. Lazy per the
-    * s45Sql stance. */
-  lazy val s52Sql: String = graft.operators.Relational.q48Sql
 
   /** s53's register-state fold: the live HLL. State = q49's
     * (day, j, m) register table; a batch's events hash through the
@@ -1362,10 +1328,6 @@ object Streaming {
     graft.operators.Relational.q49Present(fin(0),
       fin(1).groupBy("day").agg(count(lit(1)).as("exact_users")))
   }
-
-  /** s53's oracle IS q49's batch sketch. Lazy per the s45Sql
-    * stance. */
-  lazy val s53Sql: String = graft.operators.Relational.q49Sql
 
   /** s54's count-state fold: the live transition matrix. State =
     * q50's (from_type, to_type) counts so far plus each user's LAST
@@ -1430,10 +1392,6 @@ object Streaming {
     graft.operators.Relational.q50Present(fin(1))
   }
 
-  /** s54's oracle IS q50's batch matrix. Lazy per the s45Sql
-    * stance. */
-  lazy val s54Sql: String = graft.operators.Relational.q50Sql
-
   /** s55's summary-state fold: the live column profile. State = one
     * MERGEABLE per-column summary row (q52Stats of everything folded
     * so far); a batch folds in by computing ITS summary through the
@@ -1480,10 +1438,6 @@ object Streaming {
     }
     graft.operators.Relational.q52Present(fin(0), fin(1))
   }
-
-  /** s55's oracle IS q52's batch profile. Lazy per the s45Sql
-    * stance. */
-  lazy val s55Sql: String = graft.operators.Relational.q52Sql
 
   /** s56's per-micro-batch state fold: the live attribution ledger.
     * Dual state (the s53/s55 stance): the per-channel credit ledger
@@ -1556,10 +1510,6 @@ object Streaming {
     fin(0).orderBy(col("channel"))
   }
 
-  /** s56's oracle IS q55's batch attribution. Lazy per the s45Sql
-    * stance. */
-  lazy val s56Sql: String = graft.operators.Relational.q55Sql
-
   /** s57's per-micro-batch state fold: the live daily ledger behind
     * the anomaly detector. State = (day, purchases); a batch folds
     * in by summing its own q57Daily rollup into the ledger —
@@ -1594,10 +1544,6 @@ object Streaming {
     }
     R.q57Present(fin(0))
   }
-
-  /** s57's oracle IS q57's batch anomaly profile. Lazy per the
-    * s45Sql stance. */
-  lazy val s57Sql: String = graft.operators.Relational.q57Sql
 
   /** s58's per-micro-batch state fold: the live current-window bin
     * ledger behind the PSI monitor. The edges are the FROZEN
@@ -1646,9 +1592,6 @@ object Streaming {
       fin(0).withColumnRenamed("n", "cur_n"))
   }
 
-  /** s58's oracle IS q59's batch PSI. Lazy per the s45Sql stance. */
-  lazy val s58Sql: String = graft.operators.Relational.q59Sql
-
   /** s59's per-micro-batch state fold: the live Benford digit
     * ledger. A batch of ORDERS folds in by sum-merging its own
     * q63Digits rollup — associative/commutative over any slicing
@@ -1679,10 +1622,6 @@ object Streaming {
     R.q63Present(fin(0))
   }
 
-  /** s59's oracle IS q63's batch audit. Lazy per the s45Sql
-    * stance. */
-  lazy val s59Sql: String = graft.operators.Relational.q63Sql
-
   /** s60: the LIVE quantile dashboard — q68 kept current over the
     * arriving order stream through persisted state generations (the
     * s45/s50 stance, dual-artifact like s53): the bottom-k sample
@@ -1710,10 +1649,6 @@ object Streaming {
     R.q68Present(fin(1), fin(0))
   }
 
-  /** s60's oracle IS q68's batch sketch. Lazy per the s45Sql
-    * stance. */
-  lazy val s60Sql: String = graft.operators.Relational.q68Sql
-
   /** s61: the LIVE XmR control chart — q71 kept current over the
     * arriving event stream through persisted ledger generations (the
     * s45/s50 stance): the state IS q57's daily ledger, folded by the
@@ -1738,10 +1673,6 @@ object Streaming {
     R.q71Present(fin(0))
   }
 
-  /** s61's oracle IS q71's batch chart. Lazy per the s45Sql
-    * stance. */
-  lazy val s61Sql: String = graft.operators.Relational.q71Sql
-
   /** s62: the LIVE forecast-skill monitor — q72 kept current over
     * the arriving event stream through persisted ledger generations:
     * the state is STILL q57's daily ledger, folded by the SAME
@@ -1764,10 +1695,6 @@ object Streaming {
     }
     R.q72Present(fin(0))
   }
-
-  /** s62's oracle IS q72's batch backtest. Lazy per the s45Sql
-    * stance. */
-  lazy val s62Sql: String = graft.operators.Relational.q72Sql
 
   /** s63's per-micro-batch state fold: the live session table.
     * State = q69's session rows so far (one OPEN session per user —
@@ -1897,10 +1824,6 @@ object Streaming {
     sessionsPresent(fin(0), fin(1))
   }
 
-  /** s63's oracle IS q69's batch session table. Lazy per the s45Sql
-    * stance. */
-  lazy val s63Sql: String = graft.operators.Relational.q69Sql
-
   /** s64's sample-state fold: bottom-k by clock over
     * (state ∪ batch) — exact by the q68/d52 bottom-k merge law and
     * IDEMPOTENT under redelivery (the s52 set stance: a re-delivered
@@ -1943,10 +1866,6 @@ object Streaming {
     }
     T.t60Present(fin(0))
   }
-
-  /** s64's oracle IS t60's batch sample. Lazy per the s45Sql
-    * stance. */
-  lazy val s64Sql: String = graft.text.TextOps.t60Sql
 
   /** s65's guarded fold: the foreachBatch IDEMPOTENT-SINK contract.
     * State is (ledger, txn): the data table plus a transaction log
@@ -2086,10 +2005,8 @@ object Streaming {
 
   /** DuckDB oracle for s66: the cents-based rollup straight off the
     * full order table, the SAME q45b boundary SQL builders, the
-    * SAME segment CASE — slicing must be invisible. LAZY per the
-    * s45Sql stance (an eager val here runs during the
-    * Relational↔Streaming object-init cycle and bakes nulls into
-    * the SQL). */
+    * SAME segment CASE — slicing must be invisible. Lazy: it reads
+    * Relational (see [[graft.Entry]]). */
   lazy val s66Sql: String = {
     val R = graft.operators.Relational
     s"""WITH per AS (
@@ -2160,10 +2077,6 @@ object Streaming {
     D.d52PairFrame(fin(0), fin(1), fin(2), fin(3))
       .select(D.d52MetricCols: _*)
   }
-
-  /** s67's oracle IS d52's batch overlap. Lazy per the s45Sql
-    * stance. */
-  lazy val s67Sql: String = graft.dedup.Dedup.d52Sql
 
   /** s68's sink loop, exposed for the spec: run the micro-batch
     * appends, returning the layout dir and the file count after
@@ -2486,10 +2399,6 @@ object Streaming {
     fin(2).orderBy("segment", "o_year")
   }
 
-  /** s72's oracle IS q88's full join recompute. Lazy per the s45Sql
-    * stance. */
-  lazy val s72Sql: String = graft.operators.Relational.q88Sql
-
   /** s73: the LIVE FIFO meter — q90's lot attribution kept current
     * over the arriving event stream (the billing shape: charges must
     * post as consumption happens, not in a nightly batch). The fold
@@ -2565,9 +2474,6 @@ object Streaming {
     fin(3).orderBy("user_id", "lot_id", "draw_id")
   }
 
-  /** s73's oracle IS q90's. Lazy per the s45Sql stance. */
-  lazy val s73Sql: String = graft.operators.Relational.q90Sql
-
   /** s74's head version: one per q77 change window. A def — the
     * Relational/Streaming objects reference each other's vals. */
   private[graft] def s74Head: Int = graft.operators.Relational.q77Cutoffs.size
@@ -2634,11 +2540,6 @@ object Streaming {
     applyServing(s74AsOf(s,
       graft.BuildCache.build(s"s74:$dir")(s74Build(s, dir)), 2))
 
-  /** s74's oracle IS q77's (the live ledger serves the same middle
-    * version q77's written chain serves). Lazy per the s45Sql
-    * stance. */
-  lazy val s74Sql: String = graft.operators.Relational.q77Sql
-
   /** s75's version window over the s74 chain: base to the middle
     * version — wide enough that inserts and both update images all
     * populate. */
@@ -2687,8 +2588,8 @@ object Streaming {
 
   /** DuckDB oracle for s75: the shared [[graft.operators.Relational
     * .cdfSql]] body at the window's version cutoffs (one SQL
-    * definition for both feed forms). Lazy per
-    * the s45Sql stance. */
+    * definition for both feed forms). Lazy: it reads Relational
+    * (see [[graft.Entry]]). */
   lazy val s75Sql: String = {
     val cuts = graft.operators.Relational.q77Cutoffs
     graft.operators.Relational.cdfSql(cuts(s75From), cuts(s75To))
@@ -2772,10 +2673,6 @@ object Streaming {
     out
   }
 
-  /** s76's oracle IS q96's (a live WAP must be indistinguishable
-    * from the batch protocol). Lazy per the s45Sql stance. */
-  lazy val s76Sql: String = graft.operators.Relational.q96Sql
-
   /** s77's builder: live merge-on-read — the table's data files are
     * written ONCE (the q76 range-clustered layout); DELETE commands
     * then arrive as micro-batches and the fold maintains the
@@ -2843,12 +2740,6 @@ object Streaming {
       s"s77: merge-on-read must leave clean files ($dirty/$total dirty)")
     E.q95Face(rows)
   }
-
-  /** s77's oracle IS q95's (the live vector serves the same
-    * survivors the batch lifecycle serves — s77 stops before the
-    * purge, which q95 proves invisible to the read). Lazy per the
-    * s45Sql stance. */
-  lazy val s77Sql: String = graft.sources.Export.q95Sql
 
   /** s78's builder: live record-index maintenance — the table starts
     * from the first order slice, append batches land as new part
@@ -2930,10 +2821,6 @@ object Streaming {
       col("o_orderkey") === col("key"), "left_semi"))
   }
 
-  /** s78's oracle IS q101's (a live index must serve the lookup a
-    * built-once index serves). Lazy per the s45Sql stance. */
-  lazy val s78Sql: String = graft.sources.Export.q101Sql
-
   /** s79's builder: fold the event slices maintaining the
     * pseudonymized profile MV at its MERGEABLE grain — one row per
     * (pseudo, event_type) carrying (n, cents). The grain matters:
@@ -3011,121 +2898,72 @@ object Streaming {
     out
   }
 
-  /** s79's oracle IS q98's (a maintained profile must be
-    * indistinguishable from the batch release). Lazy per the s45Sql
-    * stance. */
-  lazy val s79Sql: String = graft.operators.Relational.q98Sql
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "s34_stream_tumbling" -> (s34StreamTumbling _),
-    "s35_stream_join" -> (s35StreamJoin _),
-    "s36_sessionize" -> (s36Sessionize _),
-    "s37_cumulative" -> (s37Cumulative _),
-    "s38_stream_dedup" -> (s38StreamDedup _),
-    "s39_stream_decontaminate" -> (s39StreamDecontaminate _),
-    "s40_stream_pii" -> (s40StreamPii _),
-    "s41_stream_quality" -> (s41StreamQuality _),
-    "s42_apply_changes" -> (s42ApplyChanges _),
-    "s43_stream_index_dedup" -> (s43StreamIndexDedup _),
-    "s44_stream_neardup_admit" -> (s44StreamNeardupAdmit _),
-    "s45_stream_mv_refresh" -> (s45StreamMvRefresh _),
-    "s46_stream_card" -> (s46StreamCard _),
-    "s47_stream_expectations" -> (s47StreamExpectations _),
-    "s48_stream_semantic_admit" -> (s48StreamSemanticAdmit _),
-    "s49_stream_heavy_hitters" -> (s49StreamHeavyHitters _),
-    "s50_stream_funnel" -> (s50StreamFunnel _),
-    "s51_stream_scd2" -> (s51StreamScd2 _),
-    "s52_stream_retention" -> (s52StreamRetention _),
-    "s53_stream_hll" -> (s53StreamHll _),
-    "s54_stream_transitions" -> (s54StreamTransitions _),
-    "s55_stream_profile" -> (s55StreamProfile _),
-    "s56_stream_attribution" -> (s56StreamAttribution _),
-    "s57_stream_anomaly" -> (s57StreamAnomaly _),
-    "s58_stream_psi" -> (s58StreamPsi _),
-    "s59_stream_benford" -> (s59StreamBenford _),
-    "s60_stream_quantiles" -> (s60StreamQuantiles _),
-    "s61_stream_xmr" -> (s61StreamXmr _),
-    "s62_stream_forecast" -> (s62StreamForecast _),
-    "s63_stream_sessions" -> (s63StreamSessions _),
-    "s64_stream_weighted_sample" -> (s64StreamWeightedSample _),
-    "s65_exactly_once" -> (s65ExactlyOnce _),
-    "s66_stream_rfm" -> (s66StreamRfm _),
-    "s67_stream_overlap" -> (s67StreamOverlap _),
-    "s68_stream_compaction" -> (s68StreamCompaction _),
-    "s69_stream_schema_evolution" -> (s69StreamSchemaEvolution _),
-    "s70_stream_skipping" -> (s70StreamSkipping _),
-    "s71_stream_late_data" -> (s71StreamLateData _),
-    "s72_stream_join_mv" -> (s72StreamJoinMv _),
-    "s73_stream_fifo" -> (s73StreamFifo _),
-    "s74_stream_asof" -> (s74StreamAsof _),
-    "s75_stream_cdf" -> (s75StreamCdf _),
-    "s76_stream_wap" -> (s76StreamWap _),
-    "s77_stream_mor" -> (s77StreamMor _),
-    "s78_stream_record_index" -> (s78StreamRecordIndex _),
-    "s79_stream_pseudonymize" -> (s79StreamPseudonymize _),
-    "s80_stream_left_join" -> (s80StreamLeftJoin _))
-
-  def oracles: Map[String, String] = Map(
-    "s34_stream_tumbling" -> s34Sql,
-    "s35_stream_join" -> s35Sql,
-    "s36_sessionize" -> s36Sql,
-    "s37_cumulative" -> s37Sql,
-    "s38_stream_dedup" -> s38Sql,
-    "s39_stream_decontaminate" -> s39Sql,
-    "s40_stream_pii" -> s40Sql,
-    "s41_stream_quality" -> s41Sql,
-    "s42_apply_changes" -> s42Sql,
-    "s43_stream_index_dedup" -> s43Sql,
-    "s44_stream_neardup_admit" -> s44Sql,
-    "s45_stream_mv_refresh" -> s45Sql,
-    "s46_stream_card" -> s46Sql,
-    "s47_stream_expectations" -> s47Sql,
-    "s48_stream_semantic_admit" -> s48Sql,
-    "s49_stream_heavy_hitters" -> s49Sql,
-    "s50_stream_funnel" -> s50Sql,
-    "s51_stream_scd2" -> s51Sql,
-    "s52_stream_retention" -> s52Sql,
-    "s53_stream_hll" -> s53Sql,
-    "s54_stream_transitions" -> s54Sql,
-    "s55_stream_profile" -> s55Sql,
-    "s56_stream_attribution" -> s56Sql,
-    "s57_stream_anomaly" -> s57Sql,
-    "s58_stream_psi" -> s58Sql,
-    "s59_stream_benford" -> s59Sql,
-    "s60_stream_quantiles" -> s60Sql,
-    "s61_stream_xmr" -> s61Sql,
-    "s62_stream_forecast" -> s62Sql,
-    "s63_stream_sessions" -> s63Sql,
-    "s64_stream_weighted_sample" -> s64Sql,
-    "s65_exactly_once" -> s65Sql,
-    "s66_stream_rfm" -> s66Sql,
-    "s67_stream_overlap" -> s67Sql,
-    "s68_stream_compaction" -> s68Sql,
-    "s69_stream_schema_evolution" -> s69Sql,
+  /** A row that names a batch entry's oracle checks the stream form
+    * against the batch recompute: slicing the input into micro-batches
+    * must be invisible. */
+  def entries: Seq[Entry] = Seq(
+    Entry("s34_stream_tumbling", s34StreamTumbling, s34Sql),
+    Entry("s35_stream_join", s35StreamJoin, s35Sql),
+    Entry("s36_sessionize", s36Sessionize, s36Sql),
+    Entry("s37_cumulative", s37Cumulative, s37Sql),
+    Entry("s38_stream_dedup", s38StreamDedup, s38Sql),
+    Entry("s39_stream_decontaminate", s39StreamDecontaminate, s39Sql),
+    Entry("s40_stream_pii", s40StreamPii, s40Sql),
+    Entry("s41_stream_quality", s41StreamQuality, s41Sql),
+    Entry("s42_apply_changes", s42ApplyChanges, s42Sql),
+    Entry("s43_stream_index_dedup", s43StreamIndexDedup, s43Sql),
+    Entry("s44_stream_neardup_admit", s44StreamNeardupAdmit, s44Sql),
+    Entry("s45_stream_mv_refresh", s45StreamMvRefresh, Relational.q38Sql),
+    Entry("s46_stream_card", s46StreamCard, TextOps.t56Sql),
+    Entry("s47_stream_expectations", s47StreamExpectations, Relational.q40Sql),
+    Entry("s48_stream_semantic_admit", s48StreamSemanticAdmit, s48Sql),
+    // in the exact regime every slicing of the stream folds to q41's exact counts
+    Entry("s49_stream_heavy_hitters", s49StreamHeavyHitters, Relational.q41Sql),
+    Entry("s50_stream_funnel", s50StreamFunnel, Relational.q44Sql),
+    Entry("s51_stream_scd2", s51StreamScd2, Relational.q32Sql),
+    Entry("s52_stream_retention", s52StreamRetention, Relational.q48Sql),
+    Entry("s53_stream_hll", s53StreamHll, Relational.q49Sql),
+    Entry("s54_stream_transitions", s54StreamTransitions, Relational.q50Sql),
+    Entry("s55_stream_profile", s55StreamProfile, Relational.q52Sql),
+    Entry("s56_stream_attribution", s56StreamAttribution, Relational.q55Sql),
+    Entry("s57_stream_anomaly", s57StreamAnomaly, Relational.q57Sql),
+    Entry("s58_stream_psi", s58StreamPsi, Relational.q59Sql),
+    Entry("s59_stream_benford", s59StreamBenford, Relational.q63Sql),
+    Entry("s60_stream_quantiles", s60StreamQuantiles, Relational.q68Sql),
+    Entry("s61_stream_xmr", s61StreamXmr, Relational.q71Sql),
+    Entry("s62_stream_forecast", s62StreamForecast, Relational.q72Sql),
+    Entry("s63_stream_sessions", s63StreamSessions, Relational.q69Sql),
+    Entry("s64_stream_weighted_sample", s64StreamWeightedSample, TextOps.t60Sql),
+    Entry("s65_exactly_once", s65ExactlyOnce, s65Sql),
+    Entry("s66_stream_rfm", s66StreamRfm, s66Sql),
+    Entry("s67_stream_overlap", s67StreamOverlap, Dedup.d52Sql),
+    Entry("s68_stream_compaction", s68StreamCompaction, s68Sql),
+    Entry("s69_stream_schema_evolution", s69StreamSchemaEvolution, s69Sql),
     // s70 answers q82's lookup over the same (appended) table through
     // the incrementally-maintained bloom sidecar — a correct sidecar
     // is invisible to the reader
-    "s70_stream_skipping" -> graft.sources.Export.q82Sql,
-    "s71_stream_late_data" -> s71Sql,
+    Entry("s70_stream_skipping", s70StreamSkipping, Export.q82Sql),
+    Entry("s71_stream_late_data", s71StreamLateData, s71Sql),
     // s72 answers q88's join rollup over the same two (sliced)
     // streams — slicing must be invisible to the MV
-    "s72_stream_join_mv" -> s72Sql,
+    Entry("s72_stream_join_mv", s72StreamJoinMv, Relational.q88Sql),
     // s73 answers q90's attribution over the same (sliced) stream —
     // slicing must be invisible to the pair ledger
-    "s73_stream_fifo" -> s73Sql,
-    "s74_stream_asof" -> s74Sql,
-    "s75_stream_cdf" -> s75Sql,
+    Entry("s73_stream_fifo", s73StreamFifo, Relational.q90Sql),
+    // the live ledger serves the same middle version q77's written chain serves
+    Entry("s74_stream_asof", s74StreamAsof, Relational.q77Sql),
+    Entry("s75_stream_cdf", s75StreamCdf, s75Sql),
     // s76 runs q96's protocol live over the same batches — a
     // streaming WAP must be indistinguishable from the batch gate
-    "s76_stream_wap" -> s76Sql,
+    Entry("s76_stream_wap", s76StreamWap, Relational.q96Sql),
     // s77 serves q95's survivors from a stream-maintained vector —
     // and stops before the purge q95 proves invisible
-    "s77_stream_mor" -> s77Sql,
+    Entry("s77_stream_mor", s77StreamMor, Export.q95Sql),
     // s78 serves q101's lookup through the incrementally-maintained
     // index — a live sidecar must be invisible to the reader
-    "s78_stream_record_index" -> s78Sql,
+    Entry("s78_stream_record_index", s78StreamRecordIndex, Export.q101Sql),
     // s79 maintains q98's release profile live — a maintained MV
     // must be indistinguishable from the batch release
-    "s79_stream_pseudonymize" -> s79Sql,
-    "s80_stream_left_join" -> s80Sql)
+    Entry("s79_stream_pseudonymize", s79StreamPseudonymize, Relational.q98Sql),
+    Entry("s80_stream_left_join", s80StreamLeftJoin, s80Sql))
 }

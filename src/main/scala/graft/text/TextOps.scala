@@ -3,7 +3,7 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.{Par, Tables}
+import graft.{Entry, Par, Tables}
 
 /** Text-analysis operators for the LLM training-data pipeline:
   * language ID, quality scoring, token counting, fingerprinting.
@@ -2667,82 +2667,44 @@ object TextOps {
        |FROM d LEFT JOIN sc ON d.doc_id = sc.doc_id
        |WHERE d.doc_id % 2 = 1 ORDER BY d.doc_id""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "t29_langid" -> (t29LangId _),
-    "t30_quality" -> (t30Quality _),
-    "t31_tokens" -> (t31Tokens _),
-    "t32_fingerprint" -> (t32Fingerprint _),
-    "t33_sketch_stats" -> (t33SketchStats _),
-    "t33b_exact_stats" -> (t33bExactStats _),
-    "t34_scrub" -> (t34Scrub _),
-    "t35_repetition" -> (t35Repetition _),
-    "t36_sample" -> (t36Sample _),
-    "t37_token_budget" -> (t37TokenBudget _),
-    "t38_keyphrase" -> (t38Keyphrase _),
-    "t39_bigram_lm" -> (t39BigramLm _),
-    "t40_pipeline" -> (t40Pipeline _),
-    "t41_chunk" -> (t41Chunk _),
-    "t42_pack" -> (t42Pack _),
-    "t43_pii" -> (t43Pii _),
-    "t44_vocab" -> (t44Vocab _),
-    "t45_vocab_apply" -> (t45VocabApply _),
-    "t46_gopher_rules" -> (t46GopherRules _),
-    "t47_cdc_chunk" -> (t47CdcChunk _),
-    "t48_mixture_resample" -> (t48MixtureResample _),
-    "t49_quality_classifier" -> (t49QualityClassifier _),
-    "t50_epoch_shuffle" -> (t50EpochShuffle _),
-    "t51_bpe_merges" -> (t51BpeMerges _),
-    "t52_bpe_apply" -> (t52BpeApply _),
-    "t53_stratified_split" -> (t53StratifiedSplit _),
-    "t54_release_manifest" -> (t54ReleaseManifest _),
-    "t55_curriculum" -> (t55Curriculum _),
-    "t56_dataset_card" -> (t56DatasetCard _),
-    "t57_bpe_batched" -> (t57BpeBatched _),
-    "t58_ccnet_buckets" -> (t58CcnetBuckets _),
-    "t59_bm25" -> (t59Bm25 _),
-    "t60_weighted_sample" -> (t60WeightedSample _),
-    "t61_cooccurrence" -> (t61Cooccurrence _),
-    "t62_vocab_growth" -> (t62VocabGrowth _),
-    "t63_keyness" -> (t63Keyness _),
-    "t64_drift_gate" -> (t64DriftGate _))
-
-  def oracles: Map[String, String] = Map(
-    "t29_langid" -> t29Sql,
-    "t30_quality" -> t30Sql,
-    "t31_tokens" -> t31Sql,
-    "t32_fingerprint" -> t32Sql,
-    "t33b_exact_stats" -> t33bSql,
-    "t34_scrub" -> t34Sql,
-    "t35_repetition" -> t35Sql,
-    "t36_sample" -> t36Sql,
-    "t37_token_budget" -> t37Sql,
-    "t38_keyphrase" -> t38Sql,
-    "t39_bigram_lm" -> t39Sql,
-    "t40_pipeline" -> t40Sql,
-    "t41_chunk" -> t41Sql,
-    "t42_pack" -> t42Sql,
-    "t43_pii" -> t43Sql,
-    "t44_vocab" -> t44Sql,
-    "t45_vocab_apply" -> t45Sql,
-    "t46_gopher_rules" -> t46Sql,
-    "t47_cdc_chunk" -> t47Sql,
-    "t48_mixture_resample" -> t48Sql,
-    "t49_quality_classifier" -> t49Sql,
-    "t50_epoch_shuffle" -> t50Sql,
-    "t51_bpe_merges" -> t51Sql,
-    "t52_bpe_apply" -> t52Sql,
+  def entries: Seq[Entry] = Seq(
+    Entry("t29_langid", t29LangId, t29Sql),
+    Entry("t30_quality", t30Quality, t30Sql),
+    Entry("t31_tokens", t31Tokens, t31Sql),
+    Entry("t32_fingerprint", t32Fingerprint, t32Sql),
+    Entry("t33_sketch_stats", t33SketchStats),
+    Entry("t33b_exact_stats", t33bExactStats, t33bSql),
+    Entry("t34_scrub", t34Scrub, t34Sql),
+    Entry("t35_repetition", t35Repetition, t35Sql),
+    Entry("t36_sample", t36Sample, t36Sql),
+    Entry("t37_token_budget", t37TokenBudget, t37Sql),
+    Entry("t38_keyphrase", t38Keyphrase, t38Sql),
+    Entry("t39_bigram_lm", t39BigramLm, t39Sql),
+    Entry("t40_pipeline", t40Pipeline, t40Sql),
+    Entry("t41_chunk", t41Chunk, t41Sql),
+    Entry("t42_pack", t42Pack, t42Sql),
+    Entry("t43_pii", t43Pii, t43Sql),
+    Entry("t44_vocab", t44Vocab, t44Sql),
+    Entry("t45_vocab_apply", t45VocabApply, t45Sql),
+    Entry("t46_gopher_rules", t46GopherRules, t46Sql),
+    Entry("t47_cdc_chunk", t47CdcChunk, t47Sql),
+    Entry("t48_mixture_resample", t48MixtureResample, t48Sql),
+    Entry("t49_quality_classifier", t49QualityClassifier, t49Sql),
+    Entry("t50_epoch_shuffle", t50EpochShuffle, t50Sql),
+    Entry("t51_bpe_merges", t51BpeMerges, t51Sql),
+    Entry("t52_bpe_apply", t52BpeApply, t52Sql),
+    Entry("t53_stratified_split", t53StratifiedSplit, t53Sql),
+    Entry("t54_release_manifest", t54ReleaseManifest, t54Sql),
+    Entry("t55_curriculum", t55Curriculum, t55Sql),
+    Entry("t56_dataset_card", t56DatasetCard, t56Sql),
     // t57's oracle IS t51's sequential SQL: batched selection must
     // reproduce the sequential merge table byte-exactly
-    "t57_bpe_batched" -> t51Sql,
-    "t58_ccnet_buckets" -> t58Sql,
-    "t59_bm25" -> t59Sql,
-    "t60_weighted_sample" -> t60Sql,
-    "t53_stratified_split" -> t53Sql,
-    "t54_release_manifest" -> t54Sql,
-    "t55_curriculum" -> t55Sql,
-    "t56_dataset_card" -> t56Sql,
-    "t61_cooccurrence" -> t61Sql,
-    "t62_vocab_growth" -> t62Sql,
-    "t63_keyness" -> t63Sql,
-    "t64_drift_gate" -> t64Sql)
+    Entry("t57_bpe_batched", t57BpeBatched, t51Sql),
+    Entry("t58_ccnet_buckets", t58CcnetBuckets, t58Sql),
+    Entry("t59_bm25", t59Bm25, t59Sql),
+    Entry("t60_weighted_sample", t60WeightedSample, t60Sql),
+    Entry("t61_cooccurrence", t61Cooccurrence, t61Sql),
+    Entry("t62_vocab_growth", t62VocabGrowth, t62Sql),
+    Entry("t63_keyness", t63Keyness, t63Sql),
+    Entry("t64_drift_gate", t64DriftGate, t64Sql))
 }

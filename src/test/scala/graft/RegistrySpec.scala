@@ -14,7 +14,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *     marked oracle=rows (declared rows-only) must NOT have one
   *     (a stale flag either way is a docs/code disagreement);
   *   - every `oracleSql` key is also a `queries` key (the driver
-  *     only runs oracles for dumped results).
+  *     only runs oracles for dumped results);
+  *   - every registry name is unique: both maps are derived from
+  *     `SparkEntry.entries`, and a second row with a taken name would
+  *     silently replace the first.
   */
 class RegistrySpec extends AnyFunSuite {
   private lazy val survey: Seq[(String, String)] = {
@@ -48,6 +51,14 @@ class RegistrySpec extends AnyFunSuite {
       s"§2 says rows-only but an oracle exists: ${rowsOnly & oracles}")
   }
 
+  test("every registry name is unique") {
+    val names = SparkEntry.entries.map(_.name)
+    val dups = names.diff(names.distinct).distinct
+    assert(dups.isEmpty, s"registered more than once: $dups")
+  }
+
+  // holds by construction (an oracle rides on its entry's row); kept
+  // as a guard on the derivation
   test("every oracleSql key is a registered query") {
     val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(orphans.isEmpty, s"oracle without a query: $orphans")
